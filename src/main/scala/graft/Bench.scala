@@ -167,33 +167,11 @@ object Bench {
     // driver bench. SPARK_GRAFT_GATES=on restores gate-priced timing.
     Gates.configureForTiming()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val benchStartNs = System.nanoTime()
     def wallS: Double = (System.nanoTime() - benchStartNs) / 1e9
     val wallBudgetS =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_WALL_S", "1260").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Fresh warehouse per JVM (same rationale as Verify: stale physical
-      // db dirs + fresh in-memory catalog = LOCATION_ALREADY_EXISTS).
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_bench").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The remaining WindowExec no-partition warnings all come from the
-    // Doris-SQL surface queries whose TEXT says OVER () — semantics we
-    // must execute as written over bounded aggregates. The structural
-    // guard is PlanShapeSpec's funnel lint (allowlisted, stale entries
-    // fail); silencing the logger HERE keeps the bench stderr tail —
-    // the only log the driver keeps — carrying real signal.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = Session(Session.cpus)
 
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     // Reference maps for the mover rule are read UP FRONT: partial
@@ -473,9 +451,8 @@ object Bench {
         "java.base/java.util.concurrent.atomic",
         "java.base/sun.nio.ch", "java.base/sun.nio.cs",
         "java.base/sun.security.action", "java.base/sun.util.calendar")
-        .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED")) ++ Seq(
-        "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-        s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}")
+        .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED")) :+
+        s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}"
       val javaBin = java.nio.file.Paths.get(
         sys.props("java.home"), "bin", "java").toString
       val cmd = Seq(javaBin) ++ jvmArgs ++

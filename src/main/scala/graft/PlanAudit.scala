@@ -1,17 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool: print the formatted physical plan of named driver-contract
   * queries at sf0.01 (`runMain graft.PlanAudit q07 p10 …`) — the manual
   * companion to PlanShapeSpec's automated no-cartesian audit. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session(Session.cpus)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cap = sys.env.getOrElse("SPARK_GRAFT_PLAN_CHARS", "6000").toInt
     for (name <- args) {

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only job profiler: runs named queries (warm pass, then a timed
   * pass) and prints one line per Spark job of the timed pass — wall
@@ -11,16 +10,7 @@ import org.apache.spark.sql.SparkSession
 object ProbeJobs {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("wh").toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session(Session.cpus)
     Land.root = "/tmp/graft_probe_land"
     Gates.configureForTiming()
 
@@ -62,18 +52,13 @@ object ProbeJobs {
     spark.sparkContext.addSparkListener(listener)
 
     for (name <- args.tail) {
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save() // warm
-      graft.operators.Broadcasts.release(spark)
-      println(s"===== $name timed pass =====")
-      record = true
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      println(f"PROBEJOB TOTAL $name ${(System.nanoTime() - t0) / 1e9}%.2f s, ${jobs.size} jobs")
+      val s = TimeQ.solo(spark, dir, name, () => {
+        println(s"===== $name timed pass =====")
+        record = true
+      })
       record = false
+      println(f"PROBEJOB TOTAL $name $s%.2f s, ${jobs.size} jobs")
       jobs.clear()
-      graft.operators.Broadcasts.release(spark)
     }
     spark.stop()
   }

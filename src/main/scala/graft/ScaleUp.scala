@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Synthesizes a ×`factor` corpus from an sf dir for the 100×-story
@@ -21,13 +20,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(src, out, factorS) = args
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(Session.cpus)
     val reps = broadcast(spark.range(factor).select(col("id").as("rep")))
     def t(name: String) = spark.read.parquet(s"$src/$name.parquet")
     def w(df: org.apache.spark.sql.DataFrame, name: String): Unit =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Flat string→string map → JSON object text. JSON string escape covers
@@ -40,27 +39,7 @@ object Verify {
     // read_parquet paths point at THIS run's artifacts. Must be set
     // before any query module initializes.
     Land.root = s"${new java.io.File(outDir).getAbsolutePath}_land"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Isolated warehouse per JVM: a stale spark-warehouse/<db>.db dir
-      // from a previous run is invisible to a fresh in-memory catalog, so
-      // DROP DATABASE no-ops and CREATE dies on LOCATION_ALREADY_EXISTS.
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_wh_verify").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      // µs (not INT96/ns) on disk: pyarrow then reads timestamp[us], the
-      // same unit DuckDB produces, so timestamp cells hash identically.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // events.ts is TIMESTAMP(NANOS); set once at session build (a
-      // per-read conf toggle is racy — see Tables.t).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // generated random map keys may collide; keep map building total
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(Session.cpus)
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => filters.isEmpty || filters.exists(n.startsWith) }

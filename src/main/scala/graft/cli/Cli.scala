@@ -97,17 +97,10 @@ object Cli {
     m.toMap
   }
 
-  private def session(): SparkSession =
-    SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+  private def session(): SparkSession = {
+    val cpus = graft.Session.cpus
+    graft.Session(cpus, sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
+  }
 
   /** Dispatch one verb (exposed for tests; throws on bad input). */
   def run(spark: SparkSession, verb: String, o: Map[String, String]): Unit = verb match {

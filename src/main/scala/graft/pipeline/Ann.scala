@@ -64,7 +64,7 @@ object Ann {
     * the (cell) candidate join. Returns (query_id, rank, neighbor_id,
     * cos_r). */
   def ivfTopK(emb: DataFrame, queries: DataFrame, k: Int, nCells: Int = 16,
-              nProbe: Int = 4, seed: Long = 1): DataFrame = {
+              nProbe: Int = 4): DataFrame = {
     graft.functions.VectorExprs.register(emb.sparkSession)
     val cents = cosineCentroids(emb, nCells)
     val corpus = emb.select(col("vec_id").as("neighbor_id"),
@@ -333,7 +333,7 @@ object Ann {
       // tiny over-cap corpora (forced caps in tests) can have fewer
       // cells than the default probe count — probing every cell is then
       // simply exact
-      semDedupPairsProbed(emb, nCells, math.min(nProbe, nCells), threshold, seed)
+      semDedupPairsProbed(emb, nCells, math.min(nProbe, nCells), threshold)
     }
   }
 
@@ -484,10 +484,9 @@ object Ann {
   /** KMeans cell assignment (cosine distance), the clustering step shared
     * by IVF search and SemDeDup — a one-off sample fit whose model is
     * tiny (nCells × dims floats on the driver), after which assignment
-    * is a scan-local transform. `seed` is retained for API stability;
-    * the sample fit is deterministic and ignores it. Returns
-    * (vec_id, cell). */
-  def kmeansCells(emb: DataFrame, nCells: Int, seed: Long = 1): DataFrame = {
+    * is a scan-local transform. The sample fit is deterministic.
+    * Returns (vec_id, cell). */
+  def kmeansCells(emb: DataFrame, nCells: Int): DataFrame = {
     graft.functions.VectorExprs.register(emb.sparkSession)
     val cents = cosineCentroids(emb, nCells)
     emb.select(col("vec_id"), cellOf(col("embedding"), cents).as("cell"))
@@ -517,8 +516,7 @@ object Ann {
     * before ordering (house rule) so FP near-ties can't flip which cells
     * a vector probes; exact ties break on cell id, matching the window
     * formulation. Returns (vec_id, cell), nProbe rows per vector. */
-  def kmeansCellsProbed(emb: DataFrame, nCells: Int, nProbe: Int,
-                        seed: Long = 1): DataFrame = {
+  def kmeansCellsProbed(emb: DataFrame, nCells: Int, nProbe: Int): DataFrame = {
     require(nProbe >= 1 && nProbe <= nCells,
       s"nProbe must be in [1, nCells], got $nProbe of $nCells")
     graft.functions.VectorExprs.register(emb.sparkSession)
@@ -539,8 +537,8 @@ object Ann {
     * then exact cosine verifies each surviving pair once. Returns
     * (i, j, cos_r), i < j. */
   def semDedupPairsProbed(emb: DataFrame, nCells: Int, nProbe: Int,
-                          threshold: Double, seed: Long = 1): DataFrame = {
-    val cells = kmeansCellsProbed(emb, nCells, nProbe, seed)
+                          threshold: Double): DataFrame = {
+    val cells = kmeansCellsProbed(emb, nCells, nProbe)
     val a = cells.select(col("cell"), col("vec_id").as("i"))
     val b = cells.select(col("cell"), col("vec_id").as("j"))
     val candidates = a.join(b, Seq("cell"))
@@ -766,9 +764,8 @@ object Ann {
     * nProbe·cellTarget — LINEAR in n for nCells = n/cellTarget — which
     * is why [[lshTop1Auto]] swaps here once the LSH parameterization
     * leaves its budget. Returns (vec_id, neighbor_id, cos_r). */
-  def cellTop1(emb: DataFrame, nCells: Int, nProbe: Int,
-               seed: Long = 1): DataFrame = {
-    val cells = kmeansCellsProbed(emb, nCells, nProbe, seed)
+  def cellTop1(emb: DataFrame, nCells: Int, nProbe: Int): DataFrame = {
+    val cells = kmeansCellsProbed(emb, nCells, nProbe)
     val a = cells.select(col("cell"), col("vec_id"))
     val b = cells.select(col("cell"), col("vec_id").as("neighbor_id"))
     val candidates = a.join(b, Seq("cell"))
@@ -807,7 +804,7 @@ object Ann {
     if (!overCap) lshNeighbors(emb, dims, planes, tables, seed)
     else {
       val nCells = math.max(2, math.ceil(n.toDouble / cellTarget)).toInt
-      cellTop1(emb, nCells, math.min(nProbe, nCells), seed)
+      cellTop1(emb, nCells, math.min(nProbe, nCells))
     }
   }
 

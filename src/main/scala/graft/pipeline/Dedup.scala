@@ -193,11 +193,6 @@ object Dedup {
 
   /** Winnowing (bucket, id) postings — the fingerprint IS the bucket
     * key; factored out so candidate volume is measurable (ScalingSpec). */
-  /** Probe-visible alias of [[winnowingPostings]] (profiling main). */
-  def winnowingPostingsProbe(df: DataFrame, idCol: String, textCol: String,
-                             k: Int = 24, w: Int = 8): DataFrame =
-    winnowingPostings(df, idCol, textCol, k, w)
-
   private[pipeline] def winnowingPostings(df: DataFrame, idCol: String,
                                           textCol: String, k: Int = 24,
                                           w: Int = 8): DataFrame =

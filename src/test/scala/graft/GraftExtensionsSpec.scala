@@ -21,6 +21,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // programmatic route is builder.withExtensions with the same object.
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
+    // own builder: extensions need a fresh session, not Session's shared one
     val spark = SparkSession.builder()
       .master("local[2]")
       .appName("ext-spec")

@@ -4,27 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (one per suite, stopped after). */
+/** Shared local SparkSession for specs, built by [[Session]] like every
+  * main. getOrCreate shares it across suites in one JVM, so it is never
+  * stopped. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", 4)
-    // Fresh warehouse per test JVM: a stale spark-warehouse/<db>.db left
-    // by an earlier run is unknown to this JVM's in-memory catalog, so
-    // DROP DATABASE IF EXISTS no-ops and CREATE TABLE then fails with
-    // LOCATION_ALREADY_EXISTS. (getOrCreate shares the session across
-    // suites in one JVM, so one temp dir per JVM is exactly right.)
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh_test").toString)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = {
-    // keep the session for other suites in the same JVM (getOrCreate reuses)
-    super.afterAll()
-  }
+  lazy val spark: SparkSession = Session(4)
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The compiled hashed-shingle kernel must be SET-equivalent to the
   * declarative string-shingle chain it replaced in the dedup family's
@@ -11,10 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * shingles ⇒ equal hashes; distinct shingles ⇒ distinct hashes at
   * 64-bit collision odds), and the same edge semantics (< n tokens ⇒
   * empty; null ⇒ null; whitespace runs and case folded identically). */
-class ShingleHashesSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class ShingleHashesSpec extends graft.SparkSpec {
 
   private def hashesOf(texts: Seq[String], n: Int): Seq[Seq[Long]] = {
     ShingleHashesExpr.register(spark)

@@ -378,7 +378,7 @@ class CurationSpec extends SparkSpec {
       (100L + i, base(i)._2.map(x => x + 0.01f))
     }
     val emb = (base ++ dups).toDF("vec_id", "embedding")
-    val cells = Ann.kmeansCells(emb, nCells = 4, seed = 3)
+    val cells = Ann.kmeansCells(emb, nCells = 4)
     val got = Ann.semDedupPairs(emb, cells, threshold = 0.95)
       .select("i", "j").as[(Long, Long)].collect().toSet
     // brute force within cells

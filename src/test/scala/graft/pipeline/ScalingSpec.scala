@@ -227,8 +227,8 @@ class ScalingSpec extends SparkSpec {
     val cells1 = 16
     val cells2 = math.max((cells1 * n2 / n1).toInt, cells1)
     assertLinear("semdedup(p29)", 1.5, n1,
-      candVolume(Ann.kmeansCells(eS, cells1, seed = 1), "cell"), n2,
-      candVolume(Ann.kmeansCells(eL, cells2, seed = 1), "cell"))
+      candVolume(Ann.kmeansCells(eS, cells1), "cell"), n2,
+      candVolume(Ann.kmeansCells(eL, cells2), "cell"))
   }
 
   test("dup-span profile (p30) posting volume is linear by construction") {

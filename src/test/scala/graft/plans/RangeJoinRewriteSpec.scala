@@ -127,6 +127,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
+    // own builder: extensions need a fresh session, not Session's shared one
     val s2 = SparkSession.builder().master("local[2]")
       .appName("rj-ext-spec")
       .withExtensions(e => new graft.GraftExtensions().apply(e))
