@@ -356,7 +356,7 @@ object Cli {
         case "nll" => // unigram-LM cross-entropy score per doc
           graft.pipeline.Lm.unigramNll(in, idCol, textCol)
         case "cluster" => // (i, j) pair parquet -> component labels
-          graft.pipeline.Dedup.connectedComponentsAlternating(in)
+          graft.pipeline.Dedup.connectedComponents(in)
         case "lines" => // GLOBAL cross-corpus boilerplate-line dedup report
           graft.pipeline.Clean.globalLineDedup(in, idCol, textCol,
             o.getOrElse("max-docs", "5").toInt)

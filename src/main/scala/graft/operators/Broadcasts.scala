@@ -57,11 +57,20 @@ object Broadcasts {
     * FULLY materialized — a lazy or partial cache entry reports the
     * optimizer's estimate instead of observed bytes, which could hint a
     * frame the measurement was supposed to veto. */
-  private[graft] def gateMaterialized(cached: DataFrame): DataFrame = {
-    val spark = cached.sparkSession
+  private[graft] def gateMaterialized(cached: DataFrame): DataFrame =
+    hintWithinCap(cached.sparkSession, measuredBytes(cached))(cached)
+
+  /** The one hint decision every size-gated broadcast in this library
+    * makes: `broadcast` iff `bytes` (a MEASURED size, never an estimate)
+    * is within the configured cap, else identity — past the cap the
+    * planner picks the join strategy from real sizes. Returned as a
+    * function so an iterative operator can decide once and apply the
+    * verdict to each round's node-bounded table. */
+  private[graft] def hintWithinCap(spark: org.apache.spark.sql.SparkSession,
+                                   bytes: BigInt): DataFrame => DataFrame = {
     val cap = spark.conf.getOption(MaxBytesConf).map(_.toLong)
       .getOrElse(DefaultMaxBytes)
-    if (measuredBytes(cached) <= cap) broadcast(cached) else cached
+    if (bytes <= cap) broadcast(_) else identity
   }
 
   // ---- persist lifecycle ------------------------------------------------

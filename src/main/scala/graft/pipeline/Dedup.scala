@@ -766,48 +766,6 @@ object Dedup {
       .map(i => i.memSize + i.diskSize)
   }
 
-  /** [[checkpointBytes]] restricted to frames that ARE a materialized
-    * checkpoint (possibly under row-preserving Project/alias nodes): a
-    * checkpoint buried under joins/explodes says nothing about the bytes
-    * of the DERIVED frame, so it must not gate a collect of it. */
-  private def directCheckpointBytes(df: DataFrame): Option[Long] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, SubqueryAlias}
-    @annotation.tailrec
-    def strip(p: LogicalPlan): LogicalPlan = p match {
-      case Project(_, c) => strip(c) // 1:1 rows by construction
-      case SubqueryAlias(_, c) => strip(c)
-      case other => other
-    }
-    strip(df.queryExecution.analyzed) match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        df.sparkSession.sparkContext.getRDDStorageInfo
-          .find(_.id == lr.rdd.id).map(i => i.memSize + i.diskSize)
-      case _ => None
-    }
-  }
-
-  /** Join-strategy decision for the node-bounded side of an iterative
-    * round (labels, per-node minima): broadcast hint iff the measured
-    * size fits the configured
-    * [[graft.operators.Broadcasts.MaxBytesConf]] cap (tests set it to 0
-    * to force the shuffle path). Measured once per loop, not per round —
-    * node count never grows across CC iterations. When `nodeTable` is an
-    * already-materialized localCheckpoint the size comes off the block
-    * manager for free (VERDICT r8 item 4 — no extra count() job);
-    * deserialized checkpoint rows are at least UnsafeRow-sized, so the
-    * byte gate errs toward withholding the hint, never a bad broadcast.
-    * A non-checkpoint frame falls back to count() × 48 B/row. */
-  private def hintIfNodeBounded(nodeTable: DataFrame): DataFrame => DataFrame = {
-    val spark = nodeTable.sparkSession
-    val cap = spark.conf.getOption(graft.operators.Broadcasts.MaxBytesConf)
-      .map(_.toLong).getOrElse(graft.operators.Broadcasts.DefaultMaxBytes)
-    val fits = checkpointBytes(nodeTable) match {
-      case Some(bytes) => bytes <= cap
-      case None => nodeTable.count() * 48L <= cap
-    }
-    if (fits) broadcast(_) else identity
-  }
-
   /** Release the executor-local blocks behind an eager localCheckpoint
     * once a newer round's checkpoint has consumed them. */
   private def releaseCheckpoint(df: DataFrame): Unit =
@@ -816,20 +774,18 @@ object Dedup {
     }.foreach(_.unpersist(false))
 
   // ---- LOCAL (driver union-find) CC fast path -------------------------
-  // Both CC strategies broadcast their node-bounded label/minima tables
-  // EVERY ROUND when the measured edge bytes fit the hint cap — so for a
-  // graph that small, the component structure is bounded driver metadata
-  // by the same argument, and a single O(E·α(E)) union-find replaces
-  // 5–10 distributed rounds (each round: broadcast builds + a checkpoint
+  // The star loop broadcasts its node-bounded minima tables EVERY ROUND
+  // when the measured edge bytes fit the hint cap — so for a graph that
+  // small, the component structure is bounded driver metadata by the
+  // same argument, and a single O(E·α(E)) union-find replaces 5–10
+  // distributed rounds (each round: broadcast builds + a checkpoint
   // materialization + a convergence aggregate — measured ~0.4–0.6 s of
   // pure fixed cost per round at sf0.1, data volume irrelevant). The
-  // gate is MEASURED, never assumed: checkpoint bytes when the input is
-  // already materialized (free, off the block manager), else the bytes
-  // of the canonical edge checkpoint the loop was about to build anyway
-  // — so the local path never adds a recompute of a heavy pair plan.
-  // Past the cap the distributed loops run unchanged (the 100 TB path).
-  // Both strategies converge to the component-minimum label, and so does
-  // union-find — CurationSpec pins the three-way equality as a law.
+  // gate is MEASURED, never assumed: the bytes of the canonical edge
+  // checkpoint the loop was about to build anyway, so the local path
+  // never adds a recompute of a heavy pair plan. Past the cap the
+  // distributed loop runs unchanged (the 100 TB path). Both converge to
+  // the component-minimum label — CurationSpec pins the equality as a law.
 
   /** Conf key for the local-CC byte cap; 0 forces the distributed loop
     * (specs exercising loop semantics set it). */
@@ -844,11 +800,10 @@ object Dedup {
     df.sparkSession.conf.getOption(CcLocalMaxBytesConf).map(_.toLong)
       .getOrElse(CcLocalDefaultMaxBytes)
 
-  /** Union-find over collected (a, b) rows → (node, component-min) pairs.
-    * `selfNodes`: register a row's non-null endpoints as nodes even when
-    * the row is a self-loop / half-null (mirrors the min-label loop's
-    * self-loop construction; the alternating loop drops such rows and
-    * passes pre-filtered input). Path-halving find + union-by-size. */
+  /** Union-find over collected (a, b) rows → (node, component-min) pairs,
+    * under the one CC contract: rows that are self-loops or have a null
+    * endpoint are ignored, and a node is labelled iff it has an edge to a
+    * different node. Path-halving find + union-by-size. */
   private[pipeline] def unionFindLabels(rows: Array[org.apache.spark.sql.Row])
       : Array[(Long, Long)] = {
     val idx = new java.util.HashMap[java.lang.Long, Integer](rows.length * 2)
@@ -858,14 +813,17 @@ object Dedup {
       if (got != null) got.intValue()
       else { val n = nodes.length; idx.put(x, n); nodes += x; n }
     }
-    // first pass registers nodes so the parent array can size once
+    // first pass registers nodes so the parent array can size once;
+    // ignored rows keep -1 endpoints
     var r = 0
-    val ab = new Array[Int](rows.length * 2)
+    val ab = Array.fill(rows.length * 2)(-1)
     while (r < rows.length) {
       val row = rows(r)
-      val ai = if (row.isNullAt(0)) -1 else nodeId(row.getLong(0))
-      val bi = if (row.isNullAt(1)) -1 else nodeId(row.getLong(1))
-      ab(2 * r) = ai; ab(2 * r + 1) = bi
+      if (!row.isNullAt(0) && !row.isNullAt(1)
+          && row.getLong(0) != row.getLong(1)) {
+        ab(2 * r) = nodeId(row.getLong(0))
+        ab(2 * r + 1) = nodeId(row.getLong(1))
+      }
       r += 1
     }
     val parent = Array.tabulate(nodes.length)(identity)
@@ -878,7 +836,7 @@ object Dedup {
     r = 0
     while (r < rows.length) {
       val ai = ab(2 * r); val bi = ab(2 * r + 1)
-      if (ai >= 0 && bi >= 0 && ai != bi) {
+      if (ai >= 0) {
         val ra = find(ai); val rb = find(bi)
         if (ra != rb) {
           if (size(ra) >= size(rb)) { parent(rb) = ra; size(ra) += size(rb) }
@@ -919,141 +877,23 @@ object Dedup {
     broadcast(spark.createDataFrame(rdd, schema))
   }
 
-  /** Connected components over near-dup PAIRS → per-doc cluster labels
-    * (label = min doc id in the component) — the step that turns a pair
-    * report into actionable dedup: one canonical keep per cluster,
-    * everything else dropped. Min-label propagation: each round every
-    * node takes the min of its own and its neighbors' labels; rounds
-    * needed = component diameter, and near-dup components are
-    * SMALL-DIAMETER by construction (members all resemble the same
-    * text), so the loop converges in a handful of bounded-size joins —
-    * each one a skinny (node, label) shuffle. ONE action per round: the
-    * aggregate that reads the did-anything-improve bit also materializes
-    * the round's cache (r5 review: isEmpty + count was two jobs).
-    * (Web-scale graphs with long chains want large-star/small-star
-    * [Kiveris et al.]; for dedup clusters the simple propagation IS the
-    * right cost.) */
-  /** NOTE on the local fast path vs the `maxIter`/`allowPartial`
-    * contract (ADVICE r13): maxIter bounds the DISTRIBUTED loop's round
-    * count — it is a resource budget, not a semantic truncation knob.
-    * Under the measured size gate the union-find returns the same
-    * converged labels the loop would have reached, without consuming
-    * rounds, so a small-maxIter call can succeed on a small input where
-    * a big input would throw non-convergence. Callers that specifically
-    * exercise loop semantics (round budgets, allowPartial) must force
-    * the loop with `graft.cc.localMaxBytes = 0`, as the specs do. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-                          allowPartial: Boolean = false): DataFrame = {
-    // localCheckpoint, not cache: each round's output feeds the next
-    // round's join AND the convergence aggregate, so without truncation
-    // the LOGICAL plan doubles per iteration — cache keeps the data but
-    // not the plan, and a window-heavy pairs input (e.g.
-    // prefixJaccardPairs) OOMs the analyzer within a handful of rounds
-    // (bitten in round 6, p86). Eager checkpoints truncate lineage each
-    // round; superseded blocks are released explicitly so peak storage
-    // is two label sets.
-    //
-    // Round shape (r9): the edge set carries SELF-LOOPS, so one
-    // broadcast join + one min-aggregate computes
-    //   newLbl(v) = min over (Γ(v) ∪ {v}) of lbl
-    // directly — fusing r8's three stages (neighbor-min aggregate,
-    // join-back, least) into one shuffle. Convergence is read off the
-    // new checkpoint alone: labels only ever DECREASE, so any
-    // improvement strictly decreases the exact decimal label sum — no
-    // old-vs-new comparison join, one tiny aggregate per round.
-    val base = pairs.select(col("i").cast("long").as("a"),
-      col("j").cast("long").as("b"))
-    // LOCAL fast path, gate 1 (free): the caller handed us an already-
-    // materialized checkpoint whose measured bytes fit the local cap —
-    // collect it and union-find on the driver (see the block comment
-    // above unionFindLabels). Half-null rows register their non-null
-    // endpoint as an isolated node, mirroring the self-loop construction.
-    val cap = ccLocalCap(pairs)
-    if (directCheckpointBytes(pairs).exists(_ <= cap))
-      return labelsFrame(pairs.sparkSession, unionFindLabels(base.collect()))
-    val sym = base.unionByName(
-      base.select(col("b").as("a"), col("a").as("b")))
-    val edges = sym.unionByName(sym.select(col("a"), col("a").as("b")))
-      .distinct().localCheckpoint()
-    // LOCAL fast path, gate 2: the canonical edge checkpoint the loop
-    // needs anyway just materialized — its measured bytes are free, and
-    // collecting its blocks recomputes nothing.
-    if (checkpointBytes(edges).exists(_ <= cap)) {
-      val rows = edges.collect()
-      releaseCheckpoint(edges)
-      return labelsFrame(pairs.sparkSession, unionFindLabels(rows))
-    }
-    // Per-round join strategy, decided ONCE from the measured CHECKPOINT
-    // bytes (free, off the block manager): label tables are node-bounded
-    // and strictly smaller than the edge set, so edges-under-cap ⇒
-    // labels broadcastable; past the cap (a 100 TB corpus has
-    // corpus-linear nodes) no hint is applied and the planner shuffles.
-    val bcast = hintIfNodeBounded(edges)
-    var labels = edges.filter(col("a") === col("b"))
-      .select(col("a").as("v"), col("a").as("lbl"))
-    var prevCk: Option[DataFrame] = None
-    var prevSum: Option[java.math.BigDecimal] = None
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIter) {
-      // propagate: newLbl(v) = min over (Γ(v) ∪ {v}) of lbl
-      val prop = edges.join(bcast(labels), edges("b") === labels("v"))
-        .groupBy(edges("a").as("v")).agg(min(col("lbl")).as("lbl"))
-      // shortcut (pointer doubling): lbl(v) ← lbl(lbl(v)). Labels obey
-      // lbl(u) ≤ u, so shortcutting also only decreases; propagate
-      // alone needs one round per hop of component diameter (a
-      // 190k-pair near-dup graph at sf0.1 measured ELEVEN rounds —
-      // chained similarity builds long paths), compression halves the
-      // remaining diameter per round → O(log d) rounds. The doubled
-      // reference to `prop` reuses the same shuffle exchange
-      // (ReuseExchange); both join sides are node-bounded.
-      // LAZY checkpoint: the convergence aggregate right below is the
-      // round's first action, so ONE job materializes the checkpoint
-      // blocks AND reads the label sum (eager would spend a separate
-      // materialization job per round — measured 2 jobs/round → 1).
-      // ONE shortcut hop per round: a second compress was measured
-      // (6 → 5 rounds on the sf0.1 diameter-10 graph) but the extra
-      // node-table self-join cost MORE than the round it saved
-      // (2.7 → 3.7 s warm) — the doubled `prop` reference recomputes
-      // past the reused exchange.
-      val updated = prop.as("x")
-        .join(bcast(prop.select(col("v").as("cv"), col("lbl").as("clbl"))),
-          col("x.lbl") === col("cv"), "left")
-        .select(col("x.v").as("v"),
-          coalesce(col("clbl"), col("x.lbl")).as("lbl"))
-        .localCheckpoint(false)
-      val s = updated.agg(sum(col("lbl").cast("decimal(38,0)"))).head()
-        .getDecimal(0)
-      // null sum means zero rows — trivially converged
-      converged = s == null || prevSum.exists(_.compareTo(s) == 0)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"CC round=$it sum=$s converged=$converged")
-      prevCk.foreach(releaseCheckpoint)
-      prevCk = Some(updated)
-      prevSum = Some(s)
-      labels = updated
-      it += 1
-    }
-    releaseCheckpoint(edges)
-    // non-convergence means labels are WRONG (far ends of a >maxIter-
-    // diameter chain still carry non-minimal labels) — fail loudly
-    // unless the caller opted into the partial result
-    require(converged || allowPartial,
-      s"connectedComponents did not converge in $maxIter iterations " +
-        "(component diameter exceeds maxIter); raise maxIter or pass allowPartial")
-    labels
-  }
-
-  /** Connected components by ALTERNATING LARGE-STAR/SMALL-STAR
-    * [Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC 2014] — the WEB-SCALE path that min-label propagation
-    * (connectedComponents above) is not: propagation needs one round per
-    * hop of component diameter, so a million-node chain needs a million
-    * rounds; star contraction rewires every node toward its neighborhood
-    * minimum and provably converges in O(log² n) rounds (O(log n) in
-    * practice) REGARDLESS of diameter. Use this when components can be
-    * long and stringy (web link graphs, co-citation chains); min-label
-    * stays the cheaper choice for small-diameter near-dup clusters.
+  /** Connected components over PAIRS (i, j) → per-node cluster labels
+    * (v, lbl), label = min node id in the component — the step that turns
+    * a near-dup pair report into actionable dedup: one canonical keep per
+    * cluster, everything else dropped. Contract: rows that are
+    * self-loops or have a null endpoint are ignored, and a node is
+    * labelled iff it has an edge to a different node (callers that need
+    * every doc labelled left-join the labels back, as groupSplitDf does).
+    *
+    * Under the measured local cap the labels come from a driver-side
+    * union-find (block comment above [[unionFindLabels]]); past it, by
+    * ALTERNATING LARGE-STAR/SMALL-STAR [Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC 2014]: star contraction
+    * rewires every node toward its neighborhood minimum and provably
+    * converges in O(log² n) rounds (O(log n) in practice) REGARDLESS of
+    * diameter — label propagation needs one round per hop, and chained
+    * similarity builds long paths (web link graphs, transitive near-dup
+    * chains).
     *
     * Both phases are one groupBy + one join on skinny (node, node) rows:
     *   large-star: each node u points its LARGER neighbors at
@@ -1065,12 +905,49 @@ object Dedup {
     * Convergence is ONE action per round: the (count, hash-xor) signature
     * of the new edge set, compared to the previous round's (xor is
     * order-independent and cannot overflow; edges are distinct, so xor
-    * cancellation needs a full hash collision). */
-  def connectedComponentsAlternating(pairs: DataFrame, maxIter: Int = 30,
-                                     allowPartial: Boolean = false): DataFrame = {
-    // per-node minima tables are node-bounded — same measured broadcast
-    // gate as connectedComponents (decided once; see hintIfNodeBounded)
-    var bcast: DataFrame => DataFrame = identity
+    * cancellation needs a full hash collision).
+    *
+    * `maxIter` bounds the DISTRIBUTED loop's round count (ADVICE r13) —
+    * a resource budget, not a semantic truncation knob: the union-find
+    * returns the converged labels without consuming rounds, so a
+    * small-maxIter call can succeed on a small input where a big input
+    * would throw non-convergence. `allowPartial` returns the
+    * not-yet-minimal labels instead of throwing. Callers that exercise
+    * loop semantics must force the loop with `graft.cc.localMaxBytes = 0`,
+    * as the specs do. */
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 30,
+                          allowPartial: Boolean = false): DataFrame = {
+    // each phase references the edge set FOUR times (symmetrize + join
+    // back onto the per-node minima), so the logical plan grows ~16× per
+    // round — cache alone keeps the DATA but not the plan, and ten rounds
+    // of that OOMs the planner. localCheckpoint (eager) truncates lineage
+    // every round: executor-local blocks, no reliable-storage round trip;
+    // a multi-hour production run on preemptible executors would swap in
+    // checkpoint() against the cluster checkpoint dir — same plan shape.
+    // The superseded round's checkpoint blocks are released explicitly
+    // (the eager checkpoint of `next` has already consumed them) so peak
+    // storage is two edge sets, not one per round.
+    var edges = pairs
+      .select(col("i").cast("long").as("a"), col("j").cast("long").as("b"))
+      .filter(col("a") =!= col("b")).distinct().localCheckpoint()
+    // LOCAL fast path: the canonical edge checkpoint the loop needs
+    // anyway just materialized — its measured bytes are free, and
+    // collecting its blocks recomputes nothing
+    val edgeBytes = checkpointBytes(edges)
+    if (edgeBytes.exists(_ <= ccLocalCap(pairs))) {
+      val rows = edges.collect()
+      releaseCheckpoint(edges)
+      return labelsFrame(pairs.sparkSession, unionFindLabels(rows))
+    }
+    // per-round join strategy, decided ONCE from the EDGE checkpoint's
+    // measured bytes: the per-node minima tables are strictly smaller
+    // than the edge set (grouped per node, skinnier rows), so
+    // edges-under-cap ⇒ minima-under-cap; edges-over-cap conservatively
+    // shuffles even if the node table alone would fit — never a bad
+    // broadcast, and no distinct+count job just to size the hint.
+    // Unmeasured bytes (no storage entry) earn no hint.
+    val bcast = graft.operators.Broadcasts.hintWithinCap(pairs.sparkSession,
+      BigInt(edgeBytes.getOrElse(Long.MaxValue)))
     // Each round is largeStar ∘ smallStar with ONE dedup at the end:
     // largeStar emits strictly-oriented rows (a > b: it attaches only
     // larger neighbors to the per-node minimum, and m < b by
@@ -1097,41 +974,6 @@ object Dedup {
         .unionByName(mins.select(col("a"), col("m").as("b")))
         .distinct()
     }
-    // each phase references the edge set FOUR times (symmetrize + join
-    // back onto the per-node minima), so the logical plan grows ~16× per
-    // round — cache alone keeps the DATA but not the plan, and ten rounds
-    // of that OOMs the planner. localCheckpoint (eager) truncates lineage
-    // every round: executor-local blocks, no reliable-storage round trip;
-    // a multi-hour production run on preemptible executors would swap in
-    // checkpoint() against the cluster checkpoint dir — same plan shape.
-    // The superseded round's checkpoint blocks are released explicitly
-    // (the eager checkpoint of `next` has already consumed them) so peak
-    // storage is two edge sets, not one per round.
-    // LOCAL fast path (same two measured gates as connectedComponents;
-    // this strategy's node universe is endpoints of a≠b rows only, so
-    // the collected rows are pre-filtered to match the loop's edges)
-    val cap = ccLocalCap(pairs)
-    val prefiltered = pairs
-      .select(col("i").cast("long").as("a"), col("j").cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-    if (directCheckpointBytes(pairs).exists(_ <= cap))
-      return labelsFrame(pairs.sparkSession,
-        unionFindLabels(prefiltered.collect()))
-    var edges = pairs
-      .select(col("i").cast("long").as("a"), col("j").cast("long").as("b"))
-      .filter(col("a") =!= col("b")).distinct().localCheckpoint()
-    if (checkpointBytes(edges).exists(_ <= cap)) {
-      val rows = edges.collect()
-      releaseCheckpoint(edges)
-      return labelsFrame(pairs.sparkSession, unionFindLabels(rows))
-    }
-    // gate on the EDGE checkpoint's measured bytes (free, off the block
-    // manager): the per-node minima tables are strictly smaller than the
-    // edge set (grouped per node, skinnier rows), so edges-under-cap ⇒
-    // minima-under-cap; edges-over-cap conservatively shuffles even if
-    // the node table alone would fit — never a bad broadcast, and no
-    // distinct+count job just to size the hint
-    bcast = hintIfNodeBounded(edges)
     var sig = (-1L, -1L)
     var it = 0
     var converged = false
@@ -1149,13 +991,12 @@ object Dedup {
       it += 1
     }
     require(converged || allowPartial,
-      s"connectedComponentsAlternating did not converge in $maxIter rounds; " +
+      s"connectedComponents did not converge in $maxIter rounds; " +
         "raise maxIter or pass allowPartial")
     // stars: every edge is (member, root); roots label themselves
-    val labels = edges.select(col("a").as("v"), col("b").as("lbl"))
+    edges.select(col("a").as("v"), col("b").as("lbl"))
       .unionByName(edges.select(col("b").as("v"), col("b").as("lbl")))
       .groupBy("v").agg(min(col("lbl")).as("lbl"))
-    labels
   }
 
   /** EXACT token-set Jaccard self-join by PREFIX FILTERING (Bayardo et

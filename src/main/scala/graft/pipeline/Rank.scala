@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * PageRank ranks per host; OPIC scores steer the crawl itself), so the
   * engine needs a distributed fixed-point iteration over an edge list —
   * the same iterative-skinny-shuffle family as
-  * [[Dedup.connectedComponents]], but with weighted mass instead of min
-  * labels.
+  * [[Dedup.connectedComponents]]'s star loop, but propagating weighted
+  * mass along edges instead of rewiring edges toward component minima.
   */
 object Rank {
 

@@ -356,14 +356,14 @@ object CurationQueries extends QueryModule {
         k = 64, bands = 16, threshold = 0.5)
       pairs.write.mode("overwrite").parquet(s"$outRoot/keep_pairs")
       val landed = s.read.parquet(s"$outRoot/keep_pairs")
-      val labels = Dedup.connectedComponentsAlternating(landed)
+      val labels = Dedup.connectedComponents(landed)
       Dedup.canonicalKeep(labels, d, "doc_id", "n_chars")
         .orderBy("doc_id")
     }),
 
     // ---- web-scale connected components: consecutive-id chains of ~250
-    //      nodes (diameter FAR above min-label's practical round budget —
-    //      the case that NEEDS star contraction); the oracle derives the
+    //      nodes (diameter FAR above any per-hop propagation round budget
+    //      — the case that NEEDS star contraction); the oracle derives the
     //      same components analytically via gaps-and-islands -------------
     "p32_cc_largestar" -> ((s, dir) => {
       val d = docs(s, dir)
@@ -372,7 +372,7 @@ object CurationQueries extends QueryModule {
         .select(col("doc_id").as("i"), (col("doc_id") + 1).as("j"))
         .join(ids, Seq("j"), "left_semi")
         .select("i", "j")
-      Dedup.connectedComponentsAlternating(edges)
+      Dedup.connectedComponents(edges)
         .groupBy(col("lbl").as("cluster"))
         .agg(count(lit(1)).as("size"), max(col("v")).as("max_member"))
         .orderBy("cluster")
@@ -1222,18 +1222,14 @@ object CurationQueries extends QueryModule {
     //      near-dup pair can never straddle train/eval — n_crossing is
     //      the in-query proof and must be 0 --------------------------
     "p86_group_split" -> ((s, dir) =>
-      groupSplitDf(s, dir, Dedup.connectedComponents(_))),
+      groupSplitDf(s, dir)),
 
-    // ---- the SAME leakage-free split over the ALTERNATING-STAR CC
-    //      (Kiveris et al.): group-split inputs are NOT guaranteed
-    //      small-diameter the way near-dup clusters are — transitive
-    //      0.95-chains make long stringy components, where min-label
-    //      needs diameter rounds but star contraction stays O(log² n).
-    //      Both strategies converge to the component-minimum label, so
-    //      the oracle is IDENTICAL — the driver row proves strategy
-    //      interchangeability end-to-end ---------------------------
+    // ---- the SAME leakage-free split, kept as its own contract entry
+    //      (p86 and p88 once ran different CC strategies; both now call
+    //      the one Dedup.connectedComponents, so they share one oracle
+    //      and the same labels) ------------------------------------
     "p88_group_split_star" -> ((s, dir) =>
-      groupSplitDf(s, dir, Dedup.connectedComponentsAlternating(_))),
+      groupSplitDf(s, dir)),
 
     // ---- the SAME leakage-free split fed by MINHASH pairs (banded LSH
     //      candidates + exact-Jaccard verify): the landed sub-quadratic
@@ -1251,7 +1247,7 @@ object CurationQueries extends QueryModule {
     //      J=0.9 with r=4,b=16 is 4e-8) and the crossing==0 proof is
     //      unchanged ------------------------------------------------
     "p97_group_split_minhash" -> ((s, dir) =>
-      groupSplitDf(s, dir, Dedup.connectedComponents(_),
+      groupSplitDf(s, dir,
         d => Dedup.minhashPairs(d, "doc_id", "text",
           k = 64, bands = 16, threshold = 0.9, shingleN = 3))),
 
@@ -1311,19 +1307,17 @@ object CurationQueries extends QueryModule {
     })
   )
 
-  /** Leakage-free GROUP split (p86/p88/p97), parameterized by BOTH the
-    * connected-components strategy and the near-dup pair SOURCE: split
-    * assignment hashes the near-dup CLUSTER label (pairs → `cc`), not
-    * the doc id, so a near-dup pair can never straddle train/eval —
-    * n_crossing is the in-query proof and must be 0. Strategy choice is
-    * a scale decision: min-label CC for small-diameter near-dup
-    * clusters, alternating-star for long transitive chains; pair-source
-    * choice is the candidate-volume decision — exact prefix-Jaccard
+  /** Leakage-free GROUP split (p86/p88/p97), parameterized by the
+    * near-dup pair SOURCE: split assignment hashes the near-dup CLUSTER
+    * label (pairs → connected components), not the doc id, so a near-dup
+    * pair can never straddle train/eval — n_crossing is the in-query
+    * proof and must be 0. Docs without an edge get no label and fall
+    * back to their own id (the left join below). Pair-source choice is
+    * the candidate-volume decision — exact prefix-Jaccard
     * (PPJoin, the published optimum for exact output) on bounded-vocab
     * corpora, MinHash-LSH + exact verify (sub-quadratic banded
     * candidates) on web corpora where prefix postings go hot. */
   private def groupSplitDf(s: SparkSession, dir: String,
-                           cc: DataFrame => DataFrame,
                            pairsOf: DataFrame => DataFrame = d =>
                              Dedup.prefixJaccardPairs(d, "doc_id", "text", 0.95))
       : DataFrame = {
@@ -1335,7 +1329,7 @@ object CurationQueries extends QueryModule {
     // lazy checkpoint: CC's edge build is the first consumer, so the
     // pair join materializes inside that job instead of its own
     val pairs = pairsOf(d).select("i", "j").localCheckpoint(false)
-    val labels = cc(pairs)
+    val labels = Dedup.connectedComponents(pairs)
     // (doc_id, grp, split) fans out to FOUR consumers (fold counts,
     // group count, both sides of the crossing audit) — persist the
     // skinny frame so the corpus scan + label join runs exactly once

@@ -75,7 +75,8 @@ object PipelineQueries extends QueryModule {
 
     // ---- near-dup clusters: pairs → connected components ---------------
     // the step that makes a pair report actionable (one canonical doc
-    // kept per cluster); min-label propagation, diameter-bounded joins.
+    // kept per cluster); Dedup.connectedComponents (union-find under its
+    // local cap, else the large-star/small-star loop).
     // The oracle recomputes components from the LANDED pairs with a
     // recursive CTE, so the clustering itself is cross-engine-verified.
     "p26_dedup_clusters" -> ((s, dir) => {
@@ -913,7 +914,7 @@ object PipelineQueries extends QueryModule {
           max(when(col("modality") === "txt", 1L).otherwise(0L)).as("is_txt"))
       edges.write.mode("overwrite").parquet(s"$outRoot/xmodal_edges")
       val landed = s.read.parquet(s"$outRoot/xmodal_edges")
-      val labels = Dedup.connectedComponentsAlternating(
+      val labels = Dedup.connectedComponents(
         landed.select("i", "j"))
       val sizes = labels.groupBy(col("lbl").as("cluster"))
         .agg(count(lit(1)).as("size"), max(col("v")).as("max_member"))

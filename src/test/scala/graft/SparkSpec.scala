@@ -9,4 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * stopped. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = Session(4)
+
+  /** Run `body` with the local union-find CC path disabled, so
+    * [[graft.pipeline.Dedup.connectedComponents]] runs its DISTRIBUTED
+    * star loop. */
+  def withDistributedCC[T](body: => T): T = {
+    spark.conf.set(pipeline.Dedup.CcLocalMaxBytesConf, "0")
+    try body finally spark.conf.unset(pipeline.Dedup.CcLocalMaxBytesConf)
+  }
 }

@@ -228,13 +228,13 @@ class CurationSpec extends SparkSpec {
   test("alternating CC handles hub, complete, and self/duplicate-edge graphs") {
     // hub: star already — must converge immediately and label by the hub min
     val hub = (1L to 20L).map(v => (0L, v)).toDF("i", "j")
-    val hubLabels = Dedup.connectedComponentsAlternating(hub)
+    val hubLabels = Dedup.connectedComponents(hub)
       .as[(Long, Long)].collect()
     assert(hubLabels.length === 21 && hubLabels.forall(_._2 === 0L))
     // complete graph K8 (+ duplicate and self edges, which must be ignored)
     val k8 = (for { i <- 0L until 8L; j <- 0L until 8L if i != j }
       yield (i, j)) ++ Seq((3L, 3L), (1L, 2L), (1L, 2L))
-    val k8Labels = Dedup.connectedComponentsAlternating(k8.toDF("i", "j"))
+    val k8Labels = Dedup.connectedComponents(k8.toDF("i", "j"))
       .as[(Long, Long)].collect()
     assert(k8Labels.length === 8 && k8Labels.forall(_._2 === 0L))
   }
@@ -713,64 +713,59 @@ class CurationSpec extends SparkSpec {
         "stratum is fully sorted before the limit applies:\n" + plan)
   }
 
-  // ---- Dedup.connectedComponentsAlternating --------------------------------
+  // ---- Dedup.connectedComponents -----------------------------------------
+  // The driver-side union-find (default cap) is the reference every
+  // distributed star-loop run (withDistributedCC) is compared against.
 
-  /** Run `body` with the local union-find CC path disabled, so the
-    * DISTRIBUTED loop is what the assertions exercise. */
-  private def withDistributedCC[T](body: => T): T = {
-    spark.conf.set(Dedup.CcLocalMaxBytesConf, "0")
-    try body finally spark.conf.unset(Dedup.CcLocalMaxBytesConf)
+  /** Labels as a map: the distributed star loop when `distributed`, else
+    * the same call under the default cap (union-find on these sizes). */
+  private def ccLabels(pairs: org.apache.spark.sql.DataFrame,
+                       distributed: Boolean): Map[Long, Long] = {
+    def run = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
+    if (distributed) withDistributedCC(run) else run
   }
 
-  test("alternating CC matches min-label propagation on a random graph") {
-    withDistributedCC {
-      val rnd = new scala.util.Random(11)
-      val pairs = (0 until 150).map(_ =>
-        (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
-        .filter(p => p._1 != p._2)
-        .toDF("i", "j")
-      val alt = Dedup.connectedComponentsAlternating(pairs)
-        .as[(Long, Long)].collect().toMap
-      val ml = Dedup.connectedComponents(pairs, maxIter = 100)
-        .as[(Long, Long)].collect().toMap
-      assert(alt === ml)
-    }
+  test("distributed star CC matches union-find on a random graph") {
+    val rnd = new scala.util.Random(11)
+    val pairs = (0 until 150).map(_ =>
+      (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
+      .filter(p => p._1 != p._2)
+      .toDF("i", "j")
+    assert(ccLabels(pairs, distributed = true) ===
+      ccLabels(pairs, distributed = false))
   }
 
-  test("local union-find CC == distributed loops, both strategies, seeded shapes") {
+  test("local union-find CC == distributed star loop, seeded shapes") {
     // the law that licenses the measured-size-gated driver path (r13):
     // under the cap the collect+union-find must label EXACTLY as the
-    // loop it replaces — per strategy, self-loops and parallel edges in
+    // loop it replaces. Raw pairs go to both paths — self-loops,
+    // parallel edges and one null-endpoint row in — pinning the one
+    // node-universe contract: such rows are ignored, and a node is
+    // labelled iff it has an edge to a different node.
     for (seed <- 21 to 26) {
       val rnd = new scala.util.Random(seed)
       val n = 15 + rnd.nextInt(50)
       val m = n / 2 + rnd.nextInt(n * 2)
-      val pairs = (0 until m).map(_ =>
-        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)).toDF("i", "j")
-      val noSelf = pairs.filter(col("i") =!= col("j"))
-      val (mlLoop, altLoop) = withDistributedCC {
-        (Dedup.connectedComponents(pairs, maxIter = 100)
-          .as[(Long, Long)].collect().toMap,
-          Dedup.connectedComponentsAlternating(noSelf)
-            .as[(Long, Long)].collect().toMap)
-      }
-      val mlLocal = Dedup.connectedComponents(pairs)
-        .as[(Long, Long)].collect().toMap
-      val altLocal = Dedup.connectedComponentsAlternating(noSelf)
-        .as[(Long, Long)].collect().toMap
-      assert(mlLocal === mlLoop, s"min-label local != loop, seed=$seed")
-      assert(altLocal === altLoop, s"alternating local != loop, seed=$seed")
+      val raw = (0 until m).map(_ =>
+        (Option(rnd.nextInt(n).toLong), Option(rnd.nextInt(n).toLong))) :+
+        ((Option(n.toLong), Option.empty[Long]))
+      val pairs = raw.toDF("i", "j")
+      val loop = ccLabels(pairs, distributed = true)
+      val local = ccLabels(pairs, distributed = false)
+      assert(local === loop, s"local != loop, seed=$seed")
+      val edgeNodes = raw.flatMap {
+        case (Some(a), Some(b)) if a != b => Seq(a, b)
+        case _ => Nil
+      }.toSet
+      assert(local.keySet === edgeNodes, s"node universe, seed=$seed")
     }
   }
 
-  test("alternating CC == min-label across seeded graph shapes") {
-    withDistributedCC {
+  test("distributed star CC == union-find across seeded graph shapes") {
     // property sweep guarding smallStar's oriented-input precondition
     // (r9 drops its canonicalization as a no-op on largeStar output):
     // densities from forest-sparse to near-complete, parallel edges
-    // left IN (the operator must dedup them itself); self loops are
-    // excluded because an isolated self-looped node's membership is a
-    // caller contract, not part of the equivalence under test
+    // left IN (the operator must dedup them itself)
     for (seed <- 1 to 12) {
       val rnd = new scala.util.Random(seed)
       val n = 20 + rnd.nextInt(60)
@@ -779,21 +774,17 @@ class CurationSpec extends SparkSpec {
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter(p => p._1 != p._2)
         .toDF("i", "j")
-      val alt = Dedup.connectedComponentsAlternating(pairs)
-        .as[(Long, Long)].collect().toMap
-      val ml = Dedup.connectedComponents(pairs, maxIter = 200)
-        .as[(Long, Long)].collect().toMap
-      assert(alt === ml, s"seed=$seed n=$n m=$m")
-    }
+      assert(ccLabels(pairs, distributed = true) ===
+        ccLabels(pairs, distributed = false), s"seed=$seed n=$n m=$m")
     }
   }
 
   test("alternating CC converges on a 200-node chain in few rounds") {
     withDistributedCC {
-      // diameter 199: min-label would need 199 rounds; star contraction
-      // must do it within the default budget (O(log n))
+      // diameter 199: per-hop propagation would need 199 rounds; star
+      // contraction must do it within the default budget (O(log n))
       val pairs = (0L until 199L).map(i => (i, i + 1)).toDF("i", "j")
-      val labels = Dedup.connectedComponentsAlternating(pairs, maxIter = 15)
+      val labels = Dedup.connectedComponents(pairs, maxIter = 15)
         .as[(Long, Long)].collect()
       assert(labels.length === 200)
       assert(labels.forall(_._2 === 0L))
@@ -803,7 +794,7 @@ class CurationSpec extends SparkSpec {
   test("alternating CC labels two disjoint chains by their minima") {
     val pairs = ((0L until 49L).map(i => (i, i + 1)) ++
       (100L until 149L).map(i => (i, i + 1))).toDF("i", "j")
-    val labels = Dedup.connectedComponentsAlternating(pairs)
+    val labels = Dedup.connectedComponents(pairs)
       .as[(Long, Long)].collect().groupBy(_._2).view.mapValues(_.length).toMap
     assert(labels === Map(0L -> 50, 100L -> 50))
   }

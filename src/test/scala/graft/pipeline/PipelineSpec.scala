@@ -848,12 +848,12 @@ class PipelineSpec extends SparkSpec {
     assert(Seq(10L, 11L, 12L).forall(cc(_) == 10L))
     assert(Seq(20L, 21L).forall(cc(_) == 20L))
     assert(cc.size == 9)
-    // maxIter below the diameter leaves the far end unlabeled-minimal:
-    // the bound is honored, not silently exceeded. maxIter is a LOOP
-    // contract — the local union-find path is exact by construction —
-    // so the loop is forced for this part (cap 0).
-    spark.conf.set(Dedup.CcLocalMaxBytesConf, "0")
-    try {
+    // a round budget below what the chain needs (the star loop takes 4
+    // rounds on this 8-node chain: 3 that rewire, 1 that confirms) leaves
+    // the far end unlabeled-minimal: the bound is honored, not silently
+    // exceeded. maxIter is a LOOP contract — the local union-find path is
+    // exact by construction — so the loop is forced for this part.
+    withDistributedCC {
       val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L),
         (4L, 5L), (5L, 6L), (6L, 7L), (7L, 8L)).toDF("i", "j")
       intercept[IllegalArgumentException](
@@ -861,7 +861,11 @@ class PipelineSpec extends SparkSpec {
       val partial = Dedup.connectedComponents(chain, maxIter = 2,
         allowPartial = true).as[(Long, Long)].collect().toMap
       assert(partial(8L) > 1L)
-    } finally spark.conf.unset(Dedup.CcLocalMaxBytesConf)
+      assert(Dedup.connectedComponents(chain, maxIter = 4)
+        .as[(Long, Long)].collect().forall(_._2 == 1L))
+      intercept[IllegalArgumentException](
+        Dedup.connectedComponents(chain, maxIter = 3))
+    }
   }
 
   // ---- Ann.bitextMargin --------------------------------------------------

@@ -54,8 +54,8 @@ def main():
     jvm = ["java"]
     for p in ADD_OPENS_PKGS:
         jvm += ["--add-opens", f"{p}=ALL-UNNAMED"]
-    jvm += ["-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-            f"-Xmx{os.environ.get('SPARK_DRIVER_MEM', '8g')}",
+    # UI off and UTC come from graft.Session, which TimeQ builds on
+    jvm += [f"-Xmx{os.environ.get('SPARK_DRIVER_MEM', '8g')}",
             "-cp", cp, "graft.TimeQ", sf_dir]
 
     sha = subprocess.run(["git", "rev-parse", "HEAD"], capture_output=True,
