@@ -112,70 +112,6 @@ object Broadcasts {
   def withReleased[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T =
     try body finally release(spark)
 
-  /** AUTOMATIC persist lifecycle for interactive sessions (VERDICT r8
-    * item 5): a QueryExecutionListener that, after each successful
-    * top-level execution, releases tracked persists the finished query
-    * did not read. A frame is dropped only after TWO consecutive
-    * executions miss it — one grace execution, so an operator that
-    * persists A, materializes B (an action that does not touch A), then
-    * consumes both in its final action never loses A mid-build. Matching
-    * is by cache-builder identity: the listener plans (never runs) an
-    * identity filter over each tracked frame so cache substitution
-    * reveals the InMemoryRelation actually backing it, and compares it
-    * against the InMemoryRelations in the finished plan.
-    *
-    * Opt-in (`Broadcasts.autoRelease(spark)`), returns a handle whose
-    * `stop()` unregisters the listener. Releases are lazy eviction —
-    * a later reuse of a dropped frame recomputes, never corrupts (every
-    * tracked persist in this library is a pure-performance cache; r9
-    * removed the last determinism-bearing one). */
-  final class AutoRelease private[Broadcasts] (
-      spark: org.apache.spark.sql.SparkSession)
-    extends org.apache.spark.sql.util.QueryExecutionListener {
-    private val misses = new java.util.concurrent.ConcurrentHashMap[DataFrame, Integer]()
-
-    private def builderOf(df: DataFrame): Option[AnyRef] =
-      df.filter(org.apache.spark.sql.functions.lit(true))
-        .queryExecution.optimizedPlan.collectFirst {
-          case imr: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-            imr.cacheBuilder
-        }
-
-    override def onSuccess(funcName: String,
-        qe: org.apache.spark.sql.execution.QueryExecution,
-        durationNs: Long): Unit = {
-      val used = qe.optimizedPlan.collect {
-        case imr: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-          imr.cacheBuilder
-      }
-      val it = tracked.iterator()
-      while (it.hasNext) {
-        val df = it.next()
-        if (df.sparkSession eq spark) builderOf(df) match {
-          case None => it.remove(); misses.remove(df) // already unpersisted
-          case Some(b) if used.exists(_ eq b) => misses.remove(df)
-          case Some(_) =>
-            val n = misses.merge(df, 1, (a, x) => a + x)
-            if (n >= 2) { df.unpersist(false); it.remove(); misses.remove(df) }
-        }
-      }
-    }
-
-    override def onFailure(funcName: String,
-        qe: org.apache.spark.sql.execution.QueryExecution,
-        exception: Exception): Unit = ()
-
-    /** Unregister the listener; tracked frames stay for [[release]]. */
-    def stop(): Unit = spark.listenerManager.unregister(this)
-  }
-
-  /** Register and return an [[AutoRelease]] listener on `spark`. */
-  def autoRelease(spark: org.apache.spark.sql.SparkSession): AutoRelease = {
-    val l = new AutoRelease(spark)
-    spark.listenerManager.register(l)
-    l
-  }
-
   /** Observed cached size of a persisted-and-materialized frame. */
   private[graft] def measuredBytes(cached: DataFrame): BigInt =
     // A fresh Dataset over the same plan (identity filter) so cache

@@ -87,10 +87,9 @@ object Replay {
   /** The reference's inter-arrival formula (src/replay.go:217-296): ms
     * to wait between the previous statement's COMPLETION and this one's
     * start — original gap minus the time the previous statement already
-    * consumed, scaled by speed. Shared by the driver-thread scheduler
-    * and the Structured-Streaming face so the two cannot drift. */
-  private[replay] def interArrivalMs(tsMs: Long, prevTsMs: Long,
-                                     prevDurationMs: Long, speed: Double): Long =
+    * consumed, scaled by speed. */
+  private def interArrivalMs(tsMs: Long, prevTsMs: Long,
+                             prevDurationMs: Long, speed: Double): Long =
     ((tsMs - prevTsMs - prevDurationMs) / speed).toLong
 
   private def replayClient(
@@ -129,10 +128,9 @@ object Replay {
   /** Execute ONE replayed statement (errors recorded, never thrown — R5;
     * R2: a failed statement is re-attempted up to `retries` times,
     * mirroring the reference's reconnect-and-retry on dropped
-    * connections). Shared by the driver-thread scheduler and the
-    * Structured-Streaming face. */
-  private[replay] def execOne(session: SparkSession, s: ReplayStatement,
-                              opts: Options): Result = {
+    * connections). */
+  private def execOne(session: SparkSession, s: ReplayStatement,
+                      opts: Options): Result = {
     val startedAt = java.time.LocalDateTime.now()
     val t0 = System.nanoTime()
     var rows = 0L
@@ -174,92 +172,6 @@ object Replay {
     }
     val durationMs = (System.nanoTime() - t0) / 1000000
     Result(startedAt.toString.replace('T', ' '), s.queryId, rows, hash, durationMs, err)
-  }
-
-  /** Structured-Streaming replay face (SURVEY §2.11's forward-looking
-    * note): the SAME per-client serial interval semantics — identical
-    * [[interArrivalMs]] formula, identical [[execOne]] execution, same
-    * [[Options]] knobs — driven by a `rate` source's micro-batch ticks
-    * instead of driver sleeps. Each trigger, every client whose next
-    * statement has come due (elapsed wall-clock ≥ its computed due
-    * time) executes it serially via foreachBatch on the driver, exactly
-    * where the thread scheduler would have woken; statements still run
-    * as full distributed Spark queries. Sub-floor gaps fire on the next
-    * tick, the streaming analog of the 2 ms sleep-skip floor.
-    *
-    * Returns per-client results in execution order (the batch face's
-    * contract), once every statement has fired or `timeoutMs` passes
-    * (remaining statements are then reported as timeout errors rather
-    * than silently dropped). */
-  def replayStream(spark: SparkSession,
-                   clientSqls: Map[String, Seq[ReplayStatement]],
-                   minTs: Long, opts: Options = Options(),
-                   tickMs: Long = 50, timeoutMs: Long = 300000,
-                   sessionFor: SparkSession => SparkSession = _.newSession())
-      : Map[String, Seq[Result]] = {
-    // fireDue() runs on the streaming micro-batch thread while the
-    // driver thread polls `done` and, after query.stop(), collects
-    // `out` — every mutable field is volatile (and `out` appends happen
-    // before the volatile `idx` write that publishes them) so the
-    // cross-thread reads never depend solely on stop()'s thread join.
-    // Behavioral divergence vs the batch face, by design: the streaming
-    // face does NOT recycle idle sessions (connIdleMs) — a micro-batch
-    // tick fires everything due at once, so there is no per-client idle
-    // wait to recycle around.
-    final class St(val sqls: Seq[ReplayStatement]) {
-      val session: SparkSession = sessionFor(spark)
-      session.sparkContext.setLocalProperty("spark.scheduler.pool", opts.cluster.orNull)
-      @volatile var idx = 0
-      @volatile var prevTs: Long = minTs
-      @volatile var prevDur = 0L
-      @volatile var dueAt: Long = 0L
-      val out = scala.collection.mutable.ArrayBuffer.empty[Result]
-      def done: Boolean = idx >= sqls.length
-    }
-    val t0 = System.nanoTime()
-    def elapsedMs: Long = (System.nanoTime() - t0) / 1000000
-    val states = clientSqls.view.mapValues(new St(_)).toMap
-    states.values.foreach { st =>
-      if (!st.done) {
-        val sleep = interArrivalMs(st.sqls.head.tsMs, st.prevTs, 0L, opts.speed)
-        st.dueAt = if (sleep > opts.sleepFloorMs) sleep else 0L
-      }
-    }
-    def fireDue(): Unit = states.values.foreach { st =>
-      while (!st.done && elapsedMs >= st.dueAt) {
-        val s = st.sqls(st.idx)
-        st.prevTs = s.tsMs
-        st.out += execOne(st.session, s, opts)
-        st.prevDur = s.durationMs
-        st.idx += 1
-        if (!st.done) {
-          val sleep = interArrivalMs(st.sqls(st.idx).tsMs, st.prevTs,
-            st.prevDur, opts.speed)
-          st.dueAt = elapsedMs + (if (sleep > opts.sleepFloorMs) sleep else 0L)
-        }
-      }
-    }
-    val ticks = spark.readStream.format("rate")
-      .option("rowsPerSecond", math.max(1L, 1000L / math.max(1L, tickMs)))
-      .load()
-    val query = ticks.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(tickMs))
-      .outputMode("append")
-      .foreachBatch((_: org.apache.spark.sql.DataFrame, _: Long) => fireDue())
-      .start()
-    try {
-      val deadline = System.nanoTime() + timeoutMs * 1000000L
-      while (states.values.exists(!_.done) && System.nanoTime() < deadline)
-        Thread.sleep(math.min(tickMs, 20L))
-    } finally query.stop()
-    states.values.foreach { st =>
-      while (!st.done) { // loud, never silent: timeout rows carry an err
-        st.out += Result("", st.sqls(st.idx).queryId, 0L, "", 0L,
-          s"replayStream timeout after $timeoutMs ms")
-        st.idx += 1
-      }
-    }
-    clientSqls.map { case (c, _) => c -> states(c).out.toSeq }
   }
 
   // ---- S13: JSONL result sink (one <client>.result file) --------------

@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: a line-based scan keyed by byte offset — big unrotated
   * files split across tasks like any text source, and records reassemble
-  * via a per-file running-count window (see `records`). Records never
-  * cross files, so a 10k-file 100 TB log directory still fans out to
-  * independent tasks, and a single multi-GB file no longer serializes
-  * into one task or one JVM string.
+  * per split with a bounded stitch pass at split boundaries (see
+  * `records`). Records never cross files, so a 10k-file 100 TB log
+  * directory still fans out to independent tasks, and a single multi-GB
+  * file never serializes into one task or one JVM string.
   */
 object AuditLog {
 
@@ -52,137 +52,73 @@ object AuditLog {
       from: String = "", to: String = "",
       strict: Boolean = false)
 
-  /** S1: file scan + multi-line reassembly. One row per audit *record*
-    * (a line not starting with a timestamp belongs to the previous one).
-    * Columns: file, pos (1-based record index within its file), record.
-    * `encoding` other than UTF-8 reads the bytes and decodes with that
-    * charset (S2).
+  /** S1: file scan + multi-line reassembly — the one reader for
+    * start-line-delimited text (audit logs here, replay dumps in
+    * [[ReplayCodec.decode]]). One row per *record*: a line matching
+    * `startRe` at its head opens a record, any other line belongs to the
+    * previous one, lines before a file's first start line are dropped.
+    * Columns: file, pos (1-based record index within its file), record
+    * (lines joined with `\n`, line terminators dropped). `encoding`
+    * other than UTF-8 reads the bytes and decodes with that charset (S2).
     *
-    * Scale design: a LINE-based scan, not `wholetext` — one unrotated
-    * multi-GB log must neither hit Spark's ~2 GB single-string ceiling
-    * nor serialize a whole file into one task's memory (the reference
-    * streams the file line by line for the same reason,
-    * src/auditlog.go:88-138). Hadoop's TextInputFormat keys every line
-    * with its BYTE OFFSET, which gives exact intra-file order even when
-    * a big file splits across tasks; a running `sum(is_record_start)`
-    * window over (file, offset) then assigns each continuation line to
-    * its record, and records reassemble in a map-side-combinable
-    * aggregate. Only the record — bounded by the engine's max statement
-    * length — ever exists as one string. */
-  def records(spark: SparkSession, path: String, encoding: String = "UTF-8"): DataFrame = {
+    * Scale design: a LINE-based scan, never one row per file — one
+    * unrotated multi-GB log (or the multi-GB `q0.sql` dumped from it)
+    * must neither hit Spark's ~2 GB single-string ceiling nor serialize
+    * into one task (the reference streams the file line by line for the
+    * same reason, src/auditlog.go:88-138). Hadoop's TextInputFormat keys
+    * every line with its BYTE OFFSET and charges a boundary-spanning
+    * line to the split it starts in, so each split is one byte range of
+    * one file read in order. Each task streams its lines into chunks
+    * ([[chunks]]): every chunk but the split's first begins with a start
+    * line, and a chunk that is neither the split's first nor its last is
+    * a COMPLETE record. Only the ≤ 2 boundary chunks per split are
+    * shuffled, to stitch each record's fragments in offset order; a
+    * record's `pos` is a per-split base (starts in the file's earlier
+    * splits, one row per split) plus its index within its split. Only
+    * one record ever exists as one string.
+    * `graft.audit.splitMaxBytes` caps the split size (unset, Hadoop's
+    * block-size splits apply). */
+  def records(spark: SparkSession, path: String, encoding: String = "UTF-8",
+              startRe: String = s"$recordStartRe "): DataFrame = {
     if (!encoding.equalsIgnoreCase("UTF-8")) {
       // Charset-decode path (S2): Spark's decode() whitelists a few
-      // charsets only, so a JVM decode runs once per FILE — wholetext
+      // charsets only, so a JVM decode runs once per FILE — whole-file
       // granularity is the price of the one-shot decode and is confined
       // to this (rare, explicitly-requested) path.
       // strip a leading U+FEFF: a BOM survives decoders named with an
       // explicit endianness (UTF-16LE/BE) and the UTF-8 decoder, and
-      // would otherwise break the first record's timestamp-start regex
+      // would otherwise break the first record's start-line regex
       val dec = udf((bytes: Array[Byte]) => {
         val s = new String(bytes, encoding)
         if (s.nonEmpty && s.charAt(0) == '\uFEFF') s.substring(1) else s
       })
       val text = spark.read.format("binaryFile").load(path)
         .select(col("path").as("file"), dec(col("content")).as("value"))
-      return text.select(col("file"),
-          posexplode(split(col("value"), s"(?m)(?=^$recordStartRe )")).as(Seq("pos", "record")))
-        .filter(col("record").rlike(s"^$recordStartRe "))
+      // the leading "\n" makes element 0 a non-record (empty or the
+      // prelude), so pos is 1-based like the line reader's
+      return text.select(col("file"), posexplode(split(
+          concat(lit("\n"), col("value")), s"(?m)(?=^(?:$startRe))")).as(Seq("pos", "record")))
+        .filter(col("record").rlike(s"^(?:$startRe)"))
     }
     import org.apache.hadoop.io.{LongWritable, Text}
     import org.apache.hadoop.mapreduce.lib.input.{FileSplit, TextInputFormat}
-    // Optional split-size override so one unrotated multi-GB log fans
-    // out to many tasks (and so specs can force >1 split on a small
-    // fixture); unset, Hadoop's block-size splits apply.
     val conf = new org.apache.hadoop.conf.Configuration(
       spark.sparkContext.hadoopConfiguration)
     spark.conf.getOption("graft.audit.splitMaxBytes").foreach(v =>
       conf.set("mapreduce.input.fileinputformat.split.maxsize", v))
-    val raw = spark.sparkContext.newAPIHadoopFile(path, classOf[TextInputFormat],
+    val start = java.util.regex.Pattern.compile(startRe)
+    val chunked = spark.sparkContext.newAPIHadoopFile(path, classOf[TextInputFormat],
         classOf[LongWritable], classOf[Text], conf)
       .asInstanceOf[org.apache.spark.rdd.NewHadoopRDD[LongWritable, Text]]
       .mapPartitionsWithInputSplit { case (split, iter) =>
         val file = split.asInstanceOf[FileSplit].getPath.toString
-        iter.map { case (off, line) => (file, off.get(), line.toString) }
+        chunks(iter.map { case (off, line) => (file, off.get(), line.toString) }, start,
+          org.apache.spark.TaskContext.getPartitionId().toLong)
       }
-    // Boundary-stitched PER-SPLIT reassembly (r14, guide §6; VERDICT r13
-    // item 6). The old shape windowed ALL lines per file — correct, but
-    // Window.partitionBy(file) serializes an unrotated multi-GB log into
-    // one task. Lines arrive in byte order within each split (one split
-    // = one byte range of one file; LineRecordReader charges a
-    // boundary-spanning line to the split it starts in), so each task
-    // coalesces its consecutive lines into CHUNKS locally: every chunk
-    // but the first begins with a record-start line; a chunk that is
-    // neither the split's first nor last is a COMPLETE record by
-    // construction (its record ends where the next start line begins).
-    // Only the ≤2 boundary chunks per split (the head fragment, whose
-    // record opened in an earlier split, and the tail chunk, whose
-    // record may continue into the next) go through the stitch pass —
-    // the original running-count window, now over bounded rows (≤
-    // 2·numSplits), not the corpus.
-    // Single-split input (a small or unsplittable file): the per-file
-    // window IS that one task, and the boundary-stitch machinery below
-    // (chunk persist, stitch window, base join) would only add jobs —
-    // take the direct shape. Multi-split inputs take the parallel path;
-    // WorkloadSpec pins the two byte-identical across a forced 512-byte
-    // split of the same fixture.
-    if (raw.getNumPartitions <= 1) {
-      val lines = spark.createDataFrame(raw).toDF("file", "off", "line")
-      val w1 = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("file")).orderBy(col("off"))
-      return lines
-        .withColumn("pos",
-          sum(when(col("line").rlike(s"^$recordStartRe "), 1).otherwise(0)).over(w1)
-            .cast("int"))
-        .filter(col("pos") > 0) // prelude lines before the first record start
-        .groupBy(col("file"), col("pos"))
-        .agg(array_join(
-          transform(array_sort(collect_list(struct(col("off"), col("line")))),
-            x => x.getField("line")), "\n").as("record"))
-    }
-    val re = java.util.regex.Pattern.compile(s"^$recordStartRe .*", java.util.regex.Pattern.DOTALL)
-    // (file, split, off, sidx, isStart, isBoundary, text) — sidx is the
-    // chunk's 1-based record-start index WITHIN its split (0 for a head
-    // fragment), so the global record index decomposes into bounded
-    // per-split arithmetic: pos = (starts in earlier splits of the file)
-    // + sidx, with the per-split totals a numSplits-row summary — never
-    // a window over corpus-shaped rows.
-    val chunks = raw.mapPartitions { it =>
-      val split = org.apache.spark.TaskContext.getPartitionId().toLong
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Long, Long, Long, Boolean, Boolean, String)]
-      var file: String = null
-      var off = -1L
-      var isStart = false
-      var first = true
-      var sidx = 0L
-      val buf = new StringBuilder
-      def flush(last: Boolean): Unit = if (off >= 0) {
-        out += ((file, split, off, sidx, isStart, first || last, buf.toString))
-        first = false
-        buf.clear()
-      }
-      while (it.hasNext) {
-        val (f, o, line) = it.next()
-        if (re.matcher(line).matches()) {
-          flush(last = false)
-          file = f; off = o; isStart = true; sidx += 1
-          buf ++= line
-        } else if (off >= 0) {
-          buf += '\n'; buf ++= line
-        } else { // head continuation before the split's first start line
-          file = f; off = o; isStart = false
-          buf ++= line
-        }
-      }
-      flush(last = true)
-      out.iterator
-    }
     // Persisted: interior records, the stitch pass and the per-split
     // summary all consume the chunk table; recomputing it re-scans the
-    // raw text (released per query by Bench/Verify).
-    val chunkDf = graft.operators.Broadcasts.trackedPersist(
-      spark.createDataFrame(chunks)
-        .toDF("file", "split", "off", "sidx", "is_start", "boundary", "text"))
+    // raw text (released per query by Bench/Verify, per verb by Cli).
+    val chunkDf = graft.operators.Broadcasts.trackedPersist(spark.createDataFrame(chunked))
     // per-split record-start totals: ONE row per split (bounded
     // metadata), so the per-file running offset is the one window shape
     // that is always correct — a cumulative sum over bounded rows
@@ -196,17 +132,18 @@ object AuditLog {
       .select("file", "split", "base")
     val interior = chunkDf.filter(!col("boundary"))
       .select(col("file"), col("split"), col("sidx"), col("text").as("record"))
-    // stitch pass: only the ≤2 boundary chunks per split; the running-
-    // count window runs over those bounded rows, never the corpus
+    // stitch pass: only the ≤ 2 boundary chunks per split. A running
+    // count of start chunks (sidx > 0; a head fragment has sidx 0) over
+    // file offset groups each record's fragments; group 0 is a prelude.
     val wFile = org.apache.spark.sql.expressions.Window
       .partitionBy(col("file")).orderBy(col("off"))
     val stitched = chunkDf.filter(col("boundary"))
       .withColumn("grp",
-        sum(when(col("is_start"), 1).otherwise(0)).over(wFile))
-      .filter(col("grp") > 0) // prelude fragments before the first record
+        sum(when(col("sidx") > 0, 1).otherwise(0)).over(wFile))
+      .filter(col("grp") > 0)
       .groupBy(col("file"), col("grp"))
-      .agg(max(when(col("is_start"), col("split"))).as("split"),
-        max(when(col("is_start"), col("sidx"))).as("sidx"),
+      .agg(max(when(col("sidx") > 0, col("split"))).as("split"),
+        max(col("sidx")).as("sidx"),
         array_join(
           transform(array_sort(collect_list(struct(col("off"), col("text")))),
             x => x.getField("text")), "\n").as("record"))
@@ -216,6 +153,58 @@ object AuditLog {
       .select(col("file"),
         (col("base") + col("sidx")).cast("int").as("pos"),
         col("record"))
+  }
+
+  /** One split's consecutive lines coalesced into a chunk: `sidx` is the
+    * chunk's 1-based record-start index WITHIN its split (0 for a head
+    * fragment, whose record opened in an earlier split); `boundary` marks
+    * the split's first and last chunk, the only ones that may need
+    * stitching to a neighbouring split. */
+  private[workload] case class Chunk(file: String, split: Long, off: Long, sidx: Long,
+                   boundary: Boolean, text: String)
+
+  /** Stream one split's `(file, byte offset, line)` rows, in offset
+    * order, into [[Chunk]]s. Lazy: a chunk is emitted as soon as the next
+    * start line (or the end of input) closes it, so only the current
+    * record's text is held in memory. */
+  private[workload] def chunks(lines: Iterator[(String, Long, String)],
+                               start: java.util.regex.Pattern,
+                               split: Long): Iterator[Chunk] = new Iterator[Chunk] {
+    private var file: String = null
+    private var off = -1L // -1: no open chunk
+    private var first = true
+    private var sidx = 0L
+    private val buf = new java.lang.StringBuilder
+    private var ready: Chunk = null
+
+    private def close(last: Boolean): Unit = {
+      ready = Chunk(file, split, off, sidx, first || last, buf.toString)
+      first = false
+      buf.setLength(0)
+      off = -1L
+    }
+
+    def hasNext: Boolean = {
+      while (ready == null && lines.hasNext) {
+        val (f, o, line) = lines.next()
+        val opens = start.matcher(line).lookingAt()
+        if (opens && off >= 0) close(last = false)
+        // a new chunk opens at a start line or, before the split's first
+        // start line, at the head fragment's first line
+        if (off < 0) { file = f; off = o } else buf.append('\n')
+        if (opens) sidx += 1
+        buf.append(line)
+      }
+      if (ready == null && off >= 0) close(last = true)
+      ready != null
+    }
+
+    def next(): Chunk = {
+      if (!hasNext) throw new NoSuchElementException("no more chunks")
+      val c = ready
+      ready = null
+      c
+    }
   }
 
   /** S2: encoding detection over a head sample — strict UTF-8 probe

@@ -8,10 +8,12 @@ import org.apache.spark.sql.types._
   * reference: src/replay.go:374-497.
   *
   * File format: one statement per record, records start with
-  * `/*dodo{json-meta}*/ ` and may wrap to continuation lines. Decoding is
-  * the same wholetext → lookahead-split → from_json shape as the audit
-  * scan; per-file statement order is preserved via posexplode, which is
-  * what makes round-robin re-bucketing `(i % clientCount) + 1`
+  * `/*dodo{json-meta}*/ ` and may wrap to continuation lines. Decoding
+  * reads records with the audit scan's own line reader
+  * ([[AuditLog.records]] with the replay record-start pattern), so one
+  * multi-GB `q0.sql` splits across tasks like the log it was dumped
+  * from; its 1-based per-file record index gives `sqlIdx = pos - 1`,
+  * which is what makes round-robin re-bucketing `(i % clientCount) + 1`
   * deterministic and partition-independent.
   */
 object ReplayCodec {
@@ -21,6 +23,9 @@ object ReplayCodec {
     StructField("user", StringType), StructField("db", StringType),
     StructField("queryId", StringType), StructField("durationMs", LongType)))
 
+  /** Record-start line pattern of a replay file. */
+  private val recordStartRe = """/\*dodo\{"""
+
   case class DecodeOpts(
       dbs: Seq[String] = Nil, users: Seq[String] = Nil,
       fromMs: Long = 0, toMs: Long = 0, clientCount: Int = 0)
@@ -28,11 +33,8 @@ object ReplayCodec {
   /** Decode a replay-SQL directory/file into
     * (file, sqlIdx, client, ts, tsMs, user, db, queryId, durationMs, stmt). */
   def decode(spark: SparkSession, path: String, opts: DecodeOpts = DecodeOpts()): DataFrame = {
-    val raw = spark.read.option("wholetext", "true").text(path)
-      .select(input_file_name().as("file"), col("value"))
-      .select(col("file"),
-        posexplode(split(col("value"), """(?m)(?=^/\*dodo\{)""")).as(Seq("sqlIdx", "rec")))
-      .filter(col("rec").startsWith("/*dodo{"))
+    val raw = AuditLog.records(spark, path, startRe = recordStartRe)
+      .select(col("file"), (col("pos") - 1).as("sqlIdx"), col("record").as("rec"))
     val metaJson = regexp_extract(col("rec"), """(?s)^/\*dodo(\{.*?\})\*/""", 1)
     val stmt = trim(regexp_extract(col("rec"), """(?s)^/\*dodo\{.*?\}\*/(.*)$""", 1))
     val decoded = raw

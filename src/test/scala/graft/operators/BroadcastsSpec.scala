@@ -124,34 +124,6 @@ class BroadcastsSpec extends SparkSpec {
     assert(Broadcasts.release(spark) == 0)
   }
 
-  test("autoRelease drops a finished operator's persists without explicit release") {
-    spark.catalog.clearCache()
-    Broadcasts.release(spark)
-    val h = Broadcasts.autoRelease(spark)
-    try {
-      // operator 1: gate persists its frame and materializes it
-      val a = Broadcasts.sizeGated(
-        spark.range(5000).select(col("id"), (col("id") % 3).as("k")))
-      a.count()
-      assert(a.storageLevel.useMemory || a.storageLevel.useDisk)
-      // operator 2 runs actions that never reference operator 1's frame;
-      // after the one-execution grace, the listener must release it
-      val b = Broadcasts.sizeGated(
-        spark.range(7000).select(col("id"), (col("id") % 5).as("j")))
-      b.count(); b.count(); b.count()
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (a.storageLevel != org.apache.spark.storage.StorageLevel.NONE &&
-             System.nanoTime() < deadline) Thread.sleep(50)
-      assert(a.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-        "operator 1's persist must be auto-released after two unused executions")
-      // the in-use frame survives (every b action reads its cache)
-      assert(b.storageLevel.useMemory || b.storageLevel.useDisk)
-    } finally {
-      h.stop()
-      Broadcasts.release(spark)
-    }
-  }
-
   test("withReleased releases the scope's tracked persists on exit") {
     spark.catalog.clearCache()
     Broadcasts.release(spark)

@@ -526,27 +526,4 @@ class StreamingSpec extends SparkSpec {
         s"window $ws: stream kmv $n vs batch distinct ${batch.get(ws)}")
     }
   }
-
-  test("replay-rate streaming face: batch and stream replay q0.sql identically") {
-    import graft.replay.Replay
-    import graft.workload.ReplayCodec
-    val q0 = getClass.getResource("/fixture/q0.sql").getPath
-    val decoded = ReplayCodec.decode(spark, q0)
-    val byClient = ReplayCodec.byClient(decoded)
-    val minTs = ReplayCodec.minTs(decoded).getOrElse(0L)
-    assert(byClient.nonEmpty)
-    val opts = Replay.Options(speed = 1e9, maxHashRows = 10)
-    // batch face: driver-thread scheduler, sleeps recorded away
-    val batch = Replay.replay(spark, byClient, minTs, opts, sleeper = _ => ())
-    // streaming face: the SAME Options + interArrivalMs + execOne, driven
-    // by rate-source micro-batch ticks
-    val stream = Replay.replayStream(spark, byClient, minTs, opts,
-      tickMs = 50, timeoutMs = 120000)
-    assert(stream.keySet == batch.keySet)
-    for (c <- batch.keySet) {
-      val b = batch(c).map(r => (r.queryId, r.returnRows, r.returnRowsHash, r.err.isEmpty))
-      val s = stream(c).map(r => (r.queryId, r.returnRows, r.returnRowsHash, r.err.isEmpty))
-      assert(s == b, s"client $c: stream results diverge from batch")
-    }
-  }
 }

@@ -58,6 +58,7 @@ class EncodingSpec extends SparkSpec {
       assert(enc == cs, s"file in $cs detected as $enc")
       val recs = AuditLog.records(spark, f, enc).collect()
       assert(recs.length == 1)
+      assert(recs.head.getInt(1) == 1, "pos is 1-based on the charset path too")
       assert(recs.head.getString(2).contains(s"Db=$db"),
         s"decoded record: ${recs.head.getString(2)}")
     }

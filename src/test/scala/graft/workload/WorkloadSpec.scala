@@ -109,33 +109,99 @@ class WorkloadSpec extends SparkSpec {
     assert(backA.select("queryId").collect().forall(!_.getString(0).startsWith("b")))
   }
 
+  /** Hadoop input splits of `path` under a `maxBytes` split cap. */
+  private def splitCount(path: String, maxBytes: Long): Int = {
+    import org.apache.hadoop.io.{LongWritable, Text}
+    import org.apache.hadoop.mapreduce.lib.input.TextInputFormat
+    val conf = new org.apache.hadoop.conf.Configuration(
+      spark.sparkContext.hadoopConfiguration)
+    conf.set("mapreduce.input.fileinputformat.split.maxsize", maxBytes.toString)
+    spark.sparkContext.newAPIHadoopFile(path,
+      classOf[TextInputFormat], classOf[LongWritable], classOf[Text],
+      conf).getNumPartitions
+  }
+
+  private def withSplitMaxBytes[T](bytes: Long)(body: => T): T = {
+    spark.conf.set("graft.audit.splitMaxBytes", bytes.toString)
+    try body finally spark.conf.unset("graft.audit.splitMaxBytes")
+  }
+
   test("boundary-stitched reassembly: many tiny splits == one split, records identical") {
-    // r14 (VERDICT r13 item 6): records used to reassemble via one
-    // window per FILE — a single task for an unrotated multi-GB log.
     // The per-split chunking must produce byte-identical (pos, record)
     // rows no matter where Hadoop cuts the splits; force pathological
     // 512-byte splits (the 26 KB fixture fans out to ~50 splits, cutting
-    // mid-record everywhere) and compare against the natural read.
+    // mid-record everywhere) and compare both reads against a plain
+    // reference: read the file, cut it at record-start lines, number
+    // from 1. The second input puts a ~1.7 KB prelude before the first
+    // record, so whole splits hold nothing but lines to drop.
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("pos", "record").collect()
         .map(r => (r.getInt(0), r.getString(1))).sortBy(_._1).toSeq
-    val natural = rows(AuditLog.records(spark, auditLog))
-    spark.conf.set("graft.audit.splitMaxBytes", "512")
-    try {
-      val forced = AuditLog.records(spark, auditLog)
-      // the scan genuinely fans out: >1 split reaches the chunking stage
-      import org.apache.hadoop.io.{LongWritable, Text}
-      import org.apache.hadoop.mapreduce.lib.input.TextInputFormat
-      val conf = new org.apache.hadoop.conf.Configuration(
-        spark.sparkContext.hadoopConfiguration)
-      conf.set("mapreduce.input.fileinputformat.split.maxsize", "512")
-      val nSplits = spark.sparkContext.newAPIHadoopFile(auditLog,
-        classOf[TextInputFormat], classOf[LongWritable], classOf[Text],
-        conf).getNumPartitions
-      assert(nSplits > 1, s"expected >1 split, got $nSplits")
-      assert(rows(forced) == natural,
-        "split-boundary reassembly must be byte-identical to the natural read")
-    } finally spark.conf.unset("graft.audit.splitMaxBytes")
-    assert(natural.map(_._1) == (1 to natural.size), "pos is a dense 1-based index")
+    def reference(path: String) = {
+      val src = scala.io.Source.fromFile(path, "UTF-8")
+      val lines = try src.getLines().toVector finally src.close()
+      def isStart(l: String) = l.matches(s"${AuditLog.recordStartRe} .*")
+      lines.dropWhile(!isStart(_))
+        .foldLeft(Vector.empty[Vector[String]]) { (recs, l) =>
+          if (isStart(l)) recs :+ Vector(l) else recs.init :+ (recs.last :+ l)
+        }
+        .map(_.mkString("\n")).zipWithIndex.map { case (r, i) => (i + 1, r) }
+    }
+    val withPrelude = java.nio.file.Files.createTempFile("graft_prelude", ".log")
+    java.nio.file.Files.writeString(withPrelude,
+      Seq.tabulate(30)(i => s"prelude line $i " + "x" * 40).mkString("", "\n", "\n") +
+        java.nio.file.Files.readString(java.nio.file.Paths.get(auditLog)))
+    for (path <- Seq(auditLog, withPrelude.toString)) {
+      val want = reference(path)
+      assert(want.exists(_._2.contains('\n')), "fixture has multi-line records")
+      assert(splitCount(path, Long.MaxValue) == 1)
+      assert(rows(AuditLog.records(spark, path)) == want,
+        s"one-split read of $path must equal the reference")
+      assert(splitCount(path, 512) > 1)
+      withSplitMaxBytes(512) {
+        assert(rows(AuditLog.records(spark, path)) == want,
+          s"split-boundary reassembly of $path must equal the reference")
+      }
+    }
+  }
+
+  test("chunker streams: the first chunk is out before the split is read") {
+    val start = java.util.regex.Pattern.compile(s"${AuditLog.recordStartRe} ")
+    def rec(i: Int) = s"2024-08-06 23:44:1$i,000 [query] rec$i"
+    val lines = Iterator("head", rec(1), "c1", rec(2), "c2", rec(3))
+      .zipWithIndex.map { case (l, i) => ("f", i * 100L, l) }
+    val chunks = AuditLog.chunks(lines, start, split = 7L)
+    // the head fragment closes when rec1 arrives: rec1 onward is unread
+    assert(chunks.next() == AuditLog.Chunk("f", 7L, 0L, 0L, boundary = true, "head"))
+    assert(lines.hasNext, "chunker must not drain its input to emit a chunk")
+    assert(chunks.toList == List(
+      AuditLog.Chunk("f", 7L, 100L, 1L, boundary = false, s"${rec(1)}\nc1"),
+      AuditLog.Chunk("f", 7L, 300L, 2L, boundary = false, s"${rec(2)}\nc2"),
+      AuditLog.Chunk("f", 7L, 500L, 3L, boundary = true, rec(3))))
+  }
+
+  test("decode of a dump directory: 512-byte splits == natural read, row for row") {
+    import java.nio.file.{Files, Paths}
+    val qdf = AuditLog.queries(spark, auditLog, AuditLog.ScanOpts())
+    val outDir = Files.createTempDirectory("graft_dump").toString
+    assert(AuditLog.writeDumpSql(qdf, outDir) == Seq("q0.sql"))
+    assert(Files.isDirectory(Paths.get(s"$outDir/_staging")), "dump keeps its staging dir")
+    def rows() = ReplayCodec.decode(spark, outDir, ReplayCodec.DecodeOpts(clientCount = 4))
+      .select("file", "sqlIdx", "queryId", "stmt", "client").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getString(3), r.getString(4)))
+      .sortBy(r => (r._1, r._2)).toSeq
+    val natural = rows()
+    assert(splitCount(s"$outDir/q0.sql", 512) > 1)
+    val forced = withSplitMaxBytes(512)(rows())
+    assert(forced == natural)
+    assert(natural.map(_._2) == natural.indices, "sqlIdx is a dense 0-based index")
+    // stmt is the dumped statement with its `;` and no line terminator
+    val want = qdf.select("queryId", "stmt").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(natural.size == want.size)
+    natural.foreach { case (_, _, id, stmt, _) =>
+      val w = want(id)
+      assert(stmt == (if (w.endsWith(";")) w else w + ";"), s"stmt of $id")
+    }
   }
 }
