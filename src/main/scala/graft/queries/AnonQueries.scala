@@ -21,9 +21,9 @@ object AnonQueries extends QueryModule {
     "a01_anonymize_ids" -> ((s, _) => {
       // Column-expression hash (no UDF): THE pattern for anonymizing a
       // billions-row identifier column — codegen'd sha2/lower/substring.
+      // one decode: both identifier columns of each record, as rows
       val ids = ReplayCodec.decode(s, q0)
-        .select(col("db").as("id"))
-        .union(ReplayCodec.decode(s, q0).select(col("user").as("id")))
+        .select(explode(array(col("db"), col("user"))).as("id"))
         .distinct()
       ids.select(col("id"), Anonymizer.hashAliasCol(col("id")).as("alias"))
         .orderBy("id")

@@ -4,7 +4,15 @@ import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
-import org.apache.spark.sql.SparkSession
+import scala.util.Try
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{CTERelationRef, LeafNode, LocalRelation, LogicalPlan, OneRowRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import graft.sqlx.DorisSql
 import graft.workload.ReplayStatement
 
@@ -22,8 +30,27 @@ import graft.workload.ReplayStatement
   *
   * The clock and sleeper are injectable so timing logic is testable with
   * a fake clock (SURVEY.md §7.5 risk 5).
+  *
+  * Execution mode: a replayed statement whose inputs hold at most
+  * [[InterpretMaxRows]] rows (counted exactly from parquet footers and
+  * local relations, see [[rowsWithin]]) runs interpreted, with
+  * whole-stage codegen and the expression code generators off; any other
+  * statement runs compiled. On inputs that small, compiling the Janino
+  * classes costs more than the rows they would speed up (Kohn, Leis and
+  * Neumann, ICDE 2018: interpret a query whose input cannot repay
+  * compilation). Every Spark job a statement starts carries the job tag
+  * `graft-replay-<queryId>`.
   */
 object Replay {
+
+  /** Input-row bound at or below which a statement runs interpreted. It
+    * sits under the smallest crossover measured with code that is not in
+    * the codegen cache (warm JVM, `local[3]`): ~25–30k rows for a
+    * four-aggregate lineitem query, ~60k for a two-aggregate one, ~100k
+    * for a narrow 3-int table (CHANGES.md has the sweep). Rows, not
+    * bytes: a 1.25 MB parquet file of three int columns can hold 6.4M
+    * rows. */
+  val InterpretMaxRows = 20000L
 
   case class Options(
       speed: Double = 1.0,
@@ -128,7 +155,8 @@ object Replay {
   /** Execute ONE replayed statement (errors recorded, never thrown — R5;
     * R2: a failed statement is re-attempted up to `retries` times,
     * mirroring the reference's reconnect-and-retry on dropped
-    * connections). */
+    * connections; each attempt re-plans and re-applies the execution-mode
+    * gate). */
   private def execOne(session: SparkSession, s: ReplayStatement,
                       opts: Options): Result = {
     val startedAt = java.time.LocalDateTime.now()
@@ -138,7 +166,12 @@ object Replay {
     var err = ""
     var attempt = 0
     var done = false
-    while (!done) {
+    // thread-local like the scheduler pool: added for this statement's
+    // jobs only, and removed again whatever happens (tags hold no commas)
+    val tag = "graft-replay-" + s.queryId.replace(',', '_')
+    val sc = session.sparkContext
+    sc.addJobTag(tag)
+    try while (!done) {
       rows = 0L; hash = ""; err = ""
       try {
         // R3: per-statement db context from meta — the child session's
@@ -147,31 +180,131 @@ object Replay {
             session.catalog.databaseExists(s.db))
           session.catalog.setCurrentDatabase(s.db)
         val stmt = if (opts.translateDialect) DorisSql.translate(s.stmt) else s.stmt
+        // analysis is eager, execution lazy: the plan's inputs are known
+        // here, before a job runs (a command has already run in sql())
         val df = session.sql(stmt)
-        if (opts.maxHashRows > 0) {
-          val collected = df.limit(opts.maxHashRows + 1).collect()
-          // rows beyond maxHashRows still count, via a separate count
-          rows = if (collected.length > opts.maxHashRows) df.count() else collected.length.toLong
-          val md = MessageDigest.getInstance("SHA-256")
-          collected.take(opts.maxHashRows).foreach { r =>
-            (0 until r.length).foreach { i =>
-              md.update(Option(r.get(i)).map(_.toString).getOrElse("").getBytes("UTF-8"))
-              md.update('\t'.toByte)
-            }
-            md.update('\n'.toByte)
-          }
-          if (rows > 0) hash = md.digest().map(b => f"${b & 0xff}%02x").mkString
-        } else {
-          rows = df.count()
-        }
+        // a leaf that cannot be counted (or a footer that cannot be
+        // read) leaves the statement compiled, as before the gate
+        val small = Try(rowsWithin(session, df.queryExecution.analyzed, InterpretMaxRows)
+          .isDefined).getOrElse(false)
+        val (r, h) =
+          if (small) interpreted(session)(rowsAndHash(df, opts.maxHashRows))
+          else rowsAndHash(df, opts.maxHashRows)
+        rows = r; hash = h
       } catch {
         case e: Throwable => err = Option(e.getMessage).getOrElse(e.getClass.getName).take(500)
       }
       attempt += 1
       done = err.isEmpty || attempt > opts.retries
-    }
+    } finally sc.removeJobTag(tag)
     val durationMs = (System.nanoTime() - t0) / 1000000
     Result(startedAt.toString.replace('T', ' '), s.queryId, rows, hash, durationMs, err)
+  }
+
+  /** The statement's row count and, when `maxHashRows` > 0, the SHA-256
+    * of its first `maxHashRows` rows (dodo's `ReturnRowsHash`). */
+  private def rowsAndHash(df: DataFrame, maxHashRows: Int): (Long, String) =
+    if (maxHashRows > 0) {
+      val collected = df.limit(maxHashRows + 1).collect()
+      // rows beyond maxHashRows still count, via a separate count
+      val rows = if (collected.length > maxHashRows) df.count() else collected.length.toLong
+      val md = MessageDigest.getInstance("SHA-256")
+      collected.take(maxHashRows).foreach { r =>
+        (0 until r.length).foreach { i =>
+          md.update(Option(r.get(i)).map(_.toString).getOrElse("").getBytes("UTF-8"))
+          md.update('\t'.toByte)
+        }
+        md.update('\n'.toByte)
+      }
+      (rows, if (rows > 0) md.digest().map(b => f"${b & 0xff}%02x").mkString else "")
+    } else (df.count(), "")
+
+  // ---- execution-mode gate --------------------------------------------
+
+  /** The exact number of rows `plan` reads, when every leaf's size is
+    * known and the sum is at most `bound`; None otherwise. Parquet file
+    * relations count from their footers, local relations and the
+    * one-row relation exactly, a CTE reference through its definition
+    * (which is in the same plan); any other leaf is unknown. Subquery
+    * plans count too. The sum stops at the first file that passes
+    * `bound`, so a large table costs at most a few footer reads. */
+  private[replay] def rowsWithin(session: SparkSession, plan: LogicalPlan,
+                                 bound: Long): Option[Long] = {
+    lazy val hadoopConf = session.sessionState.newHadoopConf()
+    var sum = 0L
+    def add(n: Long): Boolean = { sum += n; sum <= bound }
+    val known = plan.collectWithSubqueries { case l: LeafNode => l }.forall {
+      case _: OneRowRelation => add(1)
+      case l: LocalRelation => add(l.data.size)
+      case _: CTERelationRef => true
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation if h.fileFormat.isInstanceOf[ParquetFileFormat] =>
+          h.location.listFiles(Nil, Nil).iterator.flatMap(_.files)
+            .forall(f => add(footerRows(f.fileStatus, hadoopConf)))
+        case _ => false
+      }
+      case _ => false
+    }
+    if (known) Some(sum) else None
+  }
+
+  /** Footer row counts by path, valid while the file keeps its length
+    * and modification time: rewriting a file re-reads its footer. */
+  private val footerCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Long)]()
+
+  private def footerRows(st: FileStatus, conf: => Configuration): Long = {
+    val path = st.getPath.toString
+    footerCache.get(path) match {
+      case (len, mtime, rows) if len == st.getLen && mtime == st.getModificationTime => rows
+      case _ =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        val rows = try reader.getRecordCount finally reader.close()
+        footerCache.put(path, (st.getLen, st.getModificationTime, rows))
+        rows
+    }
+  }
+
+  private val InterpretedConf = Seq(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
+  /** Per-session interpreted mode, counted: the first interpreted
+    * statement on a session saves both keys' prior values (set or unset)
+    * and sets them, the last one to finish restores them. Clients that
+    * share a session (`sessionFor = identity`) therefore never restore
+    * each other's values, yet their statements still run concurrently.
+    * The counter is the lock, not the session, whose monitor Scala lazy
+    * vals inside Spark take. */
+  private final class Mode {
+    var users = 0
+    var prior: Seq[(String, Option[String])] = Nil
+  }
+
+  private val modes = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, Mode]())
+
+  /** Run `body` with codegen off on `session`. */
+  private def interpreted[T](session: SparkSession)(body: => T): T = {
+    val conf = session.sessionState.conf
+    val mode = modes.computeIfAbsent(session, _ => new Mode)
+    mode.synchronized {
+      if (mode.users == 0) {
+        mode.prior = InterpretedConf.map { case (k, _) =>
+          k -> (if (conf.contains(k)) Some(conf.getConfString(k)) else None)
+        }
+        InterpretedConf.foreach { case (k, v) => conf.setConfString(k, v) }
+      }
+      mode.users += 1
+    }
+    try body
+    finally mode.synchronized {
+      mode.users -= 1
+      if (mode.users == 0) mode.prior.foreach {
+        case (k, Some(v)) => conf.setConfString(k, v)
+        case (k, None) => conf.unsetConf(k)
+      }
+    }
   }
 
   // ---- S13: JSONL result sink (one <client>.result file) --------------

@@ -1,6 +1,15 @@
 package graft.replay
 
+import java.nio.file.{Files, StandardCopyOption}
+import java.security.MessageDigest
 import scala.collection.mutable
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 import graft.SparkSpec
 import graft.workload.{ReplayCodec, ReplayStatement}
 import graft.diff.Diff
@@ -161,6 +170,172 @@ class ReplaySpec extends SparkSpec {
     assert(withRetry("c").head.err.isEmpty, withRetry("c").head.err)
     assert(withRetry("c").head.returnRows == 1)
     assert(graft.replay.Flaky.calls.get() == 2) // exactly one retry
+  }
+
+  // ---- execution-mode gate and job tags ---------------------------------
+
+  private def hasWholeStageCodegen(p: SparkPlan): Boolean = p match {
+    case a: AdaptiveSparkPlanExec => hasWholeStageCodegen(a.executedPlan)
+    case q: QueryStageExec => hasWholeStageCodegen(q.plan)
+    case _: WholeStageCodegenExec => true
+    case other => other.children.exists(hasWholeStageCodegen)
+  }
+
+  /** Replay `sql` alone on a fresh child session of `spark`; returns the
+    * result and, per query execution the statement ran, whether its
+    * executed plan holds a whole-stage-codegen stage. */
+  private def replayObserved(sql: String, maxHashRows: Int): (Replay.Result, Seq[Boolean]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+    val fence = new java.util.concurrent.atomic.AtomicBoolean(false)
+    var client: SparkSession = null
+    val res = Replay.replay(spark, Map("c" -> Seq(stmt(0, "qgate", 0, sql).copy(db = "rp_gate"))),
+      0L, Replay.Options(speed = 1e9, maxHashRows = maxHashRows), _ => (),
+      sessionFor = root => {
+        client = root.newSession()
+        client.listenerManager.register(new QueryExecutionListener {
+          def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+            if (qe.analyzed.output.map(_.name) == Seq("gate_fence")) fence.set(true)
+            else seen.add(hasWholeStageCodegen(qe.executedPlan))
+          def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+        })
+        client
+      })("c").head
+    // listener events arrive in order: once the fence's is in, the
+    // statement's are too
+    client.range(1).selectExpr("id AS gate_fence").collect()
+    eventually(timeout(30.seconds))(assert(fence.get()))
+    (res, seen.toArray.toSeq.map(_.asInstanceOf[Boolean]))
+  }
+
+  /** A plain compiled reference: `limit(n+1).collect()`, the exact row
+    * count, and the SHA-256 of the first n rows, as dodo hashes them. */
+  private def compiledReference(sql: String, n: Int): (Long, String) = {
+    val df = spark.sql(sql)
+    val collected = df.limit(n + 1).collect()
+    val rows = if (collected.length > n) df.count() else collected.length.toLong
+    val md = MessageDigest.getInstance("SHA-256")
+    collected.take(n).foreach { (r: Row) =>
+      (0 until r.length).foreach { i =>
+        md.update(Option(r.get(i)).map(_.toString).getOrElse("").getBytes("UTF-8"))
+        md.update('\t'.toByte)
+      }
+      md.update('\n'.toByte)
+    }
+    (rows, if (rows > 0) md.digest().map(b => f"${b & 0xff}%02x").mkString else "")
+  }
+
+  test("execution-mode gate: parquet inputs within InterpretMaxRows run interpreted, more run compiled") {
+    spark.sql("CREATE DATABASE IF NOT EXISTS rp_gate")
+    spark.range(0, 1000).selectExpr("id", "id % 7 AS k", "cast(id * 3 AS double) AS v")
+      .write.mode("overwrite").format("parquet").saveAsTable("rp_gate.small")
+    spark.range(0, Replay.InterpretMaxRows + 10000).selectExpr("id", "id % 7 AS k",
+      "cast(id * 3 AS double) AS v").write.mode("overwrite").format("parquet").saveAsTable("rp_gate.big")
+    spark.range(0, 100).selectExpr("id", "id % 7 AS k", "cast(id * 3 AS double) AS v")
+      .write.mode("overwrite").format("csv").saveAsTable("rp_gate.tiny_csv")
+    try {
+      val cases = Seq(
+        // (statement, expected to run compiled)
+        "SELECT k, count(*) AS n, sum(v) AS s FROM small GROUP BY k ORDER BY k" -> false,
+        // more rows than maxHashRows: the limit collect plus the exact count
+        "SELECT id, v FROM small WHERE id % 3 = 0 ORDER BY id" -> false,
+        // a join of two small inputs: 1000 + 100 rows, but one leaf is CSV
+        "SELECT s.k, count(*) AS n FROM small s JOIN tiny_csv c ON s.id = c.id GROUP BY s.k ORDER BY s.k" -> true,
+        "SELECT k, count(*) AS n FROM tiny_csv GROUP BY k ORDER BY k" -> true,
+        "SELECT k, count(*) AS n, sum(v) AS s FROM big GROUP BY k ORDER BY k" -> true,
+        // a subquery's leaves count too: 1000 + InterpretMaxRows + 10000 rows
+        "SELECT count(*) AS n FROM small WHERE id IN (SELECT id FROM big WHERE k = 1)" -> true)
+      cases.foreach { case (sql, compiled) =>
+        val (r, plans) = replayObserved(sql, maxHashRows = 10)
+        assert(r.err.isEmpty, s"$sql: ${r.err}")
+        assert(plans.nonEmpty, sql)
+        assert(plans.forall(_ == compiled),
+          s"$sql: expected ${if (compiled) "compiled" else "interpreted"}, saw $plans")
+        spark.catalog.setCurrentDatabase("rp_gate")
+        val ref = try compiledReference(sql, 10) finally spark.catalog.setCurrentDatabase("default")
+        assert((r.returnRows, r.returnRowsHash) == ref, sql)
+      }
+      val (r, plans) = replayObserved("SELECT 1 AS a UNION ALL SELECT 2", maxHashRows = 10)
+      assert(r.err.isEmpty && r.returnRows == 2 && plans.forall(!_))
+    } finally {
+      Seq("small", "big", "tiny_csv").foreach(t => spark.sql(s"DROP TABLE IF EXISTS rp_gate.$t"))
+      spark.sql("DROP DATABASE IF EXISTS rp_gate")
+    }
+  }
+
+  test("execution-mode gate: rewriting a parquet file invalidates its cached row count") {
+    val root = Files.createTempDirectory("graft_gate")
+    def partFile(rows: Long): java.nio.file.Path = {
+      val dir = root.resolve(s"w$rows")
+      spark.range(0, rows).coalesce(1).write.parquet(dir.toString)
+      Files.list(dir).filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
+    }
+    val table = Files.createDirectories(root.resolve("t"))
+    val file = table.resolve("part-0.parquet")
+    def counted(bound: Long) = Replay.rowsWithin(spark,
+      spark.read.parquet(table.toString).queryExecution.analyzed, bound)
+    Files.copy(partFile(10), file)
+    assert(counted(Replay.InterpretMaxRows) == Some(10L))
+    assert(counted(Replay.InterpretMaxRows) == Some(10L)) // cached
+    Files.copy(partFile(Replay.InterpretMaxRows + 1), file, StandardCopyOption.REPLACE_EXISTING)
+    assert(counted(Long.MaxValue) == Some(Replay.InterpretMaxRows + 1))
+    assert(counted(Replay.InterpretMaxRows).isEmpty) // past the bound
+    // leaves of unknown size: a range and a CSV read
+    assert(Replay.rowsWithin(spark, spark.range(5).queryExecution.analyzed, Long.MaxValue).isEmpty)
+    spark.range(3).write.csv(root.resolve("c").toString)
+    assert(Replay.rowsWithin(spark,
+      spark.read.csv(root.resolve("c").toString).queryExecution.analyzed, Long.MaxValue).isEmpty)
+  }
+
+  test("execution-mode gate: a shared session's codegen keys are unchanged after concurrent clients") {
+    val conf = spark.sessionState.conf
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    def state = keys.map(k => k -> (if (conf.contains(k)) Some(conf.getConfString(k)) else None))
+    // one key explicitly set, the other unset: both must come back as they were
+    spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    spark.conf.unset("spark.sql.codegen.factoryMode")
+    try {
+      val before = state
+      val sqls = (1 to 6).map(i => stmt(0, s"q$i", 0,
+        if (i % 3 == 0) s"SELECT count(*) AS n FROM range(${Replay.InterpretMaxRows * 2}) WHERE id % 7 = $i"
+        else s"SELECT $i AS a UNION ALL SELECT ${i + 1}"))
+      val clients = (1 to 8).map(c => s"c$c" -> sqls).toMap
+      val res = Replay.replay(spark, clients, 0L, Replay.Options(speed = 1e9, maxHashRows = 10),
+        _ => (), sessionFor = identity)
+      assert(res.values.flatten.forall(_.err.isEmpty))
+      assert(state == before)
+      assert(conf.getConfString("spark.sql.codegen.wholeStage") == "true")
+      assert(!conf.contains("spark.sql.codegen.factoryMode"))
+    } finally spark.conf.unset("spark.sql.codegen.wholeStage")
+  }
+
+  test("every Spark job of a replayed statement carries graft-replay-<queryId>") {
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        tags.add(String.valueOf(e.properties.getProperty("spark.job.tags")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val clients = Seq("c1", "c2").map(c => c -> Seq(
+        stmt(0, s"$c-a", 0, "SELECT id % 5 AS k, count(*) AS n FROM range(100) GROUP BY 1"),
+        stmt(0, s"$c-b", 0, "SELECT 1 AS a UNION ALL SELECT 2"))).toMap
+      val res = Replay.replay(spark, clients, 0L, Replay.Options(speed = 1e9, maxHashRows = 10), _ => ())
+      assert(res.values.flatten.forall(_.err.isEmpty))
+      // a fence job on this thread: events arrive in order, so once its
+      // start is seen every replay job's start has been delivered
+      spark.sparkContext.addJobTag("graft-test-fence")
+      try spark.range(1).count() finally spark.sparkContext.removeJobTag("graft-test-fence")
+      def tagged(tags: String, tag: String) = tags.split(",").contains(tag)
+      eventually(timeout(30.seconds))(assert(tags.toArray.exists(t => tagged(t.toString, "graft-test-fence"))))
+      val replayJobs = tags.toArray.map(_.toString).takeWhile(t => !tagged(t, "graft-test-fence")).toSeq
+      val ids = clients.values.flatten.map(_.queryId).toSet
+      assert(replayJobs.nonEmpty)
+      assert(replayJobs.forall(t => t.split(",").count(x =>
+        x.startsWith("graft-replay-") && ids(x.stripPrefix("graft-replay-"))) == 1),
+        s"untagged or doubly tagged replay job: $replayJobs")
+      // every statement ran at least one job, under its own tag
+      assert(ids.forall(id => replayJobs.exists(tagged(_, s"graft-replay-$id"))))
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   // ---- R1 at scale (VERDICT r10 item 7): 1000 clients ------------------
