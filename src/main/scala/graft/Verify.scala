@@ -6,9 +6,11 @@ import java.nio.file.{Files, Paths}
   * builder-authored SQL would otherwise make the driver's json.load fail
   * and silently zero the round's correctness. Shared by [[Verify]] (the
   * driver artifact) and ContractSpec (the oracle-type gate), so the spec
-  * checks the exact bytes the driver will parse. */
+  * checks the exact bytes the driver will parse; [[quote]] is also the
+  * replay result sink's string escaper. */
 object OracleJson {
-  private def q(s: String): String = "\"" + s.flatMap {
+  /** `s` as a JSON string literal, quotes included. */
+  def quote(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -18,7 +20,7 @@ object OracleJson {
     case c => c.toString
   } + "\""
   def apply(m: Map[String, String]): String =
-    m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    m.map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}")
 }
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */

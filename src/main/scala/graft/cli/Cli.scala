@@ -109,9 +109,7 @@ object Cli {
         onlySelect = o.contains("only-select"),
         strict = o.contains("strict"),
         minDurationMs = o.getOrElse("min-duration-ms", "0").toLong))
-      val written = graft.operators.Broadcasts.withReleased(spark) {
-        AuditLog.writeDumpSql(qdf, req(o, "out"))
-      }
+      val written = AuditLog.writeDumpSql(qdf, req(o, "out"))
       println(s"dumped ${written.size} query file(s) to ${req(o, "out")}")
       o.get("schema-db").foreach { db =>
         val schemas = SchemaDump.listTables(spark, db).map { case (t, tpe) =>
@@ -198,14 +196,10 @@ object Cli {
       }
 
     case "replay" =>
-      // decode's chunk-table persist is released once the statements are
-      // on the driver, not held in the block manager for the whole replay
-      val (byClient, minTs) = graft.operators.Broadcasts.withReleased(spark) {
-        val decoded = ReplayCodec.decode(spark, req(o, "source"), ReplayCodec.DecodeOpts(
-          clientCount = o.getOrElse("client-count", "0").toInt))
-        (ReplayCodec.byClient(decoded), ReplayCodec.minTs(decoded).getOrElse(0L))
-      }
-      val results = Replay.replay(spark, byClient, minTs,
+      val decoded = ReplayCodec.decode(spark, req(o, "source"), ReplayCodec.DecodeOpts(
+        clientCount = o.getOrElse("client-count", "0").toInt))
+      val results = Replay.replay(spark, ReplayCodec.byClient(decoded),
+        ReplayCodec.minTs(decoded).getOrElse(0L),
         Replay.Options(
           speed = o.getOrElse("speed", "1.0").toDouble,
           maxHashRows = o.getOrElse("max-hash-rows", "0").toInt,

@@ -13,6 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{CTERelationRef, LeafNode, LocalRelation, LogicalPlan, OneRowRelation}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import graft.OracleJson
 import graft.sqlx.DorisSql
 import graft.workload.ReplayStatement
 
@@ -309,23 +310,13 @@ object Replay {
 
   // ---- S13: JSONL result sink (one <client>.result file) --------------
 
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   def resultJson(r: Result): String = {
     val sb = new StringBuilder("{")
-    if (r.ts.nonEmpty) sb ++= s""""ts":"${jsonEscape(r.ts)}","""
-    sb ++= s""""queryId":"${jsonEscape(r.queryId)}","returnRows":${r.returnRows},"""
+    if (r.ts.nonEmpty) sb ++= s""""ts":${OracleJson.quote(r.ts)},"""
+    sb ++= s""""queryId":${OracleJson.quote(r.queryId)},"returnRows":${r.returnRows},"""
     if (r.returnRowsHash.nonEmpty) sb ++= s""""returnRowsHash":"${r.returnRowsHash}","""
     sb ++= s""""durationMs":${r.durationMs}"""
-    if (r.err.nonEmpty) sb ++= s""","err":"${jsonEscape(r.err)}""""
+    if (r.err.nonEmpty) sb ++= s""","err":${OracleJson.quote(r.err)}"""
     sb += '}'
     sb.toString
   }

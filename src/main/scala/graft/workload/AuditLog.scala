@@ -1,5 +1,8 @@
 package graft.workload
 
+import org.apache.hadoop.io.{BooleanWritable, Text}
+import org.apache.hadoop.mapreduce.InputSplit
+import org.apache.hadoop.mapreduce.lib.input.FileSplit
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,10 +13,9 @@ import org.apache.spark.sql.functions._
   * EXPLAIN-SHOW-USE / time window / min duration) → query-id dedup →
   * unescape → optional strict parse-validation → replay-format encode.
   *
-  * Scale design: a line-based scan keyed by byte offset — big unrotated
-  * files split across tasks like any text source, and records reassemble
-  * per split with a bounded stitch pass at split boundaries (see
-  * `records`). Records never cross files, so a 10k-file 100 TB log
+  * Scale design: a line-based scan — big unrotated files split across
+  * tasks like any text source, and each split reads its records whole
+  * (see `records`). Records never cross files, so a 10k-file 100 TB log
   * directory still fans out to independent tasks, and a single multi-GB
   * file never serializes into one task or one JVM string.
   */
@@ -65,19 +67,17 @@ object AuditLog {
     * unrotated multi-GB log (or the multi-GB `q0.sql` dumped from it)
     * must neither hit Spark's ~2 GB single-string ceiling nor serialize
     * into one task (the reference streams the file line by line for the
-    * same reason, src/auditlog.go:88-138). Hadoop's TextInputFormat keys
-    * every line with its BYTE OFFSET and charges a boundary-spanning
-    * line to the split it starts in, so each split is one byte range of
-    * one file read in order. Each task streams its lines into chunks
-    * ([[chunks]]): every chunk but the split's first begins with a start
-    * line, and a chunk that is neither the split's first nor its last is
-    * a COMPLETE record. Only the ≤ 2 boundary chunks per split are
-    * shuffled, to stitch each record's fragments in offset order; a
-    * record's `pos` is a per-split base (starts in the file's earlier
-    * splits, one row per split) plus its index within its split. Only
-    * one record ever exists as one string.
-    * `graft.audit.splitMaxBytes` caps the split size (unset, Hadoop's
-    * block-size splits apply). */
+    * same reason, src/auditlog.go:88-138). A record belongs to the
+    * split its start line begins in, the rule Hadoop's line reader uses
+    * for a line: each task reads its split's lines in order, drops the
+    * head that ends an earlier split's record, and reads past the split
+    * end to finish its last record ([[LinesToEof]], [[group]]). One
+    * counting job gives each split its base, the records that start in
+    * its file's earlier splits, so `pos` is base + index within the
+    * split: no persist, window, shuffle or broadcast, and only one
+    * record ever exists as one string. The session's
+    * `mapreduce.input.fileinputformat.split.maxsize` caps the split size
+    * (unset, Hadoop's block-size splits apply). */
   def records(spark: SparkSession, path: String, encoding: String = "UTF-8",
               startRe: String = s"$recordStartRe "): DataFrame = {
     if (!encoding.equalsIgnoreCase("UTF-8")) {
@@ -100,110 +100,54 @@ object AuditLog {
           concat(lit("\n"), col("value")), s"(?m)(?=^(?:$startRe))")).as(Seq("pos", "record")))
         .filter(col("record").rlike(s"^(?:$startRe)"))
     }
-    import org.apache.hadoop.io.{LongWritable, Text}
-    import org.apache.hadoop.mapreduce.lib.input.{FileSplit, TextInputFormat}
-    val conf = new org.apache.hadoop.conf.Configuration(
-      spark.sparkContext.hadoopConfiguration)
-    spark.conf.getOption("graft.audit.splitMaxBytes").foreach(v =>
-      conf.set("mapreduce.input.fileinputformat.split.maxsize", v))
     val start = java.util.regex.Pattern.compile(startRe)
-    val chunked = spark.sparkContext.newAPIHadoopFile(path, classOf[TextInputFormat],
-        classOf[LongWritable], classOf[Text], conf)
-      .asInstanceOf[org.apache.spark.rdd.NewHadoopRDD[LongWritable, Text]]
-      .mapPartitionsWithInputSplit { case (split, iter) =>
-        val file = split.asInstanceOf[FileSplit].getPath.toString
-        chunks(iter.map { case (off, line) => (file, off.get(), line.toString) }, start,
-          org.apache.spark.TaskContext.getPartitionId().toLong)
-      }
-    // Persisted: interior records, the stitch pass and the per-split
-    // summary all consume the chunk table; recomputing it re-scans the
-    // raw text (released per query by Bench/Verify, per verb by Cli).
-    val chunkDf = graft.operators.Broadcasts.trackedPersist(spark.createDataFrame(chunked))
-    // per-split record-start totals: ONE row per split (bounded
-    // metadata), so the per-file running offset is the one window shape
-    // that is always correct — a cumulative sum over bounded rows
-    val wSplit = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("file")).orderBy(col("o0"))
-    val bases = chunkDf.groupBy(col("file"), col("split"))
-      .agg(max(col("sidx")).as("nstarts"), min(col("off")).as("o0"))
-      .withColumn("base", coalesce(sum(col("nstarts")).over(
-        wSplit.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select("file", "split", "base")
-    val interior = chunkDf.filter(!col("boundary"))
-      .select(col("file"), col("split"), col("sidx"), col("text").as("record"))
-    // stitch pass: only the ≤ 2 boundary chunks per split. A running
-    // count of start chunks (sidx > 0; a head fragment has sidx 0) over
-    // file offset groups each record's fragments; group 0 is a prelude.
-    val wFile = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("file")).orderBy(col("off"))
-    val stitched = chunkDf.filter(col("boundary"))
-      .withColumn("grp",
-        sum(when(col("sidx") > 0, 1).otherwise(0)).over(wFile))
-      .filter(col("grp") > 0)
-      .groupBy(col("file"), col("grp"))
-      .agg(max(when(col("sidx") > 0, col("split"))).as("split"),
-        max(col("sidx")).as("sidx"),
-        array_join(
-          transform(array_sort(collect_list(struct(col("off"), col("text")))),
-            x => x.getField("text")), "\n").as("record"))
-      .select("file", "split", "sidx", "record")
-    interior.unionByName(stitched)
-      .join(broadcast(bases), Seq("file", "split"))
-      .select(col("file"),
-        (col("base") + col("sidx")).cast("int").as("pos"),
-        col("record"))
+    val lines = spark.sparkContext.newAPIHadoopFile(path, classOf[LinesToEof],
+        classOf[BooleanWritable], classOf[Text], spark.sessionState.newHadoopConf())
+      .asInstanceOf[org.apache.spark.rdd.NewHadoopRDD[BooleanWritable, Text]]
+    // each split's base: the records that start in its file's earlier
+    // splits, from one counting job (the RDD.zipWithIndex pattern; none
+    // when there is one split)
+    val bases: Map[(String, Long), Long] =
+      if (lines.getNumPartitions <= 1) Map.empty
+      else lines.mapPartitionsWithInputSplit((s, it) =>
+          Iterator(fileAndStart(s) -> group(it, start).size.toLong))
+        .collect().groupBy(_._1._1).valuesIterator.flatMap { counts =>
+          val sorted = counts.sortBy(_._1._2)
+          sorted.iterator.map(_._1).zip(sorted.iterator.scanLeft(0L)(_ + _._2))
+        }.toMap
+    spark.createDataFrame(lines.mapPartitionsWithInputSplit { (s, it) =>
+      val (file, off) = fileAndStart(s)
+      val base = bases.getOrElse((file, off), 0L)
+      group(it, start).zipWithIndex.map { case (r, i) => (file, (base + i + 1).toInt, r) }
+    }).toDF("file", "pos", "record")
   }
 
-  /** One split's consecutive lines coalesced into a chunk: `sidx` is the
-    * chunk's 1-based record-start index WITHIN its split (0 for a head
-    * fragment, whose record opened in an earlier split); `boundary` marks
-    * the split's first and last chunk, the only ones that may need
-    * stitching to a neighbouring split. */
-  private[workload] case class Chunk(file: String, split: Long, off: Long, sidx: Long,
-                   boundary: Boolean, text: String)
+  private def fileAndStart(split: InputSplit): (String, Long) = {
+    val f = split.asInstanceOf[FileSplit]
+    (f.getPath.toString, f.getStart)
+  }
 
-  /** Stream one split's `(file, byte offset, line)` rows, in offset
-    * order, into [[Chunk]]s. Lazy: a chunk is emitted as soon as the next
-    * start line (or the end of input) closes it, so only the current
-    * record's text is held in memory. */
-  private[workload] def chunks(lines: Iterator[(String, Long, String)],
-                               start: java.util.regex.Pattern,
-                               split: Long): Iterator[Chunk] = new Iterator[Chunk] {
-    private var file: String = null
-    private var off = -1L // -1: no open chunk
-    private var first = true
-    private var sidx = 0L
-    private val buf = new java.lang.StringBuilder
-    private var ready: Chunk = null
-
-    private def close(last: Boolean): Unit = {
-      ready = Chunk(file, split, off, sidx, first || last, buf.toString)
-      first = false
-      buf.setLength(0)
-      off = -1L
-    }
-
-    def hasNext: Boolean = {
-      while (ready == null && lines.hasNext) {
-        val (f, o, line) = lines.next()
-        val opens = start.matcher(line).lookingAt()
-        if (opens && off >= 0) close(last = false)
-        // a new chunk opens at a start line or, before the split's first
-        // start line, at the head fragment's first line
-        if (off < 0) { file = f; off = o } else buf.append('\n')
-        if (opens) sidx += 1
-        buf.append(line)
+  /** Cut one split's lines, keyed "starts past the split end", in file
+    * order, into records. Lines before the first start line end a record
+    * of an earlier split (or are a prelude) and are dropped; a record
+    * runs to the next start line, and the first start line past the
+    * split end stops the split. Lazy: only the current record is held in
+    * memory. */
+  private[workload] def group(lines: Iterator[(BooleanWritable, Text)],
+                              start: java.util.regex.Pattern): Iterator[String] = {
+    val in = lines.map { case (past, text) =>
+      val l = text.toString
+      (past.get, start.matcher(l).lookingAt(), l)
+    }.buffered
+    while (in.hasNext && !in.head._1 && !in.head._2) in.next()
+    new Iterator[String] {
+      def hasNext: Boolean = in.hasNext && !in.head._1 && in.head._2
+      def next(): String = {
+        if (!hasNext) throw new NoSuchElementException("no more records")
+        val sb = new java.lang.StringBuilder(in.next()._3)
+        while (in.hasNext && !in.head._2) sb.append('\n').append(in.next()._3)
+        sb.toString
       }
-      if (ready == null && off >= 0) close(last = true)
-      ready != null
-    }
-
-    def next(): Chunk = {
-      if (!hasNext) throw new NoSuchElementException("no more chunks")
-      val c = ready
-      ready = null
-      c
     }
   }
 
@@ -377,4 +321,50 @@ object ParseValidate {
     } catch { case _: Throwable => false }
   val udf: org.apache.spark.sql.expressions.UserDefinedFunction =
     org.apache.spark.sql.functions.udf((s: String) => s != null && apply(s))
+}
+
+/** Hadoop text input for [[AuditLog.records]]: each split's reader is
+  * Hadoop's `LineRecordReader` with the split's end moved to the end of
+  * the file, so it starts where a line reader would and can read on to
+  * finish the split's last record. Each line is keyed with whether it
+  * starts past the split's real end (never, for a file's last split);
+  * `records` stops pulling at the first start line past it. BOM skip,
+  * CRLF, codecs and the `_`/`.` hidden-file filter stay Hadoop's; a
+  * compressed file is one split. */
+private[workload] class LinesToEof
+    extends org.apache.hadoop.mapreduce.lib.input.FileInputFormat[BooleanWritable, Text] {
+  import org.apache.hadoop.fs.Path
+  import org.apache.hadoop.mapreduce.{JobContext, RecordReader, TaskAttemptContext}
+  import org.apache.hadoop.mapreduce.lib.input.LineRecordReader
+
+  override protected def isSplitable(context: JobContext, file: Path): Boolean =
+    new org.apache.hadoop.io.compress.CompressionCodecFactory(context.getConfiguration)
+      .getCodec(file) == null
+
+  override def createRecordReader(split: InputSplit,
+      context: TaskAttemptContext): RecordReader[BooleanWritable, Text] =
+    new RecordReader[BooleanWritable, Text] {
+      private val lines = new LineRecordReader()
+      private val past = new BooleanWritable
+      private var end = Long.MaxValue
+
+      def initialize(split: InputSplit, context: TaskAttemptContext): Unit = {
+        val f = split.asInstanceOf[FileSplit]
+        val len = f.getPath.getFileSystem(context.getConfiguration)
+          .getFileStatus(f.getPath).getLen
+        if (f.getStart + f.getLength < len) end = f.getStart + f.getLength
+        lines.initialize(
+          new FileSplit(f.getPath, f.getStart, len - f.getStart, f.getLocations), context)
+      }
+      def nextKeyValue(): Boolean = lines.nextKeyValue() && {
+        // LineRecordReader's own rule: a split reads the line that starts
+        // at its end byte, the next split skips it
+        past.set(lines.getCurrentKey.get > end)
+        true
+      }
+      def getCurrentKey: BooleanWritable = past
+      def getCurrentValue: Text = lines.getCurrentValue
+      def getProgress: Float = lines.getProgress
+      def close(): Unit = lines.close()
+    }
 }

@@ -12,7 +12,9 @@ import org.apache.spark.sql.types._
   * reads records with the audit scan's own line reader
   * ([[AuditLog.records]] with the replay record-start pattern), so one
   * multi-GB `q0.sql` splits across tasks like the log it was dumped
-  * from; its 1-based per-file record index gives `sqlIdx = pos - 1`,
+  * from, each split reading its records whole; a one-split file costs
+  * no job before the first action, and each action reads it once. Its
+  * 1-based per-file record index gives `sqlIdx = pos - 1`,
   * which is what makes round-robin re-bucketing `(i % clientCount) + 1`
   * deterministic and partition-independent.
   */

@@ -428,5 +428,10 @@ class ReplaySpec extends SparkSpec {
     val rh = Replay.Result("", "qid", 2, "abc123", 5, "boom")
     assert(Replay.resultJson(rh) ==
       """{"queryId":"qid","returnRows":2,"returnRowsHash":"abc123","durationMs":5,"err":"boom"}""")
+    // a quote, a backslash, a newline and a control character (U+0001)
+    val re = Replay.Result("", "qid", 0, "", 1, "say \"hi\" \\ then\nstop" + 1.toChar)
+    val escaped = "say \\\"hi\\\" \\\\ then\\nstop\\" + "u0001"
+    assert(Replay.resultJson(re) ==
+      s"""{"queryId":"qid","returnRows":0,"durationMs":1,"err":"$escaped"}""")
   }
 }

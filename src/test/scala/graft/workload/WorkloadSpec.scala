@@ -109,44 +109,52 @@ class WorkloadSpec extends SparkSpec {
     assert(backA.select("queryId").collect().forall(!_.getString(0).startsWith("b")))
   }
 
+  private val splitMaxKey = "mapreduce.input.fileinputformat.split.maxsize"
+
   /** Hadoop input splits of `path` under a `maxBytes` split cap. */
   private def splitCount(path: String, maxBytes: Long): Int = {
     import org.apache.hadoop.io.{LongWritable, Text}
     import org.apache.hadoop.mapreduce.lib.input.TextInputFormat
     val conf = new org.apache.hadoop.conf.Configuration(
       spark.sparkContext.hadoopConfiguration)
-    conf.set("mapreduce.input.fileinputformat.split.maxsize", maxBytes.toString)
+    conf.set(splitMaxKey, maxBytes.toString)
     spark.sparkContext.newAPIHadoopFile(path,
       classOf[TextInputFormat], classOf[LongWritable], classOf[Text],
       conf).getNumPartitions
   }
 
   private def withSplitMaxBytes[T](bytes: Long)(body: => T): T = {
-    spark.conf.set("graft.audit.splitMaxBytes", bytes.toString)
-    try body finally spark.conf.unset("graft.audit.splitMaxBytes")
+    spark.conf.set(splitMaxKey, bytes.toString)
+    try body finally spark.conf.unset(splitMaxKey)
   }
 
-  test("boundary-stitched reassembly: many tiny splits == one split, records identical") {
-    // The per-split chunking must produce byte-identical (pos, record)
-    // rows no matter where Hadoop cuts the splits; force pathological
-    // 512-byte splits (the 26 KB fixture fans out to ~50 splits, cutting
-    // mid-record everywhere) and compare both reads against a plain
-    // reference: read the file, cut it at record-start lines, number
-    // from 1. The second input puts a ~1.7 KB prelude before the first
-    // record, so whole splits hold nothing but lines to drop.
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("pos", "record").collect()
-        .map(r => (r.getInt(0), r.getString(1))).sortBy(_._1).toSeq
-    def reference(path: String) = {
-      val src = scala.io.Source.fromFile(path, "UTF-8")
-      val lines = try src.getLines().toVector finally src.close()
-      def isStart(l: String) = l.matches(s"${AuditLog.recordStartRe} .*")
-      lines.dropWhile(!isStart(_))
-        .foldLeft(Vector.empty[Vector[String]]) { (recs, l) =>
-          if (isStart(l)) recs :+ Vector(l) else recs.init :+ (recs.last :+ l)
-        }
-        .map(_.mkString("\n")).zipWithIndex.map { case (r, i) => (i + 1, r) }
-    }
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.select("pos", "record").collect()
+      .map(r => (r.getInt(0), r.getString(1))).sortBy(_._1).toSeq
+
+  /** Plain-Scala reference reader: read the file, cut it at record-start
+    * lines, drop what precedes the first, number from 1. */
+  private def reference(path: String) = {
+    val src = scala.io.Source.fromFile(path, "UTF-8")
+    val lines = try src.getLines().toVector finally src.close()
+    def isStart(l: String) = l.matches(s"${AuditLog.recordStartRe} .*")
+    lines.dropWhile(!isStart(_))
+      .foldLeft(Vector.empty[Vector[String]]) { (recs, l) =>
+        if (isStart(l)) recs :+ Vector(l) else recs.init :+ (recs.last :+ l)
+      }
+      .map(_.mkString("\n")).zipWithIndex.map { case (r, i) => (i + 1, r) }
+  }
+
+  test("split-boundary reads: many tiny splits == one split, records identical") {
+    // Each split reads the records whose start line begins in it, past
+    // its end if need be, so the (pos, record) rows must not depend on
+    // where Hadoop cuts the splits. Force pathological 512-byte splits
+    // (the 26 KB fixture fans out to ~50 splits, cutting mid-record
+    // everywhere) and 97-byte splits (shorter than any record's first
+    // line, so most splits hold no start line) and compare every read
+    // with the plain-Scala reference. The second input puts a ~1.7 KB
+    // prelude before the first record, so whole splits hold nothing but
+    // lines to drop.
     val withPrelude = java.nio.file.Files.createTempFile("graft_prelude", ".log")
     java.nio.file.Files.writeString(withPrelude,
       Seq.tabulate(30)(i => s"prelude line $i " + "x" * 40).mkString("", "\n", "\n") +
@@ -157,27 +165,61 @@ class WorkloadSpec extends SparkSpec {
       assert(splitCount(path, Long.MaxValue) == 1)
       assert(rows(AuditLog.records(spark, path)) == want,
         s"one-split read of $path must equal the reference")
-      assert(splitCount(path, 512) > 1)
-      withSplitMaxBytes(512) {
-        assert(rows(AuditLog.records(spark, path)) == want,
-          s"split-boundary reassembly of $path must equal the reference")
+      for (bytes <- Seq(512L, 97L)) {
+        assert(splitCount(path, bytes) > 1)
+        withSplitMaxBytes(bytes) {
+          val df = AuditLog.records(spark, path)
+          assert(df.rdd.getNumPartitions == splitCount(path, bytes),
+            "the session's split cap reaches the reader")
+          assert(rows(df) == want,
+            s"$bytes-byte-split read of $path must equal the reference")
+        }
       }
     }
   }
 
-  test("chunker streams: the first chunk is out before the split is read") {
-    val start = java.util.regex.Pattern.compile(s"${AuditLog.recordStartRe} ")
-    def rec(i: Int) = s"2024-08-06 23:44:1$i,000 [query] rec$i"
-    val lines = Iterator("head", rec(1), "c1", rec(2), "c2", rec(3))
-      .zipWithIndex.map { case (l, i) => ("f", i * 100L, l) }
-    val chunks = AuditLog.chunks(lines, start, split = 7L)
-    // the head fragment closes when rec1 arrives: rec1 onward is unread
-    assert(chunks.next() == AuditLog.Chunk("f", 7L, 0L, 0L, boundary = true, "head"))
-    assert(lines.hasNext, "chunker must not drain its input to emit a chunk")
-    assert(chunks.toList == List(
-      AuditLog.Chunk("f", 7L, 100L, 1L, boundary = false, s"${rec(1)}\nc1"),
-      AuditLog.Chunk("f", 7L, 300L, 2L, boundary = false, s"${rec(2)}\nc2"),
-      AuditLog.Chunk("f", 7L, 500L, 3L, boundary = true, rec(3))))
+  test("a gzip copy of the log reads the same rows as the plain file") {
+    import java.nio.file.{Files, Paths}
+    val gz = Files.createTempDirectory("graft_gz").resolve("fe.audit.log.gz")
+    val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(gz))
+    try Files.copy(Paths.get(auditLog), out) finally out.close()
+    val want = reference(auditLog)
+    assert(rows(AuditLog.records(spark, gz.toString)) == want)
+    // a compressed file is never split, whatever the split cap
+    withSplitMaxBytes(512) {
+      val df = AuditLog.records(spark, gz.toString)
+      assert(df.rdd.getNumPartitions == 1)
+      assert(rows(df) == want)
+    }
+  }
+
+  test("reader streams: the first record is out before the split is read") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.mapreduce.TaskAttemptID
+    import org.apache.hadoop.mapreduce.lib.input.FileSplit
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    val file = new Path(auditLog)
+    val len = java.nio.file.Files.size(java.nio.file.Paths.get(auditLog))
+    val split = new FileSplit(file, 0L, len, Array.empty[String])
+    val ctx = new TaskAttemptContextImpl(spark.sessionState.newHadoopConf(), new TaskAttemptID())
+    val reader = new LinesToEof().createRecordReader(split, ctx)
+    reader.initialize(split, ctx)
+    try {
+      var pulled = 0
+      val lines = Iterator.continually(reader).takeWhile(_.nextKeyValue()).map { r =>
+        pulled += 1
+        (r.getCurrentKey, r.getCurrentValue)
+      }
+      val recs = AuditLog.group(lines,
+        java.util.regex.Pattern.compile(s"${AuditLog.recordStartRe} "))
+      val want = reference(auditLog)
+      assert(recs.next() == want.head._2)
+      // the first record's lines plus the start line that closed it
+      assert(pulled == want.head._2.count(_ == '\n') + 2,
+        "the reader must not drain its split to emit a record")
+      assert(recs.toSeq == want.tail.map(_._2))
+      assert(pulled == java.nio.file.Files.readAllLines(java.nio.file.Paths.get(auditLog)).size)
+    } finally reader.close()
   }
 
   test("decode of a dump directory: 512-byte splits == natural read, row for row") {
