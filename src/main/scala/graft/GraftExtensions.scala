@@ -48,6 +48,12 @@ object GraftExtensions {
       graft.functions.SequenceMatch.register(session)
       graft.functions.DorisCompat.register(session)
       graft.functions.NormalizeExprs.register(session)
+      graft.functions.VecSumAgg.register(session)
+      graft.functions.ShingleHashesExpr.register(session)
+      graft.functions.CompressRatioExpr.register(session)
+      graft.functions.KllAgg.register(session)
+      graft.functions.CdcBoundariesExpr.register(session)
+      graft.functions.KmvAgg.register(session)
       _ => () // the check itself never fails
     }
   }

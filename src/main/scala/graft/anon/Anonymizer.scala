@@ -3,6 +3,8 @@ package graft.anon
 import java.security.MessageDigest
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import graft.sqlx.SqlLex
+import graft.sqlx.SqlLex.Kind
 
 /** SQL identifier anonymizer (SURVEY.md §2.10 N1–N4) — a consistent
   * rewrite of every schema/table/column identifier in a statement while
@@ -14,8 +16,8 @@ import scala.jdk.CollectionConverters._
   * `function_column.sequence_col` property values are rewritten
   * individually. (Reference semantics: src/parser/custom.go:57-226,
   * src/anonymizer.go:19-218; the reference rides a full ANTLR parse —
-  * here a context-aware SQL tokenizer implements the same observable
-  * rules.)
+  * here context rules over [[graft.sqlx.SqlLex]] tokens implement the
+  * same observable rules.)
   *
   * Methods:
   *   - hash:     first 8 bytes of SHA-256(lowercase(id)) as hex (the
@@ -196,65 +198,6 @@ object Anonymizer {
 
   // ---- the SQL rewrite (N1) ------------------------------------------
 
-  private sealed trait Tok
-  private case class Word(s: String, quoted: Boolean) extends Tok
-  private case class Str(s: String) extends Tok    // quoted literal, verbatim
-  private case class Other(s: String) extends Tok  // ws, numbers, operators, comments
-
-  private def lex(sql: String): Vector[Tok] = {
-    val out = Vector.newBuilder[Tok]
-    var i = 0
-    val n = sql.length
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"') {
-        val q = c; val b = new StringBuilder; b += c; i += 1
-        var done = false
-        while (i < n && !done) {
-          val d = sql.charAt(i)
-          b += d
-          if (d == '\\' && i + 1 < n) { b += sql.charAt(i + 1); i += 1 }
-          else if (d == q) {
-            if (i + 1 < n && sql.charAt(i + 1) == q) { b += q; i += 1 }
-            else done = true
-          }
-          i += 1
-        }
-        out += Str(b.toString)
-      } else if (c == '`') {
-        val b = new StringBuilder; i += 1
-        while (i < n && sql.charAt(i) != '`') { b += sql.charAt(i); i += 1 }
-        i += 1
-        out += Word(b.toString, quoted = true)
-      } else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') {
-        val j = sql.indexOf('\n', i)
-        val end = if (j < 0) n else j
-        out += Other(sql.substring(i, end)); i = end
-      } else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') {
-        val j = sql.indexOf("*/", i + 2)
-        val end = if (j < 0) n else j + 2
-        out += Other(sql.substring(i, end)); i = end
-      } else if (c == '@') {
-        // @var or @@sysvar: the whole variable is one preserved token
-        val b = new StringBuilder; b += c; i += 1
-        if (i < n && sql.charAt(i) == '@') { b += '@'; i += 1 }
-        while (i < n && (sql.charAt(i).isLetterOrDigit || sql.charAt(i) == '_' || sql.charAt(i) == '.')) {
-          b += sql.charAt(i); i += 1
-        }
-        out += Other(b.toString)
-      } else if (c.isLetter || c == '_') {
-        val b = new StringBuilder
-        while (i < n && (sql.charAt(i).isLetterOrDigit || sql.charAt(i) == '_' || sql.charAt(i) == '$')) {
-          b += sql.charAt(i); i += 1
-        }
-        out += Word(b.toString, quoted = false)
-      } else {
-        out += Other(c.toString); i += 1
-      }
-    }
-    out.result()
-  }
-
   /** Words after which a `(`-followed identifier is a definition, not a
     * function call (`CREATE TABLE t1 (…`). */
   private val NonCallContext = Set(
@@ -266,24 +209,22 @@ object Anonymizer {
     * ToSQL output). */
   def anonymizeSqlWith(f: String => String, sql: String,
                        hideComments: Boolean = false): String = {
-    val toks = lex(sql)
-    def isMeaningful(t: Tok): Boolean = t match {
-      case Other(s) => s.trim.nonEmpty && !s.startsWith("--") && !s.startsWith("/*")
-      case _ => true
-    }
-    def nextMeaningful(from: Int): Option[Tok] = {
-      var j = from
-      while (j < toks.length && !isMeaningful(toks(j))) j += 1
-      if (j < toks.length) Some(toks(j)) else None
-    }
+    val toks = SqlLex.tokens(sql)
+    def nextMeaningful(from: Int): Option[SqlLex.Tok] =
+      toks.iterator.drop(from).find(_.kind != Kind.Comment)
     val sb = new StringBuilder
+    var pos = 0 // end of the previous token: the whitespace since is copied
     var pendingEngineValue = false
     var pendingCommentLiteral = false
     var lastPropertyKey = ""
     var prevMeaningful = ""  // lower-cased text of the previous meaningful token
     toks.zipWithIndex.foreach { case (t, i) =>
-      t match {
-        case Word(w, quoted) =>
+      sb ++= sql.substring(pos, t.start)
+      pos = t.end
+      t.kind match {
+        case Kind.Word | Kind.Quoted =>
+          val quoted = t.kind == Kind.Quoted
+          val w = if (quoted) t.text.drop(1).stripSuffix("`") else t.text
           val lw = w.toLowerCase
           // a BACKTICK-QUOTED word is an identifier BY QUOTATION — the
           // keyword/function escapes must not apply, or `order`/`table`
@@ -291,10 +232,7 @@ object Anonymizer {
           // SQL that no longer parses (the N5 replayability invariant)
           val isKeyword = !quoted && Keywords.contains(lw)
           val isFunction = !quoted && !NonCallContext.contains(prevMeaningful) &&
-            (nextMeaningful(i + 1) match {
-              case Some(Other("(")) => true
-              case _ => false
-            })
+            nextMeaningful(i + 1).exists(_.text == "(")
           if (pendingEngineValue) { sb ++= w; pendingEngineValue = false }
           else if (isKeyword || isFunction) sb ++= w
           else {
@@ -312,7 +250,8 @@ object Anonymizer {
           if (lw == "engine") pendingEngineValue = true
           pendingCommentLiteral = lw == "comment"
           prevMeaningful = lw
-        case Str(s) =>
+        case Kind.Str =>
+          val s = t.text
           val inner = s.substring(1, s.length - 1)
           if (pendingCommentLiteral && hideComments && inner.nonEmpty) {
             sb ++= "'" + ("*" * s.length) + "'"
@@ -328,14 +267,15 @@ object Anonymizer {
           }
           pendingCommentLiteral = false
           prevMeaningful = s
-        case Other(s) =>
-          if (isMeaningful(t)) {
-            if (s != "=") { pendingCommentLiteral = false }
-            if (s != "=" || !pendingEngineValue) prevMeaningful = s.trim.toLowerCase
-          }
+        case Kind.Comment => sb ++= t.text
+        case _ => // variables (never rewritten), numbers, operators
+          val s = t.text
+          if (s != "=") { pendingCommentLiteral = false }
+          if (s != "=" || !pendingEngineValue) prevMeaningful = s.toLowerCase
           sb ++= s
       }
     }
+    sb ++= sql.substring(pos)
     sb.toString
   }
 

@@ -4,7 +4,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{AnalysisException, SparkSession}
 import graft.ddl.{DorisDdl, TableDef}
 import graft.dump.SchemaDump
-import graft.sqlx.DorisSql
+import graft.sqlx.{DorisSql, SqlLex}
 
 /** The `create` verb — re-apply dumped `<db>.<table>.<type>.sql` schemas
   * to the engine catalog (reference: src/create.go:20-113 executes each
@@ -217,7 +217,9 @@ object Create {
 
   /** CREATE MATERIALIZED VIEW … AS <query> → CREATE VIEW name AS <query>.
     * Everything between the name and the query-starting top-level AS
-    * (BUILD/REFRESH/KEY/DISTRIBUTED/PROPERTIES clauses) is dropped. */
+    * (BUILD/REFRESH/KEY/DISTRIBUTED/PROPERTIES clauses) is dropped; that
+    * AS is the first depth-0 `as` token followed by SELECT, WITH or an
+    * opening paren. */
   def mtmvToView(ddl: String): String = {
     val c = new DorisDdl.Cursor(ddl)
     c.consume("CREATE")
@@ -227,50 +229,10 @@ object Create {
     var name = c.ident()
     while (c.tryConsume(".")) name = c.ident()
     val rest = ddl.substring(c.i)
-    val asIdx = findQueryAs(rest)
-    require(asIdx >= 0, s"materialized view '$name' has no AS <query> clause")
-    s"CREATE VIEW `$name` ${rest.substring(asIdx)}"
-  }
-
-  /** Index of the depth-0 `AS` token that introduces the query (the one
-    * followed by SELECT, WITH, or an opening paren), skipping strings,
-    * comments, and parenthesized clauses like PROPERTIES(...). */
-  private def findQueryAs(s: String): Int = {
-    var i = 0; var depth = 0
-    val n = s.length
-    def wordAt(j0: Int): (String, Int) = { // (lowercased word, end index)
-      var j = j0
-      val b = new StringBuilder
-      while (j < n && (s.charAt(j).isLetterOrDigit || s.charAt(j) == '_')) {
-        b += s.charAt(j); j += 1
-      }
-      (b.result().toLowerCase, j)
-    }
-    while (i < n) {
-      val ch = s.charAt(i)
-      if (ch == '\'' || ch == '"') {
-        val q = ch; i += 1
-        while (i < n && s.charAt(i) != q) { if (s.charAt(i) == '\\') i += 1; i += 1 }
-        i += 1
-      } else if (ch == '`') { i += 1; while (i < n && s.charAt(i) != '`') i += 1; i += 1 }
-      else if (ch == '-' && i + 1 < n && s.charAt(i + 1) == '-') {
-        val j = s.indexOf('\n', i); i = if (j < 0) n else j
-      } else if (ch == '/' && i + 1 < n && s.charAt(i + 1) == '*') {
-        val j = s.indexOf("*/", i + 2); i = if (j < 0) n else j + 2
-      } else if (ch == '(') { depth += 1; i += 1 }
-      else if (ch == ')') { depth -= 1; i += 1 }
-      else if (ch.isLetter || ch == '_') {
-        val (w, e) = wordAt(i)
-        if (w == "as" && depth == 0) {
-          var j = e
-          while (j < n && s.charAt(j).isWhitespace) j += 1
-          if (j < n && (s.charAt(j) == '(' ||
-              { val (w2, _) = wordAt(j); w2 == "select" || w2 == "with" }))
-            return i
-        }
-        i = e
-      } else i += 1
-    }
-    -1
+    val toks = SqlLex.tokens(rest)
+    val as = toks.indices.find(i => toks(i).is("as") && toks(i).depth == 0 &&
+      toks.lift(i + 1).exists(t => t.text == "(" || t.is("select") || t.is("with")))
+    require(as.isDefined, s"materialized view '$name' has no AS <query> clause")
+    s"CREATE VIEW `$name` ${rest.substring(toks(as.get).start)}"
   }
 }

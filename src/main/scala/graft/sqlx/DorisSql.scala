@@ -15,8 +15,14 @@ package graft.sqlx
   *                             → Catalyst `/*+ BROADCAST(t) */` /
   *                               `/*+ SHUFFLE_HASH(t) */` in the SELECT.
   *
-  * Rewrites operate on top-level tokens only (string literals, comments
-  * and parenthesized subqueries are opaque).
+  * QUALIFY, `LIMIT m, n`, MINUS, the DISTINCT window aggregate below and
+  * the hints' SELECT lookup read [[SqlLex]] tokens, so string literals,
+  * backticked identifiers and comments are opaque to them.
+  *
+  * Known limits: the four regex rewrites (`DATE_ADD … INTERVAL`,
+  * `GROUP_CONCAT`, the `date_format` patterns and the distribute hints)
+  * match raw text, so the same text inside a string literal or a comment
+  * is rewritten there too.
   */
 object DorisSql {
 
@@ -173,72 +179,27 @@ object DorisSql {
     })
     val hs = hints.result()
     if (hs.isEmpty) sql
-    else wordTokens(stripped).find(t => t._1 == "select" && t._4 == 0) match {
-      case Some((_, _, e, _)) =>
-        stripped.substring(0, e) + s" /*+ ${hs.mkString(", ")} */" + stripped.substring(e)
+    else SqlLex.tokens(stripped).find(t => t.is("select") && t.depth == 0) match {
+      case Some(t) =>
+        stripped.substring(0, t.end) + s" /*+ ${hs.mkString(", ")} */" + stripped.substring(t.end)
       case None => stripped
     }
   }
 
-  /** Index just past the string literal opening at `i0` (s(i0) is ' or ").
-    * Handles BOTH escape conventions a MySQL-dialect literal can carry:
-    * backslash escapes and SQL doubled-quote escaping ('' / "") — without
-    * the latter, a literal like 'it''s (' would invert string/code
-    * regions and silently miscount parentheses in every scanner below.
-    * Unterminated literal → s.length. */
-  private def skipString(s: String, i0: Int): Int = {
-    val q = s.charAt(i0); val n = s.length
-    var i = i0 + 1
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c == '\\') i += 2
-      else if (c == q) {
-        if (i + 1 < n && s.charAt(i + 1) == q) i += 2 // doubled-quote escape
-        else return i + 1
-      } else i += 1
+  private def rewriteMinus(sql: String): String =
+    SqlLex.tokens(sql).filter(_.is("minus")).foldRight(sql) { (t, acc) =>
+      acc.substring(0, t.start) + "EXCEPT" + acc.substring(t.end)
     }
-    n
-  }
-
-  /** Token walk: yields (tokenLower, startIdx, endIdx, depth) for word
-    * tokens outside strings/comments. */
-  private def wordTokens(sql: String): Seq[(String, Int, Int, Int)] = {
-    val out = Seq.newBuilder[(String, Int, Int, Int)]
-    var i = 0; var depth = 0
-    val n = sql.length
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"') {
-        i = skipString(sql, i)
-      } else if (c == '`') { i += 1; while (i < n && sql.charAt(i) != '`') i += 1; i += 1 }
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') {
-        val j = sql.indexOf('\n', i); i = if (j < 0) n else j
-      } else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') {
-        val j = sql.indexOf("*/", i + 2); i = if (j < 0) n else j + 2
-      } else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if (c.isLetter || c == '_') {
-        val s = i
-        while (i < n && (sql.charAt(i).isLetterOrDigit || sql.charAt(i) == '_')) i += 1
-        out += ((sql.substring(s, i).toLowerCase, s, i, depth))
-      } else i += 1
-    }
-    out.result()
-  }
-
-  private def rewriteMinus(sql: String): String = {
-    val toks = wordTokens(sql).filter(_._1 == "minus")
-    toks.foldRight(sql) { case ((_, s, e, _), acc) =>
-      acc.substring(0, s) + "EXCEPT" + acc.substring(e)
-    }
-  }
 
   /** `LIMIT m, n` → `LIMIT n OFFSET m` at any depth (the comma form is
     * unambiguous: LIMIT <int> , <int>). */
-  private val limitCommaRe =
-    """(?i)\bLIMIT\s+(\d+)\s*,\s*(\d+)""".r
   private def rewriteLimitCommaOffset(sql: String): String =
-    limitCommaRe.replaceAllIn(sql, m => s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}")
+    SqlLex.tokens(sql).sliding(4).collect {
+      case Seq(l, m, c, n) if l.is("limit") && m.kind == SqlLex.Kind.Number &&
+          c.text == "," && n.kind == SqlLex.Kind.Number => (l.start, n.end, m.text, n.text)
+    }.toSeq.foldRight(sql) { case ((s, e, m, n), acc) =>
+      acc.substring(0, s) + s"LIMIT $n OFFSET $m" + acc.substring(e)
+    }
 
   /** DISTINCT window aggregate: `COUNT(DISTINCT e[, e2…]) OVER …` →
     * `SIZE(COLLECT_SET(e) OVER …)`. Spark rejects DISTINCT in a window
@@ -255,74 +216,38 @@ object DorisSql {
     * plain `COUNT(DISTINCT…)` aggregate without OVER is native Spark
     * and passes through. */
   private def rewriteDistinctWindow(sql: String): String = {
-    val n = sql.length
-    def skipWs(i0: Int): Int = {
-      var i = i0; while (i < n && sql.charAt(i).isWhitespace) i += 1; i
-    }
-    // string-literal-aware matching-paren scan; -1 when unbalanced
-    def matchParen(open: Int): Int = {
-      var i = open + 1; var depth = 1
-      while (i < n && depth > 0) {
-        val c = sql.charAt(i)
-        if (c == '\'' || c == '"') {
-          i = skipString(sql, i) - 1 // loop tail advances past the close
-        } else if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        if (depth > 0) i += 1
-      }
-      if (depth == 0) i else -1
-    }
-    def splitTopCommas(s: String): Seq[String] = {
-      val parts = Seq.newBuilder[String]
-      var depth = 0; var start = 0; var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (c == '\'' || c == '"') {
-          i = skipString(s, i) - 1 // loop tail advances past the close
-        } else if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (c == ',' && depth == 0) { parts += s.substring(start, i); start = i + 1 }
-        i += 1
-      }
-      parts += s.substring(start)
-      parts.result().map(_.trim)
-    }
-    val distinctHead = """(?is)^\s*distinct\b(.*)$""".r
-    for ((w, _, we, _) <- wordTokens(sql) if w == "count") {
-      val openIdx = skipWs(we)
-      if (openIdx < n && sql.charAt(openIdx) == '(') {
-        val closeIdx = matchParen(openIdx)
-        if (closeIdx > 0) sql.substring(openIdx + 1, closeIdx) match {
-          case distinctHead(argText) =>
-            val overStart = skipWs(closeIdx + 1)
-            if (sql.regionMatches(true, overStart, "over", 0, 4) &&
-                (overStart + 4 >= n || !sql.charAt(overStart + 4).isLetterOrDigit)) {
-              // the OVER target: an inline (window spec) or a named window
-              val afterOver = skipWs(overStart + 4)
-              val replEnd =
-                if (afterOver < n && sql.charAt(afterOver) == '(') {
-                  val c2 = matchParen(afterOver)
-                  if (c2 > 0) c2 + 1 else -1
-                } else {
-                  var i = afterOver
-                  while (i < n && (sql.charAt(i).isLetterOrDigit || sql.charAt(i) == '_')) i += 1
-                  if (i > afterOver) i else -1
-                }
-              if (replEnd > 0) {
-                val countStart = we - "count".length
-                val args = splitTopCommas(argText)
-                val elem =
-                  if (args.length == 1) args.head
-                  else s"CASE WHEN ${args.map(a => s"($a) IS NOT NULL").mkString(" AND ")} " +
-                    s"THEN struct(${args.mkString(", ")}) END"
-                val overText = sql.substring(closeIdx + 1, replEnd)
-                return rewriteDistinctWindow(
-                  sql.substring(0, countStart) +
-                    s"SIZE(COLLECT_SET($elem)$overText)" +
-                    sql.substring(replEnd))
-              }
-            }
-          case _ => ()
+    import SqlLex.Kind
+    val toks = SqlLex.tokens(sql)
+    def isOpen(i: Int) = i < toks.length && toks(i).text == "("
+    for (i <- toks.indices if toks(i).is("count") && isOpen(i + 1)) {
+      val close = SqlLex.closing(toks, i + 1)
+      if (close > 0 && toks(i + 2).is("distinct") && toks.lift(close + 1).exists(_.is("over"))) {
+        // the OVER target: an inline (window spec) or a named window
+        val target = close + 2
+        val replEnd =
+          if (isOpen(target)) {
+            val c2 = SqlLex.closing(toks, target)
+            if (c2 > 0) toks(c2).end else -1
+          } else if (toks.lift(target).exists(_.kind == Kind.Word)) toks(target).end
+          else -1
+        if (replEnd > 0) {
+          // the arguments: the text between DISTINCT, each comma one level
+          // inside COUNT( and the closing paren
+          val argDepth = toks(i + 1).depth + 1
+          val commas = (i + 3 until close)
+            .filter(j => toks(j).text == "," && toks(j).depth == argDepth)
+          val args = ((i + 2) +: commas).zip(commas :+ close).map { case (a, b) =>
+            if (b - a > 1) sql.substring(toks(a + 1).start, toks(b - 1).end) else ""
+          }
+          val elem =
+            if (args.length == 1) args.head
+            else s"CASE WHEN ${args.map(a => s"($a) IS NOT NULL").mkString(" AND ")} " +
+              s"THEN struct(${args.mkString(", ")}) END"
+          val overText = sql.substring(toks(close).end, replEnd)
+          return rewriteDistinctWindow(
+            sql.substring(0, toks(i).start) +
+              s"SIZE(COLLECT_SET($elem)$overText)" +
+              sql.substring(replEnd))
         }
       }
     }
@@ -354,32 +279,34 @@ object DorisSql {
 
   private val setOpNames = Set("union", "intersect", "except")
 
+  /** The word tokens of `sql`, the view the QUALIFY passes read. */
+  private def words(sql: String): Vector[SqlLex.Tok] =
+    SqlLex.tokens(sql).filter(_.kind == SqlLex.Kind.Word)
+
   private def rewriteQualifySetAware(sql: String): String = {
-    val toks = wordTokens(sql)
+    val toks = words(sql)
     // EXCEPT is a set op only when a query block follows; `SELECT *
     // EXCEPT (cols)` — which this rewrite itself emits — is followed by
     // a parenthesized COLUMN list, never by SELECT/WITH/ALL/DISTINCT.
     def isSetOp(i: Int): Boolean = {
       val t = toks(i)
-      t._4 == 0 && setOpNames.contains(t._1) && (t._1 != "except" || {
-        val next = toks.drop(i + 1).find(_._2 >= t._3)
-        next.exists(nt => nt._1 == "select" || nt._1 == "all" ||
-          nt._1 == "distinct" || nt._1 == "with")
-      })
+      t.depth == 0 && setOpNames.exists(t.is) && (!t.is("except") ||
+        toks.lift(i + 1).exists(nt => nt.is("select") || nt.is("all") ||
+          nt.is("distinct") || nt.is("with")))
     }
     val ops = toks.indices.filter(isSetOp)
     if (ops.isEmpty) return rewriteQualifyBlock(sql)
     // the op span swallows a following top-level ALL / DISTINCT
     def opEnd(i: Int): Int =
       toks.lift(i + 1)
-        .filter(nt => nt._4 == 0 && (nt._1 == "all" || nt._1 == "distinct"))
-        .map(_._3).getOrElse(toks(i)._3)
-    val firstSelect = toks.find(t => t._4 == 0 && t._1 == "select")
-      .map(_._2).getOrElse(0)
+        .filter(nt => nt.depth == 0 && (nt.is("all") || nt.is("distinct")))
+        .getOrElse(toks(i)).end
+    val firstSelect = toks.find(t => t.depth == 0 && t.is("select"))
+      .map(_.start).getOrElse(0)
     val lastEnd = opEnd(ops.last)
-    val tailStart = toks.find(t => t._4 == 0 && t._2 >= lastEnd &&
-        (t._1 == "order" || t._1 == "limit" || t._1 == "offset"))
-      .map(_._2).getOrElse(sql.length)
+    val tailStart = toks.find(t => t.depth == 0 && t.start >= lastEnd &&
+        (t.is("order") || t.is("limit") || t.is("offset")))
+      .map(_.start).getOrElse(sql.length)
     val sb = new StringBuilder(sql.substring(0, firstSelect))
     // a rewritten branch can swallow its surrounding whitespace, so
     // re-separate pieces only where a space is actually missing — an
@@ -391,9 +318,9 @@ object DorisSql {
     }
     var pos = firstSelect
     for (i <- ops) {
-      appendSep(rewriteQualifyBlock(sql.substring(pos, toks(i)._2)))
+      appendSep(rewriteQualifyBlock(sql.substring(pos, toks(i).start)))
       val e = opEnd(i)
-      appendSep(sql.substring(toks(i)._2, e))
+      appendSep(sql.substring(toks(i).start, e))
       pos = e
     }
     appendSep(rewriteQualifyBlock(sql.substring(pos, tailStart)))
@@ -402,69 +329,39 @@ object DorisSql {
   }
 
   private def rewriteQualifyBlock(sql: String): String = {
-    val toks = wordTokens(sql)
-    toks.find(t => t._1 == "qualify" && t._4 == 0) match {
+    val toks = words(sql)
+    toks.find(t => t.is("qualify") && t.depth == 0) match {
       case None => sql
-      case Some((_, qs, qe, _)) =>
-        val fromTok = toks.find(t => t._1 == "from" && t._4 == 0)
+      case Some(q) =>
+        val fromTok = toks.find(t => t.is("from") && t.depth == 0)
           .getOrElse(return sql)
         // the predicate runs until a top-level ORDER/LIMIT or statement end
-        val stop = toks.find(t => t._2 > qe && t._4 == 0 &&
-            (t._1 == "order" || t._1 == "limit"))
-          .map(_._2).getOrElse(sql.length)
-        val selectList = sql.substring(0, fromTok._2)
-        val rel = sql.substring(fromTok._2, qs)
-        val pred = sql.substring(qe, stop).trim
+        val stop = toks.find(t => t.start > q.end && t.depth == 0 &&
+            (t.is("order") || t.is("limit")))
+          .map(_.start).getOrElse(sql.length)
+        val selectList = sql.substring(0, fromTok.start)
+        val rel = sql.substring(fromTok.start, q.start)
+        val pred = sql.substring(q.end, stop).trim
         val tail = sql.substring(stop)
         s"SELECT * EXCEPT (__qualify) FROM ($selectList, ($pred) AS __qualify $rel) WHERE __qualify $tail"
     }
   }
 
-  /** Applies f to the CONTENT of each outermost parenthesized region,
-    * string-literal/quoted-identifier/comment-aware. Unbalanced input
-    * passes through untouched (the right failure mode: Catalyst then
-    * reports the real syntax error). */
+  /** Applies f to the CONTENT of each outermost parenthesized region.
+    * Unbalanced input passes through untouched (the right failure mode:
+    * Catalyst then reports the real syntax error). */
   private def mapTopParens(sql: String)(f: String => String): String = {
-    val n = sql.length
-    // skip an opaque region starting at i (string/ident/comment); returns
-    // the index after it, or i if none starts here
-    def skipOpaque(i: Int): Int = {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"') {
-        skipString(sql, i)
-      } else if (c == '`') {
-        var j = i + 1
-        while (j < n && sql.charAt(j) != '`') j += 1
-        math.min(j + 1, n)
-      } else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') {
-        val j = sql.indexOf('\n', i); if (j < 0) n else j
-      } else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') {
-        val j = sql.indexOf("*/", i + 2); if (j < 0) n else j + 2
-      } else i
-    }
+    val toks = SqlLex.tokens(sql)
     val sb = new StringBuilder
-    var i = 0
-    while (i < n) {
-      val afterOpaque = skipOpaque(i)
-      if (afterOpaque > i) { sb.append(sql.substring(i, afterOpaque)); i = afterOpaque }
-      else if (sql.charAt(i) == '(') {
-        var depth = 1
-        var j = i + 1
-        while (j < n && depth > 0) {
-          val ao = skipOpaque(j)
-          if (ao > j) j = ao
-          else {
-            val cj = sql.charAt(j)
-            if (cj == '(') depth += 1 else if (cj == ')') depth -= 1
-            j += 1
-          }
-        }
-        if (depth == 0) {
-          sb.append('(').append(f(sql.substring(i + 1, j - 1))).append(')')
-          i = j
-        } else { sb.append(sql.substring(i)); i = n }
-      } else { sb.append(sql.charAt(i)); i += 1 }
+    var pos = 0
+    for (open <- toks.indices if toks(open).text == "(" && toks(open).depth == 0) {
+      val close = SqlLex.closing(toks, open)
+      if (close > 0) {
+        sb.append(sql.substring(pos, toks(open).end))
+          .append(f(sql.substring(toks(open).end, toks(close).start))).append(')')
+        pos = toks(close).end
+      }
     }
-    sb.toString
+    sb.append(sql.substring(pos)).toString
   }
 }

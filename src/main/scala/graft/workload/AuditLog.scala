@@ -1,6 +1,6 @@
 package graft.workload
 
-import org.apache.hadoop.io.{BooleanWritable, Text}
+import org.apache.hadoop.io.{ByteWritable, Text}
 import org.apache.hadoop.mapreduce.InputSplit
 import org.apache.hadoop.mapreduce.lib.input.FileSplit
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -102,15 +102,21 @@ object AuditLog {
     }
     val start = java.util.regex.Pattern.compile(startRe)
     val lines = spark.sparkContext.newAPIHadoopFile(path, classOf[LinesToEof],
-        classOf[BooleanWritable], classOf[Text], spark.sessionState.newHadoopConf())
-      .asInstanceOf[org.apache.spark.rdd.NewHadoopRDD[BooleanWritable, Text]]
+        classOf[ByteWritable], classOf[Text], spark.sessionState.newHadoopConf())
+      .asInstanceOf[org.apache.spark.rdd.NewHadoopRDD[ByteWritable, Text]]
     // each split's base: the records that start in its file's earlier
     // splits, from one counting job (the RDD.zipWithIndex pattern; none
-    // when there is one split)
+    // when there is one split). A file's last split counts for no later
+    // split, and its first line's key says so: it stops there.
     val bases: Map[(String, Long), Long] =
       if (lines.getNumPartitions <= 1) Map.empty
-      else lines.mapPartitionsWithInputSplit((s, it) =>
-          Iterator(fileAndStart(s) -> group(it, start).size.toLong))
+      else lines.mapPartitionsWithInputSplit { (s, it) =>
+          val in = it.buffered
+          val n =
+            if (in.hasNext && in.head._1.get == LinesToEof.InLastSplit) 0L
+            else group(in, start).size.toLong
+          Iterator(fileAndStart(s) -> n)
+        }
         .collect().groupBy(_._1._1).valuesIterator.flatMap { counts =>
           val sorted = counts.sortBy(_._1._2)
           sorted.iterator.map(_._1).zip(sorted.iterator.scanLeft(0L)(_ + _._2))
@@ -127,17 +133,17 @@ object AuditLog {
     (f.getPath.toString, f.getStart)
   }
 
-  /** Cut one split's lines, keyed "starts past the split end", in file
+  /** Cut one split's lines, keyed as [[LinesToEof]] keys them, in file
     * order, into records. Lines before the first start line end a record
     * of an earlier split (or are a prelude) and are dropped; a record
     * runs to the next start line, and the first start line past the
     * split end stops the split. Lazy: only the current record is held in
     * memory. */
-  private[workload] def group(lines: Iterator[(BooleanWritable, Text)],
+  private[workload] def group(lines: Iterator[(ByteWritable, Text)],
                               start: java.util.regex.Pattern): Iterator[String] = {
-    val in = lines.map { case (past, text) =>
+    val in = lines.map { case (key, text) =>
       val l = text.toString
-      (past.get, start.matcher(l).lookingAt(), l)
+      (key.get == LinesToEof.PastEnd, start.matcher(l).lookingAt(), l)
     }.buffered
     while (in.hasNext && !in.head._1 && !in.head._2) in.next()
     new Iterator[String] {
@@ -326,13 +332,14 @@ object ParseValidate {
 /** Hadoop text input for [[AuditLog.records]]: each split's reader is
   * Hadoop's `LineRecordReader` with the split's end moved to the end of
   * the file, so it starts where a line reader would and can read on to
-  * finish the split's last record. Each line is keyed with whether it
-  * starts past the split's real end (never, for a file's last split);
-  * `records` stops pulling at the first start line past it. BOM skip,
+  * finish the split's last record. Each line is keyed with where it
+  * starts: before the split's real end, past it, or in a file's last
+  * split (which has no real end); `records` stops pulling at the first
+  * start line past the end. BOM skip,
   * CRLF, codecs and the `_`/`.` hidden-file filter stay Hadoop's; a
   * compressed file is one split. */
 private[workload] class LinesToEof
-    extends org.apache.hadoop.mapreduce.lib.input.FileInputFormat[BooleanWritable, Text] {
+    extends org.apache.hadoop.mapreduce.lib.input.FileInputFormat[ByteWritable, Text] {
   import org.apache.hadoop.fs.Path
   import org.apache.hadoop.mapreduce.{JobContext, RecordReader, TaskAttemptContext}
   import org.apache.hadoop.mapreduce.lib.input.LineRecordReader
@@ -342,10 +349,10 @@ private[workload] class LinesToEof
       .getCodec(file) == null
 
   override def createRecordReader(split: InputSplit,
-      context: TaskAttemptContext): RecordReader[BooleanWritable, Text] =
-    new RecordReader[BooleanWritable, Text] {
+      context: TaskAttemptContext): RecordReader[ByteWritable, Text] =
+    new RecordReader[ByteWritable, Text] {
       private val lines = new LineRecordReader()
-      private val past = new BooleanWritable
+      private val key = new ByteWritable
       private var end = Long.MaxValue
 
       def initialize(split: InputSplit, context: TaskAttemptContext): Unit = {
@@ -359,12 +366,24 @@ private[workload] class LinesToEof
       def nextKeyValue(): Boolean = lines.nextKeyValue() && {
         // LineRecordReader's own rule: a split reads the line that starts
         // at its end byte, the next split skips it
-        past.set(lines.getCurrentKey.get > end)
+        key.set(
+          if (end == Long.MaxValue) LinesToEof.InLastSplit
+          else if (lines.getCurrentKey.get > end) LinesToEof.PastEnd
+          else LinesToEof.InSplit)
         true
       }
-      def getCurrentKey: BooleanWritable = past
+      def getCurrentKey: ByteWritable = key
       def getCurrentValue: Text = lines.getCurrentValue
       def getProgress: Float = lines.getProgress
       def close(): Unit = lines.close()
     }
+}
+
+private[workload] object LinesToEof {
+  /** The line starts before the split's real end. */
+  val InSplit: Byte = 0
+  /** The line starts past the split's real end. */
+  val PastEnd: Byte = 1
+  /** The line is in its file's last split. */
+  val InLastSplit: Byte = 2
 }

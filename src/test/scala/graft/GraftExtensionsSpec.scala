@@ -39,7 +39,13 @@ class GraftExtensionsSpec extends AnyFunSuite {
                size(graft_winnowing('abcdefghij abcdefghij', 4, 2)) > 0 AS wn,
                graft_window_funnel(100, x, x = 1, x = 2) AS wf,
                graft_retention(x = 1, x = 2) AS ret,
-               graft_sequence_match('(?1).*(?2)', x, x = 1, x = 2) AS sm
+               graft_sequence_match('(?1).*(?2)', x, x = 1, x = 2) AS sm,
+               graft_vec_sum(array(CAST(x AS DOUBLE)))[0] AS vs,
+               size(graft_shingle_hashes('a b c', 2)) AS sh,
+               graft_distinct_kgrams('abab', 2) AS dk,
+               graft_kll_quantiles(graft_kll(CAST(x AS DOUBLE), 200), array(1.0D))[0] AS kq,
+               size(graft_cdc_boundaries('abcdefgh', 2, 1)) AS cdc,
+               graft_kmv(CAST(x AS DOUBLE) / 10, 16).n_min AS kmv
         FROM VALUES (1L), (1L), (2L) t(x)""").head()
       assert(row.getDouble(0) == 1.0)
       assert(row.getLong(1) == 2L)
@@ -50,6 +56,12 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(row.getInt(6) == 2)                       // funnel 1 → 2
       assert(row.getSeq[Boolean](7) == Seq(true, true)) // retention gating
       assert(row.getBoolean(8))                         // sequence match
+      assert(row.getDouble(9) == 4.0)                   // vector sum
+      assert(row.getInt(10) == 2)                       // "a b", "b c"
+      assert(row.getLong(11) == 2L)                     // "ab", "ba"
+      assert(row.getDouble(12) == 2.0)                  // KLL max
+      assert(row.getInt(13) == 7)                       // every window end
+      assert(row.getLong(14) == 2L)                     // KMV distinct values
       // newSession() forks see the functions too (replay scheduler path)
       val forked = spark.newSession()
       assert(forked.sql("SELECT money_format(1.0)").head().getString(0) == "1.00")

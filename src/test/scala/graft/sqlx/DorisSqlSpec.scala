@@ -104,6 +104,20 @@ class DorisSqlSpec extends AnyFunSuite {
     assert(DorisSql.translate(agg) == agg)
   }
 
+  test("literals, backticked identifiers and comments are opaque to LIMIT and the DISTINCT window") {
+    // a LIMIT-looking literal is a value, not a clause
+    assert(DorisSql.translate("SELECT 'LIMIT 1, 2' AS s") == "SELECT 'LIMIT 1, 2' AS s")
+    // a comma inside backticks does not split the arguments
+    assert(DorisSql.translate("SELECT COUNT(DISTINCT `a,b`) OVER (PARTITION BY g) AS n FROM t") ==
+      "SELECT SIZE(COLLECT_SET(`a,b`) OVER (PARTITION BY g)) AS n FROM t")
+    // a paren inside a comment does not close COUNT(
+    assert(DorisSql.translate("SELECT COUNT(DISTINCT d /* ) */) OVER (PARTITION BY g) AS n FROM t") ==
+      "SELECT SIZE(COLLECT_SET(d /* ) */) OVER (PARTITION BY g)) AS n FROM t")
+    // nor the OVER (…) window spec
+    assert(DorisSql.translate("SELECT COUNT(DISTINCT x) OVER (PARTITION BY g /* ) */ ORDER BY y) FROM t") ==
+      "SELECT SIZE(COLLECT_SET(x) OVER (PARTITION BY g /* ) */ ORDER BY y)) FROM t")
+  }
+
   test("MySQL %-patterns in date_format/str_to_date become JDK patterns") {
     assert(DorisSql.mysqlPatternToJdk("%Y-%m-%d %H:%i:%s") == "yyyy-MM-dd HH:mm:ss")
     assert(DorisSql.mysqlPatternToJdk("%d/%b/%Y") == "dd/MMM/yyyy")

@@ -6,8 +6,9 @@ import graft.SparkSpec
   * `DorisSql.translate`, generalizing q89/q90's cross-validation): 200
   * seeded statements composing the translator's rewrite surface —
   * QUALIFY, `LIMIT m,n`, MINUS, `COUNT(DISTINCT) OVER`, set-op chains,
-  * CTE wrapping, doubled-quote literals — are generated as PAIRS from
-  * one AST: the Doris-dialect text (through `translate`) and an
+  * CTE wrapping, doubled-quote literals, a comment holding a paren —
+  * are generated as PAIRS from one AST: the Doris-dialect text (through
+  * `translate`) and an
   * independently-stated Spark-native equivalent (manual subquery wrap
   * for QUALIFY, `LIMIT n OFFSET m`, EXCEPT, and the q88 dense_rank
   * identity for the distinct window — machinery the rewrite does NOT
@@ -30,9 +31,12 @@ class TranslatorPropertySpec extends SparkSpec {
       val lit =
         if (rnd.nextBoolean()) "'plain'"
         else Seq("'it''s (x'", "'a''MINUS''b'", "'don''t)'")(rnd.nextInt(3))
-      val (winD, winN) = rnd.nextInt(3) match {
+      val (winD, winN) = rnd.nextInt(4) match {
         case 0 => // partition-total distinct: rewrite vs dense_rank identity
           ("COUNT(DISTINCT d) OVER (PARTITION BY g)",
+           "MAX(dense_rank() OVER (PARTITION BY g ORDER BY d)) OVER (PARTITION BY g)")
+        case 3 => // the same, with a paren inside a comment in the argument
+          ("COUNT(DISTINCT d /* ) */) OVER (PARTITION BY g)",
            "MAX(dense_rank() OVER (PARTITION BY g ORDER BY d)) OVER (PARTITION BY g)")
         case 1 =>
           val w = "row_number() OVER (PARTITION BY g ORDER BY v, d)"

@@ -178,6 +178,57 @@ class WorkloadSpec extends SparkSpec {
     }
   }
 
+  test("single-split files: the counting pass pulls one line per split") {
+    // Each file of the directory is one split, so each is its file's
+    // last split and no split needs a count; the counting job (which
+    // runs inside `records`, as there are two splits) must stop after
+    // each split's first line. Input records read are counted per task
+    // for the jobs under a tag, fenced by a later tagged job: listener
+    // events arrive in order.
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val dir = Files.createTempDirectory("graft_two_logs")
+    val fixture = Files.readString(Paths.get(auditLog))
+    Files.writeString(dir.resolve("a.log"), fixture)
+    Files.writeString(dir.resolve("b.log"), "prelude line\n" + fixture.split("\n").take(20).mkString("", "\n", "\n"))
+    val countStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val pulled = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
+    val fenced = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val tags = String.valueOf(e.properties.getProperty("spark.job.tags")).split(",")
+        if (tags.contains("graft-test-count")) e.stageIds.foreach(countStages.add)
+        if (tags.contains("graft-test-fence")) fenced.set(true)
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        pulled.add(e.stageId -> e.taskMetrics.inputMetrics.recordsRead)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val df = try {
+      spark.sparkContext.addJobTag("graft-test-count")
+      val df = try AuditLog.records(spark, dir.toString)
+        finally spark.sparkContext.removeJobTag("graft-test-count")
+      spark.sparkContext.addJobTag("graft-test-fence")
+      try spark.range(1).count() finally spark.sparkContext.removeJobTag("graft-test-fence")
+      eventually(timeout(30.seconds))(assert(fenced.get()))
+      df
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(df.rdd.getNumPartitions == 2)
+    val counts = pulled.toArray(Array.empty[(Int, Long)]).filter(p => countStages.contains(p._1))
+    assert(counts.length == 2, "one counting task per split")
+    assert(counts.forall(_._2 <= 1), s"lines pulled per counting task: ${counts.map(_._2).toSeq}")
+    val got = df.select("file", "pos", "record").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getString(2)))
+    for (name <- Seq("a.log", "b.log")) {
+      val want = reference(dir.resolve(name).toString)
+      assert(want.nonEmpty)
+      assert(got.filter(_._1.endsWith(s"/$name")).map(r => (r._2, r._3)).sortBy(_._1).toSeq == want,
+        s"records of $name must equal the reference")
+    }
+  }
+
   test("a gzip copy of the log reads the same rows as the plain file") {
     import java.nio.file.{Files, Paths}
     val gz = Files.createTempDirectory("graft_gz").resolve("fe.audit.log.gz")
