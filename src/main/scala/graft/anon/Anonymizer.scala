@@ -252,7 +252,7 @@ object Anonymizer {
           prevMeaningful = lw
         case Kind.Str =>
           val s = t.text
-          val inner = s.substring(1, s.length - 1)
+          val inner = SqlLex.body(s)
           if (pendingCommentLiteral && hideComments && inner.nonEmpty) {
             sb ++= "'" + ("*" * s.length) + "'"
           } else if (PropertiesWithValueIds.contains(lastPropertyKey) &&

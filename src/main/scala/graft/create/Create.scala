@@ -182,13 +182,15 @@ object Create {
     } finally spark.catalog.setCurrentDatabase(prevDb)
   }
 
-  /** Does the DDL body qualify any relation with `db` (dotted or
-    * backticked)? Word-boundary match so db `a` doesn't hit `data`. */
+  /** Does the DDL body qualify any relation with `db`: a word or a
+    * backticked name equal to it (ignoring case), followed by `.`? */
   def referencesDb(ddl: String, db: String): Boolean = {
-    val qdb = java.util.regex.Pattern.quote(db)
-    java.util.regex.Pattern
-      .compile(s"(?i)(?<![A-Za-z0-9_`])`?$qdb`?\\s*\\.")
-      .matcher(ddl).find()
+    val toks = SqlLex.tokens(ddl)
+    toks.indices.exists(i => toks.lift(i + 1).exists(_.text == ".") && {
+      val t = toks(i)
+      t.kind == SqlLex.Kind.Word && t.text.equalsIgnoreCase(db) ||
+        t.kind == SqlLex.Kind.Quoted && t.text.equalsIgnoreCase(s"`$db`")
+    })
   }
 
   private def isMissingRelation(e: AnalysisException): Boolean = {
@@ -218,8 +220,8 @@ object Create {
   /** CREATE MATERIALIZED VIEW … AS <query> → CREATE VIEW name AS <query>.
     * Everything between the name and the query-starting top-level AS
     * (BUILD/REFRESH/KEY/DISTRIBUTED/PROPERTIES clauses) is dropped; that
-    * AS is the first depth-0 `as` token followed by SELECT, WITH or an
-    * opening paren. */
+    * AS is the first depth-0 `as` token followed (comments skipped) by
+    * SELECT, WITH or an opening paren. */
   def mtmvToView(ddl: String): String = {
     val c = new DorisDdl.Cursor(ddl)
     c.consume("CREATE")
@@ -228,11 +230,10 @@ object Create {
     if (c.tryConsume("IF")) { c.consume("NOT"); c.consume("EXISTS") }
     var name = c.ident()
     while (c.tryConsume(".")) name = c.ident()
-    val rest = ddl.substring(c.i)
-    val toks = SqlLex.tokens(rest)
-    val as = toks.indices.find(i => toks(i).is("as") && toks(i).depth == 0 &&
-      toks.lift(i + 1).exists(t => t.text == "(" || t.is("select") || t.is("with")))
+    val toks = c.toks
+    val as = (c.k until toks.length).find(j => toks(j).is("as") && toks(j).depth == 0 &&
+      toks.lift(j + 1).exists(t => t.text == "(" || t.is("select") || t.is("with")))
     require(as.isDefined, s"materialized view '$name' has no AS <query> clause")
-    s"CREATE VIEW `$name` ${rest.substring(toks(as.get).start)}"
+    s"CREATE VIEW `$name` ${ddl.substring(toks(as.get).start)}"
   }
 }

@@ -1,5 +1,7 @@
 package graft.ddl
 
+import graft.sqlx.SqlLex
+import graft.sqlx.SqlLex.{Kind, Tok}
 import org.apache.spark.sql.types._
 
 /** Doris DDL dialect — the type system and CREATE TABLE subset the engine
@@ -101,7 +103,9 @@ case class TableDef(name: String, columns: Seq[ColumnDef],
   * (column name/type/nullability/default; INDEX/KEY entries skipped; ENGINE
   * and PROPERTIES kept opaque). Spark-first reimplementation of what the
   * reference delegates to its ANTLR grammar (reference:
-  * src/parser/DorisParser.g4:1685-1738 for the type grammar).
+  * src/parser/DorisParser.g4:1685-1738 for the type grammar). It reads
+  * [[graft.sqlx.SqlLex]] tokens, so literals, backticked names and
+  * comments end where they do for the translator and the anonymizer.
   */
 object DorisDdl {
 
@@ -112,71 +116,56 @@ object DorisDdl {
     "DATETIMEV1" -> "DATETIME", "DATETIMEV2" -> "DATETIME",
     "TIMESTAMP" -> "DATETIME")
 
+  /** A cursor over the [[SqlLex]] tokens of `s`, comments skipped. */
   final class Cursor(val s: String) {
-    var i = 0
-    def eof: Boolean = i >= s.length
-    def peek: Char = s.charAt(i)
-    def skipWs(): Unit = {
-      while (!eof && (peek.isWhitespace || startsComment)) {
-        if (startsComment) skipComment() else i += 1
-      }
+    val toks: Vector[Tok] = SqlLex.tokens(s).filter(_.kind != Kind.Comment)
+    /** Index of the next token. */
+    var k = 0
+    def peek: Option[Tok] = toks.lift(k)
+    /** Where the next token starts (the end of `s` after the last one). */
+    def i: Int = peek.fold(s.length)(_.start)
+    private def next(): Tok = { k += 1; toks(k - 1) }
+    /** An identifier: a word, a backticked or a double-quoted name, or a
+      * digit-led name (digits written next to its word part). */
+    def ident(): String = peek match {
+      case None => fail("identifier")
+      case Some(t) if t.kind == Kind.Word => next().text
+      case Some(t) if t.kind == Kind.Number =>
+        next()
+        if (peek.exists(w => w.kind == Kind.Word && w.start == t.end)) t.text + next().text
+        else t.text
+      case Some(t) if t.kind == Kind.Quoted =>
+        if (t.text.length < 2 || !t.text.endsWith("`")) fail("closing `")
+        next().text.drop(1).dropRight(1)
+      case Some(t) if t.kind == Kind.Str && t.text.head == '"' => body("\"")
+      case Some(_) => fail(s"identifier at '${s.substring(i, math.min(i + 20, s.length))}'")
     }
-    private def startsComment: Boolean =
-      !eof && i + 1 < s.length &&
-        ((peek == '-' && s.charAt(i + 1) == '-') || (peek == '/' && s.charAt(i + 1) == '*'))
-    private def skipComment(): Unit = {
-      if (peek == '-') { while (!eof && peek != '\n') i += 1 }
-      else { i += 2; while (i + 1 < s.length && !(peek == '*' && s.charAt(i + 1) == '/')) i += 1; i = math.min(i + 2, s.length) }
-    }
-    /** Identifier, optionally backtick- or double-quote-quoted. */
-    def ident(): String = {
-      skipWs()
-      if (eof) fail("identifier")
-      peek match {
-        case '`' | '"' =>
-          val q = peek; i += 1; val b = new StringBuilder
-          while (!eof && peek != q) { b += peek; i += 1 }
-          if (eof) fail(s"closing $q"); i += 1
-          b.toString
-        case _ =>
-          val b = new StringBuilder
-          while (!eof && (peek.isLetterOrDigit || peek == '_' || peek == '$')) { b += peek; i += 1 }
-          if (b.isEmpty) fail(s"identifier at '${s.substring(i, math.min(i + 20, s.length))}'")
-          b.toString
-      }
-    }
-    def tryConsume(tok: String): Boolean = {
-      skipWs()
-      if (s.regionMatches(true, i, tok, 0, tok.length)) {
-        val after = i + tok.length
-        val boundary = after >= s.length || !(s.charAt(after).isLetterOrDigit || s.charAt(after) == '_')
-        val isWordTok = tok.last.isLetterOrDigit
-        if (!isWordTok || boundary) { i = after; return true }
-      }
-      false
-    }
+    /** Consume the next token if its text is `tok` (ignoring case). */
+    def tryConsume(tok: String): Boolean =
+      peek.exists(_.text.equalsIgnoreCase(tok)) && { k += 1; true }
     def consume(tok: String): Unit =
       if (!tryConsume(tok)) fail(s"'$tok' at '${s.substring(i, math.min(i + 30, s.length))}'")
     def int(): Int = {
-      skipWs(); val b = new StringBuilder
-      if (!eof && peek == '-') { b += '-'; i += 1 }
-      while (!eof && peek.isDigit) { b += peek; i += 1 }
-      if (b.isEmpty) fail("integer")
-      b.toString.toInt
+      val neg = tryConsume("-")
+      if (!peek.exists(_.kind == Kind.Number)) fail("integer")
+      ((if (neg) "-" else "") + next().text).toInt
     }
-    /** Single-quoted (or double-quoted) string literal with '' escape. */
-    def stringLit(): String = {
-      skipWs(); val q = peek
-      if (q != '\'' && q != '"') fail("string literal")
-      i += 1; val b = new StringBuilder
-      while (!eof) {
-        if (peek == q) {
-          if (i + 1 < s.length && s.charAt(i + 1) == q) { b += q; i += 2 }
-          else { i += 1; return b.toString }
-        } else if (peek == '\\' && i + 1 < s.length) { b += s.charAt(i + 1); i += 2 }
-        else { b += peek; i += 1 }
-      }
-      fail("closing quote")
+    /** A single- or double-quoted string literal; a doubled quote or a
+      * backslash escapes the character after it. */
+    def stringLit(): String = peek match {
+      case Some(t) if t.kind == Kind.Str =>
+        val q = t.text.take(1)
+        val quoted = java.util.regex.Pattern.quote(q)
+        s"(?s)\\\\(.)|$quoted$quoted".r.replaceAllIn(body("quote"), m =>
+          scala.util.matching.Regex.quoteReplacement(Option(m.group(1)).getOrElse(q)))
+      case _ => fail("string literal")
+    }
+    /** The next token's literal body, which must have its closing quote. */
+    private def body(quote: String): String = {
+      val t = next()
+      val b = SqlLex.body(t.text)
+      if (b.length + 2 != t.text.length) fail(s"closing $quote")
+      b
     }
     def fail(what: String): Nothing =
       throw new IllegalArgumentException(s"DDL parse error: expected $what near position $i")
@@ -186,9 +175,7 @@ object DorisDdl {
     * Public because JSON `structure:` rules re-enter here. */
   def parseType(typeSql: String): DType = {
     val c = new Cursor(typeSql)
-    val t = typeExpr(c)
-    c.skipWs()
-    t
+    typeExpr(c)
   }
 
   private def typeExpr(c: Cursor): DType = {
@@ -266,23 +253,20 @@ object DorisDdl {
     val cols = scala.collection.mutable.ArrayBuffer.empty[ColumnDef]
     var done = false
     while (!done) {
-      c.skipWs()
       // Skip non-column entries in the column list (indexes/constraints).
-      val save = c.i
+      val save = c.k
       val lead = try c.ident().toUpperCase catch { case _: Throwable => "" }
       if (Set("INDEX", "KEY", "CONSTRAINT", "PRIMARY", "UNIQUE").contains(lead)) {
         skipBalancedUntilCommaOrClose(c)
       } else {
-        c.i = save
+        c.k = save
         cols += columnDef(c)
       }
-      c.skipWs()
       if (c.tryConsume(",")) () else { c.consume(")"); done = true }
     }
 
     // Everything after the column list is opaque; PROPERTIES k=v extracted.
-    val tail = c.s.substring(c.i)
-    TableDef(name, cols.toSeq, parseProperties(tail), tail)
+    TableDef(name, cols.toSeq, properties(c), c.s.substring(c.toks(c.k - 1).end))
   }
 
   private def columnDef(c: Cursor): ColumnDef = {
@@ -292,16 +276,11 @@ object DorisDdl {
     var default: Option[String] = None
     var done = false
     while (!done) {
-      c.skipWs()
-      if (c.eof || c.peek == ',' || c.peek == ')') done = true
+      if (c.peek.forall(t => t.text == "," || t.text == ")")) done = true
       else if (c.tryConsume("NOT")) { c.consume("NULL"); nullable = false }
       else if (c.tryConsume("NULL")) { /* explicit nullable */ }
-      else if (c.tryConsume("DEFAULT")) {
-        c.skipWs()
-        default = Some(
-          if (!c.eof && (c.peek == '\'' || c.peek == '"')) c.stringLit()
-          else c.ident())
-      }
+      else if (c.tryConsume("DEFAULT"))
+        default = Some(if (c.peek.exists(_.kind == Kind.Str)) c.stringLit() else c.ident())
       else if (c.tryConsume("COMMENT")) { c.stringLit(); () }
       else if (c.tryConsume("AUTO_INCREMENT")) ()
       else { // aggregate types (SUM/MAX/REPLACE/...) and other modifiers
@@ -311,22 +290,24 @@ object DorisDdl {
     ColumnDef(name, t, nullable, default)
   }
 
+  /** Skip to the `,` that ends the current column-list entry, or to the
+    * list's `)`: the first `,` at the entry's depth or token below it. */
   private def skipBalancedUntilCommaOrClose(c: Cursor): Unit = {
-    var depth = 0
-    while (!c.eof && !(depth == 0 && (c.peek == ',' || c.peek == ')'))) {
-      c.peek match {
-        case '('            => depth += 1; c.i += 1
-        case ')'            => depth -= 1; c.i += 1
-        case '\'' | '"'     => c.stringLit(); ()
-        case _              => c.i += 1
-      }
-    }
+    val d = c.toks(c.k - 1).depth // the entry's consumed lead word
+    val end = c.toks.indexWhere(t => t.depth < d || (t.depth == d && t.text == ","), c.k)
+    c.k = if (end < 0) c.toks.length else end
   }
 
-  private val propRe = """"([^"]+)"\s*=\s*"([^"]*)"""".r
-  private def parseProperties(tail: String): Map[String, String] = {
-    val idx = tail.toUpperCase.indexOf("PROPERTIES")
-    if (idx < 0) Map.empty
-    else propRe.findAllMatchIn(tail.substring(idx)).map(m => m.group(1) -> m.group(2)).toMap
+  /** The `'k' = 'v'` pairs (either quote) of the first depth-0
+    * `PROPERTIES (…)` at or after the cursor, read while well formed. */
+  private def properties(c: Cursor): Map[String, String] = {
+    val toks = c.toks
+    val p = toks.indexWhere(t => t.is("properties") && t.depth == 0, c.k)
+    def pair(j: Int) = j + 2 < toks.length && toks(j).kind == Kind.Str &&
+      toks(j + 1).text == "=" && toks(j + 2).kind == Kind.Str
+    if (p < 0) Map.empty
+    else Iterator.iterate(p + 1)(_ + 4)
+      .takeWhile(j => toks.lift(j).exists(t => t.text == "(" || t.text == ",") && pair(j + 1))
+      .map(j => SqlLex.body(toks(j + 1).text) -> SqlLex.body(toks(j + 3).text)).toMap
   }
 }

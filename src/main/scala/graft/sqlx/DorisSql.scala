@@ -1,5 +1,7 @@
 package graft.sqlx
 
+import SqlLex.{Kind, Tok}
+
 /** Doris SQL → Spark SQL dialect translation (SURVEY.md §7.2 item 4):
   * the grammar quirks Catalyst does not accept natively are rewritten
   * *before* `spark.sql`, never as a Catalyst rule:
@@ -13,103 +15,72 @@ package graft.sqlx
   *   - `MINUS`                 → `EXCEPT`;
   *   - `JOIN [broadcast] t` / `[shuffle]` distribute hints
   *                             → Catalyst `/*+ BROADCAST(t) */` /
-  *                               `/*+ SHUFFLE_HASH(t) */` in the SELECT.
+  *                               `/*+ SHUFFLE_HASH(t) */` in the SELECT;
+  *   - `DATE_ADD(e, INTERVAL n unit)` and its kin → interval arithmetic;
+  *   - `GROUP_CONCAT(…)`       → `listagg(…)`;
+  *   - `date_format`/`str_to_date` `%`-patterns → JDK patterns;
+  *   - `COUNT(DISTINCT …) OVER …` → `SIZE(COLLECT_SET(…) OVER …)`.
   *
-  * QUALIFY, `LIMIT m, n`, MINUS, the DISTINCT window aggregate below and
-  * the hints' SELECT lookup read [[SqlLex]] tokens, so string literals,
-  * backticked identifiers and comments are opaque to them.
-  *
-  * Known limits: the four regex rewrites (`DATE_ADD … INTERVAL`,
-  * `GROUP_CONCAT`, the `date_format` patterns and the distribute hints)
-  * match raw text, so the same text inside a string literal or a comment
-  * is rewritten there too.
+  * Every rewrite reads [[SqlLex]] tokens, so string literals, backticked
+  * identifiers and comments are opaque to all of them, and a call's
+  * arguments nest to any depth. `translate` lexes the statement twice:
+  * one walk does every rewrite but QUALIFY, and the QUALIFY pass then
+  * restructures the query blocks of that walk's output.
   */
 object DorisSql {
 
-  def translate(sql: String): String =
-    rewriteQualify(rewriteDistinctWindow(rewriteLimitCommaOffset(rewriteMinus(
-      rewriteDateFormatPatterns(rewriteDateAddInterval(
-        rewriteDistributeHints(rewriteGroupConcat(sql))))))))
+  def translate(sql: String): String = rewriteQualify(new Rewrite(sql, CallNames) {
+    private val hints = toks.indices.flatMap(hint)
+    // the hints go onto the first top-level SELECT
+    private val select =
+      if (hints.isEmpty) -1 else toks.indexWhere(t => t.is("select") && t.depth == 0)
+
+    override def rule(i: Int): Option[(String, Int)] = {
+      val t = toks(i)
+      if (i == select) Some((s"${t.text} /*+ ${hints.map(_._1).mkString(", ")} */", i + 1))
+      else if (t.text == "[") hint(i).map { case (_, rel, next) => (rel, next) }
+      else if (t.is("minus")) Some(("EXCEPT", i + 1))
+      // `LIMIT m, n` (the comma form is unambiguous: LIMIT <int> , <int>)
+      else if (t.is("limit") && kindAt(i + 1, Kind.Number) && textAt(i + 2, ",") &&
+          kindAt(i + 3, Kind.Number))
+        Some((s"LIMIT ${toks(i + 3).text} OFFSET ${toks(i + 1).text}", i + 4))
+      else call(i)
+    }
+
+    /** Doris join distribute hints (DorisParser.g4 joinRelation,
+      * distributeType): `[broadcast]`/`[shuffle]` before the right-side
+      * relation become a Catalyst join-strategy hint named by the
+      * relation's alias (or its table name). At `i`: the hint, the
+      * relation's text and the index of the token after it. */
+    private def hint(i: Int): Option[(String, String, Int)] = {
+      def name(j: Int) = kindAt(j, Kind.Word) || kindAt(j, Kind.Quoted)
+      if (!(textAt(i, "[") && toks.lift(i + 1).exists(t => t.is("broadcast") || t.is("shuffle")) &&
+          textAt(i + 2, "]") && name(i + 3))) None
+      else {
+        var last = i + 3
+        while (textAt(last + 1, ".") && name(last + 2)) last += 2
+        val a = if (toks.lift(last + 1).exists(_.is("as"))) last + 2 else last + 1
+        val alias = Some(a).filter(name).map(j => unquote(toks(j).text))
+          .filterNot(x => relKeywords.contains(x.toLowerCase))
+        val n = alias.getOrElse(unquote(toks(last).text))
+        Some((if (toks(i + 1).is("broadcast")) s"BROADCAST($n)" else s"SHUFFLE_HASH($n)",
+          sql.substring(toks(i + 3).start, toks(last).end), last + 1))
+      }
+    }
+  }.result)
 
   /** MySQL/Doris `DATE_ADD(expr, INTERVAL n unit)` (and DATE_SUB /
-    * ADDDATE / SUBDATE) → Spark's `expr ± INTERVAL n unit` arithmetic —
+    * ADDDATE / SUBDATE) → Spark's `(expr ± INTERVAL n unit)` arithmetic —
     * Spark's parser accepts the two-arg day form of date_add but NOT
     * the INTERVAL form, which is what replayed MySQL statements carry.
-    * The plain `date_add(d, n)` call is native and passes through.
-    *
-    * Known limits (consistent with the sibling regex rewrites, and
-    * acceptable for the replay corpus): the match is not string-literal
-    * aware at the OUTER level, so a quoted `'date_add(x, INTERVAL 1
-    * DAY)'` inside a VARCHAR literal would be rewritten inside the
-    * literal; and the first-arg pattern admits ONE level of nested
-    * parentheses, so `date_add(f(g(x)), INTERVAL …)` passes through
-    * untranslated and then fails loudly in Spark's parser — the right
-    * failure mode for an untranslatable statement. */
-  private val dateAddIntervalRe =
-    """(?i)\b(date_add|date_sub|adddate|subdate)\s*\(\s*((?:[^()']|'[^']*'|\((?:[^()']|'[^']*')*\))*?)\s*,\s*INTERVAL\s+(\d+)\s+(\w+)\s*\)""".r
+    * The plain `date_add(d, n)` call is native and passes through. */
+  def rewriteDateAddInterval(sql: String): String =
+    new Rewrite(sql, DateAddOps.keySet).result
 
-  def rewriteDateAddInterval(sql: String): String = {
-    // fixpoint: nested calls (date_add(date_add(d, INTERVAL …), INTERVAL …))
-    // leave the inner call inside the rewritten arg; re-run until stable
-    // (each pass eliminates ≥1 call, so depth bounds the iterations)
-    var cur = sql
-    var prev = ""
-    while (cur != prev) {
-      prev = cur
-      cur = dateAddIntervalRe.replaceAllIn(cur, m => {
-        val op = if (m.group(1).toLowerCase.startsWith("date_sub") ||
-                     m.group(1).equalsIgnoreCase("subdate")) "-" else "+"
-        java.util.regex.Matcher.quoteReplacement(
-          s"(${m.group(2)} $op INTERVAL ${m.group(3)} ${m.group(4)})")
-      })
-    }
-    cur
-  }
-
-  /** Doris/MySQL `GROUP_CONCAT` → Spark 4 `listagg`:
-    *
-    *   group_concat([DISTINCT] e)                   → listagg(e, ', ')
-    *   group_concat(e, 'sep')        (Doris form)   → listagg(e, 'sep')
-    *   group_concat(e SEPARATOR 's') (MySQL form)   → listagg(e, 's')
-    *   … ORDER BY o [ASC|DESC] …                    → WITHIN GROUP (ORDER BY …)
-    *
-    * Doris's default separator is ", " (reference grammar's
-    * functionCallExpression accepts both forms). Arguments may contain
-    * string literals and one level of parentheses; deeper nesting passes
-    * through untranslated (Catalyst then reports the unknown function,
-    * which is the right failure mode for an untranslatable statement). */
-  private val groupConcatRe =
-    """(?i)\bgroup_concat\s*\(\s*(distinct\s+)?((?:[^()']|'[^']*'|\((?:[^()']|'[^']*')*\))*?)\s*\)""".r
-  private val orderByInArgsRe = """(?is)\s+order\s+by\s+(.+)$""".r
-  private val separatorInArgsRe = """(?is)\s+separator\s+('(?:[^']|'')*')\s*$""".r
-  private val trailingSepArgRe = """(?s)^(.*?),\s*('(?:[^']|'')*')\s*$""".r
-
-  private def rewriteGroupConcat(sql: String): String =
-    groupConcatRe.replaceAllIn(sql, m => {
-      val distinct = Option(m.group(1)).map(_ => "DISTINCT ").getOrElse("")
-      var args = m.group(2).trim
-      // peel trailing SEPARATOR first (MySQL places it LAST, after any
-      // ORDER BY), then ORDER BY, then the Doris comma-separator form
-      val (afterSep, sepOpt) = separatorInArgsRe.findFirstMatchIn(args) match {
-        case Some(sm) => (args.substring(0, sm.start).trim, Some(sm.group(1)))
-        case None => (args, None)
-      }
-      args = afterSep
-      val (core, orderBy) = orderByInArgsRe.findFirstMatchIn(args) match {
-        case Some(ob) => (args.substring(0, ob.start).trim, Some(ob.group(1).trim))
-        case None => (args, None)
-      }
-      val (expr0, sep) = sepOpt match {
-        case Some(sp) => (core, sp)
-        case None => trailingSepArgRe.findFirstMatchIn(core) match {
-          case Some(cm) => (cm.group(1).trim, cm.group(2))
-          case None => (core, "', '")
-        }
-      }
-      val within = orderBy.map(o => s" WITHIN GROUP (ORDER BY $o)").getOrElse("")
-      scala.util.matching.Regex.quoteReplacement(
-        s"listagg($distinct$expr0, $sep)$within")
-    })
+  private val DateAddOps =
+    Map("date_add" -> "+", "adddate" -> "+", "date_sub" -> "-", "subdate" -> "-")
+  private val CallNames =
+    DateAddOps.keySet ++ Set("group_concat", "date_format", "str_to_date", "count")
 
   /** MySQL/Doris `%`-patterns → JDK datetime patterns, for the pattern
     * literal of date_format / str_to_date calls. Non-pattern letters are
@@ -140,128 +111,151 @@ object DorisSql {
     sb.toString
   }
 
-  /** Rewrite the second-argument pattern literal of
-    * `date_format(x, '%...')` / `str_to_date(x, '%...')`; str_to_date
-    * itself becomes to_timestamp (its Spark equivalent). Only patterns
-    * containing '%' are touched, so JDK-style patterns pass through. */
-  // first arg may carry ONE level of parentheses (e.g. the interval
-  // arithmetic rewriteDateAddInterval produces)
-  private val dateFnRe =
-    """(?i)\b(date_format|str_to_date)\s*\(((?:[^()']|'[^']*'|\((?:[^()']|'[^']*')*\))*?)'([^']*%[^']*)'\s*\)""".r
-  private def rewriteDateFormatPatterns(sql: String): String =
-    dateFnRe.replaceAllIn(sql, m => {
-      val fn = if (m.group(1).equalsIgnoreCase("str_to_date")) "to_timestamp"
-               else m.group(1)
-      scala.util.matching.Regex.quoteReplacement(
-        s"$fn(${m.group(2)}'${mysqlPatternToJdk(m.group(3))}')")
-    })
-
-  /** Doris join distribute hints (DorisParser.g4 joinRelation,
-    * distributeType): `[broadcast]`/`[shuffle]` before the right-side
-    * relation become Catalyst join-strategy hints on the enclosing
-    * SELECT, named by the relation's alias (or its table name). */
-  private val distHintRe =
-    """(?i)\[\s*(broadcast|shuffle)\s*\]\s*(`?[A-Za-z_][\w.]*`?)(?:\s+(?:as\s+)?(`?[A-Za-z_]\w*`?))?""".r
   private val relKeywords = Set("on", "using", "where", "join", "inner", "left",
     "right", "full", "cross", "group", "order", "limit", "qualify", "having")
 
-  private def rewriteDistributeHints(sql: String): String = {
-    val hints = Seq.newBuilder[String]
-    val stripped = distHintRe.replaceAllIn(sql, m => {
-      val kind = m.group(1).toLowerCase
-      val table = m.group(2).stripPrefix("`").stripSuffix("`")
-      val alias = Option(m.group(3)).map(_.stripPrefix("`").stripSuffix("`"))
-        .filterNot(a => relKeywords.contains(a.toLowerCase))
-      val name = alias.getOrElse(table.split('.').last)
-      hints += (if (kind == "broadcast") s"BROADCAST($name)" else s"SHUFFLE_HASH($name)")
-      scala.util.matching.Regex.quoteReplacement(
-        m.matched.replaceFirst("(?i)\\[\\s*(broadcast|shuffle)\\s*\\]\\s*", ""))
-    })
-    val hs = hints.result()
-    if (hs.isEmpty) sql
-    else SqlLex.tokens(stripped).find(t => t.is("select") && t.depth == 0) match {
-      case Some(t) =>
-        stripped.substring(0, t.end) + s" /*+ ${hs.mkString(", ")} */" + stripped.substring(t.end)
-      case None => stripped
+  private def unquote(s: String): String = s.stripPrefix("`").stripSuffix("`")
+
+  /** `sql[from, until)` with `rule` applied to the tokens starting in it:
+    * `rule(i)` may replace the tokens from `i` up to (not including) the
+    * index it returns, if they end by `until`. The text between tokens is
+    * kept. */
+  private def walk(sql: String, toks: IndexedSeq[Tok], from: Int, until: Int)(
+      rule: Int => Option[(String, Int)]): String = {
+    val sb = new java.lang.StringBuilder
+    var pos = from
+    var i = firstAt(toks, from)
+    while (i < toks.length && toks(i).start < until) rule(i) match {
+      case Some((repl, next)) if toks(next - 1).end <= until =>
+        sb.append(sql, pos, toks(i).start).append(repl)
+        pos = toks(next - 1).end
+        i = next
+      case _ => i += 1
     }
+    sb.append(sql, pos, until).toString
   }
 
-  private def rewriteMinus(sql: String): String =
-    SqlLex.tokens(sql).filter(_.is("minus")).foldRight(sql) { (t, acc) =>
-      acc.substring(0, t.start) + "EXCEPT" + acc.substring(t.end)
-    }
+  /** Index of the first token starting at or after `offset`. */
+  private def firstAt(toks: IndexedSeq[Tok], offset: Int): Int =
+    toks.view.map(_.start).search(offset).insertionPoint
 
-  /** `LIMIT m, n` → `LIMIT n OFFSET m` at any depth (the comma form is
-    * unambiguous: LIMIT <int> , <int>). */
-  private def rewriteLimitCommaOffset(sql: String): String =
-    SqlLex.tokens(sql).sliding(4).collect {
-      case Seq(l, m, c, n) if l.is("limit") && m.kind == SqlLex.Kind.Number &&
-          c.text == "," && n.kind == SqlLex.Kind.Number => (l.start, n.end, m.text, n.text)
-    }.toSeq.foldRight(sql) { case ((s, e, m, n), acc) =>
-      acc.substring(0, s) + s"LIMIT $n OFFSET $m" + acc.substring(e)
-    }
+  /** `sql` lexed once, with the calls `name(…)` whose lower-cased name is
+    * in `names` rewritten in one walk. A call's closing paren is its
+    * `(`'s match by token depth and its arguments are the text between
+    * the commas one level inside; the arguments are rewritten before the
+    * call, so calls nest to any depth. */
+  private class Rewrite(sql: String, names: Set[String]) {
+    val toks: Vector[Tok] = SqlLex.tokens(sql)
+    def rule(i: Int): Option[(String, Int)] = call(i)
+    def result: String = walk(sql, toks, 0, sql.length)(rule)
+    /** The text strictly between tokens `a` and `b`, rewritten. */
+    def text(a: Int, b: Int): String = walk(sql, toks, toks(a).end, toks(b).start)(rule)
+    def kindAt(j: Int, k: Kind): Boolean = toks.lift(j).exists(_.kind == k)
+    def textAt(j: Int, s: String): Boolean = toks.lift(j).exists(_.text == s)
 
-  /** DISTINCT window aggregate: `COUNT(DISTINCT e[, e2…]) OVER …` →
-    * `SIZE(COLLECT_SET(e) OVER …)`. Spark rejects DISTINCT in a window
-    * aggregate outright (UNSUPPORTED_EXPR_FOR_WINDOW), while replayed
-    * Doris/DuckDB workloads use it natively — q88 proved the rewrite's
-    * semantics against DuckDB's native implementation row-by-row (ties
-    * and frames included); this pass makes the translator perform it.
-    * collect_set maintains the distinct set under ANY frame Spark
-    * accepts for window aggregates and drops NULLs exactly as
-    * COUNT(DISTINCT) does; the multi-argument form counts rows where ALL
-    * arguments are non-null, preserved by a CASE-guarded struct. The
-    * rewrite is applied at any depth and repeats until no
-    * `COUNT(DISTINCT…) OVER` remains (each pass eliminates one); a
-    * plain `COUNT(DISTINCT…)` aggregate without OVER is native Spark
-    * and passes through. */
-  private def rewriteDistinctWindow(sql: String): String = {
-    import SqlLex.Kind
-    val toks = SqlLex.tokens(sql)
-    def isOpen(i: Int) = i < toks.length && toks(i).text == "("
-    for (i <- toks.indices if toks(i).is("count") && isOpen(i + 1)) {
-      val close = SqlLex.closing(toks, i + 1)
-      if (close > 0 && toks(i + 2).is("distinct") && toks.lift(close + 1).exists(_.is("over"))) {
-        // the OVER target: an inline (window spec) or a named window
-        val target = close + 2
-        val replEnd =
-          if (isOpen(target)) {
-            val c2 = SqlLex.closing(toks, target)
-            if (c2 > 0) toks(c2).end else -1
-          } else if (toks.lift(target).exists(_.kind == Kind.Word)) toks(target).end
-          else -1
-        if (replEnd > 0) {
-          // the arguments: the text between DISTINCT, each comma one level
-          // inside COUNT( and the closing paren
-          val argDepth = toks(i + 1).depth + 1
-          val commas = (i + 3 until close)
-            .filter(j => toks(j).text == "," && toks(j).depth == argDepth)
-          val args = ((i + 2) +: commas).zip(commas :+ close).map { case (a, b) =>
-            if (b - a > 1) sql.substring(toks(a + 1).start, toks(b - 1).end) else ""
+    /** The call at `i` rewritten, and the index of the token after it. */
+    def call(i: Int): Option[(String, Int)] = {
+      val open = i + 1
+      if (toks(i).kind != Kind.Word || !textAt(open, "(")) return None
+      val name = toks(i).text.toLowerCase
+      val close = if (names(name)) SqlLex.closing(toks, open) else -1
+      if (close < 0) return None
+      // the paren, the commas between arguments and the closing paren
+      val seps = (open +: (open + 1 until close).filter(j =>
+        toks(j).depth == toks(open).depth + 1 && toks(j).text == ",")) :+ close
+      val last = seps(seps.length - 2) // the separator before the last argument
+      val after = close + 1
+      name match {
+        case "group_concat" => Some((groupConcat(open, close), after))
+        case "count" => distinctWindow(open, close, seps)
+        case "date_format" | "str_to_date" =>
+          // the last argument is one '…' literal holding a %-pattern
+          val lit = toks(close - 1)
+          lazy val body = SqlLex.body(lit.text)
+          if (last != close - 2 || lit.kind != Kind.Str || lit.text.head != '\'' ||
+              !body.contains('%') || body.contains('\'')) None
+          else {
+            val fn = if (name == "str_to_date") "to_timestamp" else toks(i).text
+            Some((s"$fn(${text(open, close - 1)}'${mysqlPatternToJdk(body)}')", after))
           }
-          val elem =
-            if (args.length == 1) args.head
-            else s"CASE WHEN ${args.map(a => s"($a) IS NOT NULL").mkString(" AND ")} " +
-              s"THEN struct(${args.mkString(", ")}) END"
-          val overText = sql.substring(toks(close).end, replEnd)
-          return rewriteDistinctWindow(
-            sql.substring(0, toks(i).start) +
-              s"SIZE(COLLECT_SET($elem)$overText)" +
-              sql.substring(replEnd))
-        }
+        case _ => // DATE_ADD and its kin: the last argument is INTERVAL <n> <unit>
+          if (last == open || close - last != 4 || !toks(last + 1).is("interval") ||
+              !kindAt(last + 2, Kind.Number) || !kindAt(last + 3, Kind.Word)) None
+          else Some((s"(${text(open, last).trim} ${DateAddOps(name)} INTERVAL " +
+            s"${toks(last + 2).text} ${toks(last + 3).text})", after))
       }
     }
-    sql
+
+    /** Doris/MySQL `GROUP_CONCAT` → Spark 4 `listagg`:
+      *
+      *   group_concat([DISTINCT] e)                   → listagg(e, ', ')
+      *   group_concat(e, 'sep')        (Doris form)   → listagg(e, 'sep')
+      *   group_concat(e SEPARATOR 's') (MySQL form)   → listagg(e, 's')
+      *   … ORDER BY o [ASC|DESC] …                    → WITHIN GROUP (ORDER BY …)
+      *
+      * Doris's default separator is ", " (reference grammar's
+      * functionCallExpression accepts both forms). MySQL places SEPARATOR
+      * last, after any ORDER BY; the Doris separator argument comes before
+      * it. */
+    private def groupConcat(open: Int, close: Int): String = {
+      val distinct = toks(open + 1).is("distinct")
+      val head = if (distinct) open + 1 else open // the token before the expression
+      val sep =
+        if (close - 3 > head && toks(close - 2).is("separator") && kindAt(close - 1, Kind.Str)) close - 2
+        else close
+      val orderBy = (head + 2 until sep - 2).find(j => toks(j).depth == toks(open).depth + 1 &&
+        toks(j).is("order") && toks(j + 1).is("by"))
+      val core = orderBy.getOrElse(sep)
+      val comma =
+        if (sep == close && core - 2 > head && textAt(core - 2, ",") && kindAt(core - 1, Kind.Str)) core - 2
+        else core
+      val sepText =
+        if (sep < close) toks(sep + 1).text else if (comma < core) toks(comma + 1).text else "', '"
+      val within = orderBy.fold("")(o => s" WITHIN GROUP (ORDER BY ${text(o + 1, sep).trim})")
+      s"listagg(${if (distinct) "DISTINCT " else ""}${text(head, comma).trim}, $sepText)$within"
+    }
+
+    /** DISTINCT window aggregate: `COUNT(DISTINCT e[, e2…]) OVER …` →
+      * `SIZE(COLLECT_SET(e) OVER …)`. Spark rejects DISTINCT in a window
+      * aggregate outright (UNSUPPORTED_EXPR_FOR_WINDOW), while replayed
+      * Doris/DuckDB workloads use it natively — q88 proved the rewrite's
+      * semantics against DuckDB's native implementation row-by-row (ties
+      * and frames included); this rewrite makes the translator perform it.
+      * collect_set maintains the distinct set under ANY frame Spark
+      * accepts for window aggregates and drops NULLs exactly as
+      * COUNT(DISTINCT) does; the multi-argument form counts rows where ALL
+      * arguments are non-null, preserved by a CASE-guarded struct. A plain
+      * `COUNT(DISTINCT…)` aggregate without OVER is native Spark and
+      * passes through. */
+    private def distinctWindow(open: Int, close: Int, seps: IndexedSeq[Int]): Option[(String, Int)] = {
+      // the OVER target: an inline (window spec) or a named window
+      val target = close + 2
+      val end =
+        if (!toks(open + 1).is("distinct") || !toks.lift(close + 1).exists(_.is("over"))) -1
+        else if (textAt(target, "(")) SqlLex.closing(toks, target)
+        else if (kindAt(target, Kind.Word)) target
+        else -1
+      if (end < 0) None
+      else {
+        val bounds = (open + 1) +: seps.tail
+        val args = bounds.zip(bounds.tail).map { case (a, b) => text(a, b).trim }
+        val elem =
+          if (args.length == 1) args.head
+          else s"CASE WHEN ${args.map(a => s"($a) IS NOT NULL").mkString(" AND ")} " +
+            s"THEN struct(${args.mkString(", ")}) END"
+        Some((s"SIZE(COLLECT_SET($elem)${text(close, end)}${toks(end).text})", end + 1))
+      }
+    }
   }
 
   /** QUALIFY at ANY query-block depth (the reference grammar,
     * DorisParser.g4:1240-1261 querySpecification, allows it in every
     * block — replayed logs do carry it inside CTE bodies, derived
     * tables, and EVERY branch of a set-operation chain). Every
-    * parenthesized region is rewritten bottom-up first; then the
-    * outermost level is split at its top-level set operators (UNION /
-    * INTERSECT / EXCEPT, honoring a trailing ALL/DISTINCT) and each
-    * branch gets the block transform independently:
+    * parenthesized region is rewritten bottom-up first; then each level
+    * is split at its top-level set operators (UNION / INTERSECT /
+    * EXCEPT, honoring a trailing ALL/DISTINCT) and each branch gets the
+    * block transform independently:
     *
     *   SELECT <list> FROM <rel> QUALIFY <pred> <tail>
     *   → SELECT * EXCEPT (__qualify)
@@ -273,95 +267,89 @@ object DorisSql {
     * last branch stays global (it orders the whole set result, so it
     * must not be folded into the last branch's subquery). Non-query
     * paren groups (function args, IN-lists) contain no top-level
-    * QUALIFY token and pass through unchanged. */
-  private def rewriteQualify(sql: String): String =
-    rewriteQualifySetAware(mapTopParens(sql)(rewriteQualify))
-
-  private val setOpNames = Set("union", "intersect", "except")
-
-  /** The word tokens of `sql`, the view the QUALIFY passes read. */
-  private def words(sql: String): Vector[SqlLex.Tok] =
-    SqlLex.tokens(sql).filter(_.kind == SqlLex.Kind.Word)
-
-  private def rewriteQualifySetAware(sql: String): String = {
-    val toks = words(sql)
-    // EXCEPT is a set op only when a query block follows; `SELECT *
-    // EXCEPT (cols)` — which this rewrite itself emits — is followed by
-    // a parenthesized COLUMN list, never by SELECT/WITH/ALL/DISTINCT.
-    def isSetOp(i: Int): Boolean = {
-      val t = toks(i)
-      t.depth == 0 && setOpNames.exists(t.is) && (!t.is("except") ||
-        toks.lift(i + 1).exists(nt => nt.is("select") || nt.is("all") ||
-          nt.is("distinct") || nt.is("with")))
-    }
-    val ops = toks.indices.filter(isSetOp)
-    if (ops.isEmpty) return rewriteQualifyBlock(sql)
-    // the op span swallows a following top-level ALL / DISTINCT
-    def opEnd(i: Int): Int =
-      toks.lift(i + 1)
-        .filter(nt => nt.depth == 0 && (nt.is("all") || nt.is("distinct")))
-        .getOrElse(toks(i)).end
-    val firstSelect = toks.find(t => t.depth == 0 && t.is("select"))
-      .map(_.start).getOrElse(0)
-    val lastEnd = opEnd(ops.last)
-    val tailStart = toks.find(t => t.depth == 0 && t.start >= lastEnd &&
-        (t.is("order") || t.is("limit") || t.is("offset")))
-      .map(_.start).getOrElse(sql.length)
-    val sb = new StringBuilder(sql.substring(0, firstSelect))
-    // a rewritten branch can swallow its surrounding whitespace, so
-    // re-separate pieces only where a space is actually missing — an
-    // untouched statement stays byte-identical
-    def appendSep(s: String): Unit = {
-      if (sb.nonEmpty && !sb.last.isWhitespace &&
-        s.nonEmpty && !s.head.isWhitespace) sb.append(' ')
-      sb.append(s)
-    }
-    var pos = firstSelect
-    for (i <- ops) {
-      appendSep(rewriteQualifyBlock(sql.substring(pos, toks(i).start)))
-      val e = opEnd(i)
-      appendSep(sql.substring(toks(i).start, e))
-      pos = e
-    }
-    appendSep(rewriteQualifyBlock(sql.substring(pos, tailStart)))
-    appendSep(sql.substring(tailStart))
-    sb.toString
-  }
-
-  private def rewriteQualifyBlock(sql: String): String = {
-    val toks = words(sql)
-    toks.find(t => t.is("qualify") && t.depth == 0) match {
-      case None => sql
-      case Some(q) =>
-        val fromTok = toks.find(t => t.is("from") && t.depth == 0)
-          .getOrElse(return sql)
-        // the predicate runs until a top-level ORDER/LIMIT or statement end
-        val stop = toks.find(t => t.start > q.end && t.depth == 0 &&
-            (t.is("order") || t.is("limit")))
-          .map(_.start).getOrElse(sql.length)
-        val selectList = sql.substring(0, fromTok.start)
-        val rel = sql.substring(fromTok.start, q.start)
-        val pred = sql.substring(q.end, stop).trim
-        val tail = sql.substring(stop)
-        s"SELECT * EXCEPT (__qualify) FROM ($selectList, ($pred) AS __qualify $rel) WHERE __qualify $tail"
-    }
-  }
-
-  /** Applies f to the CONTENT of each outermost parenthesized region.
-    * Unbalanced input passes through untouched (the right failure mode:
-    * Catalyst then reports the real syntax error). */
-  private def mapTopParens(sql: String)(f: String => String): String = {
+    * QUALIFY token and pass through unchanged. The statement is lexed
+    * once: each level reads its slice of the one token vector. */
+  private def rewriteQualify(sql: String): String = {
     val toks = SqlLex.tokens(sql)
-    val sb = new StringBuilder
-    var pos = 0
-    for (open <- toks.indices if toks(open).text == "(" && toks(open).depth == 0) {
-      val close = SqlLex.closing(toks, open)
-      if (close > 0) {
-        sb.append(sql.substring(pos, toks(open).end))
-          .append(f(sql.substring(toks(open).end, toks(close).start))).append(')')
-        pos = toks(close).end
+
+    /** `sql[from, until)` with each paren group at `depth` (unbalanced
+      * ones pass through: Catalyst then reports the real syntax error)
+      * holding its own rewrite. */
+    def mapped(from: Int, until: Int, depth: Int): String =
+      walk(sql, toks, from, until) { i =>
+        val close =
+          if (toks(i).text == "(" && toks(i).depth == depth) SqlLex.closing(toks, i) else -1
+        if (close < 0) None
+        else Some((s"(${setAware(toks(i).end, toks(close).start, depth + 1)})", close + 1))
+      }
+
+    def words(from: Int, until: Int): Vector[Tok] =
+      toks.slice(firstAt(toks, from), firstAt(toks, until)).filter(_.kind == Kind.Word)
+
+    /** The level `sql[from, until)`, whose top-level tokens are at `depth`. */
+    def setAware(from: Int, until: Int, depth: Int): String = {
+      val ws = words(from, until)
+      // EXCEPT is a set op only when a query block follows; `SELECT *
+      // EXCEPT (cols)` — which this rewrite itself emits — is followed by
+      // a parenthesized COLUMN list, never by SELECT/WITH/ALL/DISTINCT.
+      def isSetOp(k: Int): Boolean = {
+        val t = ws(k)
+        t.depth == depth && setOpNames.exists(t.is) && (!t.is("except") ||
+          ws.lift(k + 1).exists(nt => nt.is("select") || nt.is("all") ||
+            nt.is("distinct") || nt.is("with")))
+      }
+      val ops = ws.indices.filter(isSetOp)
+      if (ops.isEmpty) return block(from, until, depth)
+      // the op span swallows a following top-level ALL / DISTINCT
+      def opEnd(k: Int): Int =
+        ws.lift(k + 1)
+          .filter(nt => nt.depth == depth && (nt.is("all") || nt.is("distinct")))
+          .getOrElse(ws(k)).end
+      val firstSelect = ws.find(t => t.depth == depth && t.is("select"))
+        .map(_.start).getOrElse(from)
+      val lastEnd = opEnd(ops.last)
+      val tailStart = ws.find(t => t.depth == depth && t.start >= lastEnd &&
+          (t.is("order") || t.is("limit") || t.is("offset")))
+        .map(_.start).getOrElse(until)
+      val sb = new StringBuilder(mapped(from, firstSelect, depth))
+      // a rewritten branch can swallow its surrounding whitespace, so
+      // re-separate pieces only where a space is actually missing — an
+      // untouched statement stays byte-identical
+      def appendSep(s: String): Unit = {
+        if (sb.nonEmpty && !sb.last.isWhitespace &&
+          s.nonEmpty && !s.head.isWhitespace) sb.append(' ')
+        sb.append(s)
+      }
+      var pos = firstSelect
+      for (k <- ops) {
+        appendSep(block(pos, ws(k).start, depth))
+        val e = opEnd(k)
+        appendSep(mapped(ws(k).start, e, depth))
+        pos = e
+      }
+      appendSep(block(pos, tailStart, depth))
+      appendSep(mapped(tailStart, until, depth))
+      sb.toString
+    }
+
+    /** One query block `sql[from, until)`. */
+    def block(from: Int, until: Int, depth: Int): String = {
+      val ws = words(from, until).filter(_.depth == depth)
+      def piece(a: Int, b: Int) = mapped(a, b, depth)
+      (ws.find(_.is("qualify")), ws.find(_.is("from"))) match {
+        case (Some(q), Some(fromTok)) =>
+          // the predicate runs until a top-level ORDER/LIMIT or the block's end
+          val stop = ws.find(t => t.start > q.end && (t.is("order") || t.is("limit")))
+            .map(_.start).getOrElse(until)
+          s"SELECT * EXCEPT (__qualify) FROM (${piece(from, fromTok.start)}, " +
+            s"(${piece(q.end, stop).trim}) AS __qualify ${piece(fromTok.start, q.start)}) " +
+            s"WHERE __qualify ${piece(stop, until)}"
+        case _ => piece(from, until)
       }
     }
-    sb.append(sql.substring(pos)).toString
+
+    setAware(0, sql.length, 0)
   }
+
+  private val setOpNames = Set("union", "intersect", "except")
 }

@@ -2,7 +2,8 @@ package graft.sqlx
 
 /** The one lexer for Doris/MySQL SQL text: where a string literal, a
   * backticked identifier or a comment begins and ends is decided here
-  * and nowhere else in the translator, the anonymizer or `create`.
+  * and nowhere else in the translator, the anonymizer, `create` or the
+  * DDL parser.
   *
   * Tokens, in source order (whitespace, `Char.isWhitespace`, between
   * them is not a token):
@@ -54,20 +55,6 @@ object SqlLex {
     def scan(i0: Int, ok: Char => Boolean): Int = {
       var i = i0; while (i < n && ok(sql.charAt(i))) i += 1; i
     }
-    /** Index just past the literal opening at `i0`. */
-    def skipStr(i0: Int): Int = {
-      val q = sql.charAt(i0)
-      var i = i0 + 1
-      while (i < n) {
-        val c = sql.charAt(i)
-        if (c == '\\') i += 2
-        else if (c == q) {
-          if (i + 1 < n && sql.charAt(i + 1) == q) i += 2
-          else return i + 1
-        } else i += 1
-      }
-      n
-    }
     def upTo(i0: Int, close: String, past: Int): Int = {
       val j = sql.indexOf(close, i0); if (j < 0) n else j + past
     }
@@ -80,7 +67,7 @@ object SqlLex {
       if (c.isWhitespace) i += 1
       else {
         val (kind, end) =
-          if (c == '\'' || c == '"') (Str, skipStr(i))
+          if (c == '\'' || c == '"') (Str, math.min(closingQuote(sql, i) + 1, n))
           else if (c == '`') (Quoted, upTo(i + 1, "`", 1))
           else if (c == '-' && next == '-') (Comment, upTo(i, "\n", 0))
           else if (c == '/' && next == '*') (Comment, upTo(i + 2, "*/", 2))
@@ -96,6 +83,27 @@ object SqlLex {
     }
     out.result()
   }
+
+  /** Index of the quote that closes the literal opening at `i0`, or
+    * `s.length` when the text ends first. */
+  private def closingQuote(s: String, i0: Int): Int = {
+    val q = s.charAt(i0)
+    var i = i0 + 1
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '\\') i += 2
+      else if (c == q) {
+        if (i + 1 < s.length && s.charAt(i + 1) == q) i += 2
+        else return i
+      } else i += 1
+    }
+    s.length
+  }
+
+  /** The body of a `Str` token's text: what lies between its opening
+    * quote and its closing quote, or up to the end when it has none.
+    * Escapes are left as written. */
+  def body(lit: String): String = lit.substring(1, closingQuote(lit, 0))
 
   /** Index of the token that closes the `(` at `toks(open)`, or -1 when
     * the text ends first. */

@@ -73,6 +73,16 @@ select count(foo), foo from foo"""
     assert(!got.contains("col_x") && !got.contains("my_tbl") && !got.contains("col_s"))
   }
 
+  test("an unterminated literal keeps its whole body") {
+    // a lone quote is an empty unterminated literal, not an error
+    assert(Anonymizer.anonymizeSqlWith(_ => "x", "SELECT a FROM t WHERE b = '") ==
+      "SELECT x FROM x WHERE x = '")
+    // the last character of an unterminated property value is an id too
+    assert(Anonymizer.anonymizeSqlWith(_.toUpperCase,
+      "PROPERTIES (\"bloom_filter_columns\" = \"a,bc") ==
+      "PROPERTIES (\"bloom_filter_columns\" = \"A,BC\"")
+  }
+
   test("hash method: 8-byte hex, min length, reserved ids kept") {
     val ctx = new Anonymizer.Context("hash", minLength = 3)
     assert(ctx.anonymize("ab") == "ab")                   // below min length

@@ -75,6 +75,9 @@ class CreateSpec extends SparkSpec {
         |AS SELECT k, count(*) AS c FROM base GROUP BY k""".stripMargin
     assert(Create.mtmvToView(mtmv) ==
       "CREATE VIEW `mv1` AS SELECT k, count(*) AS c FROM base GROUP BY k")
+    // a comment between AS and the query does not hide the AS
+    assert(Create.mtmvToView("CREATE MATERIALIZED VIEW mv2 AS /* q */ SELECT 1 AS one") ==
+      "CREATE VIEW `mv2` AS /* q */ SELECT 1 AS one")
     // applied end-to-end: MTMV over a created table
     dropDb("csdb")
     val dir = ddlDir(
@@ -109,6 +112,9 @@ class CreateSpec extends SparkSpec {
     assert(Create.referencesDb("SELECT 1 FROM csdb.t", "csdb"))
     assert(!Create.referencesDb("SELECT 1 FROM mycsdb.t", "csdb"))
     assert(!Create.referencesDb("SELECT csdb FROM t", "csdb"))
+    // a literal or a comment naming the db is not a reference
+    assert(!Create.referencesDb("SELECT 'csdb.t'", "csdb"))
+    assert(!Create.referencesDb("SELECT 1 -- csdb.t", "csdb"))
   }
 
   test("dump --schema-db -> create --db round-trips across databases") {

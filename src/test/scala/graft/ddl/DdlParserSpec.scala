@@ -69,6 +69,19 @@ class DdlParserSpec extends AnyFunSuite {
     assert(t.columns(1).dtype == DBitmap)
   }
 
+  test("literals and backticked names are opaque to PROPERTIES and INDEX entries") {
+    val t = DorisDdl.parseCreateTable("""
+      CREATE TABLE p (
+        `a)b` int NULL,
+        INDEX i (`a)b`) USING INVERTED,
+        `c` int NULL
+      ) ENGINE=OLAP
+      COMMENT 'see PROPERTIES ("x" = "y")'
+      PROPERTIES ("replication_num" = "1", 'bloom_filter_columns' = "c")""")
+    assert(t.columns.map(_.name) == Seq("a)b", "c"))
+    assert(t.properties == Map("replication_num" -> "1", "bloom_filter_columns" -> "c"))
+  }
+
   test("decimal precision/scale clamping (p≤38, bad scale→0)") {
     assert(DorisDdl.parseType("decimal(40,2)") == DDecimal(38, 2))
     assert(DorisDdl.parseType("decimal(10,12)") == DDecimal(10, 0))

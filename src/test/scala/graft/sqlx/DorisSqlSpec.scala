@@ -118,6 +118,11 @@ class DorisSqlSpec extends AnyFunSuite {
       "SELECT SIZE(COLLECT_SET(x) OVER (PARTITION BY g /* ) */ ORDER BY y)) FROM t")
   }
 
+  test("literals are opaque to the call rewrites and the distribute hints") {
+    val sql = "SELECT 'date_add(d, INTERVAL 1 DAY)' AS s, '[broadcast] x' AS h, 'group_concat(y)' AS g"
+    assert(DorisSql.translate(sql) == sql)
+  }
+
   test("MySQL %-patterns in date_format/str_to_date become JDK patterns") {
     assert(DorisSql.mysqlPatternToJdk("%Y-%m-%d %H:%i:%s") == "yyyy-MM-dd HH:mm:ss")
     assert(DorisSql.mysqlPatternToJdk("%d/%b/%Y") == "dd/MMM/yyyy")
@@ -138,6 +143,9 @@ class DorisSqlSpec extends AnyFunSuite {
       == "SELECT (ts - INTERVAL 12 HOUR)")
     assert(DorisSql.rewriteDateAddInterval("SELECT subdate(f(x), INTERVAL 1 MONTH)")
       == "SELECT (f(x) - INTERVAL 1 MONTH)")
+    // the first argument nests to any depth
+    assert(DorisSql.translate("SELECT date_add(f(g(x)), INTERVAL 1 DAY) FROM t")
+      == "SELECT (f(g(x)) + INTERVAL 1 DAY) FROM t")
     // the plain two-arg day form is native Spark and must pass through
     assert(DorisSql.rewriteDateAddInterval("SELECT date_add(d, 3)")
       == "SELECT date_add(d, 3)")
@@ -163,6 +171,9 @@ class DorisSqlSpec extends AnyFunSuite {
     // expression args with one paren level survive
     assert(DorisSql.translate("SELECT group_concat(concat(a, b), '-') FROM t")
       == "SELECT listagg(concat(a, b), '-') FROM t")
+    // and deeper nesting too
+    assert(DorisSql.translate("SELECT group_concat(concat(a, upper(b)), '-') FROM t")
+      == "SELECT listagg(concat(a, upper(b)), '-') FROM t")
   }
 
   test("[broadcast]/[shuffle] distribute hints become Catalyst join hints") {

@@ -26,6 +26,13 @@ class SqlLexSpec extends AnyFunSuite {
     assert(lex("1 /* ) ") == Seq((Number, "1", 0, 0), (Comment, "/* ) ", 2, 0)))
   }
 
+  test("a literal's body runs to its closing quote, escapes as written") {
+    assert(SqlLex.body("'it''s'") == "it''s")
+    assert(SqlLex.body("\"a\\\"b\"") == "a\\\"b")
+    assert(SqlLex.body("'abc") == "abc")
+    assert(SqlLex.body("'") == "")
+  }
+
   test("backticks hold ) and , without moving the depth") {
     val toks = SqlLex.tokens("count(DISTINCT `a,b)`, c)")
     assert(toks.map(t => (t.kind, t.text, t.start, t.depth)) == Seq(

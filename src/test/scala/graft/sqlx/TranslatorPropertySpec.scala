@@ -5,14 +5,17 @@ import graft.SparkSpec
 /** Translator fuzz property (the AnonPropertySpec analog for
   * `DorisSql.translate`, generalizing q89/q90's cross-validation): 200
   * seeded statements composing the translator's rewrite surface —
-  * QUALIFY, `LIMIT m,n`, MINUS, `COUNT(DISTINCT) OVER`, set-op chains,
-  * CTE wrapping, doubled-quote literals, a comment holding a paren —
+  * QUALIFY, `LIMIT m,n`, MINUS, `COUNT(DISTINCT) OVER`, `DATE_ADD …
+  * INTERVAL`, `date_format` %-patterns, `group_concat`, set-op chains,
+  * CTE wrapping, doubled-quote literals, literals shaped like the
+  * rewrites' own inputs, a comment holding a paren —
   * are generated as PAIRS from one AST: the Doris-dialect text (through
   * `translate`) and an
   * independently-stated Spark-native equivalent (manual subquery wrap
-  * for QUALIFY, `LIMIT n OFFSET m`, EXCEPT, and the q88 dense_rank
-  * identity for the distinct window — machinery the rewrite does NOT
-  * use). Both run on the same data and must agree row-for-row, so a
+  * for QUALIFY, `LIMIT n OFFSET m`, EXCEPT, the q88 dense_rank
+  * identity for the distinct window, day arithmetic in `date_add`,
+  * year/month concatenation and a sorted `collect_list` — machinery the
+  * rewrite does NOT use). Both run on the same data and must agree row-for-row, so a
   * mistranslation of any composition is unrepresentable. (DuckDB
   * agreement on the same constructs stays covered by the q89/q90
   * oracle rows — this spec covers the combinatorial space.)
@@ -30,7 +33,8 @@ class TranslatorPropertySpec extends SparkSpec {
     def branch(): (String, String) = {
       val lit =
         if (rnd.nextBoolean()) "'plain'"
-        else Seq("'it''s (x'", "'a''MINUS''b'", "'don''t)'")(rnd.nextInt(3))
+        else Seq("'it''s (x'", "'a''MINUS''b'", "'don''t)'", "'date_add(d, INTERVAL 1 DAY)'",
+          "'[broadcast] x'", "'group_concat(y)'")(rnd.nextInt(6))
       val (winD, winN) = rnd.nextInt(4) match {
         case 0 => // partition-total distinct: rewrite vs dense_rank identity
           ("COUNT(DISTINCT d) OVER (PARTITION BY g)",
@@ -46,13 +50,33 @@ class TranslatorPropertySpec extends SparkSpec {
             "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)"
           (w, w)
       }
+      // a string-typed column, so set-op branches stay union-compatible
+      val day = "date_add(DATE'2024-01-01', v * 20)"
+      val (xD, xN) = rnd.nextInt(4) match {
+        case 0 =>
+          val n = 1 + rnd.nextInt(9)
+          (s"CAST(DATE_ADD(date_add(DATE'2024-01-01', v), INTERVAL $n DAY) AS STRING)",
+           s"CAST(date_add(DATE'2024-01-01', v + $n) AS STRING)")
+        case 1 =>
+          val n = 1 + rnd.nextInt(9)
+          (s"CAST(date_sub(date_add(DATE'2024-01-01', v), INTERVAL $n DAY) AS STRING)",
+           s"CAST(date_add(DATE'2024-01-01', v - $n) AS STRING)")
+        case 2 =>
+          (s"date_format($day, '%Y-%m')",
+           s"concat(CAST(year($day) AS STRING), '-', lpad(CAST(month($day) AS STRING), 2, '0'))")
+        case _ =>
+          val k = 2 + rnd.nextInt(8)
+          (s"(SELECT group_concat(v ORDER BY v SEPARATOR '|') FROM fuzz_t WHERE v < $k)",
+           "(SELECT array_join(transform(array_sort(collect_list(v)), e -> CAST(e AS STRING)), '|') " +
+             s"FROM fuzz_t WHERE v < $k)")
+      }
       val where = rnd.nextInt(3) match {
         case 0 => ""
         case 1 => s" WHERE v % ${2 + rnd.nextInt(4)} != 0"
         case _ => s" WHERE v < ${20 + rnd.nextInt(25)}"
       }
-      val selD = s"SELECT g, v, $lit AS s, $winD AS w FROM fuzz_t$where"
-      val selN = s"SELECT g, v, $lit AS s, $winN AS w FROM fuzz_t$where"
+      val selD = s"SELECT g, v, $lit AS s, $winD AS w, $xD AS x FROM fuzz_t$where"
+      val selN = s"SELECT g, v, $lit AS s, $winN AS w, $xN AS x FROM fuzz_t$where"
       if (rnd.nextBoolean()) {
         val q = rnd.nextInt(3) match {
           case 0 => "w = 1"
@@ -61,7 +85,7 @@ class TranslatorPropertySpec extends SparkSpec {
         }
         // doris: QUALIFY on the aliased window column; native: manual wrap
         (s"$selD QUALIFY $q",
-         s"SELECT g, v, s, w FROM ($selN) __q WHERE $q")
+         s"SELECT g, v, s, w, x FROM ($selN) __q WHERE $q")
       } else (selD, selN)
     }
     val (b1d, b1n) = branch()
