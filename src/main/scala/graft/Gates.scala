@@ -17,14 +17,14 @@ package graft
   * The split (VERDICT r11 item 1a): gates stay ON everywhere
   * correctness is graded — Verify (the driver's oracle run, every
   * scale) and `sbt test` — and are switched OFF only by the TIMING
-  * mains (Bench, TimeQ), which measure the operator. A timing artifact
+  * mains (Bench, ProbeJobs), which measure the operator. A timing artifact
   * records the mode in its JSON (`"gates"`), so a reader of
   * BENCH_r{N}.json sees which regime produced the numbers. Audit cost
   * and operator cost are both real; they are just different line items.
   */
 object Gates {
   /** Default true: library users and the correctness surfaces always
-    * run gated. Bench/TimeQ set false; SPARK_GRAFT_GATES=on forces
+    * run gated. Bench/ProbeJobs set false; SPARK_GRAFT_GATES=on forces
     * them back on for a gate-priced timing run. */
   @volatile var enabled: Boolean = true
 

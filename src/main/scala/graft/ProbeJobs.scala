@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
-/** Dev-only job profiler: runs named queries (warm pass, then a timed
-  * pass) and prints one line per Spark job of the timed pass — wall
+/** Dev-only job profiler: runs each named query twice through
+  * [[Bench.timeOne]] (a warm call, then a recorded one) and prints one line per Spark job of the timed pass — wall
   * duration, stage/task counts, and summed task time — so the serial
   * action structure of a query is visible without the UI.
   * `runMain graft.ProbeJobs <sfDir> <query> [query...]` */
@@ -52,10 +52,10 @@ object ProbeJobs {
     spark.sparkContext.addSparkListener(listener)
 
     for (name <- args.tail) {
-      val s = TimeQ.solo(spark, dir, name, () => {
-        println(s"===== $name timed pass =====")
-        record = true
-      })
+      Bench.timeOne(spark, dir, name)
+      println(s"===== $name timed pass =====")
+      record = true
+      val s = Bench.timeOne(spark, dir, name)
       record = false
       println(f"PROBEJOB TOTAL $name $s%.2f s, ${jobs.size} jobs")
       jobs.clear()

@@ -5,7 +5,7 @@ import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** The one place session config lives. Every main (Verify, Bench,
-  * TimeQ, ProbeJobs, PlanAudit, ScaleUp, the CLI) and the test suites
+  * ProbeJobs, PlanAudit, ScaleUp, the CLI) and the test suites
   * build their SparkSession here, so what Bench times is what Verify
   * grades. */
 object Session {

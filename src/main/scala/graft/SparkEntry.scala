@@ -31,6 +31,14 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.flatMap(_.queries).toMap
 
+  /** The queries whose name starts with one of `prefixes` (all of them
+    * when none is given), in name order: the filter of Verify and Bench.
+    * No query name is a prefix of another, so a full name selects
+    * exactly its query. */
+  def select(prefixes: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] =
+    queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => prefixes.isEmpty || prefixes.exists(n.startsWith) }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

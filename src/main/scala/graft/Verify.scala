@@ -43,8 +43,7 @@ object Verify {
     Land.root = s"${new java.io.File(outDir).getAbsolutePath}_land"
     val spark = Session(Session.cpus)
     new java.io.File(outDir).mkdirs()
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => filters.isEmpty || filters.exists(n.startsWith) }
+    val selected = SparkEntry.select(filters)
     // A failing query must never VANISH from the correctness gate (round-3
     // postmortem: c01 threw, nothing was written, and the driver's JSON
     // simply omitted the row — 59 entries for 60 queries, nobody noticed).

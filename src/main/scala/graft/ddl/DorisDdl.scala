@@ -172,10 +172,13 @@ object DorisDdl {
   }
 
   /** Parse a bare type expression, e.g. "map<text,array<struct<a:int>>>".
-    * Public because JSON `structure:` rules re-enter here. */
+    * Text after the type is an error. Public because JSON `structure:`
+    * rules re-enter here. */
   def parseType(typeSql: String): DType = {
     val c = new Cursor(typeSql)
-    typeExpr(c)
+    val t = typeExpr(c)
+    if (c.peek.nonEmpty) c.fail(s"end of type, not '${typeSql.substring(c.i)}'")
+    t
   }
 
   private def typeExpr(c: Cursor): DType = {

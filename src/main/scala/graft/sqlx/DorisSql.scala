@@ -305,12 +305,18 @@ object DorisSql {
         ws.lift(k + 1)
           .filter(nt => nt.depth == depth && (nt.is("all") || nt.is("distinct")))
           .getOrElse(ws(k)).end
+      // text before the first top-level SELECT (a WITH prelude, or a
+      // fragment that opens with an operator) is no branch: only the
+      // operators after that SELECT split branches
       val firstSelect = ws.find(t => t.depth == depth && t.is("select"))
         .map(_.start).getOrElse(from)
-      val lastEnd = opEnd(ops.last)
-      val tailStart = ws.find(t => t.depth == depth && t.start >= lastEnd &&
-          (t.is("order") || t.is("limit") || t.is("offset")))
-        .map(_.start).getOrElse(until)
+      val branchOps = ops.filter(ws(_).start >= firstSelect)
+      val tailStart = branchOps.lastOption.fold(until) { k =>
+        val lastEnd = opEnd(k)
+        ws.find(t => t.depth == depth && t.start >= lastEnd &&
+            (t.is("order") || t.is("limit") || t.is("offset")))
+          .map(_.start).getOrElse(until)
+      }
       val sb = new StringBuilder(mapped(from, firstSelect, depth))
       // a rewritten branch can swallow its surrounding whitespace, so
       // re-separate pieces only where a space is actually missing — an
@@ -321,7 +327,7 @@ object DorisSql {
         sb.append(s)
       }
       var pos = firstSelect
-      for (k <- ops) {
+      for (k <- branchOps) {
         appendSep(block(pos, ws(k).start, depth))
         val e = opEnd(k)
         appendSep(mapped(ws(k).start, e, depth))

@@ -1,10 +1,15 @@
 package graft.workload
 
+import java.nio.charset.Charset
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.io.{ByteWritable, Text}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.hadoop.mapreduce.InputSplit
 import org.apache.hadoop.mapreduce.lib.input.FileSplit
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Audit-log workload extraction (SURVEY.md §2.1 S1–S3, §2.2 F1–F5).
   *
@@ -60,8 +65,10 @@ object AuditLog {
     * `startRe` at its head opens a record, any other line belongs to the
     * previous one, lines before a file's first start line are dropped.
     * Columns: file, pos (1-based record index within its file), record
-    * (lines joined with `\n`, line terminators dropped). `encoding`
-    * other than UTF-8 reads the bytes and decodes with that charset (S2).
+    * (lines joined with `\n`, line terminators dropped). Each task
+    * decodes its file's lines in the charset [[CharsetDetect]] finds in
+    * the file's first 4 KB (S2); a UTF-16 file (a BOM) is rejected, as
+    * the line reader needs a charset that keeps ASCII bytes ASCII.
     *
     * Scale design: a LINE-based scan, never one row per file — one
     * unrotated multi-GB log (or the multi-GB `q0.sql` dumped from it)
@@ -78,36 +85,19 @@ object AuditLog {
     * record ever exists as one string. The session's
     * `mapreduce.input.fileinputformat.split.maxsize` caps the split size
     * (unset, Hadoop's block-size splits apply). */
-  def records(spark: SparkSession, path: String, encoding: String = "UTF-8",
+  def records(spark: SparkSession, path: String,
               startRe: String = s"$recordStartRe "): DataFrame = {
-    if (!encoding.equalsIgnoreCase("UTF-8")) {
-      // Charset-decode path (S2): Spark's decode() whitelists a few
-      // charsets only, so a JVM decode runs once per FILE — whole-file
-      // granularity is the price of the one-shot decode and is confined
-      // to this (rare, explicitly-requested) path.
-      // strip a leading U+FEFF: a BOM survives decoders named with an
-      // explicit endianness (UTF-16LE/BE) and the UTF-8 decoder, and
-      // would otherwise break the first record's start-line regex
-      val dec = udf((bytes: Array[Byte]) => {
-        val s = new String(bytes, encoding)
-        if (s.nonEmpty && s.charAt(0) == '\uFEFF') s.substring(1) else s
-      })
-      val text = spark.read.format("binaryFile").load(path)
-        .select(col("path").as("file"), dec(col("content")).as("value"))
-      // the leading "\n" makes element 0 a non-record (empty or the
-      // prelude), so pos is 1-based like the line reader's
-      return text.select(col("file"), posexplode(split(
-          concat(lit("\n"), col("value")), s"(?m)(?=^(?:$startRe))")).as(Seq("pos", "record")))
-        .filter(col("record").rlike(s"^(?:$startRe)"))
-    }
     val start = java.util.regex.Pattern.compile(startRe)
+    val conf = spark.sessionState.newHadoopConf()
     val lines = spark.sparkContext.newAPIHadoopFile(path, classOf[LinesToEof],
-        classOf[ByteWritable], classOf[Text], spark.sessionState.newHadoopConf())
+        classOf[ByteWritable], classOf[Text], conf)
       .asInstanceOf[org.apache.spark.rdd.NewHadoopRDD[ByteWritable, Text]]
     // each split's base: the records that start in its file's earlier
     // splits, from one counting job (the RDD.zipWithIndex pattern; none
     // when there is one split). A file's last split counts for no later
-    // split, and its first line's key says so: it stops there.
+    // split, and its first line's key says so: it stops there. The
+    // start pattern is ASCII and no detected charset uses 0x0A or 0x0D
+    // as a trail byte, so counting reads every file as UTF-8.
     val bases: Map[(String, Long), Long] =
       if (lines.getNumPartitions <= 1) Map.empty
       else lines.mapPartitionsWithInputSplit { (s, it) =>
@@ -121,10 +111,12 @@ object AuditLog {
           val sorted = counts.sortBy(_._1._2)
           sorted.iterator.map(_._1).zip(sorted.iterator.scanLeft(0L)(_ + _._2))
         }.toMap
+    val taskConf = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
     spark.createDataFrame(lines.mapPartitionsWithInputSplit { (s, it) =>
       val (file, off) = fileAndStart(s)
       val base = bases.getOrElse((file, off), 0L)
-      group(it, start).zipWithIndex.map { case (r, i) => (file, (base + i + 1).toInt, r) }
+      group(it, start, charsetOf(s, taskConf.value.value)).zipWithIndex
+        .map { case (r, i) => (file, (base + i + 1).toInt, r) }
     }).toDF("file", "pos", "record")
   }
 
@@ -133,16 +125,31 @@ object AuditLog {
     (f.getPath.toString, f.getStart)
   }
 
+  /** The charset of the split's file, detected from its first 4 KB
+    * (decompressed, if a codec applies). */
+  private def charsetOf(split: InputSplit, conf: Configuration): Charset = {
+    val path = split.asInstanceOf[FileSplit].getPath
+    val codec = new CompressionCodecFactory(conf).getCodec(path)
+    val raw = path.getFileSystem(conf).open(path)
+    val in = if (codec == null) raw else codec.createInputStream(raw)
+    val name = try detectEncoding(in.readNBytes(4096)) finally in.close()
+    if (name == "UTF-16") throw new IllegalArgumentException(
+      s"$path is UTF-16 (byte-order mark); the record reader needs an " +
+        "ASCII-compatible charset: convert the file, e.g. to UTF-8")
+    Charset.forName(name)
+  }
+
   /** Cut one split's lines, keyed as [[LinesToEof]] keys them, in file
-    * order, into records. Lines before the first start line end a record
-    * of an earlier split (or are a prelude) and are dropped; a record
-    * runs to the next start line, and the first start line past the
-    * split end stops the split. Lazy: only the current record is held in
-    * memory. */
+    * order and decoded in `cs`, into records. Lines before the first
+    * start line end a record of an earlier split (or are a prelude) and
+    * are dropped; a record runs to the next start line, and the first
+    * start line past the split end stops the split. Lazy: only the
+    * current record is held in memory. */
   private[workload] def group(lines: Iterator[(ByteWritable, Text)],
-                              start: java.util.regex.Pattern): Iterator[String] = {
+                              start: java.util.regex.Pattern,
+                              cs: Charset = UTF_8): Iterator[String] = {
     val in = lines.map { case (key, text) =>
-      val l = text.toString
+      val l = new String(text.getBytes, 0, text.getLength, cs)
       (key.get == LinesToEof.PastEnd, start.matcher(l).lookingAt(), l)
     }.buffered
     while (in.hasNext && !in.head._1 && !in.head._2) in.next()
@@ -165,12 +172,6 @@ object AuditLog {
     * reference's chardet + GBK→GB18030 promotion (reference:
     * src/auditlog.go:438-457, src/misc.go:116-163). */
   def detectEncoding(head: Array[Byte]): String = CharsetDetect.detect(head)
-
-  /** Detect the encoding of a local file from its first 4 KB. */
-  def detectFileEncoding(path: String): String = {
-    val in = new java.io.FileInputStream(path)
-    try detectEncoding(in.readNBytes(4096)) finally in.close()
-  }
 
   /** S3 + F1: regex extraction into typed columns. Rows whose record does
     * not match the (db/state/only-select-refined) pattern are dropped —

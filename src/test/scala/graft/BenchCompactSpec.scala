@@ -19,9 +19,9 @@ class BenchCompactSpec extends AnyFunSuite {
       f"p$i%02d_some_realistic_query_name" -> (0.05 + (i % 29) * 0.73)
     }
   private def head(nQ: Int) =
-    s"""{"metric":"total","value":123.456,"unit":"sec","estimator":"min_of_passes","partial":false,"passes":3,"rescued":4,"wall_s":900,"machine_factor":{"prev":1.0,"committed":1.163},"queries":"""
+    s"""{"metric":"total","value":123.456,"unit":"sec","estimator":"min_of_passes","partial":false,"passes":3,"wall_s":900,"queries":"""
   private val tail =
-    s""","queries_n":238,"failed":0,"spark_subset_secs":88.561,"duckdb_subset_secs":12.526,"movers_n":147,"retimes_skipped_n":87,"contention_flags_n":3,"degraded_n":2,"gates":"off","sf":"/root/testdata/sf0.1","sha":"0123456789abcdef0123456789abcdef01234567"}"""
+    s""","queries_n":238,"failed":0,"spark_subset_secs":88.561,"duckdb_subset_secs":12.526,"degraded_n":2,"gates":"off","sf":"/root/testdata/sf0.1","sha":"0123456789abcdef0123456789abcdef01234567"}"""
 
   test("compact line fits the budget and parses as one JSON object") {
     val slowFirst = surface.sortBy(-_._2)

@@ -92,4 +92,12 @@ class DdlParserSpec extends AnyFunSuite {
     assert(DorisDdl.parseType("STRUCT<col1:SMALLINT, col2:SMALLINT>") ==
       DStruct(Seq("col1" -> DSmallInt, "col2" -> DSmallInt)))
   }
+
+  test("a bare type followed by more text is rejected, naming the leftover") {
+    val e = intercept[IllegalArgumentException](DorisDdl.parseType("varchar(10) nul"))
+    assert(e.getMessage.contains("'nul'"), e.getMessage)
+    intercept[IllegalArgumentException](DorisDdl.parseType("date in the past"))
+    intercept[IllegalArgumentException](DorisDdl.parseType("array<int>>"))
+    assert(DorisDdl.parseType(" varchar(10) ") == DVarchar(Some(10)))
+  }
 }

@@ -56,6 +56,13 @@ class DorisSqlSpec extends AnyFunSuite {
     assert(DorisSql.translate(lit) == lit)
   }
 
+  test("a set operator before the first SELECT is no branch boundary") {
+    val out = DorisSql.translate(
+      "UNION ALL SELECT a FROM u QUALIFY RANK() OVER (ORDER BY a) <= 2")
+    assert(out == "UNION ALL SELECT * EXCEPT (__qualify) FROM (SELECT a , " +
+      "(RANK() OVER (ORDER BY a) <= 2) AS __qualify FROM u ) WHERE __qualify ", out)
+  }
+
   test("QUALIFY is rewritten in EVERY branch of a set-operation chain") {
     val out = DorisSql.translate(
       "SELECT a FROM t QUALIFY ROW_NUMBER() OVER (ORDER BY a) = 1 " +

@@ -1,7 +1,6 @@
 package graft.workload
 
 import java.nio.file.Files
-import java.nio.charset.Charset
 import graft.SparkSpec
 
 /** S2: encoding detection + non-UTF-8 audit scan. */
@@ -52,11 +51,11 @@ class EncodingSpec extends SparkSpec {
     for ((cs, db) <- Seq(("Shift_JIS", "お店のデータベース"),
       ("EUC-KR", "상점 자료"), ("Big5", "商店資料庫說明紀錄"))) {
       val f = s"$dir/fe.audit.$cs.log"
-      Files.write(java.nio.file.Paths.get(f),
-        (lineWithDb(db) + "\n").getBytes(cs))
-      val enc = AuditLog.detectFileEncoding(f)
+      val bytes = (lineWithDb(db) + "\n").getBytes(cs)
+      Files.write(java.nio.file.Paths.get(f), bytes)
+      val enc = AuditLog.detectEncoding(bytes)
       assert(enc == cs, s"file in $cs detected as $enc")
-      val recs = AuditLog.records(spark, f, enc).collect()
+      val recs = AuditLog.records(spark, f).collect()
       assert(recs.length == 1)
       assert(recs.head.getInt(1) == 1, "pos is 1-based on the charset path too")
       assert(recs.head.getString(2).contains(s"Db=$db"),
@@ -70,15 +69,27 @@ class EncodingSpec extends SparkSpec {
   }
 
   test("GBK audit file decodes through the detected charset") {
-    val dir = Files.createTempDirectory("enc").toString
-    val f = s"$dir/fe.audit.log"
-    Files.write(java.nio.file.Paths.get(f), (line + "\n").getBytes("GBK"))
-    val enc = AuditLog.detectFileEncoding(f)
-    assert(enc == "GB18030")
-    val record = AuditLog.records(spark, f, enc).collect().head.getString(2)
-    assert(record.contains("Db=商店"), s"decoded record: $record")
-    // the default UTF-8 path would NOT see the db name intact
-    val rawRecord = AuditLog.records(spark, f).collect().head.getString(2)
-    assert(!rawRecord.contains("Db=商店"))
+    // one GBK file and one UTF-8 file in one directory: each task
+    // detects its own file's charset
+    val dir = Files.createTempDirectory("enc")
+    Files.write(dir.resolve("fe.audit.gbk.log"), (line + "\n").getBytes("GBK"))
+    val utf8Line = line.replace("Db=商店", "Db=数据库").replace("q1", "q2")
+    Files.write(dir.resolve("fe.audit.utf8.log"), (utf8Line + "\n").getBytes("UTF-8"))
+    val recs = AuditLog.records(spark, dir.toString).collect()
+      .map(r => r.getString(0).split('/').last -> r.getString(2)).toMap
+    assert(recs.keySet == Set("fe.audit.gbk.log", "fe.audit.utf8.log"))
+    assert(recs("fe.audit.gbk.log") == line, s"decoded record: ${recs("fe.audit.gbk.log")}")
+    assert(recs("fe.audit.utf8.log") == utf8Line)
+  }
+
+  test("a UTF-16 audit file fails with a message naming it") {
+    val dir = Files.createTempDirectory("enc16")
+    val f = dir.resolve("fe.audit.utf16.log")
+    Files.write(f, (line + "\n").getBytes("UTF-16"))
+    val e = intercept[Exception](AuditLog.records(spark, f.toString).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(m => m.contains("fe.audit.utf16.log") && m.contains("UTF-16")),
+      msgs.mkString(" | "))
   }
 }
