@@ -5,9 +5,28 @@ import org.apache.spark.sql.SparkSession
   * commit did the driver actually run?" — every Verify/Bench artifact now
   * carries the commit sha and a wall-clock stamp. */
 object Provenance {
-  lazy val sha: String =
-    try scala.sys.process.Process(Seq("git", "rev-parse", "HEAD")).!!.trim
-    catch { case _: Throwable => "unknown" }
+  /** What a run measures: the program's sources and build definition. The
+    * artifacts a run writes (bench_result.json, provenance.json) lie
+    * outside these paths, so writing them does not make the tree dirty. */
+  private val SourcePaths: Seq[String] = Seq("src", "build.sbt", "project")
+
+  /** `head`, with `-dirty` appended when `sourceStatus` (the output of
+    * `git status --porcelain` over [[SourcePaths]]) lists any modified,
+    * staged, deleted or untracked source file: such a run measured a tree
+    * that no commit holds. */
+  def label(head: String, sourceStatus: String): String =
+    if (sourceStatus.trim.isEmpty) head else s"$head-dirty"
+
+  /** The [[label]] of the git work tree at `dir`; "unknown" outside one. */
+  def shaOf(dir: java.io.File): String =
+    try {
+      def git(args: String*): String =
+        scala.sys.process.Process("git" +: args, dir).!!.trim
+      label(git("rev-parse", "HEAD"),
+        git(Seq("status", "--porcelain", "--") ++ SourcePaths: _*))
+    } catch { case _: Throwable => "unknown" }
+
+  lazy val sha: String = shaOf(new java.io.File("."))
   def timestamp: String = java.time.Instant.now().toString
   /** provenance.json body (kept OUT of oracle_sql.json — the driver
     * iterates that file's keys as query names). */

@@ -170,16 +170,7 @@ object Anonymizer {
     }
   }
 
-  // ---- N4: stats / schema-name anonymization --------------------------
-
-  /** Anonymize db/table/column names inside a stats tree with the same
-    * context (so stats stay joinable with anonymized schemas/queries —
-    * reference: cmd/anonymize.go:100-122, cmd/dump.go:299-341). */
-  def anonymizeStats(ctx: Context, db: String, tables: Seq[graft.genrule.TableStats])
-      : (String, Seq[graft.genrule.TableStats]) =
-    (ctx.anonymize(db), tables.map(t => t.copy(
-      name = ctx.anonymize(t.name),
-      columns = t.columns.map(c => c.copy(name = ctx.anonymize(c.name))))))
+  // ---- N4: schema-name anonymization --------------------------------
 
   /** Anonymize the db/table parts of a `<db>.<table>.<type>.sql` schema
     * file name (the type suffix and extension are structure, not ids). */

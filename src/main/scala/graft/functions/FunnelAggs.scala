@@ -124,7 +124,7 @@ object FunnelAggs {
     * resumes after the end event, consuming everything before it. The
     * chain start is the LATEST feasible first-anchor (the DP's `best`
     * witness). Same tie-batch rule as [[funnelLevel]]. ts/mask MUST be
-    * pre-sorted (streaming callers sort once per trigger). */
+    * pre-sorted. */
   private[graft] def funnelMatches(ts: Array[Long], mask: Array[Int],
                                    window: Long, steps: Int): Seq[(Long, Long)] = {
     val m = ts.length
@@ -160,9 +160,8 @@ object FunnelAggs {
       if (matched) {
         k = 1
         while (k <= steps) { best(k) = Long.MinValue; k += 1 }
-        // a match consumes EVERY event with ts ≤ its end — including the
-        // rest of this tie-batch — so "survives iff ts > end" holds
-        // exactly for streaming callers that prune consumed state
+        // a match consumes EVERY event with ts ≤ its end, including the
+        // rest of this tie-batch
         while (j < m && ts(j) == t) j += 1
         i = j
       } else {

@@ -38,9 +38,8 @@ import org.apache.spark.sql.functions._
   * the conservation `require` detects that on the next run; it cannot
   * undo it. This is the same window every directory-layout lakehouse
   * write has without a table format's commit log. Callers must be able
-  * to REPLAY the batch (the streaming face gets this for free from the
-  * checkpointed foreachBatch: a replayed batch re-merges the same rows
-  * idempotently — MergeSpec's chaos case pins it), or snapshot the
+  * to REPLAY the batch (a replayed batch re-merges the same rows
+  * idempotently — MergeSpec's replay case pins it), or snapshot the
   * touched partitions first. For table formats with atomic swap
   * (Iceberg/Delta), route the merged frame to their writer instead. */
 object Merge {
@@ -179,32 +178,5 @@ object Merge {
       s"row conservation violated on the touched slice: " +
         s"before=$before inserted=$inserted after=$after")
     MergeStats(touched, before, nUpdates, matched, inserted, after)
-  }
-
-  /** STREAMING face of the upsert: a readStream of update rows drives
-    * [[mergeInto]] once per micro-batch via foreachBatch — the
-    * incremental-corpus ingestion loop (CDC feed → lakehouse table)
-    * end to end. Each batch is one partition-scoped merge, so a steady
-    * update stream touches only the partitions its batch names;
-    * exactly-once rides the checkpointed batch id the same way the
-    * foreachBatch overwrite sink does (a replayed batch re-runs the
-    * merge with the SAME rows — matched keys overwrite to the same
-    * values and inserts land on the same keys, so the merge is
-    * idempotent per batch by construction). Empty batches skip.
-    * Caller owns trigger/stop via the returned query. */
-  def mergeStream(spark: SparkSession, root: String, updates: DataFrame,
-                  keyCols: Seq[String], partCol: String,
-                  checkpointDir: String,
-                  verifyKeys: Boolean = true)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(updates.isStreaming, "mergeStream needs a streaming updates frame")
-    updates.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          mergeInto(spark, root, batch, keyCols, partCol, verifyKeys)
-        ()
-      }
-      .start()
   }
 }

@@ -35,7 +35,7 @@ object ZOrder {
   }
 
   /** 64-bit Morton code of two columns, each clamped to its low
-    * `bits` ≤ 31 bits (callers normalize first — see [[normalized]]).
+    * `bits` ≤ 31 bits (callers normalize first — see [[normalizedAll]]).
     * 31, not 32: at bits=32 column b's top bit lands in z bit 63, the
     * SIGN bit, and a signed range partition would order the whole
     * b-high half of key space before the b-low half — files straddle
@@ -79,23 +79,5 @@ object ZOrder {
         least(floor((col(c).cast("double") - lit(lo)) / lit(span)
           * lit((1L << bits).toDouble)), lit((1L << bits) - 1.0)).cast("long"))
     }
-  }
-
-  def normalized(df: DataFrame, colName: String, bits: Int): Column =
-    normalizedAll(df, Seq(colName), bits).head
-
-  /** Write `df` z-ordered on two columns: one range shuffle over the
-    * z-value into `nFiles` partitions, sort within each, drop the key.
-    * Every output file then holds a compact rectangle of (a, b) space —
-    * the file-skipping property ZOrderSpec measures. */
-  def write2(df: DataFrame, colA: String, colB: String, outPath: String,
-             nFiles: Int, bits: Int = 16): Unit = {
-    val Seq(na, nb) = normalizedAll(df, Seq(colA, colB), bits)
-    val z = zValue2(na, nb, bits)
-    df.withColumn("__z", z)
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(outPath)
   }
 }

@@ -218,28 +218,16 @@ object HttpTransport {
     if (model.toLowerCase.startsWith("deepseek")) "https://api.deepseek.com/beta"
     else "https://api.openai.com/v1/"
 
-  private def esc(s: String): String = {
-    val b = new StringBuilder(s.length + 16)
-    s.foreach {
-      case '"' => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case '\t' => b.append("\\t")
-      case c if c < 0x20 => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.toString
-  }
-
   /** OpenAI chat-completions body. Message order mirrors the reference
     * exactly (src/llm.go:81-85): system guide, assistant prefix (the
     * ```yaml fence the model continues from), then the user payload.
     * `stop` cuts generation at the closing fence. */
-  private[llm] def requestJson(req: ChatRequest): String =
-    s"""{"model":"${esc(req.model)}","temperature":${req.temperature},""" +
-      s""""top_p":${req.topP},"stop":["${esc(req.stop)}"],"stream":true,""" +
-      s""""messages":[{"role":"system","content":"${esc(req.system)}"},""" +
-      s"""{"role":"assistant","content":"${esc(req.assistantPrefix)}"},""" +
-      s"""{"role":"user","content":"${esc(req.user)}"}]}"""
+  private[llm] def requestJson(req: ChatRequest): String = {
+    import graft.OracleJson.quote
+    s"""{"model":${quote(req.model)},"temperature":${req.temperature},""" +
+      s""""top_p":${req.topP},"stop":[${quote(req.stop)}],"stream":true,""" +
+      s""""messages":[{"role":"system","content":${quote(req.system)}},""" +
+      s"""{"role":"assistant","content":${quote(req.assistantPrefix)}},""" +
+      s"""{"role":"user","content":${quote(req.user)}}]}"""
+  }
 }

@@ -183,7 +183,7 @@ object Ann {
     * 11/14 true pairs where planes=4/tables=32 missed 0 (and ran 3×
     * faster: coarser buckets, but 4× the tables of cheap skinny rows).
     * Raise `planes` as n grows to keep E[bucket size] bounded; spend
-    * `tables` to buy recall — `autoLshParams` computes both from n. */
+    * `tables` to buy recall — `autoLshParamsDetailed` computes both from n. */
   def cosineNearDupPairs(emb: DataFrame, dims: Int, threshold: Double,
                          planes: Int = 4, tables: Int = 32, seed: Long = 5): DataFrame = {
     // Shape, MEASURED at the ×10 probe: skinny (bkt, id) postings form
@@ -250,16 +250,9 @@ object Ann {
     * (~42×/decade, tools/scale_regression.py) instead of pretending a
     * cheaper structure exists; the cell swap remains the last resort
     * past the point LSH tables become absurd, with the recall trade
-    * documented and floor-gated per regime. */
-  def autoLshParams(n: Long, threshold: Double, targetRecall: Double = 0.9965,
-                    bucketTarget: Int = 125, planesFloor: Int = 4,
-                    tablesFloor: Int = 32, tablesCap: Int = 512): (Int, Int) = {
-    val (planes, tables, _) = autoLshParamsDetailed(n, threshold, targetRecall,
-      bucketTarget, planesFloor, tablesFloor, tablesCap)
-    (planes, tables)
-  }
-
-  /** [[autoLshParams]] plus the REGIME flag: `overCap = true` when the
+    * documented and floor-gated per regime.
+    *
+    * Returns (planes, tables, overCap). `overCap = true` when the
     * tables cap bent the parameterization away from its two invariants —
     * either planes were backed off the occupancy target (expected bucket
     * size now exceeds `bucketTarget`, so candidate volume is leaving its
@@ -292,7 +285,7 @@ object Ann {
 
   /** Near-duplicate pair enumeration with the regime dispatch SCALE.md
     * promises in prose, now in code: inside the LSH budget this IS
-    * [[cosineNearDupPairs]] at [[autoLshParams]] (byte-identical results
+    * [[cosineNearDupPairs]] at [[autoLshParamsDetailed]] (byte-identical results
     * at every test SF); once the parameterization goes over-cap (see
     * [[autoLshParamsDetailed]] — n ≳ 128k at cos 0.45 with the default
     * cap) it swaps to cell-based SemDeDup
@@ -854,7 +847,7 @@ object Ann {
     * full corpus. Local Lloyd's with evenly-spaced init and lowest-index
     * tie-breaks, so the model is bit-reproducible run to run — no ML-fit
     * parallelism in the result. Returns cbs(s)(code) = centroid. */
-  def pqTrain(emb: DataFrame, dims: Int, m: Int, k: Int, seed: Long = 1,
+  def pqTrain(emb: DataFrame, dims: Int, m: Int, k: Int,
               maxSample: Int = 4096, iters: Int = 10): Array[Array[Array[Double]]] = {
     require(dims % m == 0, "dims must be divisible by m")
     val sub = dims / m

@@ -516,35 +516,6 @@ object Dedup {
       // the one it replaces (readers pin positions as well as names)
       .select(index.columns.map(col).toIndexedSeq: _*)
 
-  /** foreachBatch-compatible INCREMENTAL INGEST: dedup an arriving batch
-    * against the landed corpus index, append the pair report, then grow
-    * the index and corpus store with the batch itself — the maintenance
-    * loop that makes minhashIndex a living structure rather than a
-    * one-off export. First batch (no index yet) seeds the store. Only
-    * batch-vs-corpus pairs are reported; in-batch duplicates are the
-    * ordinary minhashPairs job a caller can run on the (small) batch.
-    * Wire it as `stream.writeStream.foreachBatch((b, _) =>
-    * Dedup.ingestBatch(b, ...))` — every path cost is batch-sized except
-    * the candidate probe of the index. */
-  def ingestBatch(batch: DataFrame, idCol: String, textCol: String,
-                  corpusPath: String, indexPath: String, pairsPath: String,
-                  k: Int = 64, bands: Int = 16, threshold: Double = 0.5,
-                  shingleN: Int = 3, seed: Long = 7): Unit = {
-    val spark = batch.sparkSession
-    val hasIndex = try {
-      spark.read.parquet(indexPath).schema.fieldNames.contains("band")
-    } catch { case _: org.apache.spark.sql.AnalysisException => false }
-    if (hasIndex) {
-      val pairs = incrementalMinhashPairs(batch, spark.read.parquet(indexPath),
-        spark.read.parquet(corpusPath), idCol, textCol, k, bands, threshold,
-        shingleN, seed)
-      pairs.write.mode("append").parquet(pairsPath)
-    }
-    minhashIndex(batch, idCol, textCol, k, bands, shingleN, seed)
-      .write.mode("append").parquet(indexPath)
-    batch.write.mode("append").parquet(corpusPath)
-  }
-
   /** BLOOM-PREFILTERED decontamination: same output as contaminationPairs
     * (bloom filters have no false negatives, so the pair set is identical
     * — the DuckDB oracle verifies that), but the train-side postings are

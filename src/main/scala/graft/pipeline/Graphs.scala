@@ -32,8 +32,8 @@ object Graphs {
     * the gate; past it the arrays shuffle with wedge-volume bytes —
     * the same asymptotics any exact formulation pays.
     *
-    * `edges` must be undirected-canonical: one row per edge, u < v, no
-    * self loops (use [[canonicalEdges]]).
+    * `edges` must be undirected-canonical: one (u, v) row per edge,
+    * u < v, no self loops.
     *
     * Returns one row: (n_nodes, n_edges, n_wedges, n_triangles,
     * transitivity) where n_wedges counts UNDIRECTED wedges Σ C(deg,2)
@@ -110,16 +110,5 @@ object Graphs {
       .withColumn("transitivity",
         when(col("n_wedges") > 0,
           round(lit(3.0) * col("n_triangles") / col("n_wedges"), 6)))
-  }
-
-  /** Canonicalize an edge list: undirected, deduped, u < v, no loops.
-    * The long cast happens BEFORE least/greatest — on string-typed ids
-    * the other order compares lexicographically ("10" < "9"), which
-    * mis-orients the pair and the u < v filter then DELETES the edge. */
-  def canonicalEdges(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val (a, b) = (col(aCol).cast("long"), col(bCol).cast("long"))
-    pairs.select(least(a, b).as("u"), greatest(a, b).as("v"))
-      .filter(col("u") < col("v"))
-      .distinct()
   }
 }

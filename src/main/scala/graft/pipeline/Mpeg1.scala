@@ -657,17 +657,10 @@ object Mpeg1 {
   /** Skip (previous-frame copy; illegal as first/last MB of a slice). */
   case object Skip extends PMb
   /** No-MC, luma-only DC residual of `level` at qscale 8: each luma
-    * pixel moves by the analytic [[deltaOf]](level). */
+    * pixel moves by recon = (2L+sign)·8, oddified, then IDCT(DC)/8
+    * rounded — the arithmetic the oracle replays. level 2 → +5,
+    * level -2 → -5. */
   final case class Delta(level: Int) extends PMb
-
-  /** The exact luma shift a [[Delta]](level) produces under qscale 8:
-    * recon = (2L+sign)·8, oddified, then IDCT(DC)/8 rounded — the
-    * arithmetic the oracle replays. level 2 → +5, level -2 → -5. */
-  def deltaOf(level: Int): Int = {
-    var recon = (2 * level + (if (level >= 0) 1 else -1)) * 8
-    if ((recon & 1) == 0 && recon != 0) recon -= Integer.signum(recon)
-    math.floor(recon / 8.0 + 0.5).toInt
-  }
 
   /** Encode a constrained MPEG-1 stream: an I-picture of flat-per-MB
     * luma (`dcLuma` everywhere, or `lumaPerMb` one value per

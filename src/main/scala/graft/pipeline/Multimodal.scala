@@ -31,15 +31,12 @@ import org.apache.spark.sql.functions._
   * [[Multimodal.VideoDecoders]] REGISTRY (`codecFrameSamples` routes by
   * `meta.codec`; register a JNI/ffmpeg-backed [[Multimodal.VideoDecoder]]
   * and every frame flows through the same tested sampling plumbing —
-  * spec-driven with a fake compressed codec); for audio `decodeBatch`
-  * remains a deterministic byte-histogram stand-in with the same
-  * swap-only-the-body contract.
+  * spec-driven with a fake compressed codec).
   */
 object Multimodal {
 
   case class MediaMeta(kind: String, width: Int, height: Int, codec: String)
   case class MediaRow(media_id: Long, payload: Array[Byte], meta: MediaMeta)
-  case class MediaFeatures(media_id: Long, n_bytes: Long, features: Array[Float])
 
   /** Wrap an arbitrary id+binary DataFrame into the canonical media
     * schema (metadata defaults derived from the payload). */
@@ -98,8 +95,8 @@ object Multimodal {
       }
     }
 
-  /** Batched per-partition image decode — same plumbing discipline as
-    * extractFeatures; one task decodes its partition in bounded batches. */
+  /** Batched per-partition image decode: one task decodes its partition
+    * in bounded batches of `batchSize` rows. */
   def imageFeatures(spark: SparkSession, media: DataFrame,
                     batchSize: Int = 64): Dataset[ImageFeatures] = {
     import spark.implicits._
@@ -111,18 +108,6 @@ object Multimodal {
           .grouped(batchSize)
           .flatMap(b => decodeImageBatch(b.toSeq))
       }
-  }
-
-  /** Image near-dup pairs: aHash signatures through the SAME banded
-    * Hamming bucket join the text SimHash path uses — candidates only
-    * form inside 16-bit band buckets, exact for maxHamming ≤ 3. */
-  def imageNearDupPairs(spark: SparkSession, media: DataFrame,
-                        maxHamming: Int = 3): DataFrame = {
-    import spark.implicits._
-    val sigs = imageFeatures(spark, media)
-      .filter(col("decoded"))
-      .select(col("media_id").as("id"), col("ahash").as("sig"))
-    Dedup.simhashPairs(sigs, maxHamming)
   }
 
   /** Real audio decode result (PCM WAV path): format facts + signal
@@ -413,50 +398,6 @@ object Multimodal {
     * `decoded` mirrors the image/audio resilience contract. */
   case class VideoFrame(media_id: Long, n_frames: Long, frame_idx: Long,
                         mean_byte: Double)
-
-  /** ===== STUB (codec seam) ===== Frame-sampling "decode" over an opaque
-    * video payload: NO video codec ships in the JVM, so the container
-    * parse is a deterministic raw layout (contiguous `frameBytes`-byte
-    * frames, no header) — a real deployment replaces ONLY the slicing
-    * below with a JNI/ffmpeg batch call producing the same
-    * MediaRow→VideoFrame rows. Everything around the seam is real and
-    * oracle-checked: batched partition iteration, every-`stride`-th
-    * frame selection (the classic training-data frame-sample step), and
-    * the per-frame statistic (mean unsigned byte = the luma-mean
-    * stand-in). Truncated trailing bytes (< one frame) are dropped,
-    * like a codec dropping a torn final packet. */
-  def sampleVideoFramesBatch(batch: Seq[MediaRow], frameBytes: Int,
-                             stride: Int): Seq[VideoFrame] =
-    batch.flatMap { r =>
-      val p = Option(r.payload).getOrElse(Array.emptyByteArray)
-      val nFrames = p.length / frameBytes
-      (0 until nFrames by stride).map { f =>
-        var s = 0L
-        var i = 0
-        while (i < frameBytes) { s += p(f * frameBytes + i) & 0xff; i += 1 }
-        VideoFrame(r.media_id, nFrames.toLong, f.toLong,
-          s.toDouble / frameBytes)
-      }
-    }
-
-  /** Batched per-partition video frame sampling — same plumbing
-    * discipline as imageFeatures/audioFeatures: partition iterator →
-    * bounded batches → batch decode → flattened frame rows. Output is
-    * ∝ sampled frames (corpus_bytes/frameBytes/stride rows), never
-    * buffered beyond one batch. */
-  def videoFrameSamples(spark: SparkSession, media: DataFrame,
-                        frameBytes: Int = 64, stride: Int = 3,
-                        batchSize: Int = 64): Dataset[VideoFrame] = {
-    import spark.implicits._
-    media.selectExpr("media_id", "payload", "meta.kind AS kind",
-        "meta.width AS width", "meta.height AS height", "meta.codec AS codec")
-      .as[(Long, Array[Byte], String, Int, Int, String)]
-      .mapPartitions { it =>
-        it.map { case (id, p, k, w, h, c) => MediaRow(id, p, MediaMeta(k, w, h, c)) }
-          .grouped(batchSize)
-          .flatMap(b => sampleVideoFramesBatch(b.toSeq, frameBytes, stride))
-      }
-  }
 
   // ===== Pluggable codec seam (the H.264/VP9/AV1 story) ================
   // No inter-frame codec ships in the JVM and none can honestly be
@@ -870,57 +811,5 @@ object Multimodal {
     val movi = list("movi", jpegs.map(j => chunk("00dc", j)))
     val form = "AVI ".getBytes("US-ASCII") ++ hdrl ++ movi
     chunk("RIFF", form)
-  }
-
-  /** Deterministic synthetic "video" payload: 10 + id%7 contiguous raw
-    * `frameBytes`-byte frames, byte i of frame f = (id·31 + f·7 + i)
-    * mod 256 — pure id arithmetic, so a SQL oracle recomputes every
-    * sampled frame's statistics analytically while the engine genuinely
-    * slices them out of the binary payload. Shared by PipelineSpec and
-    * the m02 verified query. */
-  def synthVideo(id: Long, frameBytes: Int = 64): Array[Byte] = {
-    val n = (10 + id % 7).toInt
-    val b = new Array[Byte](n * frameBytes)
-    var f = 0
-    while (f < n) {
-      var i = 0
-      while (i < frameBytes) {
-        b(f * frameBytes + i) = ((id * 31 + f * 7 + i) % 256).toByte
-        i += 1
-      }
-      f += 1
-    }
-    b
-  }
-
-  /** ===== STUB ===== deterministic fake decoder: 8 byte-histogram-moment
-    * "features" per payload. A real deployment replaces ONLY this body
-    * with the actual codec/model call over the same batch shape. */
-  def decodeBatch(batch: Seq[MediaRow]): Seq[MediaFeatures] =
-    batch.map { r =>
-      val bytes = Option(r.payload).getOrElse(Array.emptyByteArray)
-      val feats = new Array[Float](8)
-      var i = 0
-      while (i < bytes.length) {
-        feats(bytes(i) & 7) += 1f
-        i += 1
-      }
-      val n = math.max(1, bytes.length).toFloat
-      MediaFeatures(r.media_id, bytes.length.toLong, feats.map(_ / n))
-    }
-
-  /** Batched per-partition feature extraction. `batchSize` bounds worker
-    * memory exactly like maxRecordsPerBatch does for Arrow batches. */
-  def extractFeatures(spark: SparkSession, media: DataFrame,
-                      batchSize: Int = 64): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    media.selectExpr("media_id", "payload", "meta.kind AS kind",
-        "meta.width AS width", "meta.height AS height", "meta.codec AS codec")
-      .as[(Long, Array[Byte], String, Int, Int, String)]
-      .mapPartitions { it =>
-        it.map { case (id, p, k, w, h, c) => MediaRow(id, p, MediaMeta(k, w, h, c)) }
-          .grouped(batchSize)
-          .flatMap(b => decodeBatch(b.toSeq))
-      }
   }
 }

@@ -53,10 +53,9 @@ object PipelineQueries extends QueryModule {
       graft.pipeline.Quality.metrics(docs(s, dir)).orderBy("doc_id")
     }),
 
-    // ---- streaming funnel completions, batch face ----------------------
+    // ---- funnel completions ---------------------------------------------
     // greedy non-overlapping complete chains (view→click→purchase, 6h
-    // span) via the SAME flatMapGroupsWithState operator the stream
-    // runs (StreamingSpec proves batch/stream equality). The oracle
+    // span) per user, via EventStream.funnelCompletions. The oracle
     // restates the two SQL-expressible facts: whether any chain exists,
     // and the earliest completing event (greedy's first match end).
     "p25_funnel_completions" -> ((s, dir) => {
@@ -153,10 +152,8 @@ object PipelineQueries extends QueryModule {
     }),
 
     // ---- LEFT-OUTER attribution (unattributed conversions): every
-    //      purchase emits, null click columns when no qualifying click —
-    //      in streaming this is the watermarked stream-stream OUTER join
-    //      (state held until the watermark seals the join window);
-    //      batch/stream parity pinned in StreamingSpec -------------------
+    //      purchase emits, null click columns when no qualifying click
+    //      (a left outer interval join) ----------------------------------
     "p55_attribution_outer" -> ((s, dir) => {
       val ev = Tables.t(s, dir, "events")
       graft.streaming.EventStream.attributionOuter(
@@ -256,16 +253,15 @@ object PipelineQueries extends QueryModule {
       landed.orderBy("query_id", "rank")
     }),
 
-    // ---- tumbling-window event aggregation (same operator serves the
-    //      Structured Streaming path; see EventStream + StreamingSpec) ---
+    // ---- tumbling-window event aggregation (EventStream.windowedAgg) ---
     "p08_events_window" -> ((s, dir) => {
       graft.streaming.EventStream.windowedAgg(Tables.t(s, dir, "events"))
         .orderBy("hour_start", "event_type")
     }),
 
     // ---- per-user sessionization (session_window: merging-window agg,
-    //      one shuffle keyed by user; same plan batch or streaming; the
-    //      oracle recomputes sessions via gaps-and-islands SQL) ----------
+    //      one shuffle keyed by user; the oracle recomputes sessions
+    //      via gaps-and-islands SQL) -------------------------------------
     "p14_sessionize" -> ((s, dir) => {
       graft.streaming.EventStream.sessionize(Tables.t(s, dir, "events"))
         .withColumn("sum_value", round(col("sum_value"), 4))
@@ -837,10 +833,9 @@ object PipelineQueries extends QueryModule {
     }),
 
     // ---- click→purchase attribution: same-user (purchase, click) pairs
-    //      with the click in the 30 min before the purchase. The SAME
-    //      operator is a stream-stream join with watermark-bounded state
-    //      (StreamingSpec pins batch/stream parity); here the batch face
-    //      is value-verified against DuckDB's inequality join ----------
+    //      with the click in the 30 min before the purchase (user
+    //      equi-join + time-range predicate), value-verified against
+    //      DuckDB's inequality join --------------------------------------
     "p23_attribution" -> ((s, dir) => {
       val ev = Tables.t(s, dir, "events")
       graft.streaming.EventStream.attribution(
@@ -1083,20 +1078,20 @@ object PipelineQueries extends QueryModule {
     //      planes=4/tables=32 measured missed=0 at sf0.01 and sf0.1 and
     //      2/5276 at the sf1 probe (≈ the binomial expectation for
     //      99.8% per-pair recall), where planes=8/tables=8 missed 11/14.
-    //      planes/tables are NOT fixed: autoLshParams grows planes with
+    //      planes/tables are NOT fixed: autoLshParamsDetailed grows planes with
     //      n (constant expected bucket size) and re-buys recall with
     //      tables — fixed planes=4 measured 88.6× wall at the ×10 probe
     //      (bucket occupancy ×10 ⇒ candidate pairs ×100); the auto form
     //      reproduces exactly (4, 32) at the test SFs ------------------
     "p09_embedding_neardup" -> ((s, dir) => {
       val e = embs(s, dir)
-      // regime dispatcher: LSH at autoLshParams inside the tables cap
+      // regime dispatcher: LSH at autoLshParamsDetailed inside the tables cap
       // (every MEASURED scale incl. the ×10 probe — the high-recall
       // regime, graded against its analytic n^1.62 budget in
       // tools/scale_regression.py), multi-probe SemDeDup cells past it
       // (n ≳ 128k at cos 0.45) with the recall trade documented at the
       // floor below — r12 measured both sides before keeping this
-      // crossover (see autoLshParams' doc)
+      // crossover (see autoLshParamsDetailed's doc)
       val pairs = Ann.nearDupPairsAuto(e, dims = 64, threshold = 0.45)
       pairs.write.mode("overwrite").parquet(s"$outRoot/neardup_pairs")
       val landed = s.read.parquet(s"$outRoot/neardup_pairs")

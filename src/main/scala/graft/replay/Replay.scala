@@ -332,12 +332,6 @@ object Replay {
     }
   }
 
-  /** A5: client count of a previous replay = its `*.result` files
-    * (reference: cmd/diff.go:82-95). */
-  def guessClientCount(resultDir: String): Int =
-    Option(new java.io.File(resultDir).list())
-      .map(_.count(_.endsWith(".result"))).getOrElse(0)
-
   /** Read result files back as a DataFrame (for Diff.compare). */
   def readResults(spark: SparkSession, resultDir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.types._

@@ -29,7 +29,7 @@ import SqlLex.{Kind, Tok}
   */
 object DorisSql {
 
-  def translate(sql: String): String = rewriteQualify(new Rewrite(sql, CallNames) {
+  def translate(sql: String): String = rewriteQualify(new Rewrite(sql) {
     private val hints = toks.indices.flatMap(hint)
     // the hints go onto the first top-level SELECT
     private val select =
@@ -74,9 +74,6 @@ object DorisSql {
     * Spark's parser accepts the two-arg day form of date_add but NOT
     * the INTERVAL form, which is what replayed MySQL statements carry.
     * The plain `date_add(d, n)` call is native and passes through. */
-  def rewriteDateAddInterval(sql: String): String =
-    new Rewrite(sql, DateAddOps.keySet).result
-
   private val DateAddOps =
     Map("date_add" -> "+", "adddate" -> "+", "date_sub" -> "-", "subdate" -> "-")
   private val CallNames =
@@ -140,11 +137,11 @@ object DorisSql {
     toks.view.map(_.start).search(offset).insertionPoint
 
   /** `sql` lexed once, with the calls `name(…)` whose lower-cased name is
-    * in `names` rewritten in one walk. A call's closing paren is its
+    * in `CallNames` rewritten in one walk. A call's closing paren is its
     * `(`'s match by token depth and its arguments are the text between
     * the commas one level inside; the arguments are rewritten before the
     * call, so calls nest to any depth. */
-  private class Rewrite(sql: String, names: Set[String]) {
+  private class Rewrite(sql: String) {
     val toks: Vector[Tok] = SqlLex.tokens(sql)
     def rule(i: Int): Option[(String, Int)] = call(i)
     def result: String = walk(sql, toks, 0, sql.length)(rule)
@@ -158,7 +155,7 @@ object DorisSql {
       val open = i + 1
       if (toks(i).kind != Kind.Word || !textAt(open, "(")) return None
       val name = toks(i).text.toLowerCase
-      val close = if (names(name)) SqlLex.closing(toks, open) else -1
+      val close = if (CallNames(name)) SqlLex.closing(toks, open) else -1
       if (close < 0) return None
       // the paren, the commas between arguments and the closing paren
       val seps = (open +: (open + 1 until close).filter(j =>

@@ -1,26 +1,21 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Windowed event aggregation, shared between the batch query surface
-  * (q32) and Structured Streaming. The reference has no streaming
-  * (SURVEY.md §2.11) — this is the beyond-reference path: the SAME
-  * tumbling-window plan runs over a static frame or a stream, which is
-  * exactly how a 100 TB event pipeline runs backfill and live ingest off
-  * one operator definition.
+/** Batch event operators over the `events` table (ts, user_id,
+  * event_type, value, props): tumbling and sliding window aggregates,
+  * session_window sessionization, click→purchase attribution joins and
+  * greedy funnel completions. The reference has no streaming or event
+  * analytics (SURVEY.md §2.11); these back p08, p14, p23, p25, p54 and
+  * p55.
   */
 object EventStream extends Serializable {
-  // flatMapGroupsWithState state classes live at PACKAGE level (end of
-  // file), not nested private here: the streaming state-store encoder's
-  // generated Java cannot access private object-nested members (Janino
-  // "no applicable method found" on the field accessors).
 
   /** Tumbling-window per-type aggregate over (ts, event_type, value,
     * props). Window start aligns with date_trunc for whole-unit windows,
     * so any engine can recompute it. Grouping is by the `window` struct
-    * itself (projected to `start` after the agg) — streaming watermark
-    * propagation requires the event-time window in the grouping key. */
+    * itself, projected to `start` after the agg. */
   def windowedAgg(events: DataFrame, windowLength: String = "1 hour"): DataFrame =
     events
       .groupBy(window(col("ts"), windowLength), col("event_type"))
@@ -33,12 +28,6 @@ object EventStream extends Serializable {
       .select(col("window.start").cast("timestamp_ntz").as("hour_start"),
         col("event_type"), col("n"), col("sum_value"), col("avg_k"))
 
-  /** Streaming flavor: same aggregate with a watermark bound on state
-    * (append mode emits a window only once it can no longer change). */
-  def windowedAggStream(events: DataFrame, windowLength: String = "1 hour",
-                        watermark: String = "2 hours"): DataFrame =
-    windowedAgg(events.withWatermark("ts", watermark), windowLength)
-
   /** SLIDING-window per-type aggregate — the overlapping-window
     * counterpart of [[windowedAgg]] (each event lands in width/slide
     * windows; the trend/moving-rate query shape). Spark's `window(ts,
@@ -47,8 +36,7 @@ object EventStream extends Serializable {
     * a normal partial-aggregating group, so the plan scales exactly
     * like the tumbling one at a constant factor. Windows align to the
     * epoch (floor(ts/slide)·slide and its predecessors), so any engine
-    * can recompute membership analytically. Same operator runs under
-    * Structured Streaming via [[slidingAggStream]]. */
+    * can recompute membership analytically. */
   def slidingAgg(events: DataFrame, width: String = "10 minutes",
                  slide: String = "5 minutes"): DataFrame =
     events
@@ -59,17 +47,10 @@ object EventStream extends Serializable {
       .select(col("window.start").cast("timestamp_ntz").as("win_start"),
         col("event_type"), col("n"), col("sum_value"))
 
-  /** Streaming flavor of [[slidingAgg]] (watermark bounds state; append
-    * emits each overlapping window once sealed). */
-  def slidingAggStream(events: DataFrame, width: String = "10 minutes",
-                       slide: String = "5 minutes",
-                       watermark: String = "30 minutes"): DataFrame =
-    slidingAgg(events.withWatermark("ts", watermark), width, slide)
-
   /** Per-user SESSIONIZATION: maximal event runs with inter-event gap
     * < `gap`, via the built-in `session_window` — the declarative
-    * Catalyst path (merging-window aggregate, shuffle keyed by user),
-    * identical plan batch or streaming. Emits one row per session:
+    * Catalyst path (merging-window aggregate, shuffle keyed by user).
+    * Emits one row per session:
     * (user_id, session_start, session_end, n_events, sum_value).
     * Session bounds follow Spark's session_window semantics: end =
     * last event + gap, so `duration_s` below subtracts the gap back to
@@ -86,73 +67,33 @@ object EventStream extends Serializable {
         col("session_window.end").cast("timestamp_ntz").as("session_end"),
         col("n_events"), col("sum_value"))
 
-  /** Streaming flavor of sessionize: watermark bounds the session state;
-    * append mode emits a session once the watermark passes its close. */
-  def sessionizeStream(events: DataFrame, gap: String = "30 minutes",
-                       watermark: String = "2 hours"): DataFrame =
-    sessionize(events.withWatermark("ts", watermark), gap)
-
-  /** STREAMING exact dedup by (key, event time): the streaming face of
-    * the batch query-id dedup (SURVEY §2.2 F3). State is bounded by the
-    * watermark — `dropDuplicatesWithinWatermark` keeps a key only until
-    * the watermark passes its event time + delay, so infinite streams
-    * run in finite state (plain `dropDuplicates` on a stream would grow
-    * state forever). Batch callers get plain exact dedup on the same
-    * keys — one operator definition, both execution modes. */
-  def dedup(events: DataFrame, keys: Seq[String] = Seq("event_id"),
-            watermark: String = "2 hours", streaming: Boolean = false): DataFrame =
-    if (streaming)
-      events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
-    else events.dropDuplicates(keys)
-
   /** Click→purchase ATTRIBUTION join: every (purchase, click) pair of
     * the same user with the click inside the `windowMinutes` before the
-    * purchase (inclusive) — the classic conversion-attribution shape.
-    * Batch: an equi-join on user plus the time-range predicate. Stream:
-    * the SAME call is a genuine STREAM-STREAM inner join — Spark keeps
-    * both sides' state and the time-range condition plus watermarks
-    * bound it (each side's rows expire once the other side's watermark
-    * passes the range), which is what lets two infinite streams join in
-    * finite memory. Returns (purchase_id, user_id, purchase_ts,
-    * click_id, click_ts, gap_s). */
+    * purchase (inclusive) — the classic conversion-attribution shape:
+    * an equi-join on user plus the time-range predicate. Returns
+    * (purchase_id, user_id, purchase_ts, click_id, click_ts, gap_s). */
   def attribution(purchases: DataFrame, clicks: DataFrame,
-                  windowMinutes: Long = 30,
-                  watermark: String = "2 hours",
-                  streaming: Boolean = false): DataFrame =
-    attributionJoin(purchases, clicks, windowMinutes, watermark, streaming,
-      joinType = "inner")
+                  windowMinutes: Long = 30): DataFrame =
+    attributionJoin(purchases, clicks, windowMinutes, joinType = "inner")
 
   /** LEFT-OUTER attribution — the "unattributed conversions" flavor of
     * [[attribution]]: every purchase emits, with null click columns when
-    * no qualifying click exists. In batch this is an ordinary left outer
-    * interval join; under Structured Streaming (streaming = true) it is
-    * the watermarked stream-stream OUTER join — Spark holds a purchase in
-    * state until the click-side watermark passes the end of its join
-    * window, and only then emits the null-padded row (the semantics that
-    * make outer results correct rather than racy). `gap_s` is null
-    * exactly on unattributed rows, giving downstream a sargable flag. */
+    * no qualifying click exists (an ordinary left outer interval join).
+    * `gap_s` is null exactly on unattributed rows, giving downstream a
+    * sargable flag. */
   def attributionOuter(purchases: DataFrame, clicks: DataFrame,
-                       windowMinutes: Long = 30,
-                       watermark: String = "2 hours",
-                       streaming: Boolean = false): DataFrame =
-    attributionJoin(purchases, clicks, windowMinutes, watermark, streaming,
-      joinType = "left_outer")
+                       windowMinutes: Long = 30): DataFrame =
+    attributionJoin(purchases, clicks, windowMinutes, joinType = "left_outer")
 
   /** Shared body of [[attribution]]/[[attributionOuter]] — one home for
-    * the projections, watermark wiring, and interval predicate so the
-    * two flavors cannot drift. */
+    * the projections and interval predicate so the two flavors cannot
+    * drift. */
   private def attributionJoin(purchases: DataFrame, clicks: DataFrame,
-                              windowMinutes: Long, watermark: String,
-                              streaming: Boolean,
-                              joinType: String): DataFrame = {
-    val p0 = purchases.select(col("event_id").as("purchase_id"),
+                              windowMinutes: Long, joinType: String): DataFrame = {
+    val p = purchases.select(col("event_id").as("purchase_id"),
       col("user_id"), col("ts").as("purchase_ts"))
-    val c0 = clicks.select(col("event_id").as("click_id"),
+    val c = clicks.select(col("event_id").as("click_id"),
       col("user_id").as("c_user_id"), col("ts").as("click_ts"))
-    val (p, c) =
-      if (streaming) (p0.withWatermark("purchase_ts", watermark),
-        c0.withWatermark("click_ts", watermark))
-      else (p0, c0)
     p.join(c,
         col("user_id") === col("c_user_id") &&
           col("click_ts") <= col("purchase_ts") &&
@@ -164,149 +105,10 @@ object EventStream extends Serializable {
           .as("gap_s"))
   }
 
-  /** One closed session from the custom-state path. */
-  case class Session(userId: Long, sessionStart: java.sql.Timestamp,
-                     sessionEnd: java.sql.Timestamp, nEvents: Long,
-                     sumValue: Double, eventTypes: Map[String, Long])
-
-
   private def usToTs(us: Long): java.sql.Timestamp = {
     val t = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
     t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
     t
-  }
-
-  /** CUSTOM-STATE sessionization via flatMapGroupsWithState — the escape
-    * hatch for per-session logic `session_window` can't express (here:
-    * per-type event counts accumulated in arrival order). Batch
-    * semantics: state never times out mid-batch, so every group's final
-    * state flushes at the end — output equals the declarative path plus
-    * the extra column. In streaming, EventTimeTimeout closes a session
-    * once the watermark passes last-event + gap.
-    *
-    * Scale caveat (batch path): fnBatch buffers and sorts EACH KEY'S
-    * whole event history in one task's heap before folding — a single
-    * hot key (a bot with 10^8 events) can OOM the executor where the
-    * declarative `sessionize` (merging-window aggregate, bounded partial
-    * state) absorbs it. At corpus scale route known-hot keys through the
-    * declarative path, or pre-aggregate; the custom-state path earns its
-    * keep for the per-type map no session_window can express, not for
-    * hot-key robustness. The streaming path is watermark-bounded per
-    * trigger and does not share this spike. */
-  def sessionizeWithState(events: DataFrame, gapMinutes: Long = 30,
-                          watermark: String = "2 hours",
-                          streaming: Boolean = false): org.apache.spark.sql.Dataset[Session] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = events.sparkSession
-    import spark.implicits._
-    val gapUs = gapMinutes * 60000000L
-    // the watermarked ts COLUMN must survive projection — event-time
-    // timeout analysis requires it in the flatMapGroupsWithState child
-    // (unix_micros(ts) alone strips the watermark metadata)
-    // dirty-data guards BEFORE the typed decode: the primitive tuple
-    // encoder throws on NULL in a non-nullable field, so a single
-    // null-keyed or null-valued event would kill the whole job where the
-    // declarative path tolerates it. A session needs a key and a time
-    // (null user_id/ts rows drop — they can't belong to any session);
-    // a null VALUE is a real event worth 0 toward the sum.
-    val typed = (if (streaming) events.withWatermark("ts", watermark) else events)
-      .filter(col("user_id").isNotNull && col("ts").isNotNull)
-      .select(col("user_id").cast("long"), col("ts"), unix_micros(col("ts")),
-        col("event_type"), coalesce(col("value").cast("double"), lit(0.0)))
-      .as[(Long, java.sql.Timestamp, Long, String, Double)]
-
-    def close(userId: Long, st: SessionState): Session =
-      Session(userId, usToTs(st.startUs), usToTs(st.lastUs + gapUs),
-        st.n, st.sum, st.types)
-
-    def absorb(st: SessionState, us: Long, tpe: String, v: Double): SessionState =
-      if (st == null) SessionState(us, us, 1, v, Map(tpe -> 1L))
-      else st.copy(lastUs = us, n = st.n + 1, sum = st.sum + v,
-        types = st.types + (tpe -> (st.types.getOrElse(tpe, 0L) + 1L)))
-
-    // BATCH: one invocation per group sees every row — sort, fold, flush.
-    def fnBatch(userId: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, String, Double)],
-                state: GroupState[SessionState]): Iterator[Session] = {
-      var st: SessionState = null
-      val closed = Seq.newBuilder[Session]
-      rows.toSeq.sortBy(_._3).foreach { case (_, _, us, tpe, v) =>
-        if (st != null && us - st.lastUs >= gapUs) { closed += close(userId, st); st = null }
-        st = absorb(st, us, tpe, v)
-      }
-      if (st != null) closed += close(userId, st)
-      closed.result().iterator
-    }
-
-    // STREAMING: SEAL-BEFORE-EMIT (the funnelCompletions discipline).
-    // Events above the watermark are buffered, not folded: an admitted
-    // late event may land inside any unsealed region, so folding it
-    // eagerly both regresses lastUs (st.copy with us < lastUs) and
-    // emits sessions a later event could still extend/merge. Only the
-    // sealed prefix (ts ≤ watermark) folds into the open session, and a
-    // session closes only when its gap region is entirely sealed —
-    // every emission is final by watermark guarantee. State = the open
-    // sealed session + the unsealed tail (watermark-bounded).
-    def fnStream(userId: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, String, Double)],
-                 state: GroupState[SessionBufState]): Iterator[Session] = {
-      val closed = Seq.newBuilder[Session]
-      val prev = state.getOption
-      var open: SessionState = prev.filter(_.openN > 0)
-        .map(p => SessionState(p.openStart, p.openLast, p.openN, p.openSum,
-          p.openTypes)).orNull
-      val prevBuf = prev.map(_.buf).getOrElse(Seq.empty)
-      // on event-time timeout the watermark has passed (max known us) +
-      // gap, so EVERYTHING seals and the trailing gap is final
-      val timedOut = state.hasTimedOut
-      val wmUs =
-        if (timedOut) Long.MaxValue else state.getCurrentWatermarkMs() * 1000L
-      val incoming =
-        if (timedOut) Seq.empty
-        else rows.map(r => BufEv(r._3, r._4, r._5)).toSeq
-      val (sealedEvs, unsealedEvs) =
-        (prevBuf ++ incoming).sortBy(_.us).partition(_.us <= wmUs)
-      sealedEvs.foreach { e =>
-        if (open != null && e.us - open.lastUs >= gapUs) {
-          closed += close(userId, open); open = null
-        }
-        open = absorb(open, e.us, e.tpe, e.v)
-      }
-      // the watermark itself can close the open session: the gap region
-      // (lastUs, lastUs + gap] is sealed and provably empty
-      if (open != null && !timedOut && wmUs - open.lastUs >= gapUs) {
-        closed += close(userId, open); open = null
-      }
-      if (timedOut || (open == null && unsealedEvs.isEmpty)) {
-        if (open != null) closed += close(userId, open)
-        state.remove()
-      } else {
-        state.update(SessionBufState(
-          if (open != null) open.startUs else 0L,
-          if (open != null) open.lastUs else 0L,
-          if (open != null) open.n else 0L,
-          if (open != null) open.sum else 0.0,
-          if (open != null) open.types else Map.empty[String, Long],
-          unsealedEvs))
-        // wake when everything currently known has sealed AND its
-        // trailing gap has passed; always > current watermark (an open
-        // session that survived the close-check has lastUs + gap > wm,
-        // and unsealed events have us > wm)
-        val maxKnown = math.max(
-          if (open != null) open.lastUs else Long.MinValue,
-          if (unsealedEvs.nonEmpty) unsealedEvs.iterator.map(_.us).max
-          else Long.MinValue)
-        state.setTimeoutTimestamp((maxKnown + gapUs) / 1000L)
-      }
-      closed.result().iterator
-    }
-
-    if (streaming)
-      typed.groupByKey(_._1)
-        .flatMapGroupsWithState(OutputMode.Append(),
-          GroupStateTimeout.EventTimeTimeout())(fnStream)
-    else
-      typed.groupByKey(_._1)
-        .flatMapGroupsWithState(OutputMode.Append(),
-          GroupStateTimeout.NoTimeout())(fnBatch)
   }
 
   /** One completed funnel (greedy non-overlapping; see
@@ -314,181 +116,31 @@ object EventStream extends Serializable {
   case class FunnelMatch(userId: Long, chainStart: java.sql.Timestamp,
                          chainEnd: java.sql.Timestamp)
 
-
-  /** Streaming funnel-completion detection (CEP-style): emits one row
-    * per COMPLETED ordered chain step1 < step2 < … < stepN with span ≤
-    * `windowMinutes`, greedy and non-overlapping per user — the same
-    * matches FunnelAggs.funnelMatches yields in batch, so backfill and
-    * live ingest agree exactly.
-    *
-    * Streaming finalization logic: a match may only be emitted once no
-    * late event can change it. Events with ts ≤ watermark are SEALED
-    * (nothing earlier can arrive); the matcher runs over sealed events
-    * only, so every emitted match is final, in batch-greedy order.
-    * Unconsumed sealed events expire once ts < watermark − window: such
-    * an event can sit at NO position of a future-completing chain (any
-    * later completion forces chain start ≥ watermark − window, and a
-    * chain's positions are start-to-start+window). State per user is
-    * therefore bounded by one window of funnel-relevant events plus the
-    * unsealed tail. An event-time timeout at lastTs + window flushes
-    * idle users' final matches and clears their state. */
+  /** Funnel-completion detection (CEP-style): one row per COMPLETED
+    * ordered chain step1 < step2 < … < stepN with span ≤
+    * `windowMinutes`, greedy and non-overlapping per user — each user's
+    * events sorted by time and matched by FunnelAggs.funnelMatches.
+    * Rows with a null user_id or ts belong to no funnel and drop. */
   def funnelCompletions(events: DataFrame, steps: Seq[String],
-                        windowMinutes: Long = 360,
-                        watermark: String = "2 hours",
-                        streaming: Boolean = false): org.apache.spark.sql.Dataset[FunnelMatch] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+                        windowMinutes: Long = 360): org.apache.spark.sql.Dataset[FunnelMatch] = {
     require(steps.nonEmpty && steps.size <= 31 && steps.distinct == steps,
       "steps must be distinct, 1..31")
     val spark = events.sparkSession
     import spark.implicits._
     val windowUs = windowMinutes * 60000000L
     val stepIdx = steps.zipWithIndex.toMap
-    // ts survives as a column: event-time timeout analysis requires the
-    // watermarked column in the flatMapGroupsWithState child
-    val typed = (if (streaming) events.withWatermark("ts", watermark) else events)
+    events
       .filter(col("event_type").isin(steps: _*))
       // null user_id/ts guard: the primitive decoder throws on NULL in a
-      // non-nullable field; a keyless or timeless event belongs to no
-      // funnel (the sessionizeWithState convention)
+      // non-nullable field
       .filter(col("user_id").isNotNull && col("ts").isNotNull)
-      .select(col("user_id").cast("long"), col("ts"), unix_micros(col("ts")),
-        col("event_type"))
-      .as[(Long, java.sql.Timestamp, Long, String)]
-
-    def fn(userId: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, String)],
-           state: GroupState[FunnelBuf]): Iterator[FunnelMatch] = {
-      // watermark 0 (first trigger) seals nothing — conservative: a match
-      // is only emitted once the watermark proves it final
-      val wmUs =
-        if (!streaming) Long.MaxValue
-        else state.getCurrentWatermarkMs() * 1000L
-      val held = state.getOption.getOrElse(FunnelBuf(Nil, Nil))
-      val fresh = rows.map { case (_, _, us, tpe) => (us, 1 << stepIdx(tpe)) }.toArray
-      val all = (held.ts.zip(held.mask) ++ fresh).sortBy(_._1).toArray
-      val (ripe, pending) = all.partition(_._1 <= wmUs)
-      val ts = ripe.map(_._1)
-      val mk = ripe.map(_._2)
-      val found = graft.functions.FunnelAggs.funnelMatches(ts, mk, windowUs, steps.size)
-      // survivors: sealed events after the last consumed one that can
-      // still chain with future events, plus everything unsealed
-      val lastEnd = if (found.isEmpty) Long.MinValue else found.last._2
-      val live = ripe.filter { case (t, _) =>
-        t > lastEnd && t >= wmUs - windowUs // wmUs = ∞ in batch → keep none
-      } ++ pending
-      if (streaming && live.nonEmpty) {
-        state.update(FunnelBuf(live.map(_._1), live.map(_._2)))
-        state.setTimeoutTimestamp(live.map(_._1).max / 1000L + windowMinutes * 60000L + 1L)
-      } else if (streaming) state.remove()
-      found.iterator.map { case (s, e) => FunnelMatch(userId, usToTs(s), usToTs(e)) }
-    }
-
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        if (streaming) GroupStateTimeout.EventTimeTimeout()
-        else GroupStateTimeout.NoTimeout())(fn)
-  }
-
-  /** Running per-user activity profile emitted after every micro-batch
-    * that touches the user. */
-  case class UserProfile(userId: Long, nEvents: Long, nTypes: Long,
-                         topType: String, topCount: Long)
-
-  /** Per-user running profile on Spark 4's arbitrary-state API
-    * (`transformWithState`): a ValueState event counter plus a MapState
-    * of per-type counts — composite state the older
-    * flatMapGroupsWithState API could only model as one monolithic blob
-    * rewritten wholesale every trigger. With the RocksDB provider each
-    * MapState entry is its own store key, so a profile update touches
-    * O(types in batch) keys, not O(types ever seen) — the difference
-    * between an in-place point write and a full-value rewrite for a
-    * long-lived key at 100 TB event volume. Update-mode emission: one
-    * refreshed profile per touched user per micro-batch; the LAST row
-    * per user equals the batch groupBy profile (StreamingSpec pins
-    * this). Top-type ties break lexicographically, so emission is
-    * engine- and merge-order-independent. Requires
-    * `spark.sql.streaming.stateStore.providerClass` =
-    * RocksDBStateStoreProvider — the TWS operator's documented
-    * contract, set by the caller on the session. */
-  def userProfiles(events: DataFrame): org.apache.spark.sql.Dataset[UserProfile] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.select(col("user_id").cast("long"), col("event_type"))
-      .as[(Long, String)]
+      .select(col("user_id").cast("long"), unix_micros(col("ts")), col("event_type"))
+      .as[(Long, Long, String)]
       .groupByKey(_._1)
-      .transformWithState(new ProfileProcessor,
-        TimeMode.None(), OutputMode.Update())
-  }
-}
-
-/** StatefulProcessor for [[EventStream.userProfiles]] — package level for
-  * the same Janino-visibility reason as the state case classes below. */
-private[streaming] class ProfileProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, (Long, String), EventStream.UserProfile] {
-  import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues,
-    TTLConfig, ValueState, MapState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var nEvents: ValueState[Long] = _
-  @transient private var perType: MapState[String, Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    nEvents = getHandle.getValueState[Long]("nEvents",
-      Encoders.scalaLong, TTLConfig.NONE)
-    perType = getHandle.getMapState[String, Long]("perType",
-      Encoders.STRING, Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: Long, rows: Iterator[(Long, String)],
-      timerValues: TimerValues): Iterator[EventStream.UserProfile] = {
-    var added = 0L
-    // accumulate the batch LOCALLY first, then point-touch each DISTINCT
-    // type once — per-row containsKey+getValue+updateValue would be
-    // O(rows in batch) state-store operations (a hot user's 100k-event
-    // batch = ~300k RocksDB point ops); this is O(types in batch) = the
-    // cost the scaladoc promises, with identical output
-    val batchCounts = scala.collection.mutable.Map.empty[String, Long]
-    rows.foreach { case (_, tpe) =>
-      added += 1L
-      batchCounts.update(tpe, batchCounts.getOrElse(tpe, 0L) + 1L)
-    }
-    batchCounts.foreach { case (tpe, n) =>
-      val cur = if (perType.containsKey(tpe)) perType.getValue(tpe) else 0L
-      perType.updateValue(tpe, cur + n)
-    }
-    val total = (if (nEvents.exists()) nEvents.get() else 0L) + added
-    nEvents.update(total)
-    // deterministic top type: max count, ties to the LOWEST type string
-    var topType = ""
-    var topCount = 0L
-    var nTypes = 0L
-    perType.iterator().foreach { case (tpe, n) =>
-      nTypes += 1L
-      if (n > topCount || (n == topCount && (topType.isEmpty || tpe < topType))) {
-        topType = tpe; topCount = n
+      .flatMapGroups { (userId, rows) =>
+        val evs = rows.map { case (_, us, tpe) => (us, 1 << stepIdx(tpe)) }.toArray.sortBy(_._1)
+        graft.functions.FunnelAggs.funnelMatches(evs.map(_._1), evs.map(_._2), windowUs, steps.size)
+          .iterator.map { case (s, e) => FunnelMatch(userId, usToTs(s), usToTs(e)) }
       }
-    }
-    Iterator.single(
-      EventStream.UserProfile(key, total, nTypes, topType, topCount))
   }
 }
-
-// state times in MICROSECONDS — java.sql.Timestamp.getTime is
-// millis-only and silently truncates the event time's micros
-private[streaming] case class SessionState(startUs: Long, lastUs: Long, n: Long,
-                                           sum: Double, types: Map[String, Long])
-
-/** One buffered (unsealed) event in the seal-before-emit session path. */
-private[streaming] case class BufEv(us: Long, tpe: String, v: Double)
-
-/** Streaming session state: the open session built from SEALED events
-  * (openN == 0 ⇔ none open) plus the unsealed tail — bounded by the
-  * watermark delay's worth of events per user. */
-private[streaming] case class SessionBufState(openStart: Long, openLast: Long,
-                                              openN: Long, openSum: Double,
-                                              openTypes: Map[String, Long],
-                                              buf: Seq[BufEv])
-
-/** Held funnel-relevant (tsMicros, condMask) pairs per user. */
-private[streaming] case class FunnelBuf(ts: Seq[Long], mask: Seq[Int])

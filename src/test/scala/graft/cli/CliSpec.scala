@@ -20,7 +20,7 @@ class CliSpec extends SparkSpec {
       "speed" -> "1000000", "max-hash-rows" -> "10"))
     Cli.run(spark, "replay", Map("source" -> s"$dumpDir/q0.sql", "out" -> r2,
       "speed" -> "1000000", "max-hash-rows" -> "10"))
-    assert(graft.replay.Replay.guessClientCount(r1) > 0)
+    assert(new java.io.File(r1).list().exists(_.endsWith(".result")))
     // deterministic replays diff clean
     Cli.run(spark, "diff", Map("left" -> r1, "right" -> r2,
       "min-duration-diff" -> "60000"))

@@ -3,7 +3,6 @@ package graft.dump
 import java.nio.file.Files
 import graft.SparkSpec
 import graft.anon.Anonymizer
-import graft.genrule.{ColumnStats, TableStats}
 
 /** S5/S9/F8/F9 + N4: catalog DDL dump, file naming round-trip,
   * replication clamp, stats anonymization. */
@@ -56,15 +55,5 @@ class SchemaDumpSpec extends SparkSpec {
     // already-small values stay
     val keep = SchemaDump.normalizeReplication(ddl, beCount = 10)
     assert(keep.contains("default: 3") && keep.contains(""""replication_num" = "5""""))
-  }
-
-  test("N4: stats anonymization uses the same aliases as SQL rewrite") {
-    val ctx = new Anonymizer.Context(method = "minihash")
-    val stats = Seq(TableStats("orders", 100, Seq(
-      ColumnStats("order_id", count = 100), ColumnStats("note", count = 100))))
-    val (dbA, tablesA) = Anonymizer.anonymizeStats(ctx, "shop", stats)
-    val sql = Anonymizer.anonymizeSql(ctx, "SELECT order_id FROM shop.orders")
-    assert(sql.contains(tablesA.head.name) && sql.contains(dbA))
-    assert(sql.contains(tablesA.head.columns.head.name))
   }
 }

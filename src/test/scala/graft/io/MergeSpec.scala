@@ -62,34 +62,9 @@ class MergeSpec extends SparkSpec {
     assert(e.getMessage.contains("partition"))
   }
 
-  test("mergeStream upserts one partition-scoped merge per micro-batch") {
+  test("a replayed batch re-merges idempotently, untouched files byte-identical") {
     val root = freshRoot()
     base.write.partitionBy("part").parquet(root)
-    val updDir = java.nio.file.Files.createTempDirectory("merge_upd").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("merge_ck").toString
-    Seq((2L, "en", 99L), (5L, "en", 50L)).toDF("id", "part", "v")
-      .write.mode("append").parquet(updDir)
-    val updates = spark.readStream
-      .schema("id LONG, part STRING, v LONG").parquet(updDir)
-    val q = Merge.mergeStream(spark, root, updates, Seq("id"), "part", ckpt)
-    try {
-      q.processAllAvailable()
-      // second batch arrives as new files: re-updates key 5, inserts 6
-      Seq((5L, "en", 55L), (6L, "xx", 60L)).toDF("id", "part", "v")
-        .write.mode("append").parquet(updDir)
-      q.processAllAvailable()
-    } finally q.stop()
-    val out = spark.read.parquet(root).orderBy("id")
-      .select("id", "part", "v").as[(Long, String, Long)].collect().toSeq
-    assert(out == Seq((1L, "en", 10L), (2L, "en", 99L), (3L, "de", 30L),
-      (4L, "fr", 40L), (5L, "en", 55L), (6L, "xx", 60L)))
-  }
-
-  test("chaos: a replayed micro-batch re-merges idempotently (forced foreachBatch retry)") {
-    val root = freshRoot()
-    base.write.partitionBy("part").parquet(root)
-    val updDir = java.nio.file.Files.createTempDirectory("merge_chaos_upd").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("merge_chaos_ck").toString
     def readTable(): Seq[(Long, String, Long)] =
       spark.read.parquet(root).orderBy("id")
         .select("id", "part", "v").as[(Long, String, Long)].collect().toSeq
@@ -97,32 +72,17 @@ class MergeSpec extends SparkSpec {
       new java.io.File(s"$root/part=$p").listFiles()
         .filter(_.getName.endsWith(".parquet"))
         .map(f => (f.getName, f.length)).toSet
-    val updates = () => spark.readStream
-      .schema("id LONG, part STRING, v LONG").parquet(updDir)
     // batch 0: update key 2, insert key 5
-    Seq((2L, "en", 99L), (5L, "en", 50L)).toDF("id", "part", "v")
-      .write.mode("append").parquet(updDir)
-    val q0 = Merge.mergeStream(spark, root, updates(), Seq("id"), "part", ckpt)
-    try q0.processAllAvailable() finally q0.stop()
+    Merge.mergeInto(spark, root,
+      Seq((2L, "en", 99L), (5L, "en", 50L)).toDF("id", "part", "v"), Seq("id"), "part")
     // batch 1: re-update key 5, insert key 6
-    Seq((5L, "en", 55L), (6L, "xx", 60L)).toDF("id", "part", "v")
-      .write.mode("append").parquet(updDir)
-    val q1 = Merge.mergeStream(spark, root, updates(), Seq("id"), "part", ckpt)
-    try q1.processAllAvailable() finally q1.stop()
+    val batch1 = Seq((5L, "en", 55L), (6L, "xx", 60L)).toDF("id", "part", "v")
+    Merge.mergeInto(spark, root, batch1, Seq("id"), "part")
     val settled = readTable()
     val deFiles = files("de"); val frFiles = files("fr")
-    // CHAOS: batch 1's side effects ran but its commit record is lost
-    // (the crash window between foreachBatch returning and the commit
-    // write). On restart the engine MUST re-fire batch 1 with the same
-    // rows, and the merge must absorb the replay.
-    val commit1 = new java.io.File(s"$ckpt/commits/1")
-    assert(commit1.exists(), "expected a commit record for batch 1")
-    assert(commit1.delete())
-    // the local FS keeps a checksum sidecar; a stale one would make the
-    // replayed commit write trip the concurrent-query rename guard
-    new java.io.File(s"$ckpt/commits/.1.crc").delete()
-    val q2 = Merge.mergeStream(spark, root, updates(), Seq("id"), "part", ckpt)
-    try q2.processAllAvailable() finally q2.stop()
+    // the crash window: batch 1's files landed but its caller did not
+    // record it, so the caller re-runs batch 1 with the same rows
+    Merge.mergeInto(spark, root, batch1, Seq("id"), "part")
     assert(readTable() == settled,
       "replayed batch must leave the table in the same state")
     assert(files("de") == deFiles && files("fr") == frFiles,

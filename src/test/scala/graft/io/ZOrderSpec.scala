@@ -50,46 +50,11 @@ class ZOrderSpec extends SparkSpec {
     }
   }
 
-  test("write2 layout: per-file boxes are compact on BOTH columns; linear sort is not") {
-    val s = spark
-    import s.implicits._
-    val rnd = new scala.util.Random(11)
-    val rows = Seq.fill(20000)((rnd.nextInt(1000).toLong, rnd.nextInt(1000).toLong))
-    val df = s.sparkContext.parallelize(rows, 8).toDF("x", "y")
-
-    // The win of z-order is NOT box area — a linear sort also has small
-    // area (thin full-width slices: 1/16 × 1.0). It is that BOTH columns'
-    // per-file spans are bounded, so a predicate on EITHER column prunes.
-    def meanSpans(path: String): (Double, Double) = {
-      val r = s.read.parquet(path)
-        .groupBy(input_file_name()).agg(
-          ((max(col("x")) - min(col("x"))) / 1000.0).as("sx"),
-          ((max(col("y")) - min(col("y"))) / 1000.0).as("sy"))
-        .agg(avg(col("sx")), avg(col("sy"))).head()
-      (r.getDouble(0), r.getDouble(1))
-    }
-
-    val zPath = java.nio.file.Files.createTempDirectory("zorder").toString + "/z"
-    ZOrder.write2(df, "x", "y", zPath, nFiles = 16, bits = 10)
-    val (zx, zy) = meanSpans(zPath)
-
-    val linPath = zPath + "_lin"
-    df.repartitionByRange(16, col("x")).sortWithinPartitions("x")
-      .write.mode("overwrite").parquet(linPath)
-    val (lx, ly) = meanSpans(linPath)
-
-    // 16 z-range slices ≈ the 16 level-2 quadrants (span 1/4 each) plus
-    // boundary-crossing slack; both axes must stay well under full width
-    assert(zx < 0.6 && zy < 0.6, f"z spans ($zx%.3f, $zy%.3f)")
-    // the linear layout prunes x hard but cannot bound y at all
-    assert(lx < 0.2 && ly > 0.8, f"linear spans ($lx%.3f, $ly%.3f)")
-  }
-
   test("normalized maps min/max to the ends of the bit range") {
     val s = spark
     import s.implicits._
     val df = Seq(10.0, 20.0, 30.0).toDF("v")
-    val n = df.select(ZOrder.normalized(df, "v", 8).as("n"))
+    val n = df.select(ZOrder.normalizedAll(df, Seq("v"), 8).head.as("n"))
       .as[Long].collect().sorted
     assert(n.head == 0L && n.last == 255L && n(1) == 128L)
   }
@@ -98,7 +63,7 @@ class ZOrderSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val df = Seq(Some(10.0), None, Some(30.0)).toDF("v")
-    val n = df.select(ZOrder.normalized(df, "v", 8).as("n"), col("v"))
+    val n = df.select(ZOrder.normalizedAll(df, Seq("v"), 8).head.as("n"), col("v"))
       .collect().map(r => Option(r.get(1)).map(_.toString) -> r.getLong(0)).toMap
     assert(n(None) == 0L,
       "least() skips nulls — an unguarded null landed in bucket 255")

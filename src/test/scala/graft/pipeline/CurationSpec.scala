@@ -490,34 +490,6 @@ class CurationSpec extends SparkSpec {
     assert(inc.nonEmpty, "fixture must contain at least one cross-set pair")
   }
 
-  test("streaming ingest loop: each batch dedups against, then grows, the index") {
-    val root = java.nio.file.Files.createTempDirectory("ingest").toString
-    val (corpusDir, indexDir, pairsDir) = (s"$root/corpus", s"$root/index", s"$root/pairs")
-    val d = corpus(60) // doc 60 ≈ doc 0
-    // two micro-batches arriving as files; the planted pair crosses them
-    val streamSrc = s"$root/arrivals"
-    d.filter(col("doc_id") < 30).write.parquet(s"$streamSrc/b1")
-    d.filter(col("doc_id") >= 30).write.parquet(s"$streamSrc/b2")
-    val schema = d.schema
-    val q = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(s"$streamSrc/*")
-      .writeStream
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) =>
-        Dedup.ingestBatch(b, "doc_id", "text", corpusDir, indexDir, pairsDir,
-          threshold = 0.3))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    // batch 2's doc 60 must have been flagged against batch 1's doc 0
-    val found = spark.read.parquet(pairsDir).select("new_id", "old_id")
-      .as[(Long, Long)].collect().toSet
-    assert(found.contains((60L, 0L)), s"planted cross-batch dup missing: $found")
-    // and the index + corpus now hold both batches
-    assert(spark.read.parquet(corpusDir).count() === 61)
-    val idxDocs = spark.read.parquet(indexDir).select("id").distinct().count()
-    assert(idxDocs === 61)
-  }
-
   test("incremental dedup rejects an index built with different parameters") {
     val d = corpus(20)
     val dir = java.nio.file.Files.createTempDirectory("mh_index_mm").toString

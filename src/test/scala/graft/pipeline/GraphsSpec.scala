@@ -7,9 +7,13 @@ import org.apache.spark.sql.functions._
 class GraphsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Undirected, deduped, u < v, no loops: the input triangleStats takes. */
+  private def canonical(edges: Seq[(Long, Long)]) =
+    edges.map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+      .filter { case (u, v) => u < v }.distinct.toDF("u", "v")
+
   private def stats(edges: Seq[(Long, Long)]) =
-    Graphs.triangleStats(
-      Graphs.canonicalEdges(edges.toDF("a", "b"), "a", "b")).head()
+    Graphs.triangleStats(canonical(edges)).head()
 
   test("graft_sorted_intersect_count = size(array_intersect) on sorted distinct arrays") {
     graft.functions.VectorExprs.register(spark)
@@ -49,15 +53,6 @@ class GraphsSpec extends SparkSpec {
       r.getAs[Double]("transitivity") === 0.0)
   }
 
-  test("canonicalEdges casts BEFORE ordering: string ids don't lose edges") {
-    // lexicographic least("10","9") = "10" would mis-orient the pair and
-    // the u < v filter would then DELETE it
-    val out = Graphs.canonicalEdges(
-      Seq(("9", "10"), ("10", "9"), ("2", "2")).toDF("a", "b"), "a", "b")
-      .as[(Long, Long)].collect().toSet
-    assert(out === Set((9L, 10L)), s"got $out")
-  }
-
   test("triangleStats on an empty edge set reports zeros, not NULLs") {
     val r = stats(Seq.empty[(Long, Long)])
     assert(r.getAs[Long]("n_nodes") === 0)
@@ -86,8 +81,7 @@ class GraphsSpec extends SparkSpec {
   }
 
   test("plan is all equi-joins (no cartesian product)") {
-    val df = Graphs.triangleStats(
-      Graphs.canonicalEdges(Seq((1L, 2L)).toDF("a", "b"), "a", "b"))
+    val df = Graphs.triangleStats(canonical(Seq((1L, 2L))))
     // the final one-row crossJoin of two aggregates is fine; the edge-
     // scale joins (orientation, wedges, closure) must all be keyed
     val plan = df.queryExecution.optimizedPlan.toString()

@@ -75,9 +75,11 @@ class Mpeg1Spec extends SparkSpec {
   }
 
   test("DC-only residuals accumulate and skipped MBs copy through") {
-    // deltaOf pins the analytic luma shift the oracle replays
-    assert(Mpeg1.deltaOf(2) == 5 && Mpeg1.deltaOf(-2) == -5)
-    assert(Mpeg1.deltaOf(1) == 3) // (2+1)*8=24 -> odd-guard 23 -> 23/8 -> 2.875 -> 3
+    // the analytic luma shift the oracle replays: level 1 -> +3
+    // ((2+1)*8=24 -> odd-guard 23 -> 23/8 -> 2.875 -> 3), level ±2 -> ±5
+    val one = Mpeg1.decodeFrames(
+      Mpeg1.encode(32, 32, 100, Seq(Seq.fill(4)(Delta(1): Mpeg1.PMb))))
+    assert(mean(one(1)) == 103.0)
     val full = Seq.fill(4)(Delta(2): Mpeg1.PMb)
     val partial = Seq[Mpeg1.PMb](Delta(-2), Skip, Skip, Delta(-2))
     val frames = Mpeg1.decodeFrames(

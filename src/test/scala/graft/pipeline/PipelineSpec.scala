@@ -204,10 +204,14 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("autoLshParams: reproduces tuned params at test scale; planes-growth law") {
+    def autoLshParams(n: Long, threshold: Double): (Int, Int) = {
+      val (planes, tables, _) = Ann.autoLshParamsDetailed(n, threshold)
+      (planes, tables)
+    }
     // at every test SF (n ≤ 2000 embeddings) the floors must reproduce
     // the hand-tuned (4, 32) EXACTLY — oracle behavior unchanged
-    assert(Ann.autoLshParams(200L, 0.45) === ((4, 32)))
-    assert(Ann.autoLshParams(2000L, 0.45) === ((4, 32)))
+    assert(autoLshParams(200L, 0.45) === ((4, 32)))
+    assert(autoLshParams(2000L, 0.45) === ((4, 32)))
     // growth: the modeled multi-table miss stays under the p09 in-query
     // floor (0.5%) at EVERY decade — including past the tablesCap
     // bind-point, where planes backs off instead of recall degrading —
@@ -216,7 +220,7 @@ class PipelineSpec extends SparkSpec {
     // measured at 88.6×
     val r = 1.0 - math.acos(0.45) / math.Pi
     for (n <- Seq(20000L, 200000L, 2000000L, 20000000L)) {
-      val (planes, tables) = Ann.autoLshParams(n, 0.45)
+      val (planes, tables) = autoLshParams(n, 0.45)
       val miss = math.pow(1.0 - math.pow(r, planes), tables)
       assert(miss <= 0.005, f"modeled miss $miss%.4f over floor at n=$n")
       val workFactor = tables.toDouble / (1L << planes)   // × n²/2
@@ -224,7 +228,7 @@ class PipelineSpec extends SparkSpec {
         s"auto params prune no better than fixed at n=$n ($planes, $tables)")
     }
     // monotone: more data never means fewer planes
-    val ps = Seq(2000L, 20000L, 200000L).map(Ann.autoLshParams(_, 0.45)._1)
+    val ps = Seq(2000L, 20000L, 200000L).map(autoLshParams(_, 0.45)._1)
     assert(ps == ps.sorted)
   }
 
@@ -404,23 +408,6 @@ class PipelineSpec extends SparkSpec {
     assert(!cs.exists(_.isNaN))
   }
 
-  test("multimodal: batch plumbing with stubbed decode") {
-    val media = Multimodal.asMedia(
-      docs.select(col("doc_id"), col("text").cast("binary").as("payload")),
-      "doc_id", "payload", kind = "image")
-    assert(media.schema.fieldNames.toSeq == Seq("media_id", "payload", "meta"))
-    val feats = Multimodal.extractFeatures(spark, media, batchSize = 16)
-    val rows = feats.collect()
-    assert(rows.length == docs.count())
-    assert(rows.forall(_.features.length == 8))
-    // histogram is normalized: sums to ~1 for non-empty payloads
-    assert(rows.filter(_.n_bytes > 0).forall(r => math.abs(r.features.sum - 1.0) < 1e-3))
-    // deterministic: same input → same features
-    val again = Multimodal.extractFeatures(spark, media, batchSize = 7).collect()
-    assert(rows.sortBy(_.media_id).map(_.features.toSeq).toSeq ==
-           again.sortBy(_.media_id).map(_.features.toSeq).toSeq)
-  }
-
   test("multimodal: REAL image decode (JDK codecs), aHash near-dup pairs") {
     import java.awt.image.BufferedImage
     def png(w: Int, h: Int, f: (Int, Int) => Int): Array[Byte] = {
@@ -454,7 +441,10 @@ class PipelineSpec extends SparkSpec {
     assert(java.lang.Long.bitCount(feats(1L).ahash ^ feats(2L).ahash) <= 3)
     assert(java.lang.Long.bitCount(feats(1L).ahash ^ feats(3L).ahash) > 10)
 
-    val pairs = Multimodal.imageNearDupPairs(spark, media)
+    // the m01 path: decoded aHash signatures through the banded Hamming join
+    val sigs = Multimodal.imageFeatures(spark, media).filter(col("decoded"))
+      .select(col("media_id").as("id"), col("ahash").as("sig"))
+    val pairs = Dedup.simhashPairs(sigs, 3)
       .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 2L)))
   }
@@ -479,28 +469,6 @@ class PipelineSpec extends SparkSpec {
       assert(java.lang.Long.bitCount(p0 ^ p3) == 8)
       assert(java.lang.Long.bitCount(p2 ^ p3) == 6)
     }
-  }
-
-  test("multimodal: video frame sampling slices, strides, and drops torn frames") {
-    // payload with a torn trailing half-frame: decode must drop it
-    val full = Multimodal.synthVideo(5L) // 10 + 5%7 = 15 frames of 64 bytes
-    val torn = full ++ Array.fill(30)(0x7f.toByte)
-    val media = Multimodal.asMedia(
-      Seq((5L, torn)).toDF("id", "v"), "id", "v", "video")
-    val frames = Multimodal.videoFrameSamples(spark, media,
-      frameBytes = 64, stride = 3).collect().sortBy(_.frame_idx)
-    assert(frames.forall(_.n_frames == 15L))
-    assert(frames.map(_.frame_idx).toSeq === Seq(0L, 3L, 6L, 9L, 12L))
-    // analytic mean of frame f: avg over i of (5*31 + f*7 + i) mod 256
-    frames.foreach { fr =>
-      val exp = (0 until 64).map(i => (5L * 31 + fr.frame_idx * 7 + i) % 256)
-        .sum.toDouble / 64
-      assert(math.abs(fr.mean_byte - exp) < 1e-12, s"frame ${fr.frame_idx}")
-    }
-    // empty payload: zero frames, zero rows — never an exception
-    val empty = Multimodal.asMedia(
-      Seq((9L, Array.emptyByteArray)).toDF("id", "v"), "id", "v", "video")
-    assert(Multimodal.videoFrameSamples(spark, empty).count() === 0L)
   }
 
   test("multimodal: Y4M container parse is real — header, planes, malformed rejection") {

@@ -358,8 +358,9 @@ class ScalingSpec extends SparkSpec {
         .distinct()
       val a = li.select(col("okey"), col("pk").as("pa"))
       val b = li.select(col("okey"), col("pk").as("pb"))
-      val edges = Graphs.canonicalEdges(
-        a.join(b, "okey").filter(col("pa") < col("pb")), "pa", "pb").cache()
+      val edges = a.join(b, "okey").filter(col("pa") < col("pb"))
+        .select(col("pa").cast("long").as("u"), col("pb").cast("long").as("v"))
+        .distinct().cache()
       try {
         val m = edges.count()
         // oriented out-degree d_out: wedges = Σ C(d_out, 2)

@@ -144,17 +144,17 @@ class DorisSqlSpec extends AnyFunSuite {
   }
 
   test("DATE_ADD/DATE_SUB INTERVAL forms become interval arithmetic") {
-    assert(DorisSql.rewriteDateAddInterval("SELECT date_add(d, INTERVAL 3 DAY) FROM t")
+    assert(DorisSql.translate("SELECT date_add(d, INTERVAL 3 DAY) FROM t")
       == "SELECT (d + INTERVAL 3 DAY) FROM t")
-    assert(DorisSql.rewriteDateAddInterval("SELECT DATE_SUB(ts, INTERVAL 12 HOUR)")
+    assert(DorisSql.translate("SELECT DATE_SUB(ts, INTERVAL 12 HOUR)")
       == "SELECT (ts - INTERVAL 12 HOUR)")
-    assert(DorisSql.rewriteDateAddInterval("SELECT subdate(f(x), INTERVAL 1 MONTH)")
+    assert(DorisSql.translate("SELECT subdate(f(x), INTERVAL 1 MONTH)")
       == "SELECT (f(x) - INTERVAL 1 MONTH)")
     // the first argument nests to any depth
     assert(DorisSql.translate("SELECT date_add(f(g(x)), INTERVAL 1 DAY) FROM t")
       == "SELECT (f(g(x)) + INTERVAL 1 DAY) FROM t")
     // the plain two-arg day form is native Spark and must pass through
-    assert(DorisSql.rewriteDateAddInterval("SELECT date_add(d, 3)")
+    assert(DorisSql.translate("SELECT date_add(d, 3)")
       == "SELECT date_add(d, 3)")
   }
 
