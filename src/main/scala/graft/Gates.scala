@@ -7,7 +7,7 @@ package graft
   * itself at any scale).
   *
   * Round-11 postmortem: pricing those gates into BENCH query bodies
-  * killed the round's bench signal — gates like ngramJaccardProbeTruth
+  * killed the round's bench signal — gates like the Jaccard probe truth
   * carry a corpus-linear (sometimes corpus-quadratic-in-the-probe) term
   * the operator itself doesn't, the bench pays them 4× (warmup + 3
   * passes), and every gate-inflated query then triggered a fresh-JVM

@@ -184,12 +184,17 @@ object Cli {
         val seed = o.getOrElse("seed", "42").toLong
         val out = req(o, "out")
         GenPlanner.generateDatasets(spark, ddls, conf, seed, rows)
-          .zipWithIndex.foreach { case (tables, di) =>
+          .zip(GenPlanner.datasetEnvs(conf)).zipWithIndex.foreach { case ((tables, env), di) =>
             tables.foreach { case (name, df) =>
               val dir = s"$out/$name/conf_$di"
               if (o.getOrElse("format", "csv") == "parquet") df.write.mode("overwrite").parquet(dir)
-              else graft.gen.TableGen.writeCsv(df, dir,
-                o.getOrElse("rows-per-file", "20000").toInt)
+              else {
+                graft.gen.TableGen.writeCsv(df, dir,
+                  o.getOrElse("rows-per-file", "20000").toInt)
+                ddls.find(_.name == name)
+                  .flatMap(graft.gen.TableGen.streamLoadMapping(_, env))
+                  .foreach(graft.gen.TableGen.prependFirstLine(dir, _))
+              }
               println(s"generated $name dataset $di -> $dir")
             }
           }

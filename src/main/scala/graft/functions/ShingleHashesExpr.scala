@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * polynomial + splitmix finalizer, sort-dedupe. Set-equivalent to
   * `xxhash64` over the string shingles `TextOps.shingles` builds
   * (Jaccard over the surrogates equals Jaccard over the shingles
-  * modulo 64-bit collisions — the same equality ngramJaccardPairs'
-  * skinny sh_h count rests on), WITHOUT materializing a string array
+  * modulo 64-bit collisions — the equality the Jaccard core's
+  * shingle sets rest on), WITHOUT materializing a string array
   * through interpreted higher-order functions: the zip_with shingle
   * chain measured ~14 s over the ×10 corpus where this kernel is a
   * sub-second scan (ProbeWinnow, r12). Fewer than n tokens → empty

@@ -86,11 +86,15 @@ object GenPlanner {
     * (≤128, the reference's cap), each with its own rule env; document i
     * uses seed+i so datasets differ but stay reproducible. */
   def generateDatasets(spark: SparkSession, tables: Seq[TableDef], confYaml: String,
-                       seed: Long, defaultRows: Long = 1000L): Seq[Map[String, DataFrame]] = {
-    val docs = GenRules.parseYamlDocs(confYaml)
-    val effective = if (docs.isEmpty) Seq(GenRules.empty) else docs // no conf = defaults
-    effective.zipWithIndex.map { case (conf, i) =>
-      generateAll(spark, tables, GenRules.buildEnv(conf), seed + i, defaultRows)
+                       seed: Long, defaultRows: Long = 1000L): Seq[Map[String, DataFrame]] =
+    datasetEnvs(confYaml).zipWithIndex.map { case (env, i) =>
+      generateAll(spark, tables, env, seed + i, defaultRows)
     }
+
+  /** The rule env of each dataset [[generateDatasets]] makes, in order. */
+  def datasetEnvs(confYaml: String): Seq[GenRules.Env] = {
+    val docs = GenRules.parseYamlDocs(confYaml)
+    (if (docs.isEmpty) Seq(GenRules.empty) else docs) // no conf = defaults
+      .map(GenRules.buildEnv(_))
   }
 }

@@ -18,8 +18,6 @@ import graft.genrule.GenRules.Rule
   */
 object TableGen {
 
-  val GenDataFileFirstLinePrefix = "columns: "
-
   /** Build the generated DataFrame for `table` with rule resolution
     * precedence column-custom > stats > type-default (G11). */
   def frame(spark: SparkSession, table: TableDef, rows: Long, seed: Long,
@@ -110,6 +108,31 @@ object TableGen {
         case _ => s"`${c.name}`"
       }
     }
-    if (needed) Some(GenDataFileFirstLinePrefix + parts.mkString(",")) else None
+    if (needed) Some(graft.io.StreamLoad.FirstLinePrefix + parts.mkString(","))
+    else None
+  }
+
+  /** gendata's BITMAP/HLL framing: rewrite every `.csv` part file under
+    * `dir` (a [[writeCsv]] output) with `line` — the table's
+    * [[streamLoadMapping]] — as its first line, which StreamLoad.loadFile
+    * turns into the `columns` header with skip_lines 1 (reference:
+    * src/gendata.go:163-187 writes it at the head of each data file). */
+  def prependFirstLine(dir: String, line: String): Unit = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(
+      SparkSession.active.sparkContext.hadoopConfiguration)
+    fs.listStatus(root).map(_.getPath).filter(_.getName.endsWith(".csv"))
+      .foreach { part =>
+        val tmp = new org.apache.hadoop.fs.Path(root, s".${part.getName}.tmp")
+        val out = fs.create(tmp, true)
+        try {
+          out.write((line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          val in = fs.open(part)
+          try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 1 << 16, false)
+          finally in.close()
+        } finally out.close()
+        require(fs.delete(part, false) && fs.rename(tmp, part),
+          s"could not replace $part with its mapped copy")
+      }
   }
 }

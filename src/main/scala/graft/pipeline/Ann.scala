@@ -485,16 +485,6 @@ object Ann {
     emb.select(col("vec_id"), cellOf(col("embedding"), cents).as("cell"))
   }
 
-  /** SemDeDup [Abbas et al. 2023]: semantic near-duplicate pairs found by
-    * clustering the embedding space and comparing cosines only WITHIN
-    * each cluster — the clustering is what makes semantic dedup tractable
-    * at corpus scale (all-pairs is O(n²); within-cell pairs are
-    * Σ c·(c−1)/2 with E[c] = n/nCells, so nCells is the knob that keeps
-    * candidate volume linear — grow it with n). Trades recall of
-    * CROSS-cell pairs for that bound, which is the published algorithm's
-    * deal, not an approximation of it: duplicates cluster together by
-    * construction. The self-join is keyed by cell (one shuffle); exact
-    * cosine verifies every candidate. Returns (cell, i, j, cos_r). */
   /** Multi-probe cell assignment: each vector lands in its `nProbe`
     * nearest KMeans cells by cosine (IVF's probe discipline applied to
     * the CORPUS side) — the recall repair for cell-based dedup, where a
@@ -547,6 +537,17 @@ object Ann {
       .select("i", "j", "cos_r")
   }
 
+  /** SemDeDup [Abbas et al. 2023]: semantic near-duplicate pairs found by
+    * clustering the embedding space and comparing cosines only WITHIN
+    * each cluster — the clustering is what makes semantic dedup tractable
+    * at corpus scale (all-pairs is O(n²); within-cell pairs are
+    * Σ c·(c−1)/2 with E[c] = n/nCells, so nCells is the knob that keeps
+    * candidate volume linear — grow it with n). Trades recall of
+    * CROSS-cell pairs for that bound, which is the published algorithm's
+    * deal, not an approximation of it: duplicates cluster together by
+    * construction. `cells` is the (vec_id, cell) assignment
+    * ([[kmeansCells]]). The self-join is keyed by cell (one shuffle);
+    * exact cosine verifies every candidate. Returns (cell, i, j, cos_r). */
   def semDedupPairs(emb: DataFrame, cells: DataFrame,
                     threshold: Double): DataFrame = {
     val byCell = emb.join(cells, "vec_id")

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Deduplication operators for document corpora, each designed so that NO
   * stage is O(n²) in the corpus: candidate generation always goes through
@@ -9,9 +10,20 @@ import org.apache.spark.sql.functions._
   * candidates.
   *
   *   - exact:     hash-groupBy on a normalized fingerprint
-  *   - minhash:   shingle → k-slot MinHash → b bands of r rows →
-  *                bucket join → exact-Jaccard verify (classic LSH;
-  *                P(candidate) = 1-(1-s^r)^b)
+  *   - Jaccard:   one core. Every set-Jaccard pair comes out of ONE exact
+  *                verify ([[verifyJaccard]]: size filter, sorted-merge
+  *                intersect count, J = |A∩B| / (|A|+|B|−|A∩B|)) over
+  *                (id, set) frames, fed by one of three candidate
+  *                generators:
+  *                  - [[jaccardJoin]], the prefix-filtered self-join
+  *                    (PPJoin; lossless by proof) over word sets or
+  *                    hashed word n-gram shingle sets ([[JaccardSets]]);
+  *                  - minhash: shingle → k-slot MinHash → b bands of r
+  *                    rows → bucket join (classic LSH; P(candidate) =
+  *                    1-(1-s^r)^b), in-corpus or against a landed index;
+  *                  - winnowing: shared window-min fingerprints.
+  *                Every recall gate compares against ONE truth,
+  *                [[jaccardProbeTruth]] (a broadcast probe prefix × corpus).
   *   - simhash:   63-bit signature → 4×16-bit bands → bucket join →
   *                Hamming verify. For maxHamming ≤ 3 the recovery is
   *                EXACT by pigeonhole: 3 flipped bits cannot touch all
@@ -42,7 +54,9 @@ object Dedup {
       .filter(col("i") < col("j"))
       .select("i", "j").distinct()
 
-    verifyJaccard(candidates, df, idCol, textCol, shingleN, threshold)
+    val sets = graft.operators.Broadcasts.trackedPersist(
+      hashedShingled(df, idCol, textCol, shingleN))
+    verifyJaccard(candidates, sets, sets, threshold)
   }
 
   /** MinHash (bucket, id) postings — candidates are the i<j pairs of a
@@ -72,109 +86,66 @@ object Dedup {
       .select(struct(col("band"), col("bandHash")).as("bkt"), col("id"))
   }
 
-  /** Exact-Jaccard verification only on candidate (i, j) pairs — shingles
-    * re-joined by id so candidate generation never carries the shingle
-    * arrays through its shuffle. */
-  /** Exact shingle-Jaccard verification of candidate (i, j) pairs, the
-    * dedup family's shared tail — rebuilt around three measured wins
-    * (ProbeWinnow, ×10 corpus, 4.7M winnowing candidates, r12):
-    *   - COMPILED hashed shingles (ShingleHashesExpr) instead of the
-    *     interpreted zip_with string-shingle chain (~14 s → sub-second
-    *     scan) — long surrogates also make array_intersect several
-    *     times cheaper and shuffle 8-byte elements (the p80 lesson);
-    *   - the EXACT size prefilter (t·|b| ≤ |a| ≤ |b|/t is necessary
-    *     for J ≥ t) prunes candidates on two skinny joins BEFORE any
-    *     array is fetched (4.7M → 3.1M pairs, 1.2 s);
-    *   - |A∪B| from |A|+|B|−|A∩B| (arrays are distinct), halving the
-    *     per-pair hash work vs a second array_union pass.
-    * J over the surrogates equals J over the string shingles modulo
-    * 64-bit collisions — the same equality ngramJaccardPairs' skinny
-    * sh_h count rests on. */
-  private def verifyJaccard(candidates: DataFrame, df: DataFrame,
-                            idCol: String, textCol: String, shingleN: Int,
-                            threshold: Double): DataFrame = {
-    graft.functions.ShingleHashesExpr.register(df.sparkSession)
-    // persisted: sizes and both verify sides read this projection
-    val hashed = graft.operators.Broadcasts.trackedPersist(
-      df.select(col(idCol).as("id"),
-        call_function("graft_shingle_hashes", col(textCol), lit(shingleN))
-          .as("shh"))
-        .filter(size(col("shh")) > 0)
-        .withColumn("n", size(col("shh"))))
-    val pruned = candidates
-      .join(hashed.select(col("id").as("i"), col("n").as("n_i")), "i")
-      .join(hashed.select(col("id").as("j"), col("n").as("n_j")), "j")
-      .filter(col("n_i").cast("double") >= lit(threshold) * col("n_j") &&
-        col("n_j").cast("double") >= lit(threshold) * col("n_i"))
+  /** The ONE exact set-Jaccard verify: every Jaccard pair this object
+    * returns, and every recall gate's truth, comes out of here.
+    * `cands` holds (i, j) id pairs; `setsI` and `setsJ` hold (id, set)
+    * with each set distinct — sorted `array<long>` surrogates (hashed
+    * shingles, hashed word tokens), or token strings on the word join's
+    * non-injective fallback. Three measured steps (ProbeWinnow, ×10
+    * corpus, 4.7M winnowing candidates, r12):
+    *   - the size filter ([[sizeWithin]]) prunes candidates on two
+    *     skinny (id, n) joins BEFORE any set is fetched (4.7M → 3.1M
+    *     pairs, 1.2 s);
+    *   - |A∩B| is an allocation-free linear merge of the sorted longs
+    *     inside codegen (graft_sorted_intersect_count) — the swap
+    *     Graphs.triangleStats measured 5.0 → 3.1 s at sf0.1 — and
+    *     array_intersect only for string sets (the kernel is
+    *     long-typed), chosen from the set's element type;
+    *   - |A∪B| = |A|+|B|−|A∩B| (sets are distinct), no union pass.
+    * Each set frame is read twice (sizes, then sets): callers persist
+    * one that is costly to recompute. Returns (i, j, jaccard), J ≥
+    * threshold. */
+  private[pipeline] def verifyJaccard(cands: DataFrame, setsI: DataFrame,
+                                      setsJ: DataFrame,
+                                      threshold: Double): DataFrame = {
+    val pruned = cands
+      .join(setsI.select(col("id").as("i"), size(col("set")).as("n_i")), "i")
+      .join(setsJ.select(col("id").as("j"), size(col("set")).as("n_j")), "j")
+      .filter(sizeWithin(col("n_i"), col("n_j"), threshold))
       .select("i", "j")
+    val inter = setsI.schema("set").dataType match {
+      case ArrayType(LongType, _) =>
+        graft.functions.VectorExprs.register(cands.sparkSession)
+        call_function("graft_sorted_intersect_count", col("a"), col("b"))
+      case _ => size(array_intersect(col("a"), col("b"))).cast("long")
+    }
     pruned
-      .join(hashed.select(col("id").as("i"), col("shh").as("sh_i"),
-        col("n").as("n_i")), "i")
-      .join(hashed.select(col("id").as("j"), col("shh").as("sh_j"),
-        col("n").as("n_j")), "j")
-      .withColumn("inter", size(array_intersect(col("sh_i"), col("sh_j"))))
+      .join(setsI.select(col("id").as("i"), col("set").as("a")), "i")
+      .join(setsJ.select(col("id").as("j"), col("set").as("b")), "j")
+      .withColumn("inter", inter)
       .withColumn("jaccard", col("inter").cast("double") /
-        (col("n_i") + col("n_j") - col("inter")).cast("double"))
+        (size(col("a")) + size(col("b")) - col("inter")).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select("i", "j", "jaccard")
   }
 
-  /** EXACT n-gram Jaccard near-dup pairs via a shared-shingle inverted
-    * index: any pair with jaccard ≥ t > 0 shares at least one shingle, so
-    * pairs co-occurring under some shingle hash cover all true pairs —
-    * the groupBy-shuffle bucket here is the shingle itself. Jaccard comes
-    * straight from the co-occurrence COUNT (shingles are distinct per
-    * doc, so shared-posting count = |A∩B| and J = inter/(|A|+|B|-inter))
-    * — no shingle array is ever joined to a candidate, which is what
-    * makes verification a skinny long-only aggregation (an array-join
-    * verify measured 18.7 s at sf0.1; this counts in ~1 s). Complement to
-    * minhashPairs: exact instead of probabilistic, candidate volume
-    * driven by shingle document frequency. `dfCap > 0` drops shingles
-    * appearing in more than dfCap docs — THE scale knob for 100 TB
-    * corpora (ubiquitous shingles generate quadratic candidates and
-    * carry no dedup signal), ON by default (1000: far above any real
-    * near-dup cluster, so nothing is lost at small scale, while a
-    * boilerplate shingle shared by millions of docs stays linear); a cap
-    * undercounts intersections that include dropped shingles, so it
-    * trades a bounded recall loss at the threshold boundary for linear
-    * candidate growth. Pass dfCap = 0 for the exact-at-any-cost mode. */
-  def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                        threshold: Double = 0.5, shingleN: Int = 3,
-                        dfCap: Int = 1000): DataFrame = {
-    require(threshold > 0, "threshold must be > 0 (J >= t > 0 implies a shared shingle)")
-    // compiled hashed shingles; persisted because postings + the two
-    // size joins all re-run the kernel over the corpus without it
-    val base = hashedShingled(df, idCol, textCol, shingleN)
-      .transform(graft.operators.Broadcasts.trackedPersist)
-    val sized = base.select(col("id"), size(col("shh")).as("n"))
-    // The exchange is load-bearing (same discipline as minhashPairs):
-    // without it each side of the self-join below re-scans, re-explodes,
-    // and re-filters the postings; with it the pipeline materializes
-    // once, ReuseExchange shares the shuffle between both branches, and
-    // the sh_h join is co-partitioned.
-    val usable = shinglePostings(base, dfCap).repartition(col("sh_h"))
-    val a = usable.select(col("sh_h"), col("id").as("i"))
-    val b = usable.select(col("sh_h"), col("id").as("j"))
-    val inter = a.join(b, "sh_h")
-      .filter(col("i") < col("j"))
-      .groupBy("i", "j").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sized.select(col("id").as("i"), col("n").as("n_i")), "i")
-      .join(sized.select(col("id").as("j"), col("n").as("n_j")), "j")
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("n_i") + col("n_j") - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("i", "j", "jaccard")
-  }
+  /** The size filter: J(A, B) ≥ t forces t·|B| ≤ |A| ≤ |B|/t, so a pair
+    * outside it cannot pass (AllPairs' length filter). The 1e-9 slack:
+    * t·n floats ABOVE the exact integer product for many (n, t) pairs
+    * (100·0.55 = 55.000000000000007), and the filter is lossless only
+    * if an exact-boundary pair (|A| = t·|B|) survives it. */
+  private def sizeWithin(ni: Column, nj: Column, t: Double): Column =
+    ni >= lit(t) * nj - lit(1e-9) && nj >= lit(t) * ni - lit(1e-9)
 
-  /** (id, sh_h) postings with the document-frequency cap applied —
-    * factored out so the cap's candidate-volume effect is testable:
-    * candidates are exactly the i<j pairs of a postings self-join, so
-    * the quadratic blow-up of an ubiquitous shingle is visible here.
-    * Input is the [[hashedShingled]] projection — sh_h IS the compiled
-    * shingle-hash surrogate, no per-posting string hash remains. */
+  /** (id, sh_h) postings of a [[hashedShingled]] frame, with shingles
+    * in more than `dfCap` docs dropped (`dfCap <= 0` keeps all) — the
+    * train-side cap of the containment family ([[contaminationPairs]],
+    * [[bloomContaminationPairs]]). Factored out so the cap's
+    * candidate-volume effect is testable: a postings self-join's i<j
+    * pairs show an ubiquitous shingle's quadratic blow-up. sh_h IS the
+    * compiled shingle-hash surrogate. */
   private[pipeline] def shinglePostings(base: DataFrame, dfCap: Int): DataFrame = {
-    val posts = base.select(col("id"), explode(col("shh")).as("sh_h"))
+    val posts = base.select(col("id"), explode(col("set")).as("sh_h"))
     if (dfCap <= 0) posts
     else {
       // Anti-join against the HOT set, not inner-join against the rare
@@ -199,78 +170,53 @@ object Dedup {
     df.select(col(idCol).as("id"),
       explode(TextOps.winnowingFingerprints(col(textCol), k, w)).as("bkt"))
 
-  /** Shingled (id, sh) projection shared by the Jaccard family. */
-  /** EXACT shingle-Jaccard pairs of a broadcast id-prefix probe against
-    * the whole corpus — linear in the corpus, so it runs at ANY scale.
-    * This is the truth set behind the dfCap'd [[ngramJaccardPairs]]'s
-    * in-query losslessness gates (the p80/p28 discipline: where the
-    * brute-force oracle is sf0.01-only, a bounded exact probe asserts
-    * recall inside the run itself). The t·|b| ≤ |a| ≤ |b|/t size
-    * prefilter is exact for J ≥ t. Returns (i, j) with i < probeMaxId,
-    * i < j, J ≥ threshold. */
-  def ngramJaccardProbeTruth(df: DataFrame, idCol: String, textCol: String,
-                             probeMaxId: Long, threshold: Double,
-                             shingleN: Int = 3): DataFrame = {
-    val base = hashedShingled(df, idCol, textCol, shingleN)
-    val pr = broadcast(base.filter(col("id") < probeMaxId)
-      .select(col("id").as("i"), col("shh").as("sh_i")))
-    base.select(col("id").as("j"), col("shh").as("sh_j"))
-      .join(pr, col("i") < col("j") &&
-        size(col("sh_i")).cast("double") >= lit(threshold) * size(col("sh_j")) &&
-        size(col("sh_j")).cast("double") >= lit(threshold) * size(col("sh_i")))
-      .withColumn("c", size(array_intersect(col("sh_i"), col("sh_j"))))
-      .filter(col("c").cast("double") /
-        (size(col("sh_i")) + size(col("sh_j")) - col("c")).cast("double")
-        >= threshold)
+  /** The ONE probe truth behind every Jaccard recall gate: each (i, j)
+    * with i a `probeSets` document whose id is below `probeMaxId`, j a
+    * `corpusSets` document, and J ≥ threshold, exact. The probe prefix
+    * is broadcast, so the cost is linear in the corpus and a gate runs
+    * at any scale, where the brute-force pair oracle is sf0.01-only (the
+    * p80/p28 discipline). Candidates are the size-filtered probe ×
+    * corpus pairs, verified by [[verifyJaccard]]; both frames are
+    * (id, set) as it reads them. A self-probe (the same frame twice)
+    * also returns i == j and j < i: a gate comparing against an i < j
+    * pair set filters i < j. Returns (i, j, jaccard). */
+  def jaccardProbeTruth(probeSets: DataFrame, corpusSets: DataFrame,
+                        probeMaxId: Long, threshold: Double): DataFrame = {
+    val probe = probeSets.filter(col("id") < probeMaxId)
+    val cands = corpusSets.select(col("id").as("j"), size(col("set")).as("n_j"))
+      .join(broadcast(probe.select(col("id").as("i"), size(col("set")).as("n_i"))),
+        sizeWithin(col("n_i"), col("n_j"), threshold))
       .select("i", "j")
+    verifyJaccard(cands, probe, corpusSets, threshold)
   }
 
-  /** Cross-frame variant of [[ngramJaccardProbeTruth]]: exact shingle
-    * Jaccard between every probe-prefix doc of `probeSide` and every doc
-    * of `corpusSide` — the truth set behind the banded incremental-index
-    * path's recall gate. Returns (probe_id, corpus_id). */
-  def crossJaccardProbeTruth(probeSide: DataFrame, corpusSide: DataFrame,
-                             idCol: String, textCol: String,
-                             probeMaxId: Long, threshold: Double,
-                             shingleN: Int = 3): DataFrame = {
-    val pr = broadcast(
-      hashedShingled(probeSide, idCol, textCol, shingleN)
-        .filter(col("id") < probeMaxId)
-        .select(col("id").as("probe_id"), col("shh").as("sh_p")))
-    hashedShingled(corpusSide, idCol, textCol, shingleN)
-      .select(col("id").as("corpus_id"), col("shh").as("sh_c"))
-      .join(pr,
-        size(col("sh_p")).cast("double") >= lit(threshold) * size(col("sh_c")) &&
-          size(col("sh_c")).cast("double") >= lit(threshold) * size(col("sh_p")))
-      .withColumn("c", size(array_intersect(col("sh_p"), col("sh_c"))))
-      .filter(col("c").cast("double") /
-        (size(col("sh_p")) + size(col("sh_c")) - col("c")).cast("double")
-        >= threshold)
-      .select("probe_id", "corpus_id")
-  }
-
+  /** (id, sh): each document's word n-gram shingles as strings — the
+    * minhash signature input, whose landed indexes pin the string-keyed
+    * hash arithmetic. */
   private[pipeline] def shingled(df: DataFrame, idCol: String, textCol: String,
                                  shingleN: Int = 3): DataFrame =
     df.select(col(idCol).as("id"),
       TextOps.shingles(TextOps.tokens(col(textCol)), shingleN).as("sh"))
       .filter(size(col("sh")) > 0)
 
-  /** The COMPILED hashed twin of [[shingled]]: (id, shh array<long>) of
-    * distinct shingle-hash surrogates straight from ShingleHashesExpr —
-    * no interpreted zip_with string chain, no separate xxhash64 pass
-    * (~14 s → sub-second over the ×10 corpus, ProbeWinnow r12). Every
-    * consumer that needs only shingle IDENTITY (postings co-occurrence,
-    * sizes, intersections) reads this; [[shingled]] remains for the
-    * minhash signature path, whose landed indexes pin the string-keyed
-    * hash arithmetic. */
-  private[pipeline] def hashedShingled(df: DataFrame, idCol: String,
-                                       textCol: String,
-                                       shingleN: Int = 3): DataFrame = {
+  /** The COMPILED hashed twin of [[shingled]]: (id, set) with `set` the
+    * document's sorted distinct shingle-hash surrogates (array<long>)
+    * straight from ShingleHashesExpr — no interpreted zip_with string
+    * chain, no separate xxhash64 pass (~14 s → sub-second over the ×10
+    * corpus, ProbeWinnow r12). It is the (id, set) frame
+    * [[verifyJaccard]] reads, and every consumer that needs only shingle
+    * IDENTITY (postings co-occurrence, sizes, intersections) reads it;
+    * [[shingled]] remains for the minhash signature path, whose landed
+    * indexes pin the string-keyed hash arithmetic. J over the
+    * surrogates equals J over the string shingles modulo 64-bit
+    * collisions. */
+  def hashedShingled(df: DataFrame, idCol: String, textCol: String,
+                     shingleN: Int = 3): DataFrame = {
     graft.functions.ShingleHashesExpr.register(df.sparkSession)
     df.select(col(idCol).as("id"),
       call_function("graft_shingle_hashes", col(textCol), lit(shingleN))
-        .as("shh"))
-      .filter(size(col("shh")) > 0)
+        .as("set"))
+      .filter(size(col("set")) > 0)
   }
 
   /** Near-duplicate pairs via WINNOWING fingerprints: candidates are
@@ -284,9 +230,10 @@ object Dedup {
     * docs, k=24 produced 109 covering all 25 true pairs).
     *
     * `dfCap > 0` drops fingerprints appearing in more than dfCap docs —
-    * the SAME scale knob as [[ngramJaccardPairs]]' shingle dfCap, for
-    * the same reason: a boilerplate 31-char run shared by a corpus-scale
-    * crowd generates quadratic candidates and carries no dedup signal.
+    * the same knob as the containment family's train-shingle cap
+    * ([[shinglePostings]]), for the same reason: a boilerplate 31-char
+    * run shared by a corpus-scale crowd generates quadratic candidates
+    * and carries no dedup signal.
     * Measured at the ×10 probe (r12, ProbeWinnow on the density-fixed
     * sf1 corpus): 9 fingerprints with df > 1000 carried 70% of the
     * 2.0·10⁷ candidate volume; the cap keeps 99.6% of postings and cuts
@@ -316,7 +263,7 @@ object Dedup {
             .filter(col("df") > dfCap).select("bkt"))
         fps.join(hot, Seq("bkt"), "left_anti")
       }
-    // the exchange is load-bearing (ngramJaccardPairs discipline):
+    // the exchange is load-bearing (the minhashPostings discipline):
     // ReuseExchange shares one shuffle between both self-join branches
     // and the bkt join is co-partitioned
     val parted = usable.repartition(col("bkt"))
@@ -327,19 +274,21 @@ object Dedup {
       .groupBy("i", "j").agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
       .select("i", "j")
-    verifyJaccard(candidates, df, idCol, textCol, 3, threshold)
+    val sets = graft.operators.Broadcasts.trackedPersist(
+      hashedShingled(df, idCol, textCol, 3))
+    verifyJaccard(candidates, sets, sets, threshold)
   }
 
   /** DECONTAMINATION: benchmark/eval probe docs detected inside a
-    * training corpus via the same shared-shingle inverted index as
-    * ngramJaccardPairs, but cross-set and ASYMMETRIC — the score is
-    * containment |T∩E| / |E| (how much of the eval doc appears in the
-    * training doc), the standard leakage metric: a long train doc that
-    * embeds a whole eval item scores 1.0 where jaccard would dilute it.
+    * training corpus via a shared-shingle inverted index, cross-set and
+    * ASYMMETRIC — the score is containment |T∩E| / |E| (how much of the
+    * eval doc appears in the training doc), the standard leakage metric:
+    * a long train doc that embeds a whole eval item scores 1.0 where
+    * jaccard would dilute it.
     * The probe set (benchmark suites: thousands of docs) is broadcast,
     * so cost is one pass over the train postings + a candidate-only
     * aggregation — never train×eval. `dfCap` caps train-side shingle
-    * document frequency exactly as in ngramJaccardPairs. Returns
+    * document frequency ([[shinglePostings]]). Returns
     * (train_id, eval_id, n_common, overlap). */
   def contaminationPairs(train: DataFrame, probe: DataFrame, idCol: String,
                          textCol: String, threshold: Double = 0.5,
@@ -347,7 +296,7 @@ object Dedup {
     require(threshold > 0, "threshold must be > 0 (overlap > 0 implies a shared shingle)")
     val tBase = hashedShingled(train, idCol, textCol, shingleN)
     val pBase = hashedShingled(probe, idCol, textCol, shingleN)
-    val pSized = pBase.select(col("id").as("eval_id"), size(col("shh")).as("n_e"))
+    val pSized = pBase.select(col("id").as("eval_id"), size(col("set")).as("n_e"))
     val tPosts = shinglePostings(tBase, dfCap)
       .select(col("sh_h"), col("id").as("train_id"))
     val pPosts = shinglePostings(pBase, 0)
@@ -483,19 +432,16 @@ object Dedup {
     val oldCand = oldDocs.join(
       candidates.select(col("old_id").as(idCol)).distinct(),
       Seq(idCol), "left_semi")
-    // verify on compiled hashed surrogates (the verifyJaccard shape);
-    // the minhash POSTINGS above keep string shingles — landed index
-    // signatures pin that arithmetic
-    val oldSh = hashedShingled(oldCand, idCol, textCol, shingleN)
-      .select(col("id").as("old_id"), col("shh").as("sh_o"))
-    val newSh = hashedShingled(newDocs, idCol, textCol, shingleN)
-      .select(col("id").as("new_id"), col("shh").as("sh_n"))
-    candidates.join(newSh, "new_id").join(oldSh, "old_id")
-      .withColumn("inter", size(array_intersect(col("sh_n"), col("sh_o"))))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("sh_n")) + size(col("sh_o")) - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("new_id", "old_id", "jaccard")
+    // verify on compiled hashed surrogates; the minhash POSTINGS above
+    // keep string shingles — landed index signatures pin that
+    // arithmetic. Persisted: the verify reads each side twice.
+    val newSets = graft.operators.Broadcasts.trackedPersist(
+      hashedShingled(newDocs, idCol, textCol, shingleN))
+    val oldSets = graft.operators.Broadcasts.trackedPersist(
+      hashedShingled(oldCand, idCol, textCol, shingleN))
+    verifyJaccard(candidates.select(col("new_id").as("i"), col("old_id").as("j")),
+        newSets, oldSets, threshold)
+      .select(col("i").as("new_id"), col("j").as("old_id"), col("jaccard"))
   }
 
   /** Right-to-be-forgotten RETRACTION: delete a document set from a
@@ -604,7 +550,7 @@ object Dedup {
   def dupSpanProfile(df: DataFrame, idCol: String, textCol: String,
                      window: Int = 8): DataFrame = {
     val posts = hashedShingled(df, idCol, textCol, window)
-      .select(col("id"), explode(col("shh")).as("wh"))
+      .select(col("id"), explode(col("set")).as("wh"))
     // shingles are distinct per doc, so the partition count = doc frequency
     val byWindow = org.apache.spark.sql.expressions.Window.partitionBy("wh")
     posts.withColumn("ndocs", count(lit(1)).over(byWindow))
@@ -838,7 +784,7 @@ object Dedup {
     * logical plan. */
   private def labelsFrame(spark: org.apache.spark.sql.SparkSession,
                           labels: Array[(Long, Long)]): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import org.apache.spark.sql.types.{StructField, StructType}
     val schema = StructType(Seq(
       StructField("v", LongType, nullable = false),
       StructField("lbl", LongType, nullable = false)))
@@ -970,247 +916,205 @@ object Dedup {
       .groupBy("v").agg(min(col("lbl")).as("lbl"))
   }
 
-  /** EXACT token-set Jaccard self-join by PREFIX FILTERING (Bayardo et
-    * al. AllPairs / Xiao et al. PPJoin): the published LOSSLESS
-    * alternative to [[ngramJaccardPairs]]'s df-cap.
-    *
-    * Principle: order the vocabulary globally by (df asc, token) —
-    * rarest first — and take each record's first |x| − ⌈t·|x|⌉ + 1
-    * tokens under that order as its prefix. If J(x,y) ≥ t the two
-    * prefixes MUST share a token (pigeonhole on the required overlap),
-    * so the candidate join runs over prefix postings only: each record
-    * contributes ~(1−t)·|x| postings, and they are its RAREST tokens,
-    * exactly the ones with short posting lists. No recall is lost —
-    * unlike dfCap, which trades bounded recall for linearity, prefix
-    * filtering prunes with a proof.
-    *
-    * Plan: one vocab aggregate, a broadcast rank join (a vocab is
-    * megabytes at any corpus scale — same argument as tfidf), one
-    * per-record window for the prefix cut (partitioned by id, scan
-    * local), the prefix-postings self-join, then an array_intersect
-    * verify on the candidate pairs only. The candidate volume still
-    * depends on the df of rare tokens — a degenerate corpus whose
-    * rarest tokens are hot (tiny vocab) degrades toward the full
-    * inverted index, with correctness intact.
-    *
-    * Returns (i, j, jaccard) with i < j, J ≥ threshold, exact. */
-  def prefixJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                         threshold: Double = 0.8): DataFrame =
-    prefixJaccardShared(df, idCol, textCol, threshold).pairs
+  /** The set a document contributes to [[jaccardJoin]]: its distinct
+    * `elements` and a long `surrogate` per element, on which the join
+    * keys its candidates and the verify intersects. */
+  sealed trait JaccardSets {
+    private[pipeline] def elements(text: Column): Column
+    private[pipeline] def surrogate(elem: Column): Column
+  }
 
-  /** [[prefixJaccardPairs]] plus the PERSISTED per-document set table it
-    * verifies against: `docSets` is (id, tr) where `tr` is the document's
-    * distinct-token set as xxhash64 surrogates (or raw token strings on
-    * the astronomically-rare non-injective corpus — either way Jaccard
-    * over `tr` EQUALS Jaccard over the token sets). Callers that need an
-    * independent exactness probe (p80's losslessness gate) derive their
-    * truth pairs from `docSets` instead of re-tokenizing the corpus: one
-    * tokenization feeds the join AND its audit, and the probe measures
-    * the same sets the verify stage used — so a probe miss can only mean
-    * pruning dropped a pair, never a tokenization drift. */
+  /** Distinct word tokens ([[TextOps.tokens]]). The surrogate is the
+    * token's xxhash64, which must be a BIJECTION of the vocabulary for
+    * |A∩B| to be exact: the join checks that on each corpus and falls
+    * back to token-string sets on a collision. */
+  case object WordSets extends JaccardSets {
+    private[pipeline] def elements(text: Column): Column =
+      array_distinct(TextOps.tokens(text))
+    private[pipeline] def surrogate(elem: Column): Column = xxhash64(elem)
+  }
+
+  /** Hashed word n-gram shingles (graft_shingle_hashes, the
+    * [[hashedShingled]] sets): already distinct longs, so each element
+    * is its own surrogate and there is no vocabulary to check. J over
+    * them equals J over the string shingles modulo 64-bit collisions. */
+  final case class ShingleSets(n: Int) extends JaccardSets {
+    private[pipeline] def elements(text: Column): Column =
+      call_function("graft_shingle_hashes", text, lit(n))
+    private[pipeline] def surrogate(elem: Column): Column = elem
+  }
+
+  /** The join's pairs plus the PERSISTED per-document set table it
+    * verified: `docSets` is (id, set), each document's set as sorted
+    * long surrogates (or token strings on the astronomically-rare
+    * non-injective word corpus — either way Jaccard over `set` EQUALS
+    * Jaccard over the extracted sets). A recall gate derives its
+    * [[jaccardProbeTruth]] from `docSets` instead of re-extracting the
+    * corpus: one extraction feeds the join AND its audit, so a probe miss
+    * can only mean pruning dropped a pair, never an extraction drift. */
   final case class PrefixJoin(pairs: DataFrame, docSets: DataFrame)
 
-  def prefixJaccardShared(df: DataFrame, idCol: String, textCol: String,
-                          threshold: Double = 0.8): PrefixJoin = {
+  /** EXACT set-Jaccard self-join by PREFIX FILTERING (Bayardo et al.
+    * AllPairs / Xiao et al. PPJoin, WWW 2008) over the sets `sets`
+    * extracts — word tokens (p80, p86) or hashed n-gram shingles (p10).
+    *
+    * Principle: order the elements globally by (df asc, element) —
+    * rarest first — and take each record's first |x| − ⌈t·|x|⌉ + 1
+    * elements under that order as its prefix. If J(x,y) ≥ t the two
+    * prefixes MUST share an element (pigeonhole on the required
+    * overlap), so the candidate join runs over prefix postings only:
+    * each record contributes ~(1−t)·|x| postings, and they are its
+    * RAREST elements, exactly the ones with short posting lists. No
+    * recall is lost — unlike a document-frequency cap, which drops true
+    * pairs whose every shared element is frequent, prefix filtering
+    * prunes with a proof.
+    *
+    * Plan: one vocab aggregate, a size-gated broadcast rank join (a
+    * vocab is megabytes at any corpus scale — same argument as tfidf),
+    * one per-record aggregate for the prefix cut, the prefix-postings
+    * self-join, then [[verifyJaccard]] on the candidate pairs only. The
+    * candidate volume still depends on the df of rare elements — a
+    * degenerate corpus whose rarest elements are hot (tiny vocab)
+    * degrades toward the full inverted index, with correctness intact.
+    *
+    * Returns (i, j, jaccard) with i < j, J ≥ threshold, exact, and the
+    * verified `docSets`. */
+  def jaccardJoin(df: DataFrame, idCol: String, textCol: String,
+                  threshold: Double, sets: JaccardSets): PrefixJoin = {
     require(threshold > 0 && threshold <= 1, s"threshold in (0,1], got $threshold")
-    // Both intermediates fan out: rp feeds the prefix cut AND the
-    // rank-set verify table; pref feeds BOTH sides of the candidate
-    // self-join. Un-persisted, each consumer replays tokenize + explode +
-    // rank join + two id-windows — measured 21.6 s -> ~8 s at sf0.1 from
-    // these two persists alone. Both tables are corpus-linear and skinny
-    // (postings of longs); MEMORY_AND_DISK spills rather than OOMs.
-    // posts feeds THREE consumers (the vocab aggregate, the prefix-cut
-    // join, the verify set table) — persist the skinny (id, tok) frame
-    // so tokenize + explode runs once. pref feeds both sides of the
-    // candidate self-join — persisted for the same reason (un-persisted,
-    // each consumer replays the id-windows; measured 21.6 s -> ~8 s at
-    // sf0.1 in r7 from these persists). Corpus-linear and skinny;
+    // posts feeds TWO consumers (the vocab aggregate and the rank join)
+    // — persist the skinny (id, tok) frame so extraction + explode runs
+    // once; docAgg feeds the prefix slice (both self-join sides) AND the
+    // verify set table. Un-persisted, each consumer replays the
+    // extraction and the id aggregate (measured 21.6 s -> ~8 s at sf0.1
+    // in r7 from these persists). Corpus-linear and skinny;
     // MEMORY_AND_DISK spills rather than OOMs.
-    val posts = tokenPostings(df, idCol, textCol)
-      .transform(graft.operators.Broadcasts.trackedPersist)
-    // ONE job materializes the vocab cache AND answers injectivity: the
-    // aggregate is the materializing action, so the broadcast gate can
-    // measure the populated cache without sizeGated's separate count
-    // (r10 paid two vocab jobs here)
-    val voc0 = graft.operators.Broadcasts.trackedPersist(vocabOf(posts))
-    val injRow = voc0.agg(count(lit(1)).as("c"),
-      countDistinct(col("h")).as("d")).head()
-    val injective = injRow.getLong(0) == injRow.getLong(1)
-    val voc = graft.operators.Broadcasts.gateMaterialized(voc0)
-    // single consumer (the per-doc aggregate) — no persist: the join
-    // streams out of the posts cache against the gated vocab
-    val rp = posts.join(voc, "tok")
-    // ONE per-doc aggregate feeds BOTH the prefix cut and the verify set
-    // table (r10 ran two separate groupBys over the postings — same
-    // shuffle twice). The sorted struct array is the prefix order AND
-    // carries the set surrogates; downstream derivations (slice, field
-    // projection) read its cache without reshuffling.
+    val posts = graft.operators.Broadcasts.trackedPersist(
+      setPostings(df, idCol, textCol, sets))
+    // ONE job materializes the vocab cache (the broadcast gate measures
+    // it) and, for word sets, answers surrogate injectivity; shingle
+    // hashes are their own surrogates, so their count only materializes
+    val (voc, injective) = sets match {
+      case WordSets =>
+        val voc0 = graft.operators.Broadcasts.trackedPersist(vocabOf(posts))
+        val r = voc0.agg(count(lit(1)), countDistinct(xxhash64(col("tok")))).head()
+        (graft.operators.Broadcasts.gateMaterialized(voc0), r.getLong(0) == r.getLong(1))
+      case ShingleSets(_) =>
+        (graft.operators.Broadcasts.sizeGated(vocabOf(posts)), true)
+    }
     val docAgg = graft.operators.Broadcasts.trackedPersist(
-      rp.groupBy("id")
-        .agg(array_sort(collect_list(struct(col("tdf"), col("tok"),
-          col("h")))).as("ts")))
+      docOrder(posts.join(voc, "tok")))
     // no persist on pref: both self-join sides re-derive it from the
-    // docAgg cache with a scan-local slice+posexplode — no shuffle, and
-    // skipping the cache write beats paying it for an 8k-row frame
-    val pref = prefixSlice(docAgg, threshold)
-    // LENGTH filter (the second PPJoin prune, equally lossless):
-    // J(x,y) >= t forces t*|x| <= |y| <= |x|/t, so cross-length
-    // candidates die INSIDE the join before any pair materializes
-    // downstream - measured 13.4M -> 3.4M at t=0.95 on the bounded-
-    // vocab corpus
-    // join on the LONG token hash, not the token string: the probe
-    // hashes the key once per posting pair, and long hashing beats
-    // string hashing. An xxhash64 collision between distinct tokens can
-    // only ADD candidate rows (a superset join); it cannot drop a true
-    // pair (same token => same hash), and the verify below stays exact.
+    // docAgg cache with a scan-local slice+posexplode — no shuffle
+    val pref = prefixSlice(docAgg, threshold, sets)
+    // join on the LONG surrogate, not the element: the probe hashes the
+    // key once per posting pair, and long hashing beats string hashing.
+    // A collision between distinct tokens can only ADD candidate rows (a
+    // superset join); it cannot drop a true pair (same token => same
+    // hash), and the verify stays exact.
     val a = pref.select(col("h"), col("id").as("i"), col("n").as("ni"),
       col("pos").as("pa"))
     val b = pref.select(col("h"), col("id").as("j"), col("n").as("nj"),
       col("pos").as("pb"))
+    // LENGTH filter ([[sizeWithin]], the second PPJoin prune, equally
+    // lossless): cross-length candidates die INSIDE the join before any
+    // pair materializes downstream — measured 13.4M -> 3.4M at t=0.95 on
+    // the bounded-vocab corpus.
     // POSITIONAL filter (PPJoin's third lossless prune, Xiao et al. §3):
-    // for a shared token at rank positions (pa, pb), common tokens ranked
-    // below it number at most min(pa,pb)-1 (they precede it in BOTH
-    // records) and those ranked at-or-above at most 1 + min(ni-pa, nj-pb),
-    // so overlap(x,y) <= min(pa,pb) + min(ni-pa, nj-pb). J >= t forces
-    // overlap >= ceil(t/(1+t)*(ni+nj)) =: alpha; the bound holds for
-    // EVERY shared prefix token, so dropping candidate rows with
-    // ubound < alpha loses no true pair (a true pair's every match row
-    // satisfies ubound >= overlap >= alpha). The 1e-9 slack keeps a
-    // float-exact alpha from rounding up and pruning a boundary pair.
+    // for a shared element at rank positions (pa, pb), common elements
+    // ranked below it number at most min(pa,pb)-1 (they precede it in
+    // BOTH records) and those ranked at-or-above at most 1 +
+    // min(ni-pa, nj-pb), so overlap(x,y) <= min(pa,pb) + min(ni-pa,
+    // nj-pb). J >= t forces overlap >= ceil(t/(1+t)*(ni+nj)) =: alpha;
+    // the bound holds for EVERY shared prefix element, so dropping
+    // candidate rows with ubound < alpha loses no true pair. The 1e-9
+    // slack keeps a float-exact alpha from rounding up and pruning a
+    // boundary pair.
     val alpha = ceil((col("ni") + col("nj")) * lit(threshold / (1.0 + threshold))
       - lit(1e-9))
-    // the same 1e-9 slack on the length filter: t·n floats ABOVE the
-    // exact integer product for many (n, t) pairs (100·0.55 =
-    // 55.000000000000007), and this prune is lossless-by-proof only if
-    // an exact-boundary pair (ni = t·nj) survives it
     val cands = a.join(b, "h")
       .filter(col("i") < col("j") &&
-        col("ni") >= lit(threshold) * col("nj") - lit(1e-9) &&
-        col("nj") >= lit(threshold) * col("ni") - lit(1e-9) &&
+        sizeWithin(col("ni"), col("nj"), threshold) &&
         (least(col("pa"), col("pb")) +
           least(col("ni") - col("pa"), col("nj") - col("pb"))) >= alpha)
       .select("i", "j").distinct()
-    // Verify on HASH-array sets (longs, not token strings:
-    // array_intersect hashes every element per pair, and integer
-    // hashing is several times cheaper). The long ids must be a
-    // BIJECTION of the vocabulary for |intersection| to be exact, so
-    // the one bounded aggregate below CHECKS xxhash64 injectivity on
-    // this corpus's cached vocabulary (collision odds ~ V²/2⁶⁴ ≈ 0.03
-    // even at 10⁹ tokens) and falls back to token-string sets in the
-    // astronomically-rare hit — exact by construction, never
-    // exact-with-high-probability. Candidates are the big side
-    // (quadratic on degenerate corpora - ScalingSpec) and should not be
-    // shuffled twice just to fetch two tiny arrays - BUT the set table
-    // is corpus-linear (one row per document), so the broadcast hint is
-    // applied ONLY under Broadcasts.sizeGated's measured byte cap: an
-    // explicit hint is honored regardless of autoBroadcastJoinThreshold
-    // and would fail outright (8 GB limit / driver OOM) on a corpus
-    // past the cap, where the gate instead emits no hint and the
-    // planner shuffles.
-    // derived from the docAgg cache (a field projection over the sorted
-    // struct array — scan-local, no second groupBy over the postings);
-    // the sizeGated count below doubles as docAgg's materializing action
-    // The surrogate arrays SORT ONCE per document (longs, scan-local)
-    // so the per-candidate intersection is an allocation-free linear
-    // merge inside codegen (graft_sorted_intersect_count) instead of
-    // array_intersect's per-pair hash set + materialized output array —
-    // the same swap Graphs.triangleStats measured 5.0 → 3.1 s at sf0.1.
-    // Sorting changes only element ORDER: |∩|, the set sizes, and every
-    // downstream Jaccard are unchanged (PrefixJoinSpec pins equality).
-    // The astronomically-rare non-injective fallback keeps token-string
-    // sets and the hash-based intersect (the kernel is long-typed).
-    val setExpr = if (injective)
-                    array_sort(transform(col("ts"), t => t.getField("h")))
-                  else transform(col("ts"), t => t.getField("tok"))
-    val rankSets = graft.operators.Broadcasts.sizeGated(
-      docAgg.select(col("id"), setExpr.as("tr")))
-    graft.functions.VectorExprs.register(df.sparkSession)
-    val interExpr =
-      if (injective) expr("graft_sorted_intersect_count(ta, tb)")
-      else size(array_intersect(col("ta"), col("tb"))).cast("long")
-    val pairs = cands
-      .join(rankSets.select(col("id").as("i"), col("tr").as("ta")), "i")
-      .join(rankSets.select(col("id").as("j"), col("tr").as("tb")), "j")
-      .withColumn("inter", interExpr)
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("ta")) + size(col("tb")) - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("i", "j", "jaccard")
-    PrefixJoin(pairs, rankSets)
+    // The verify set table, derived from the docAgg cache (a field
+    // projection over the sorted struct array — scan-local, no second
+    // groupBy over the postings); sizeGated's count doubles as docAgg's
+    // materializing action. The surrogates SORT ONCE per document
+    // (scan-local) for the verify's linear-merge intersect; the
+    // astronomically-rare non-injective word corpus keeps token-string
+    // sets, which the verify intersects by hash set instead — exact by
+    // construction, never exact-with-high-probability (collision odds
+    // ~ V²/2⁶⁴ ≈ 0.03 even at 10⁹ tokens). The table is corpus-linear
+    // (one row per document), so the broadcast hint is applied ONLY
+    // under Broadcasts.sizeGated's measured byte cap: an explicit hint
+    // is honored regardless of autoBroadcastJoinThreshold and would
+    // fail outright (8 GB limit / driver OOM) past it, where the gate
+    // instead emits no hint and the planner shuffles.
+    val setExpr =
+      if (injective) array_sort(transform(col("ts"), t => sets.surrogate(t.getField("tok"))))
+      else transform(col("ts"), t => t.getField("tok"))
+    val docSets = graft.operators.Broadcasts.sizeGated(
+      docAgg.select(col("id"), setExpr.as("set")))
+    PrefixJoin(verifyJaccard(cands, docSets, docSets, threshold), docSets)
   }
 
-  /** Distinct (id, tok, tdf, h) postings: each document's distinct
-    * tokens joined with their corpus document frequency `tdf` and
-    * 64-bit token hash `h`. The PPJoin machinery needs the vocabulary
-    * ORDERED rarest-first — which (tdf, tok) provides directly as a
-    * sort key — and a cheap join/verify surrogate for the token —
-    * which `xxhash64(tok)` provides. r8 materialized that order as a
-    * DENSE global row_number (a distributed range-partitioned sort of
-    * the whole vocabulary); r9 removes the sort entirely: no PPJoin
-    * stage needs rank VALUES, only the order and a bijection, so the
-    * vocab aggregate goes straight to the size-gated join (a vocabulary
-    * obeys Heaps' law — 10^8-10^9 tokens at web scale, past any
-    * unconditional broadcast). Hash collisions cannot lose a pair (the
-    * candidate join becomes a superset) and the verify checks
-    * injectivity before trusting hash sets (see prefixJaccardPairs). */
-  private def tokenPostings(df: DataFrame, idCol: String,
-                            textCol: String): DataFrame =
-    df.select(col(idCol).as("id"),
-      array_distinct(TextOps.tokens(col(textCol))).as("ts"))
+  /** Distinct (id, tok) postings: each document's extracted elements. */
+  private def setPostings(df: DataFrame, idCol: String, textCol: String,
+                          sets: JaccardSets): DataFrame = {
+    graft.functions.ShingleHashesExpr.register(df.sparkSession)
+    df.select(col(idCol).as("id"), sets.elements(col(textCol)).as("ts"))
       .filter(size(col("ts")) > 0)
       .select(col("id"), explode(col("ts")).as("tok"))
-
-  private def vocabOf(posts: DataFrame): DataFrame =
-    posts.groupBy("tok").agg(count(lit(1)).as("tdf"))
-      .withColumn("h", xxhash64(col("tok")))
-
-  private[pipeline] def rankedPostings(df: DataFrame, idCol: String,
-                             textCol: String): DataFrame = {
-    val posts = tokenPostings(df, idCol, textCol)
-    posts.join(graft.operators.Broadcasts.sizeGated(vocabOf(posts)), "tok")
   }
 
-  /** Keep each record's first |x| - ceil(t*|x|) + 1 rarest-first tokens
-    * (global order = (tdf asc, tok asc) — the order IS the sort key, no
-    * materialized rank needed), with each kept token's position `pos`
-    * (1-based) and the record set size `n` — `pos` feeds the positional
-    * filter. */
-  private def prefixCut(rp: DataFrame, threshold: Double): DataFrame =
-    // ONE shuffle: per-doc sorted token array (record sets are bounded —
-    // documents have bounded distinct tokens — so the array state is
-    // small), then explode ONLY the prefix slice. r8 paid two full
-    // windows over every posting (shuffle + per-id sort of the whole
-    // posting stream, then a filter that threw 95% of it away); the
-    // aggregate emits |prefix| rows per doc directly.
-    prefixSlice(rp.groupBy("id")
-      .agg(array_sort(collect_list(struct(col("tdf"), col("tok"), col("h"))))
-        .as("ts")), threshold)
+  /** (tok, tdf): each element's corpus document frequency. The PPJoin
+    * machinery needs the elements ORDERED rarest-first, which (tdf, tok)
+    * provides directly as a sort key — no stage needs rank VALUES, so
+    * there is no global sort (r9), and the vocab aggregate goes straight
+    * to the size-gated join (a vocabulary obeys Heaps' law — 10^8-10^9
+    * tokens at web scale, past any unconditional broadcast). */
+  private def vocabOf(posts: DataFrame): DataFrame =
+    posts.groupBy("tok").agg(count(lit(1)).as("tdf"))
 
-  /** The explode-only half of [[prefixCut]]: from the per-doc sorted
-    * (tdf, tok, h) array, emit each record's prefix tokens with position
-    * and set size. Split out so [[prefixJaccardShared]] can feed it the
-    * SAME persisted per-doc aggregate that the verify set table derives
-    * from — slice and posexplode are scan-local on the cache. */
-  private def prefixSlice(docAgg: DataFrame, threshold: Double): DataFrame = {
+  /** ONE shuffle: each document's (tdf, tok) array sorted rarest-first
+    * (record sets are bounded — documents have bounded distinct
+    * elements — so the array state is small). r8 paid two full windows
+    * over every posting instead. */
+  private def docOrder(rankedPosts: DataFrame): DataFrame =
+    rankedPosts.groupBy("id")
+      .agg(array_sort(collect_list(struct(col("tdf"), col("tok")))).as("ts"))
+
+  /** From the per-doc sorted (tdf, tok) array, emit each record's first
+    * |x| - ceil(t*|x|) + 1 elements as (tok, h, id, n, pos): `h` the
+    * element's surrogate, `pos` its 1-based position (for the positional
+    * filter), `n` the record's set size. Slice and posexplode are
+    * scan-local on the docAgg cache. */
+  private def prefixSlice(docAgg: DataFrame, threshold: Double,
+                          sets: JaccardSets): DataFrame = {
     docAgg
       .withColumn("n", size(col("ts")))
       // 1e-9 slack: n·t floats above the exact integer product for many
       // (n, t) pairs (100·0.55 → ceil 56, not 55), which would shorten
-      // the prefix by one token and silently lose boundary true pairs —
-      // the same guard alpha already carries. Slack only ever LENGTHENS
-      // the prefix, adding candidates the exact verify then rejects.
+      // the prefix by one element and silently lose boundary true pairs
+      // — the same guard alpha carries. Slack only ever LENGTHENS the
+      // prefix, adding candidates the exact verify then rejects.
       .withColumn("plen",
         (col("n") - ceil(col("n") * lit(threshold) - lit(1e-9)) + 1).cast("int"))
       .select(col("id"), col("n"),
         posexplode(slice(col("ts"), lit(1), col("plen"))).as(Seq("p0", "t")))
-      .select(col("t.tok").as("tok"), col("t.h").as("h"), col("id"),
-        col("n"), (col("p0") + 1).as("pos"))
+      .select(col("t.tok").as("tok"), sets.surrogate(col("t.tok")).as("h"),
+        col("id"), col("n"), (col("p0") + 1).as("pos"))
   }
 
-  /** Prefix-postings candidate volume vs the full inverted index - the
-    * measurable pruning claim behind [[prefixJaccardPairs]]. */
+  /** Prefix-postings candidate volume vs the full inverted index — the
+    * measurable pruning claim behind [[jaccardJoin]]. */
   private[pipeline] def prefixPostings(df: DataFrame, idCol: String,
-                                       textCol: String,
-                                       threshold: Double): DataFrame =
-    prefixCut(rankedPostings(df, idCol, textCol), threshold)
+                                       textCol: String, threshold: Double,
+                                       sets: JaccardSets): DataFrame = {
+    val posts = setPostings(df, idCol, textCol, sets)
+    prefixSlice(docOrder(posts.join(
+      graft.operators.Broadcasts.sizeGated(vocabOf(posts)), "tok")), threshold, sets)
+  }
 }

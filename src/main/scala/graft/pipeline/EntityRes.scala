@@ -21,8 +21,8 @@ object EntityRes {
     * are counted with one skinny aggregate and blocks above `blockCap`
     * are dropped LOUDLY into the returned accounting rather than joined
     * — a degenerate key (empty names, a boilerplate token) would
-    * otherwise quadratically explode, the exact failure mode dfCap
-    * guards in [[Dedup.ngramJaccardPairs]]. Stage 3 (verify): the
+    * otherwise quadratically explode, the exact failure mode the
+    * containment family's shingle cap guards ([[Dedup.shinglePostings]]). Stage 3 (verify): the
     * block-keyed self-equi-join (a shuffle hash join on the key, never a
     * cartesian) emits ordered pairs id_a < id_b and keeps those with
     * levenshtein ≤ maxEdits.

@@ -164,9 +164,10 @@ object CurationQueries extends QueryModule {
         // boundary pair. The floor still catches systematic breakage
         // (parameter drift, seed mismatch ⇒ 100% miss) at any scale.
         val truth = graft.operators.Broadcasts.trackedPersist(
-          Dedup.crossJaccardProbeTruth(newDocs, oldDocs,
-            "doc_id", "text", probeMaxId = 450, threshold = 0.5)
-            .select(col("probe_id").as("new_id"), col("corpus_id").as("old_id")))
+          Dedup.jaccardProbeTruth(Dedup.hashedShingled(newDocs, "doc_id", "text"),
+            Dedup.hashedShingled(oldDocs, "doc_id", "text"),
+            probeMaxId = 450, threshold = 0.5)
+            .select(col("i").as("new_id"), col("j").as("old_id")))
         val nTruth = truth.count()
         val missed = truth.join(o.select("new_id", "old_id"),
           Seq("new_id", "old_id"), "left_anti").count()
@@ -961,9 +962,8 @@ object CurationQueries extends QueryModule {
     //      4.6e10 at the sf1 probe) -------------------------------------
     "p80_prefix_jaccard" -> ((s, dir) => {
       val d = docs(s, dir)
-      val shared = Dedup.prefixJaccardShared(d, "doc_id", "text",
-        threshold = 0.95)
-      val rawPairs = shared.pairs
+      val joined = Dedup.jaccardJoin(d, "doc_id", "text", 0.95, Dedup.WordSets)
+      val rawPairs = joined.pairs
         .select(col("i"), col("j"), round(col("jaccard"), 6).as("jaccard"))
       val out = if (!graft.Gates.enabled) rawPairs
       else {
@@ -977,33 +977,16 @@ object CurationQueries extends QueryModule {
       // broadcast build, contending for the same cache (r10 bench
       // recorded 4x interleaved/solo on exactly this shape).
       outP.count()
-      // losslessness probe (the p09 discipline): brute-force the exact
-      // pair set over a broadcast id prefix — linear in the corpus — and
-      // require the PPJoin found every one. Truth pairs derive from the
-      // SAME persisted docSets frame the PPJoin's verify stage read (one
-      // tokenization for join + audit; Jaccard over the hash surrogates
-      // equals Jaccard over token sets — injectivity is checked inside
-      // prefixJaccardShared, which falls back to raw tokens on a hit).
-      val toks = shared.docSets.select(col("id"), col("tr").as("ts"))
-      // probe prefix 150: the corpus plants near-dup mass uniformly in
-      // id space, so the low prefix carries thousands of true pairs at
-      // sf0.1 already — and the gate's cost is probeMax × corpus
-      // intersects (measured ~16 s at probeMax=500/sf0.1, ~1.5 s here)
-      val probe = broadcast(toks.filter(col("id") < 150)
-        .select(col("id").as("i"), col("ts").as("ts_i")))
-      // the size prefilter is EXACT for Jaccard >= t (t·|b| ≤ |a| ≤
-      // |b|/t) — it costs nothing and prunes when doc sizes vary (the
-      // synthetic corpus's distinct-token counts cluster, so little
-      // pruning HERE, but the gate also runs on real corpora)
-      val truth = toks.select(col("id").as("j"), col("ts").as("ts_j"))
-        .join(probe, col("i") < col("j") &&
-          size(col("ts_i")).cast("double") >= lit(0.95) * size(col("ts_j")) &&
-          size(col("ts_j")).cast("double") >= lit(0.95) * size(col("ts_i")))
-        .withColumn("c", size(array_intersect(col("ts_i"), col("ts_j"))))
-        .filter(col("c").cast("double") /
-          (size(col("ts_i")) + size(col("ts_j")) - col("c")).cast("double")
-          >= 0.95)
-        .select("i", "j")
+      // losslessness probe (the p09 discipline): the exact pair set over
+      // a broadcast id prefix — linear in the corpus — from the SAME
+      // persisted docSets the join verified, and the join must have
+      // found every one. Probe prefix 150: the corpus plants near-dup
+      // mass uniformly in id space, so the low prefix carries thousands
+      // of true pairs at sf0.1 already — and the gate's cost is
+      // probeMax × corpus intersects (measured ~16 s at probeMax=500/
+      // sf0.1, ~1.5 s here)
+      val truth = Dedup.jaccardProbeTruth(joined.docSets, joined.docSets,
+        probeMaxId = 150, threshold = 0.95).filter(col("i") < col("j"))
       val missed = truth
         .join(outP.select("i", "j"), Seq("i", "j"), "left_anti").count()
       require(missed == 0L,
@@ -1319,7 +1302,7 @@ object CurationQueries extends QueryModule {
     * candidates) on web corpora where prefix postings go hot. */
   private def groupSplitDf(s: SparkSession, dir: String,
                            pairsOf: DataFrame => DataFrame = d =>
-                             Dedup.prefixJaccardPairs(d, "doc_id", "text", 0.95))
+                             Dedup.jaccardJoin(d, "doc_id", "text", 0.95, Dedup.WordSets).pairs)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val d = docs(s, dir)

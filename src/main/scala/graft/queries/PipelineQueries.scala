@@ -304,29 +304,29 @@ object PipelineQueries extends QueryModule {
         .withColumn("n_r3_hits", lit(nHits3))
     }),
 
-    // ---- exact n-gram Jaccard dedup (inverted-index bucketing: the
-    //      oracle's brute-force set must match EXACTLY, unlike p04's
-    //      probabilistic LSH which the oracle happens to match because
-    //      planted dups are high-similarity) -----------------------------
+    // ---- exact n-gram Jaccard dedup (the prefix-filtered Jaccard join
+    //      over hashed 3-shingle sets: the oracle's brute-force set must
+    //      match EXACTLY, unlike p04's probabilistic LSH which the oracle
+    //      happens to match because planted dups are high-similarity) ----
     "p10_ngram_jaccard_dedup" -> ((s, dir) => {
       val d = docs(s, dir)
-      val raw = Dedup.ngramJaccardPairs(d, "doc_id", "text", threshold = 0.5)
-      val out = if (!graft.Gates.enabled) raw else {
-        // dfCap losslessness gate (sf1 tier: the brute-force pair oracle
-        // is sf0.01-only): EXACT shingle-Jaccard truth over a broadcast
-        // id prefix — linear in the corpus — must be a subset of the
-        // dfCap'd result; a capped-away true pair trips it at any scale.
+      val joined = Dedup.jaccardJoin(d, "doc_id", "text", 0.5, Dedup.ShingleSets(3))
+      val out = if (!graft.Gates.enabled) joined.pairs else {
+        // losslessness gate (sf1 tier: the brute-force pair oracle is
+        // sf0.01-only): the exact probe truth over a broadcast id prefix
+        // of the join's own docSets — linear in the corpus — must be a
+        // subset of the result; a pruned true pair trips it at any scale.
         // The gate (and the persist+materialize that makes its double
         // consumption safe) lives OFF the bench path — it audits the
         // operator, it isn't the operator (the r11 bench-timeout lesson).
-        val o = graft.operators.Broadcasts.trackedPersist(raw)
+        val o = graft.operators.Broadcasts.trackedPersist(joined.pairs)
         o.count() // materialize before the probe (p80 discipline)
-        val truth = Dedup.ngramJaccardProbeTruth(d, "doc_id", "text",
-          probeMaxId = 150, threshold = 0.5)
+        val truth = Dedup.jaccardProbeTruth(joined.docSets, joined.docSets,
+          probeMaxId = 150, threshold = 0.5).filter(col("i") < col("j"))
         val missed = truth.join(o.select("i", "j"), Seq("i", "j"),
           "left_anti").count()
         require(missed == 0L,
-          s"ngramJaccardPairs dfCap dropped $missed probe-prefix true pair(s)")
+          s"prefix Jaccard join dropped $missed probe-prefix true pair(s)")
         o
       }
       out.orderBy("i", "j")

@@ -173,4 +173,31 @@ class StreamLoadSpec extends SparkSpec {
       assert(seen.size == 2) // one request per non-empty partition
     }
   }
+
+  test("gendata heads every BITMAP/HLL part file with the mapping loadFile sends as columns") {
+    withServer(ok(_)) { (port, seen) =>
+      val ddl = Files.createTempFile("sl_ddl", ".sql")
+      Files.writeString(ddl, "CREATE TABLE bh (id bigint NOT NULL, " +
+        "b bitmap NOT NULL, h hll NULL)")
+      val out = Files.createTempDirectory("sl_gen").toString
+      graft.cli.Cli.run(spark, "gendata", Map("ddl" -> ddl.toString,
+        "out" -> out, "rows" -> "40", "rows-per-file" -> "15"))
+      val mapping = graft.gen.TableGen.streamLoadMapping(
+        graft.ddl.DorisDdl.parseCreateTable(Files.readString(ddl)),
+        graft.genrule.GenRules.buildEnv(graft.genrule.GenRules.empty)).get
+      val dir = s"$out/bh/conf_0"
+      val parts = Files.list(Paths.get(dir)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.endsWith(".csv"))
+      assert(parts.length >= 2)
+      parts.foreach(p => assert(Files.readAllLines(p).get(0) == mapping))
+      StreamLoad.loadDir(StreamLoad.Config("127.0.0.1", port), "db1", "bh", dir)
+      assert(seen.size == parts.length)
+      seen.foreach { s =>
+        assert(s.headers("columns") == mapping.stripPrefix(StreamLoad.FirstLinePrefix))
+        assert(s.headers("skip_lines") == "1")
+      }
+      // the rows follow the mapping line: 40 generated rows in all
+      assert(seen.map(_.body.split("\n").length - 1).sum == 40)
+    }
+  }
 }

@@ -29,8 +29,8 @@ class PipelineSpec extends SparkSpec {
     assert(lsh == exact)
   }
 
-  test("n-gram Jaccard inverted-index dedup is EXACT vs brute force") {
-    val ix = Dedup.ngramJaccardPairs(docs, "doc_id", "text", threshold = 0.5)
+  test("n-gram Jaccard prefix join is EXACT vs brute force") {
+    val ix = Dedup.jaccardJoin(docs, "doc_id", "text", 0.5, Dedup.ShingleSets(3)).pairs
       .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val sh = docs.select(col("doc_id").as("id"),
       TextOps.shingles(TextOps.tokens(col("text"))).as("sh")).filter(size(col("sh")) > 0)
@@ -40,11 +40,21 @@ class PipelineSpec extends SparkSpec {
       .filter(col("jac") >= 0.5)
       .select(col("a.id"), col("b.id")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty && ix == exact)
-    // dfCap caps candidate volume; at near-dup thresholds the planted
-    // pairs share many non-ubiquitous shingles, so none are lost
-    val capped = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 0.5, dfCap = 20)
-      .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(capped == exact)
+  }
+
+  test("n-gram Jaccard join keeps a true pair whose every shared shingle has df > 1000") {
+    // 1100 fillers `a b c d e` + 10 unique words lift the df of the
+    // pair's only shared shingles (a b c, b c d, c d e) to 1102, past
+    // the 1000 a document-frequency cap drops: a capped inverted index
+    // loses the pair (J = 3/5); the prefix filter keys each doc on its
+    // RAREST shingles and, by its pigeonhole proof, still pairs them.
+    // Fillers score J = 3/14 against the pair and 3/23 among themselves.
+    val fill = (1 to 1100).map(n =>
+      (1000L + n, "a b c d e " + (1 to 10).map(k => s"u${n}_$k").mkString(" ")))
+    val df = (Seq((1L, "a b c d e f1"), (2L, "a b c d e f2")) ++ fill).toDF("doc_id", "text")
+    val got = Dedup.jaccardJoin(df, "doc_id", "text", 0.5, Dedup.ShingleSets(3)).pairs
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(got == Map((1L, 2L) -> 0.6))
   }
 
   test("dfCap default kills the quadratic candidates of an ubiquitous shingle") {
@@ -70,9 +80,9 @@ class PipelineSpec extends SparkSpec {
     assert(uncapped >= 4 * 780L, s"uncapped=$uncapped")
     // capped: only the rare shingles of the planted dup pair remain
     assert(capped < 40, s"capped=$capped should be linear, not quadratic")
-    // and the capped DEFAULT path still finds exactly the true pair when
-    // the cap actually bites (dfCap=10 < 40 here)
-    val pairs = Dedup.ngramJaccardPairs(df, "doc_id", "text", 0.5, dfCap = 10)
+    // and the n-gram Jaccard join finds exactly the true pair on this
+    // corpus: the prefix filter keys each doc on its rarest shingles
+    val pairs = Dedup.jaccardJoin(df, "doc_id", "text", 0.5, Dedup.ShingleSets(3)).pairs
       .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((101L, 102L)))
   }

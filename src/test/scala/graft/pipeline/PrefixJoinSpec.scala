@@ -3,8 +3,8 @@ package graft.pipeline
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Dedup.prefixJaccardPairs — exact set-similarity join by prefix
-  * filtering (AllPairs/PPJoin), plus Series.markovTransitions. */
+/** Dedup.jaccardJoin over word sets — exact set-similarity join by
+  * prefix filtering (AllPairs/PPJoin), plus Series.markovTransitions. */
 class PrefixJoinSpec extends SparkSpec {
   import spark.implicits._
 
@@ -30,7 +30,7 @@ class PrefixJoinSpec extends SparkSpec {
 
   test("prefix filtering is lossless at several thresholds") {
     for (t <- Seq(0.5, 0.66, 0.8, 1.0)) {
-      val got = Dedup.prefixJaccardPairs(docs, "doc_id", "text", t)
+      val got = Dedup.jaccardJoin(docs, "doc_id", "text", t, Dedup.WordSets).pairs
         .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val want = brute(t).select("i", "j2").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -39,7 +39,7 @@ class PrefixJoinSpec extends SparkSpec {
   }
 
   test("exact-duplicate pair scores 1.0; near pair scores its true Jaccard") {
-    val out = Dedup.prefixJaccardPairs(docs, "doc_id", "text", 0.6)
+    val out = Dedup.jaccardJoin(docs, "doc_id", "text", 0.6, Dedup.WordSets).pairs
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(out((1L, 3L)) === 1.0)
     assert(math.abs(out((1L, 2L)) - 4.0 / 6.0) < 1e-12)
@@ -47,8 +47,8 @@ class PrefixJoinSpec extends SparkSpec {
   }
 
   test("prefix postings shrink as the threshold rises (the pruning claim)") {
-    val loose = Dedup.prefixPostings(docs, "doc_id", "text", 0.5).count()
-    val tight = Dedup.prefixPostings(docs, "doc_id", "text", 0.95).count()
+    val loose = Dedup.prefixPostings(docs, "doc_id", "text", 0.5, Dedup.WordSets).count()
+    val tight = Dedup.prefixPostings(docs, "doc_id", "text", 0.95, Dedup.WordSets).count()
     val full = docs.select(explode(array_distinct(
       TextOps.tokens(col("text"))))).count()
     assert(tight < loose)

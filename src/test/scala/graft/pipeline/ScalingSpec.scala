@@ -150,12 +150,14 @@ class ScalingSpec extends SparkSpec {
     // corpus EXACT shared-key Jaccard is inherently quadratic (measured
     // exponent 1.96) and no df cap can fix it without destroying recall;
     // the scale path for bounded-vocabulary fuzz is minhash (p04, slope
-    // 1.01 on the same corpus). (2) What the cap DOES guarantee — on any
-    // corpus — is the envelope Σ c·(c−1)/2 ≤ cap/2 · postings, linear in
-    // corpus size; asserted on the real testdata below. On a Heaps-law
-    // corpus (vocabulary grows with the corpus, df bounded except
-    // boilerplate — real web text) the slope itself is linear; asserted
-    // on a synthetic one here.
+    // 1.01 on the same corpus). On a Heaps-law corpus (vocabulary grows
+    // with the corpus, df bounded except boilerplate — real web text)
+    // p10's candidates — the prefix postings of its shingle-set Jaccard
+    // join — grow linearly; asserted on a synthetic one here. (2) What a
+    // df cap DOES guarantee — on any corpus — is the envelope
+    // Σ c·(c−1)/2 ≤ cap/2 · postings, linear in corpus size; asserted on
+    // the real testdata below for the containment family's train-shingle
+    // cap, the cap's remaining consumer.
     def heaps(n: Int): DataFrame = spark.range(n).select(col("id"),
       // 40 id-prefixed tokens per doc (fresh vocabulary per doc); every
       // 20th doc repeats its predecessor's stream (planted near-dups at
@@ -165,15 +167,15 @@ class ScalingSpec extends SparkSpec {
         .as("text"))
     val (n1, n2) = (500L, 5000L)
     assertLinear("ngram-jaccard(p10, Heaps corpus)", 1.35, n1,
-      candVolume(Dedup.shinglePostings(Dedup.hashedShingled(heaps(500), "id", "text"), 1000), "sh_h"),
+      candVolume(Dedup.prefixPostings(heaps(500), "id", "text", 0.5, Dedup.ShingleSets(3)), "tok"),
       n2,
-      candVolume(Dedup.shinglePostings(Dedup.hashedShingled(heaps(5000), "id", "text"), 1000), "sh_h"))
+      candVolume(Dedup.prefixPostings(heaps(5000), "id", "text", 0.5, Dedup.ShingleSets(3)), "tok"))
 
     val capDefault = 1000
     val posts = Dedup.shinglePostings(Dedup.hashedShingled(docs(sfLarge), "doc_id", "text"), capDefault)
     val nPosts = posts.count()
     val vol = candVolume(posts, "sh_h")
-    info(f"ngram-jaccard default cap: $vol%d pairs vs envelope ${capDefault / 2}·$nPosts%d")
+    info(f"contamination train-shingle default cap: $vol%d pairs vs envelope ${capDefault / 2}·$nPosts%d")
     assert(vol <= capDefault.toLong / 2 * nPosts,
       s"candidate volume $vol exceeds the dfCap linear envelope " +
         s"(${capDefault / 2} x $nPosts postings) — the cap is not binding")
@@ -314,11 +316,11 @@ class ScalingSpec extends SparkSpec {
         k -> concat('w', CAST(id - (CASE WHEN id % 20 = 1 THEN 1 ELSE 0 END) AS STRING), '_', CAST(k AS STRING))))""")
         .as("text"))
     assertLinear("prefix-jaccard(p80, Heaps corpus)", 1.35, 500L,
-      candVolume(Dedup.prefixPostings(heaps(500), "id", "text", 0.8), "tok"),
+      candVolume(Dedup.prefixPostings(heaps(500), "id", "text", 0.8, Dedup.WordSets), "tok"),
       5000L,
-      candVolume(Dedup.prefixPostings(heaps(5000), "id", "text", 0.8), "tok"))
+      candVolume(Dedup.prefixPostings(heaps(5000), "id", "text", 0.8, Dedup.WordSets), "tok"))
     val d = docs(sfLarge)
-    val pref = candVolume(Dedup.prefixPostings(d, "doc_id", "text", 0.95), "tok")
+    val pref = candVolume(Dedup.prefixPostings(d, "doc_id", "text", 0.95, Dedup.WordSets), "tok")
     val full = candVolume(d.select(col("doc_id").as("id"),
       explode(array_distinct(split(trim(lower(col("text"))), "\\s+"))).as("tok")),
       "tok")
@@ -400,7 +402,7 @@ class ScalingSpec extends SparkSpec {
     val bk = concat(substring(col("nm"), 1, 2), lit("#"),
       length(col("nm")).cast("string"))
     def runBoth() = (
-      Dedup.prefixJaccardPairs(d, "doc_id", "text", 0.9)
+      Dedup.jaccardJoin(d, "doc_id", "text", 0.9, Dedup.WordSets).pairs
         .orderBy("i", "j").collect().toSeq,
       EntityRes.blockedPairs(recs, "id", "nm", bk, maxEdits = 3)
         .orderBy("id_a", "id_b").collect().toSeq)
@@ -412,7 +414,7 @@ class ScalingSpec extends SparkSpec {
     // which would leak stale BroadcastHashJoins into the plan assertions.
     spark.catalog.clearCache()
     try {
-      val forcedJac = Dedup.prefixJaccardPairs(d, "doc_id", "text", 0.9)
+      val forcedJac = Dedup.jaccardJoin(d, "doc_id", "text", 0.9, Dedup.WordSets).pairs
       val gotPairs = forcedJac.orderBy("i", "j").collect().toSeq
       // The only broadcast allowed is Ranks' per-partition OFFSETS join
       // (exactly numPartitions rows — bounded by construction); every
