@@ -22,6 +22,9 @@ object Session {
   private lazy val warehouse =
     java.nio.file.Files.createTempDirectory("graft_wh").toString
 
+  /** Entries of Spark's JVM-wide cache of compiled classes. */
+  private val CodegenCacheEntries = 1000
+
   def apply(cpus: Int): SparkSession = apply(cpus, s"local[$cpus]")
 
   /** `master` overrides `local[cpus]` (the CLI's `SPARK_MASTER`);
@@ -41,6 +44,12 @@ object Session {
       // generated random map keys may collide; keep map building total
       .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
       .config("spark.ui.enabled", "false")
+      // Spark's default cache of 100 compiled classes thrashes on a
+      // replay: a second identical serial pass over one audit log's
+      // statements recompiled 319 of its 367 classes; at 1000 it
+      // compiled none. A static conf: the JVM-wide cache is sized once,
+      // by the session in use when the first class compiles.
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // The remaining WindowExec no-partition warnings all come from the

@@ -97,12 +97,17 @@ object Tables {
   }
 
   /** Register every table as a temp view (for the spark.sql surface).
-    * Memoized per (session, dir): many queries call this and re-reading
-    * ten parquet footers per query is pure fixed overhead. */
-  private val registered = scala.collection.mutable.Set.empty[(SparkSession, String)]
-  def registerAll(spark: SparkSession, dir: String): Unit = synchronized {
-    if (registered.add((spark, dir)))
+    * The view names carry no dir, so a session holds one dir's views at a
+    * time: the memo keeps each session's last dir and re-registers when
+    * the dir changes. Many queries call this, and re-reading ten parquet
+    * footers per query is pure fixed overhead. Weak keys: the memo never
+    * keeps a session alive. */
+  private val registered = new java.util.WeakHashMap[SparkSession, String]()
+  def registerAll(spark: SparkSession, dir: String): Unit = registered.synchronized {
+    if (registered.get(spark) != dir) {
       names.foreach(n => t(spark, dir, n).createOrReplaceTempView(n))
+      registered.put(spark, dir)
+    }
   }
 }
 

@@ -4,17 +4,32 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** Similarity search over an embedding column (Array[Float]).
+/** Similarity search, dedup and data selection over an embedding column
+  * (`vec_id`, `embedding: Array[Float]`).
   *
-  *   - bruteForceTopK: exact top-k cosine against a SMALL query set —
-  *     O(n·q) via a broadcast join, the correctness baseline. Never
-  *     all-pairs: the query side must be broadcastable.
-  *   - lshNeighbors: random-hyperplane LSH — each vector is hashed to a
-  *     bucket by the sign pattern of `planes` pseudo-random projections;
-  *     neighbor search joins only within buckets (shuffle keyed by
-  *     bucket). The scale path: candidate cost ~ n·E[bucket size], and
-  *     hyperplanes are derived from hashes, so bucketing is deterministic
-  *     and needs no driver-side random state.
+  *   - Exact, with one small side broadcast — the truths every
+  *     approximate path is graded against: [[cosine]] and [[l2sq]] (the
+  *     scores), [[bruteForceTopK]] / [[bruteForceTopKL2]] (top-k of a
+  *     small query set), [[exactProbePairs]] (pairs over a probe prefix),
+  *     [[semanticContamination]], [[bitextMargin]], [[hardNegatives]].
+  *   - Hyperplane LSH — no training; buckets are the sign pattern of
+  *     hash-derived projections, so bucketing is deterministic and joins
+  *     only within buckets: [[lshNeighbors]] (top-1),
+  *     [[cosineNearDupPairs]] (pairs ≥ threshold), [[filteredTopK]]
+  *     (label in the bucket key), [[bitextMarginIndexed]].
+  *     [[autoLshParamsDetailed]] sizes planes and tables from n;
+  *     [[nearDupPairsAuto]], [[lshTop1Auto]] and [[bitextMarginAuto]]
+  *     dispatch between the LSH and the exact or cell regimes.
+  *   - Trained cells — one driver-side core: `trainingSample` (bounded,
+  *     hash-ordered), `lloyd` (cosine or L2), `nearestCells` (the one
+  *     assignment rule). [[cosineCentroids]] fits; [[kmeansCells]]
+  *     assigns; [[ivfTopK]] searches; [[semDedupPairs]] and
+  *     [[semDedupPairsProbed]] are SemDeDup; [[cellTop1]] is cell-probed
+  *     top-1; [[pqTrain]], [[pqCodebookDF]], [[pqEncode]] and [[pqTopK]]
+  *     are product quantization.
+  *   - Corpus-level: [[kCenterSelect]] (greedy k-center),
+  *     [[embeddingDrift]], [[whiten]] (ZCA), [[randomProjection]] (JL
+  *     sketches).
   *
   * All per-element math runs in compiled Catalyst expressions
   * (graft.functions.VectorExprs) — no UDFs, no interpreted
@@ -68,18 +83,12 @@ object Ann {
     graft.functions.VectorExprs.register(emb.sparkSession)
     val cents = cosineCentroids(emb, nCells)
     val corpus = emb.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("n_emb"), cellOf(col("embedding"), cents).as("cell"))
-    val centArr = centArrOf(cents)
-    // round the probe ranking too (house rule): a near-tie between two
-    // centroids flipped by FP accumulation order changes which CELLS are
-    // scanned — a different neighbor set entirely, not just a rank swap
-    val wProbe = Window.partitionBy("query_id").orderBy(col("cc").desc, col("c.cell"))
-    val probed = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      .select(col("query_id"), col("q_emb"), explode(centArr).as("c"))
-      .withColumn("cc", round(cosine(col("q_emb"), col("c.cent")), 8))
-      .withColumn("rk", row_number().over(wProbe))
-      .filter(col("rk") <= nProbe)
-      .select(col("query_id"), col("q_emb"), col("c.cell").as("cell"))
+      col("embedding").as("n_emb"), nearestCells(col("embedding"), cents, 1).as("cell"))
+    // the query probe is the same rule as the corpus side: a near-tie
+    // between two centroids flipped by FP accumulation order would
+    // change which CELLS are scanned, not just a rank
+    val probed = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
+      nearestCells(col("embedding"), cents, nProbe).as("cell"))
     val wRank = Window.partitionBy("query_id").orderBy(col("cos_r").desc, col("neighbor_id"))
     probed.join(corpus, "cell")
       .filter(col("query_id") =!= col("neighbor_id"))
@@ -185,25 +194,30 @@ object Ann {
     * Raise `planes` as n grows to keep E[bucket size] bounded; spend
     * `tables` to buy recall — `autoLshParamsDetailed` computes both from n. */
   def cosineNearDupPairs(emb: DataFrame, dims: Int, threshold: Double,
-                         planes: Int = 4, tables: Int = 32, seed: Long = 5): DataFrame = {
-    // Shape, MEASURED at the ×10 probe: skinny (bkt, id) postings form
-    // pairs, cross-table `distinct` collapses multiplicity BEFORE any
-    // embedding is fetched, then the verify joins pull vectors via
-    // size-gated broadcast — so at any scale where the vector table
-    // broadcasts, the candidate stream never shuffles wide rows and
-    // each surviving pair pays exactly ONE compiled cosine. The
-    // carry-the-embedding-through-the-bucket-shuffle alternative
-    // (verify-in-join, distinct after) measured WORSE both at sf0.1
-    // (6.3 s vs 4.6) and at the ×10 probe (>300 s vs 218): per-table
-    // duplicate candidates re-run the cosine (~2× evals) and the bucket
-    // join sorts n·tables wide rows. It becomes the right form only
-    // when the vector table outgrows broadcast (sizeGated then falls
-    // back to a candidate-volume shuffle here) — at that corpus size
-    // the documented low-threshold swap is cell-based SemDeDup (p29).
-    val bucketed = hyperplaneBucketed(emb, dims, planes, tables, seed)
-    val a = bucketed.select(col("bkt"), col("vec_id").as("i"))
-    val b = bucketed.select(col("bkt"), col("vec_id").as("j"))
-    val candidates = a.join(b, Seq("bkt"))
+                         planes: Int = 4, tables: Int = 32, seed: Long = 5): DataFrame =
+    verifiedPairs(emb, hyperplaneBucketed(emb, dims, planes, tables, seed), "bkt", threshold)
+
+  /** The pair tail of the LSH and cell near-dup paths. Shape, MEASURED
+    * at the ×10 probe: skinny (`key`, vec_id) postings form i < j pairs,
+    * cross-key `distinct` collapses multiplicity BEFORE any embedding is
+    * fetched, then the verify joins pull vectors via size-gated
+    * broadcast — so at any scale where the vector table broadcasts, the
+    * candidate stream never shuffles wide rows and each surviving pair
+    * pays exactly ONE compiled cosine. The
+    * carry-the-embedding-through-the-bucket-shuffle alternative
+    * (verify-in-join, distinct after) measured WORSE both at sf0.1
+    * (6.3 s vs 4.6) and at the ×10 probe (>300 s vs 218): per-table
+    * duplicate candidates re-run the cosine (~2× evals) and the bucket
+    * join sorts n·tables wide rows. It becomes the right form only when
+    * the vector table outgrows broadcast (sizeGated then falls back to a
+    * candidate-volume shuffle here) — at that corpus size the documented
+    * low-threshold swap is cell-based SemDeDup (p29).
+    * Returns (i, j, cos_r ≥ threshold). */
+  private def verifiedPairs(emb: DataFrame, postings: DataFrame, key: String,
+                            threshold: Double): DataFrame = {
+    val a = postings.select(col(key), col("vec_id").as("i"))
+    val b = postings.select(col(key), col("vec_id").as("j"))
+    val candidates = a.join(b, Seq(key))
       .filter(col("i") < col("j"))
       .select("i", "j").distinct()
     val ve = graft.operators.Broadcasts.sizeGated(
@@ -387,74 +401,109 @@ object Ann {
         col("vec_id"), col("embedding"))
   }
 
-  // ===== deterministic spherical k-means (the IVF/SemDeDup cell fit) ==
-  // r14, VERDICT r13 item 4: the MLlib KMeans fit cost 24 sub-0.1 s
-  // driver-coordinated jobs at sf0.1 (~1.2 s of pure fixed cost — worse
-  // relative cost at scale, where the fit jobs don't shrink with data),
-  // and its seeded k-means|| init depends on RDD partitioning, so the
-  // "same" fit changes with cluster layout. Replaced by the repo's own
-  // pqTrain discipline: fit on a BOUNDED DETERMINISTIC SAMPLE (first
-  // maxSample vectors by id — one TakeOrdered job at any corpus size),
-  // which is how IVF coarse quantizers are trained in practice (the
-  // model is nCells·dims floats and converges from a few thousand
-  // points; only assignment touches the full corpus, scan-locally).
-  // The fit is bit-reproducible on any cluster layout: evenly-spaced
-  // init in id order, per-point argmax cosine with lowest-index
-  // tie-break, spherical mean update (normalize), empty cells keep
-  // their centroid, fixed iteration count. No gate and no distributed
-  // twin to keep equivalent — the sample bound holds at 100 TB.
+  // ===== the trained-cell core: one sample, one Lloyd loop, one rule ===
+  // Every model (IVF/SemDeDup cells, PQ codebooks) is fit on the driver
+  // from a BOUNDED DETERMINISTIC SAMPLE, which is how IVF coarse
+  // quantizers and PQ codebooks are trained in practice [Jégou et al.
+  // 2011]: the model is k·d numbers and converges from a few thousand
+  // points; only assignment touches the full corpus, scan-locally. A
+  // distributed fit (MLlib KMeans) cost 24 sub-0.1 s driver-coordinated
+  // jobs at sf0.1 and its k-means|| init changes with RDD partitioning;
+  // this fit is bit-reproducible on any cluster layout.
 
-  /** Fit `nCells` cosine (spherical) k-means centroids on the first
-    * `maxSample` vectors by id. Sample size auto-scales with nCells
-    * (≥48 points/cell, capped) so large auto-derived cell counts still
-    * train. Returns nCells × dims FLOAT centroids — floats, so the
-    * assignment expressions' literals are identical everywhere. */
-  def cosineCentroids(emb: DataFrame, nCells: Int,
-                      maxSample: Int = 4096, iters: Int = 10): Array[Array[Float]] = {
-    require(nCells >= 1, s"nCells >= 1, got $nCells")
-    val cap = math.min(math.max(maxSample, 48 * nCells), 1 << 17)
-    val sample = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
-      .sort("vec_id").limit(cap)
-      .collect().map(_.getSeq[Double](1).toArray)
-    require(sample.nonEmpty, "cosineCentroids: empty corpus")
-    val n = sample.length
-    val d = sample(0).length
+  /** Bytes of doubles one [[trainingSample]] may collect to the driver. */
+  private val SampleBytes = 64 << 20
+
+  /** Rows [[trainingSample]] collects for a `k`-centroid fit at width
+    * `d`: 48 a centroid (floor 4096), capped at [[SampleBytes]] — 131 072
+    * rows at d = 64, 8192 at d = 1024. */
+  private[pipeline] def sampleCap(k: Int, d: Int): Int =
+    math.min(math.max(4096, 48 * k), SampleBytes / (8 * d))
+
+  /** The training sample of a `k`-centroid fit, as double rows in vec_id
+    * order. Two jobs: one aggregate reads the embedding width (min and
+    * max over the corpus; embeddings that differ in width fail here,
+    * naming both widths), then one TakeOrdered chooses the rows by
+    * (xxhash64(vec_id), vec_id) — deterministic, and independent of id
+    * order: an id prefix trains only on whatever topics the first ids
+    * hold. Below [[sampleCap]] the sample is the whole corpus. */
+  private[pipeline] def trainingSample(emb: DataFrame, k: Int): Array[Array[Double]] = {
+    require(k >= 1, s"k >= 1, got $k")
+    val w = emb.agg(min(size(col("embedding"))), max(size(col("embedding")))).head()
+    require(!w.isNullAt(0), "trainingSample: empty corpus")
+    val (lo, hi) = (w.getInt(0), w.getInt(1))
+    require(lo == hi, s"trainingSample: embeddings differ in width ($lo vs $hi)")
+    require(hi > 0, "trainingSample: zero-width embeddings")
+    emb.select(col("vec_id").cast("long"), col("embedding").cast("array<double>"))
+      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
+      .limit(sampleCap(k, hi)).collect()
+      .sortBy(_.getLong(0))
+      .map(_.getSeq[Double](1).toArray)
+  }
+
+  /** Distance and update of a [[lloyd]] fit. */
+  private sealed trait Metric
+  /** Spherical k-means: unit init, −dot as the distance (centroids are
+    * unit, so argmin −dot is argmax cosine), `unit(sum)` as the update. */
+  private case object Cosine extends Metric
+  /** Euclidean k-means: copy init, squared L2, `sum / cnt` as the update. */
+  private case object L2 extends Metric
+
+  /** Lloyd's k-means on driver-local points, 10 iterations: init = k
+    * evenly spaced points in input order, each point to the centroid of
+    * least distance (strict `<`: the lowest index wins ties), empty
+    * cells keep their centroid. Deterministic. */
+  private def lloyd(points: Array[Array[Double]], k: Int,
+                    metric: Metric): Array[Array[Double]] = {
+    val n = points.length
+    val d = points(0).length
+    val spherical = metric == Cosine
     def unit(v: Array[Double]): Array[Double] = {
       var s = 0.0; var j = 0
       while (j < d) { s += v(j) * v(j); j += 1 }
       val m = math.sqrt(s)
       if (m == 0.0) v.clone() else Array.tabulate(d)(j => v(j) / m)
     }
-    var cents = Array.tabulate(nCells)(c => unit(sample(((c.toLong * n) / nCells).toInt)))
-    var it = 0
-    while (it < iters) {
-      val sums = Array.fill(nCells)(new Array[Double](d))
-      val cnts = new Array[Long](nCells)
-      var i = 0
-      while (i < n) {
-        val p = sample(i)
+    def dist(p: Array[Double], c: Array[Double]): Double = {
+      var s = 0.0; var j = 0
+      if (spherical) { while (j < d) { s += p(j) * c(j); j += 1 }; -s }
+      else { while (j < d) { val x = p(j) - c(j); s += x * x; j += 1 }; s }
+    }
+    var cents = Array.tabulate(k) { c =>
+      val p = points(((c.toLong * n) / k).toInt)
+      if (spherical) unit(p) else p.clone()
+    }
+    for (_ <- 1 to 10) {
+      val sums = Array.fill(k)(new Array[Double](d))
+      val cnts = new Array[Long](k)
+      for (p <- points) {
         var best = 0
-        var bestCos = Double.NegativeInfinity
+        var bestD = Double.PositiveInfinity
         var c = 0
-        while (c < nCells) {
-          // centroids are unit vectors, so argmax cosine = argmax dot/|p|
-          // = argmax dot — |p| is constant across c
-          var dot = 0.0
-          var j = 0
-          while (j < d) { dot += p(j) * cents(c)(j); j += 1 }
-          if (dot > bestCos) { bestCos = dot; best = c }
+        while (c < k) {
+          val x = dist(p, cents(c))
+          if (x < bestD) { bestD = x; best = c }
           c += 1
         }
         var j = 0
         while (j < d) { sums(best)(j) += p(j); j += 1 }
         cnts(best) += 1
-        i += 1
       }
-      cents = Array.tabulate(nCells)(c => if (cnts(c) == 0) cents(c) else unit(sums(c)))
-      it += 1
+      cents = Array.tabulate(k) { c =>
+        if (cnts(c) == 0) cents(c)
+        else if (spherical) unit(sums(c))
+        else Array.tabulate(d)(j => sums(c)(j) / cnts(c))
+      }
     }
-    cents.map(_.map(_.toFloat))
+    cents
   }
+
+  /** Fit `nCells` spherical k-means centroids ([[lloyd]] with the cosine
+    * metric) on [[trainingSample]]. Returns nCells × d FLOAT centroids —
+    * floats, so the assignment expressions' literals are identical
+    * everywhere. */
+  def cosineCentroids(emb: DataFrame, nCells: Int): Array[Array[Float]] =
+    lloyd(trainingSample(emb, nCells), nCells, Cosine).map(_.map(_.toFloat))
 
   /** Centroid table as a literal array column of (cell, cent) structs —
     * the tiny driver-side model every assignment expression embeds. */
@@ -463,79 +512,46 @@ object Ann {
       struct(lit(i.toLong).as("cell"), array(c.map(lit): _*).as("cent"))
     }: _*)
 
-  /** Scan-local nearest-centroid assignment: scores every cell, rounds
-    * to 1e-8 BEFORE the argmax (house ranking rule — an fp near-tie must
-    * not flip which cell a vector lands in), breaks exact ties on the
-    * lowest cell id. */
-  private def cellOf(embCol: Column, cents: Array[Array[Float]]): Column = {
+  /** The one nearest-cell rule, a generator: one `cell` row for each of
+    * the embedding's `nProbe` nearest centroids, nearest first. Every
+    * cell is scored INSIDE one projection (score, array_sort, slice), so
+    * assignment is scan-local and never materializes n×nCells rows.
+    * Scores round to 1e-8 BEFORE ordering (house rule — an fp near-tie
+    * must not flip which cells a vector lands in or a query scans);
+    * exact ties go to the lowest cell id: the struct order
+    * (−score asc, cell asc) is (score desc, cell asc). The array is never
+    * empty; the outer explode keeps `cell` nullable, the type
+    * [[kmeansCells]] has always landed (p29's sem_cells). */
+  private def nearestCells(embCol: Column, cents: Array[Array[Float]],
+                           nProbe: Int): Column = {
     val scored = transform(centArrOf(cents), c => struct(
       (-round(cosine(embCol, c.getField("cent")), 8)).as("neg_cc"),
       c.getField("cell").as("cell")))
-    element_at(array_sort(scored), 1).getField("cell")
+    explode_outer(transform(slice(array_sort(scored), 1, nProbe), _.getField("cell")))
   }
 
-  /** KMeans cell assignment (cosine distance), the clustering step shared
-    * by IVF search and SemDeDup — a one-off sample fit whose model is
-    * tiny (nCells × dims floats on the driver), after which assignment
-    * is a scan-local transform. The sample fit is deterministic.
-    * Returns (vec_id, cell). */
-  def kmeansCells(emb: DataFrame, nCells: Int): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
-    val cents = cosineCentroids(emb, nCells)
-    emb.select(col("vec_id"), cellOf(col("embedding"), cents).as("cell"))
-  }
-
-  /** Multi-probe cell assignment: each vector lands in its `nProbe`
-    * nearest KMeans cells by cosine (IVF's probe discipline applied to
-    * the CORPUS side) — the recall repair for cell-based dedup, where a
-    * near-dup pair split by one cell boundary still meets in a shared
-    * runner-up cell. Centroids are a tiny literal array (driver-side
-    * model) and the per-row top-nProbe selection happens INSIDE one
-    * projection (score all cells, array_sort, slice) — genuinely
-    * shuffle-free and never materializing n×nCells rows (an
-    * explode+row_number formulation would shuffle ~n·nCells rows: at the
-    * over-cap regime this path exists for, that is n²/cellTarget —
-    * asymptotically worse than the LSH path it replaces). Scores round
-    * before ordering (house rule) so FP near-ties can't flip which cells
-    * a vector probes; exact ties break on cell id, matching the window
-    * formulation. Returns (vec_id, cell), nProbe rows per vector. */
-  def kmeansCellsProbed(emb: DataFrame, nCells: Int, nProbe: Int): DataFrame = {
+  /** KMeans cell assignment (cosine distance), the clustering step of
+    * SemDeDup and the cell-probed paths: a one-off sample fit
+    * ([[cosineCentroids]]), then the scan-local [[nearestCells]] rule.
+    * With `nProbe` > 1 each vector lands in its `nProbe` nearest cells —
+    * IVF's probe discipline applied to the CORPUS side, the recall repair
+    * for cell-based dedup: a near-dup pair split by one cell boundary
+    * still meets in a shared runner-up cell. Returns (vec_id, cell),
+    * nProbe rows per vector. */
+  def kmeansCells(emb: DataFrame, nCells: Int, nProbe: Int = 1): DataFrame = {
     require(nProbe >= 1 && nProbe <= nCells,
       s"nProbe must be in [1, nCells], got $nProbe of $nCells")
     graft.functions.VectorExprs.register(emb.sparkSession)
-    val centArr = centArrOf(cosineCentroids(emb, nCells))
-    // struct sort order = (−score asc, cell asc) = (score desc, cell asc)
-    val scored = transform(centArr, c => struct(
-      (-round(cosine(col("embedding"), c.getField("cent")), 8)).as("neg_cc"),
-      c.getField("cell").as("cell")))
-    emb.select(col("vec_id"),
-        explode(slice(array_sort(scored), 1, nProbe)).as("s"))
-      .select(col("vec_id"), col("s.cell").as("cell"))
+    val cents = cosineCentroids(emb, nCells)
+    emb.select(col("vec_id"), nearestCells(col("embedding"), cents, nProbe).as("cell"))
   }
 
   /** SemDeDup pairs over multi-probe cells — the over-cap branch of
-    * [[nearDupPairsAuto]]. Same skinny-postings shape the LSH path
-    * measured fastest: (cell, id) rows form candidates, cross-probe
-    * `distinct` collapses multiplicity BEFORE any embedding is fetched,
-    * then exact cosine verifies each surviving pair once. Returns
-    * (i, j, cos_r), i < j. */
+    * [[nearDupPairsAuto]], on the LSH path's measured pair tail
+    * (`verifiedPairs`). Returns (i, j, cos_r), i < j. */
   def semDedupPairsProbed(emb: DataFrame, nCells: Int, nProbe: Int,
-                          threshold: Double): DataFrame = {
-    val cells = kmeansCellsProbed(emb, nCells, nProbe)
-    val a = cells.select(col("cell"), col("vec_id").as("i"))
-    val b = cells.select(col("cell"), col("vec_id").as("j"))
-    val candidates = a.join(b, Seq("cell"))
-      .filter(col("i") < col("j"))
-      .select("i", "j").distinct()
-    val ve = graft.operators.Broadcasts.sizeGated(
-      emb.select(col("vec_id"), col("embedding")))
-    val va = ve.select(col("vec_id").as("i"), col("embedding").as("e_i"))
-    val vb = ve.select(col("vec_id").as("j"), col("embedding").as("e_j"))
-    candidates.join(va, "i").join(vb, "j")
-      .withColumn("cos_r", round(cosine(col("e_i"), col("e_j")), 6))
-      .filter(col("cos_r") >= threshold)
-      .select("i", "j", "cos_r")
-  }
+                          threshold: Double): DataFrame =
+    verifiedPairs(emb, kmeansCells(emb, nCells, nProbe), "cell", threshold)
 
   /** SemDeDup [Abbas et al. 2023]: semantic near-duplicate pairs found by
     * clustering the embedding space and comparing cosines only WITHIN
@@ -726,21 +742,19 @@ object Ann {
     * All tables' buckets come from ONE compiled expression pass
     * (HyperplaneBucketsExpr). Returns (vec_id, neighbor_id, cos_r). */
   def lshNeighbors(emb: DataFrame, dims: Int, planes: Int = 6, tables: Int = 8,
-                   seed: Long = 5): DataFrame = {
-    val bucketed = hyperplaneBucketed(emb, dims, planes, tables, seed)
-    val a = bucketed.select(col("bkt"), col("vec_id"))
-    val b = bucketed.select(col("bkt"), col("vec_id").as("neighbor_id"))
-    val candidates = a.join(b, Seq("bkt"))
+                   seed: Long = 5): DataFrame =
+    top1(emb, hyperplaneBucketed(emb, dims, planes, tables, seed), "bkt")
+
+  /** The top-1 tail of the LSH and cell paths: vectors sharing a `key`
+    * in `postings` (`key`, vec_id) are candidates, scored against the
+    * raw vectors (joined back by id so the bucket/cell shuffle never
+    * carries embeddings); each vector keeps its best. */
+  private def top1(emb: DataFrame, postings: DataFrame, key: String): DataFrame = {
+    val a = postings.select(col(key), col("vec_id"))
+    val b = postings.select(col(key), col("vec_id").as("neighbor_id"))
+    val candidates = a.join(b, Seq(key))
       .filter(col("vec_id") =!= col("neighbor_id"))
       .select("vec_id", "neighbor_id").distinct()
-    top1FromCandidates(emb, candidates)
-  }
-
-  /** Shared verify tail of the top-1 family: score a (vec_id,
-    * neighbor_id) candidate set against the raw vectors (joined back by
-    * id so the bucket/cell shuffle never carries embeddings) and keep
-    * each vector's best. */
-  private def top1FromCandidates(emb: DataFrame, candidates: DataFrame): DataFrame = {
     val va = emb.select(col("vec_id"), col("embedding"))
     val vb = emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb"))
     val paired = candidates.join(va, "vec_id").join(vb, "neighbor_id")
@@ -758,15 +772,8 @@ object Ann {
     * nProbe·cellTarget — LINEAR in n for nCells = n/cellTarget — which
     * is why [[lshTop1Auto]] swaps here once the LSH parameterization
     * leaves its budget. Returns (vec_id, neighbor_id, cos_r). */
-  def cellTop1(emb: DataFrame, nCells: Int, nProbe: Int): DataFrame = {
-    val cells = kmeansCellsProbed(emb, nCells, nProbe)
-    val a = cells.select(col("cell"), col("vec_id"))
-    val b = cells.select(col("cell"), col("vec_id").as("neighbor_id"))
-    val candidates = a.join(b, Seq("cell"))
-      .filter(col("vec_id") =!= col("neighbor_id"))
-      .select("vec_id", "neighbor_id").distinct()
-    top1FromCandidates(emb, candidates)
-  }
+  def cellTop1(emb: DataFrame, nCells: Int, nProbe: Int): DataFrame =
+    top1(emb, kmeansCells(emb, nCells, nProbe), "cell")
 
   /** Self-scaling all-corpus top-1 — [[lshNeighbors]] with the same
     * regime discipline [[nearDupPairsAuto]] applies to pair enumeration
@@ -808,15 +815,10 @@ object Ann {
   private def pqSub(e: Column, s: Int, sub: Int): Column =
     slice(e, lit(s * sub + 1), lit(sub)).cast("array<double>")
 
-  /** Squared L2 between an array<double> column and a literal centroid —
-    * a sequential left-to-right fold, so any engine restating the same
-    * arithmetic in double lands on the same value (mod ~1e-15 noise,
-    * which the 1e-6 rounds below absorb). */
-  private def l2sqLit(v: Column, cent: Array[Double]): Column =
-    aggregate(zip_with(v, array(cent.map(lit): _*), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, d) => acc + d)
-
-  /** Squared L2 between two array columns, in double. */
+  /** Squared L2 between two array columns, in double — a sequential
+    * left-to-right fold, so any engine restating the same arithmetic in
+    * double lands on the same value (mod ~1e-15 noise, which the 1e-6
+    * rounds below absorb). */
   def l2sq(a: Column, b: Column): Column =
     aggregate(zip_with(a.cast("array<double>"), b.cast("array<double>"),
       (x, y) => (x - y) * (x - y)), lit(0.0), (acc, d) => acc + d)
@@ -839,66 +841,23 @@ object Ann {
   }
 
   /** Train PQ codebooks: split `dims` into m contiguous subspaces and fit
-    * an independent euclidean KMeans of `k` centroids per subspace —
-    * DRIVER-SIDE, on a bounded deterministic sample (the first
-    * `maxSample` vectors by id: one TakeOrdered, no full sort). Training
-    * on a sample is how PQ codebooks are built in practice at any corpus
-    * size (the codebook is m·k·(dims/m) doubles — kilobytes — and
-    * converges from a few thousand points); only encode/search touch the
-    * full corpus. Local Lloyd's with evenly-spaced init and lowest-index
-    * tie-breaks, so the model is bit-reproducible run to run — no ML-fit
-    * parallelism in the result. Returns cbs(s)(code) = centroid. */
-  def pqTrain(emb: DataFrame, dims: Int, m: Int, k: Int,
-              maxSample: Int = 4096, iters: Int = 10): Array[Array[Array[Double]]] = {
+    * an independent euclidean k-means of `k` centroids per subspace
+    * ([[lloyd]] with the L2 metric) — DRIVER-SIDE, on the same bounded
+    * hash-ordered [[trainingSample]] the cell fit uses. Training on a
+    * sample is how PQ codebooks are built in practice at any corpus size
+    * (the codebook is m·k·(dims/m) doubles — kilobytes — and converges
+    * from a few thousand points); only encode/search touch the full
+    * corpus. The model is bit-reproducible run to run. `dims` must equal
+    * the embeddings' width. Returns cbs(s)(code) = centroid. */
+  def pqTrain(emb: DataFrame, dims: Int, m: Int, k: Int): Array[Array[Array[Double]]] = {
     require(dims % m == 0, "dims must be divisible by m")
+    val sample = trainingSample(emb, k)
+    require(sample(0).length == dims,
+      s"pqTrain: dims $dims but the embeddings are ${sample(0).length} wide")
     val sub = dims / m
-    val sample = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
-      .sort("vec_id").limit(maxSample)
-      .collect().map(_.getSeq[Double](1).toArray)
-    require(sample.nonEmpty, "pqTrain: empty corpus")
-    (0 until m).map { s =>
-      val pts = sample.map(v => java.util.Arrays.copyOfRange(v, s * sub, (s + 1) * sub))
-      localKMeans(pts, k, iters)
-    }.toArray
-  }
-
-  /** Plain Lloyd's on driver-local points: init = k evenly spaced points
-    * in input order, assignment ties to the lowest centroid index, empty
-    * clusters keep their previous centroid. Deterministic. */
-  private def localKMeans(pts: Array[Array[Double]], k: Int,
-                          iters: Int): Array[Array[Double]] = {
-    val n = pts.length
-    val d = pts(0).length
-    var cents = Array.tabulate(k)(c => pts(((c.toLong * n) / k).toInt).clone())
-    var it = 0
-    while (it < iters) {
-      val sums = Array.fill(k)(new Array[Double](d))
-      val cnts = new Array[Long](k)
-      var i = 0
-      while (i < n) {
-        val p = pts(i)
-        var best = 0
-        var bestD = Double.MaxValue
-        var c = 0
-        while (c < k) {
-          var dist = 0.0
-          var j = 0
-          while (j < d) { val x = p(j) - cents(c)(j); dist += x * x; j += 1 }
-          if (dist < bestD) { bestD = dist; best = c }
-          c += 1
-        }
-        var j = 0
-        while (j < d) { sums(best)(j) += p(j); j += 1 }
-        cnts(best) += 1
-        i += 1
-      }
-      cents = Array.tabulate(k) { c =>
-        if (cnts(c) == 0) cents(c)
-        else Array.tabulate(d)(j => sums(c)(j) / cnts(c))
-      }
-      it += 1
+    Array.tabulate(m) { s =>
+      lloyd(sample.map(v => java.util.Arrays.copyOfRange(v, s * sub, (s + 1) * sub)), k, L2)
     }
-    cents
   }
 
   /** The codebooks as a landable DataFrame (subspace, code, cent) — the
@@ -920,7 +879,7 @@ object Ann {
     val sub = cbs(0)(0).length
     val codeCols = (0 until m).map { s =>
       val cands = array(cbs(s).zipWithIndex.map { case (cent, code) =>
-        struct(round(l2sqLit(pqSub(col("embedding"), s, sub), cent), 6).as("d"),
+        struct(round(l2sq(pqSub(col("embedding"), s, sub), array(cent.map(lit): _*)), 6).as("d"),
           lit(code.toLong).as("code"))
       }: _*)
       array_min(cands).getField("code").as(s"c$s")
@@ -957,7 +916,7 @@ object Ann {
     val sub = cbs(0)(0).length
     val tableCols = (0 until m).map { s =>
       array(cbs(s).map(cent =>
-        l2sqLit(pqSub(col("embedding"), s, sub), cent)): _*).as(s"dt$s")
+        l2sq(pqSub(col("embedding"), s, sub), array(cent.map(lit): _*))): _*).as(s"dt$s")
     }
     val qt = broadcast(queries
       .select((col("vec_id").as("query_id") +: tableCols): _*))

@@ -240,8 +240,8 @@ object PipelineQueries extends QueryModule {
       Ann.pqTopK(Ann.pqEncode(e, cbs), e, queries, k = 3, cbs, shortlist = shortlist)
         .write.mode("overwrite").parquet(s"$outRoot/pq_topk")
       val landed = s.read.parquet(s"$outRoot/pq_topk")
-      // measured recall@3 vs exact L2: 27/30 at sf0.01, 23/30 at sf0.1
-      // (shortlist 100); floor 60%
+      // measured recall@3 vs exact L2: 30/30 at sf0.01, 21/30 at sf0.1
+      // (shortlist 100), 25/30 on a ×10 ScaleUp corpus; floor 60%
       graft.Gates.run {
         val exact3 = Ann.bruteForceTopKL2(e, queries, k = 3)
           .select("query_id", "neighbor_id")
@@ -282,7 +282,7 @@ object PipelineQueries extends QueryModule {
       // brute force; DuckDB recomputes BOTH counts independently, so a
       // broken Spark brute force is a hash mismatch and an IVF recall
       // collapse is an in-query error (measured recall@3: 16/30 at
-      // sf0.01, 20/30 at sf0.1; floor 40%)
+      // sf0.01, 18/30 at sf0.1, 19/30 on a ×10 ScaleUp corpus; floor 40%)
       val exact3 = Ann.bruteForceTopK(e, queries, k = 3)
         .select("query_id", "neighbor_id")
       val nExact3 = exact3.count()

@@ -30,4 +30,41 @@ class SessionSpec extends SparkSpec {
     assert(wh != cwd && !wh.startsWith(cwd + java.io.File.separator),
       s"warehouse $wh sits under the working directory $cwd")
   }
+
+  test("codegen cache: a second pass over 120 distinct compiled statements compiles no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // each statement inlines its own literals, so each compiles its own
+    // whole-stage class; 120 of them overflow a 100-entry cache
+    def pass(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      (1 to 120).foreach(i => spark.range(3).selectExpr(s"id * $i + ${i + 1000} AS x").collect())
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = pass()
+    assert(first >= 120, s"first pass compiled only $first classes")
+    val second = pass()
+    assert(second == 0, s"second identical pass recompiled $second of $first classes")
+  }
+
+  test("Tables.registerAll follows the dir: after A, B, A the views read A's files") {
+    def fixture(): java.io.File = {
+      val d = java.nio.file.Files.createTempDirectory("graft_tables").toFile
+      Tables.names.foreach { n =>
+        val df = if (n == "events") spark.sql("SELECT current_timestamp() AS ts")
+          else spark.range(1).toDF("id")
+        df.write.parquet(s"$d/$n.parquet")
+      }
+      d
+    }
+    val (a, b) = (fixture(), fixture())
+    try {
+      Seq(a, b, a).foreach(d => Tables.registerAll(spark, d.getPath))
+      val files = spark.table("region").inputFiles
+      assert(files.nonEmpty && files.forall(_.contains(a.getName + "/")),
+        s"region reads ${files.mkString(", ")}, not $a")
+    } finally {
+      Seq(a, b).foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+      Tables.names.foreach(spark.catalog.dropTempView)
+    }
+  }
 }

@@ -177,7 +177,7 @@ class PipelineSpec extends SparkSpec {
     // nProbe²·n·cellTarget, which is linear in n while all-pairs is n².)
     val n = embsBig.count()
     val nCells = math.max(2, math.ceil(n.toDouble / cellTarget)).toInt
-    val volume = Ann.kmeansCellsProbed(embsBig, nCells, nProbe)
+    val volume = Ann.kmeansCells(embsBig, nCells, nProbe)
       .groupBy("cell").agg(count(lit(1)).as("c"))
       .agg(sum(col("c") * (col("c") - 1) / 2)).head().getDouble(0)
     assert(volume <= nProbe.toDouble * nProbe * n * cellTarget,
@@ -359,6 +359,78 @@ class PipelineSpec extends SparkSpec {
     val cells = Ann.kmeansCells(embs, nCells = 8).collect()
     assert(cells.length == embs.count())
     assert(cells.forall(r => r.getLong(1) >= 0 && r.getLong(1) < 8))
+  }
+
+  test("cell fit sees every cluster when clusters are contiguous by vec_id") {
+    // 8 tight clusters, contiguous by id, sized 500, 6 × 1000 and 1500 so
+    // each cell's evenly spaced init lands mid-cluster in id order. An
+    // id-prefix sample (4096 rows) stops inside cluster 4 and never sees
+    // clusters 5–7; the hash-ordered sample draws from all eight.
+    val r = new scala.util.Random(17)
+    val centers = Array.fill(8)(Array.fill(16)(r.nextGaussian()))
+    val bounds = Array(0, 500, 1500, 2500, 3500, 4500, 5500, 6500, 8000)
+    val rows = (0 until 8).flatMap { c =>
+      (bounds(c) until bounds(c + 1)).map(id =>
+        (id.toLong, centers(c).map(x => (x + 0.01 * r.nextGaussian()).toFloat)))
+    }
+    val cellOf = Ann.kmeansCells(rows.toDF("vec_id", "embedding"), nCells = 8)
+      .as[(Long, Long)].collect().toMap
+    val cells = (0 until 8).map(c =>
+      (bounds(c) until bounds(c + 1)).map(id => cellOf(id.toLong)).toSet)
+    assert(cells.forall(_.size == 1), s"a cluster is split across cells: $cells")
+    assert(cells.flatten.toSet.size == 8, s"clusters share a cell: $cells")
+  }
+
+  test("training sample is capped in bytes: 8192 rows at d = 1024, 131072 at d = 64") {
+    assert(Ann.sampleCap(16, 64) == 4096)
+    assert(Ann.sampleCap(100000, 64) == 131072)
+    assert(Ann.sampleCap(100000, 1024) == 8192)
+    assert(8L * 1024 * Ann.sampleCap(100000, 1024) <= (64L << 20))
+    // on data: a 1000-centroid fit asks 48 000 rows; at d = 1024 the
+    // 64 MiB cap collects 8192 of 8200, in vec_id order
+    val wide = spark.range(8200).select(col("id").as("vec_id"),
+      transform(sequence(lit(1), lit(1024)), j => (col("id") * 1024 + j).cast("float"))
+        .as("embedding"))
+    val s = Ann.trainingSample(wide, 1000)
+    assert(s.length == 8192 && s.forall(_.length == 1024))
+    val ids = s.map(v => (v(0) - 1).toLong / 1024)
+    assert(ids.sameElements(ids.sorted) && ids.distinct.length == 8192)
+  }
+
+  test("trainers reject ragged embeddings naming both widths; pqTrain needs dims = width") {
+    val v4 = Array(1f, 0f, 0f, 0f)
+    def frame(last: Array[Float]) =
+      Seq((0L, v4), (1L, v4), (2L, last)).toDF("vec_id", "embedding")
+    for ((last, w) <- Seq(Array(0f, 1f, 0f) -> "3 vs 4", Array(0f, 1f, 0f, 0f, 1f) -> "4 vs 5")) {
+      val e = intercept[IllegalArgumentException](Ann.cosineCentroids(frame(last), nCells = 2))
+      assert(e.getMessage.contains(w), e.getMessage)
+      val p = intercept[IllegalArgumentException](Ann.pqTrain(frame(last), dims = 4, m = 2, k = 2))
+      assert(p.getMessage.contains(w), p.getMessage)
+    }
+    val even = frame(Array(0f, 1f, 0f, 0f))
+    for (dims <- Seq(2, 8)) {
+      val e = intercept[IllegalArgumentException](Ann.pqTrain(even, dims, m = 2, k = 2))
+      assert(e.getMessage.contains(s"dims $dims") && e.getMessage.contains("4 wide"), e.getMessage)
+    }
+  }
+
+  test("nearest-cell ties go to the lowest cell id: corpus nProbe 1 and 2, IVF query probe") {
+    // 3 vectors, 4 cells: the evenly spaced init seeds cells 0 AND 1 with
+    // vector 0, cell 1 never wins a point, so the two stay identical
+    val tri = Seq((0L, Array(1f, 0f, 0f)), (1L, Array(0f, 1f, 0f)),
+      (2L, Array(0f, 0f, 1f))).toDF("vec_id", "embedding")
+    val cents = Ann.cosineCentroids(tri, nCells = 4)
+    assert(cents(0).sameElements(cents(1)))
+    def cells(nProbe: Int) = Ann.kmeansCells(tri, nCells = 4, nProbe)
+      .as[(Long, Long)].collect().groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+    assert(cells(1) == Map(0L -> Set(0L), 1L -> Set(2L), 2L -> Set(3L)))
+    // runner-up of vectors 1 and 2: cells 0, 1 and the other axis all
+    // score 0, and cell 0 wins
+    assert(cells(2) == Map(0L -> Set(0L, 1L), 1L -> Set(2L, 0L), 2L -> Set(3L, 0L)))
+    // query 1 probes cell 2 and the tie: only cell 0 holds a neighbor
+    val nn = Ann.ivfTopK(tri, tri.filter(col("vec_id") === 1L), k = 3, nCells = 4, nProbe = 2)
+      .select("neighbor_id").as[Long].collect().toSet
+    assert(nn == Set(0L))
   }
 
   test("IVF ANN: full probe equals brute force; partial probe recalls") {
